@@ -51,6 +51,11 @@ import org.apache.spark.sql.SparkSession
   * contaminated, stamps `"status":"INVALID_LOAD"` (plus a loud stderr
   * line) so a noisy artifact can never silently become the round's
   * record.
+  *
+  * Failures: a query that throws in any of its runs has no time. It is
+  * listed in `"failed":[...]` on the totals line, kept out of
+  * `queries`/`queries_warm`, `value`/`total_warm` and the floor ledger
+  * ([[foldFloors]]), and the run's status is `"FAILED"`.
   */
 object Bench {
   /** Start-gate idle bar: the measurement pass refuses to sample its
@@ -79,11 +84,14 @@ object Bench {
       try java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
       catch { case _: Throwable => -1.0 }
 
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws has no time: None, never its elapsed seconds
+    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None }
     }
 
     // One untimed session warmup — JVM/Spark bring-up, noop-sink class load,
@@ -97,13 +105,6 @@ object Bench {
       df.limit(1).write.format("noop").mode("overwrite").save()
     }
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
-    def dropCaches(): Unit = {
-      // operators persist intermediates (e.g. Dedup's shingle tables); drop
-      // them so the next cold pass isn't timed under cache/GC pressure
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.TrainPrep.unpersistAll()
-      spark.catalog.clearCache()
-    }
 
     // One full measurement pass with its own load bracket. If the bracket
     // exceeds the comparability bar (load_max ≥ 5: co-tenant drag), retry
@@ -112,7 +113,8 @@ object Bench {
     // final artifact carries the cleaner attempt and says loudly when
     // even that one is contaminated (`"status":"INVALID_LOAD"`) so a
     // noisy run can never silently become the round's record.
-    final case class Pass(results: Seq[(String, Double, Double)],
+    // runs: per query, Some((cold, warm)) or None when any of its runs threw
+    final case class Pass(runs: Seq[(String, Option[(Double, Double)])],
                           loadBefore: Double, loadMax: Double, loadAfter: Double)
     def measure(): Pass = {
       // START GATE: don't begin a measurement pass on a box still draining
@@ -167,16 +169,21 @@ object Bench {
           l = loadAvg()
         }
       }
-      val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         cooldown()
-        val cold = runOnce(name, fn)                   // caches empty: fills persists
-        val warm = math.min(runOnce(name, fn), runOnce(name, fn))
-        dropCaches()
+        val times = for {
+          cold <- runOnce(name, fn)                    // caches empty: fills persists
+          w1 <- runOnce(name, fn)
+          w2 <- runOnce(name, fn)
+        } yield (cold, math.min(w1, w2))
+        // drop the query's operator persists so the next cold pass isn't
+        // timed under cache/GC pressure (session-shared frames stay)
+        SessionFrames.release(spark)
         loadMax = math.max(loadMax, loadAvg())
-        (name, cold, warm)
+        name -> times
       }
       val loadAfter = loadAvg()
-      Pass(results, loadBefore, math.max(loadMax, loadAfter), loadAfter)
+      Pass(runs, loadBefore, math.max(loadMax, loadAfter), loadAfter)
     }
     // Comparability: the bench's own 32 worker threads legitimately push
     // the 1-min loadavg over the pre-run baseline mid-run, so an absolute
@@ -202,7 +209,8 @@ object Bench {
         val second = measure()
         if (comparable(second) || second.loadMax < first.loadMax) second else first
       }
-    val results = pass.results
+    val results = pass.runs.collect { case (name, Some((cold, warm))) => (name, cold, warm) }
+    val failed = pass.runs.collect { case (name, None) => name }
     val (loadBefore, loadMax, loadAfter) = (pass.loadBefore, pass.loadMax, pass.loadAfter)
     val loadComparable = comparable(pass)
     if (!loadComparable)
@@ -247,10 +255,8 @@ object Bench {
     val regressed = results.collect {
       case (name, _, warm) if best.get(name).exists(b => warm > 2 * b && warm > b + 0.5) => name
     }.sorted
-    val merged = results.map { case (name, _, warm) =>
-      name -> math.min(warm, best.getOrElse(name, Double.MaxValue))
-    }.toMap
-    val kept = (best ++ merged).toSeq.sortBy(_._1) // queries dropped from the suite keep their record
+    val kept = foldFloors(best, pass.runs.map { case (name, t) => name -> t.map(_._2) })
+      .toSeq.sortBy(_._1)
     java.nio.file.Files.write(bestPath,
       (s""""__fixture":"$fixtureId"""" +: kept.map { case (k, v) => "\"" + k + "\":" + v })
         .mkString("{", ",", "}").getBytes("UTF-8"))
@@ -261,7 +267,7 @@ object Bench {
     val warm = obj { case (k, _, w) => (k, w) }
     val bestJson = best.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val regressedJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def strList(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val totalWarm = results.map(_._3).sum
     // Detail line first (large; tail-truncatable), compact totals line LAST.
@@ -271,12 +277,25 @@ object Bench {
     // start + excess-over-start envelope, see `comparable`): a regressed
     // list produced under co-tenant drag is flagged instead of adjudicated
     // by hand
-    val status = if (loadComparable) "OK" else "INVALID_LOAD"
+    // a failed query is out of every time and floor; the status says so
+    val status =
+      if (failed.nonEmpty) "FAILED" else if (loadComparable) "OK" else "INVALID_LOAD"
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] FAILED: ${failed.mkString(", ")} threw (no times recorded)")
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,""" +
-      s""""warmup_sec":$warmupSec,"regressed":$regressedJson,""" +
+      s""""warmup_sec":$warmupSec,"regressed":${strList(regressed)},""" +
+      s""""failed":${strList(failed)},""" +
       s""""status":"$status","load_comparable":$loadComparable,""" +
       s""""load_excess":${loadMax - loadBefore},""" +
       s""""load_before":$loadBefore,"load_max":$loadMax,"load_after":$loadAfter,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** The floor-ledger fold: each query's recorded floor becomes the minimum
+    * of itself and this run's warm time. A query that failed (`None`) has no
+    * time, so its recorded floor stays as it was; queries dropped from the
+    * suite keep their record. */
+  def foldFloors(best: Map[String, Double],
+                 warm: Seq[(String, Option[Double])]): Map[String, Double] =
+    best ++ warm.collect { case (name, Some(w)) => name -> math.min(w, best.getOrElse(name, w)) }
 }

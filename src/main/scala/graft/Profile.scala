@@ -26,9 +26,7 @@ object Profile {
       // earlier queries' persists/GC pressure. The load print is the
       // 1-MINUTE TRAILING average sampled after the runs — a co-tenant
       // drag indicator for the run bracket, not a per-query attribution
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.TrainPrep.unpersistAll()
-      spark.catalog.clearCache()
+      SessionFrames.release(spark)
       println(f"[profile] $n load_1m_trailing: ${java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage}%.1f")
     }
     spark.stop()

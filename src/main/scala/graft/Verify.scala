@@ -30,9 +30,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operators may persist intermediates; drop them between queries
-      graft.operators.Dedup.unpersistAll()
-      graft.operators.TrainPrep.unpersistAll()
-      spark.catalog.clearCache()
+      SessionFrames.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.SessionFrames
 import graft.functions.TextFns
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §2.8).
@@ -21,51 +22,14 @@ import graft.functions.TextFns
   *    distance (bit_count of xor).
   *  - exact n-gram Jaccard: inverted-index self-join on shingle (standard
   *    similarity-join shape); exact, for verification and oracle parity.
+  *
+  * Intermediates read more than once are persisted with
+  * [[graft.SessionFrames.track]]. The returned queries are lazy, so the
+  * lifecycle is CALLER-OWNED: materialize the result, then drain with
+  * [[graft.SessionFrames.release]] (Bench/Verify/Profile do so between
+  * queries).
   */
 object Dedup {
-
-  /** Owns the intermediate persists of ONE pipeline invocation. The
-    * returned queries are lazy, so the operator cannot know when its caller
-    * is done — cache lifecycle is CALLER-OWNED: materialize the result,
-    * then release. Callers running pipelines concurrently pass their own
-    * `new CacheHandle()` to the operator and call [[CacheHandle.release]]
-    * themselves; the default argument registers the handle with the
-    * object-global [[unpersistAll]] (which assumes a single sequential
-    * caller, the Bench/Verify pattern). At 100 TB these persists become
-    * storage-backed checkpoints with the same handle-scoped lifecycle. */
-  final class CacheHandle {
-    private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    private[Dedup] def register(df: DataFrame): DataFrame = {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames.add(df)
-      df
-    }
-    /** Drop every frame this handle persisted (idempotent; safe once
-      * nothing downstream of the invocation's result is still running). */
-    def release(): Unit = {
-      var df = frames.poll()
-      while (df != null) { df.unpersist(false); df = frames.poll() }
-    }
-  }
-
-  /** Handles created by default arguments, drained by [[unpersistAll]]. */
-  private val sharedHandles = new java.util.concurrent.ConcurrentLinkedQueue[CacheHandle]()
-
-  private def tracked(): CacheHandle = {
-    val h = new CacheHandle
-    sharedHandles.add(h)
-    h
-  }
-
-  /** Release every handle the default arguments registered. Single-caller
-    * assumption: this drops intermediates of EVERY in-flight default-handle
-    * pipeline in the process, so only call it between, never during,
-    * pipeline runs (the Bench/Verify pattern). Concurrent callers should
-    * pass their own [[CacheHandle]] instead. */
-  def unpersistAll(): Unit = {
-    var h = sharedHandles.poll()
-    while (h != null) { h.release(); h = sharedHandles.poll() }
-  }
 
   /** Normalized-text identity for exact dedup: 32-byte digest of the
     * case/edge-whitespace-folded text — ONE definition shared by the group
@@ -102,17 +66,16 @@ object Dedup {
     * within-pair hash collision (the only kind that could change a Jaccard
     * count) has probability ~|A∪B|²/2⁶⁵ ≈ 1e-16. Persisted: the similarity
     * pipelines read this 3–5×. */
-  private def shingled(arrs: DataFrame, cache: CacheHandle): DataFrame =
-    cache.register(arrs.select(col("doc_id"), explode(col("__arr")).as("shingle")))
+  private def shingled(arrs: DataFrame): DataFrame =
+    SessionFrames.track(arrs.select(col("doc_id"), explode(col("__arr")).as("shingle")))
 
   /** One row per doc with its (distinct) shingle-hash array + size — the
     * compact verification side: candidate pairs join against this
     * 1-row-per-doc table (AQE broadcasts it when small) instead of
     * re-exploding shingles into a pairs × shingles blow-up. Persisted (used
     * by both join sides). */
-  private def shingleArrays(docs: DataFrame, textCol: String, idCol: String, n: Int,
-                            cache: CacheHandle): DataFrame =
-    cache.register(
+  private def shingleArrays(docs: DataFrame, textCol: String, idCol: String, n: Int): DataFrame =
+    SessionFrames.track(
       docs.select(col(idCol).as("doc_id"), TextFns.hashedShingles(col(textCol), n).as("__arr"))
         .withColumn("__n_sh", size(col("__arr"))))
 
@@ -126,10 +89,10 @@ object Dedup {
     * positions, forcing |A∩B| < t·|A| ≤ t·|A∪B|). A naive inverted-index
     * self-join materializes Σ df² pairs over ALL shingles — frequent
     * shingles make that quadratic; the prefix join touches only rare ones. */
-  def ngramJaccard(docs: DataFrame, textCol: String, idCol: String, n: Int, threshold: Double,
-                   cache: CacheHandle = tracked()): DataFrame = {
-    val arrs = shingleArrays(docs, textCol, idCol, n, cache)
-    verifyJaccard(prefixCandidates(shingled(arrs, cache), threshold, cache), arrs, threshold)
+  def ngramJaccard(docs: DataFrame, textCol: String, idCol: String, n: Int,
+                   threshold: Double): DataFrame = {
+    val arrs = shingleArrays(docs, textCol, idCol, n)
+    verifyJaccard(prefixCandidates(shingled(arrs), threshold), arrs, threshold)
   }
 
   /** [[ngramJaccard]]'s prefix-filtered similarity join over a
@@ -145,14 +108,13 @@ object Dedup {
     * rows-side verification was measured SLOWER — the pair-bounded
     * candidate side does not reliably broadcast, and the exploded frame
     * then re-exchanges twice). */
-  def jaccardPairsFromShingles(shRows: DataFrame, threshold: Double,
-                               cache: CacheHandle = tracked()): DataFrame = {
-    val sh = cache.register(shRows.select(col("doc_id"), col("sh").as("shingle")))
-    val arrs = cache.register(
+  def jaccardPairsFromShingles(shRows: DataFrame, threshold: Double): DataFrame = {
+    val sh = SessionFrames.track(shRows.select(col("doc_id"), col("sh").as("shingle")))
+    val arrs = SessionFrames.track(
       sh.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("shingle"))).as("__arr"))
         .withColumn("__n_sh", size(col("__arr"))))
-    verifyJaccard(prefixCandidates(sh, threshold, cache), arrs, threshold)
+    verifyJaccard(prefixCandidates(sh, threshold), arrs, threshold)
   }
 
   /** Prefix-filtered candidate pairs (see [[ngramJaccard]]). Three sound
@@ -172,7 +134,7 @@ object Dedup {
     *    under-prune, never drop a qualifying pair.
     * All three filters sit in the join condition, so pruned pairs never
     * materialize into shuffle output. */
-  private def prefixCandidates(sh: DataFrame, t: Double, cache: CacheHandle): DataFrame = {
+  private def prefixCandidates(sh: DataFrame, t: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docFreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
     val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("__df"), col("shingle"))
@@ -182,7 +144,7 @@ object Dedup {
       .withColumn("__n", count(lit(1)).over(all))
       .filter(col("__pos") <= col("__n") - ceil(lit(t) * col("__n")) + 1)
       .select(col("doc_id"), col("shingle"), col("__pos"), col("__n"))
-    cache.register(prefix) // both sides of the self-join
+    SessionFrames.track(prefix) // both sides of the self-join
     val overlapBound =
       (least(col("a.__n") - col("a.__pos"), col("b.__n") - col("b.__pos")) + 1).cast("double")
     prefix.as("a")
@@ -207,10 +169,9 @@ object Dedup {
     * exact Jaccard for candidates only, so the output is sound (every
     * reported pair truly ≥ threshold); banding controls recall. */
   def minhashLsh(docs: DataFrame, textCol: String, idCol: String, n: Int,
-                 bands: Int, rowsPerBand: Int, threshold: Double,
-                 cache: CacheHandle = tracked()): DataFrame = {
-    val arrs = shingleArrays(docs, textCol, idCol, n, cache)
-    val sig = minhashSignature(shingled(arrs, cache), bands * rowsPerBand)
+                 bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
+    val arrs = shingleArrays(docs, textCol, idCol, n)
+    val sig = minhashSignature(shingled(arrs), bands * rowsPerBand)
     val bandSigs = (0 until bands).map { b =>
       xxhash64((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
     }
@@ -262,10 +223,10 @@ object Dedup {
     * Verification is two joins to the 1-row-per-doc arrays — candidates
     * never fan out to (pair × shingle) rows. */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String, n: Int,
-                       threshold: Double, cache: CacheHandle = tracked()): DataFrame = {
+                       threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val arrs = shingleArrays(docs, textCol, idCol, n, cache)
-    val sh = shingled(arrs, cache)
+    val arrs = shingleArrays(docs, textCol, idCol, n)
+    val sh = shingled(arrs)
     val docFreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
     val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("__df"), col("shingle"))
     // df-1 shingles exist in one doc only, so they can never join a
@@ -275,10 +236,10 @@ object Dedup {
     // PRIMARY sort key, so every df-1 shingle precedes every df≥2 shingle
     // in a doc's rarity order — full position = (#df-1 shingles, i.e.
     // |A| − |kept|) + rank within the kept block.
-    val shared = cache.register(sh.join(docFreq, "shingle").filter(col("__df") >= 2))
+    val shared = SessionFrames.track(sh.join(docFreq, "shingle").filter(col("__df") >= 2))
     val n2 = shared.groupBy(col("doc_id")).agg(count(lit(1)).as("__n2"))
     val sizes = arrs.select(col("doc_id"), col("__n_sh").as("__n"))
-    val withPos = cache.register(shared
+    val withPos = SessionFrames.track(shared
       .withColumn("__rn", row_number().over(byRarity).cast("long"))
       .join(n2, "doc_id").join(sizes, "doc_id")
       .withColumn("__pos", col("__n") - col("__n2") + col("__rn"))
@@ -342,11 +303,11 @@ object Dedup {
     * index is the working set and the DP confirm is per-pair constant
     * (docs bounded by chunking upstream). */
   def fuzzyPairs(docs: DataFrame, textCol: String, idCol: String, n: Int,
-                 maxDf: Long, maxDist: Int, cache: CacheHandle = tracked()): DataFrame = {
+                 maxDf: Long, maxDist: Int): DataFrame = {
     // persisted: the explode (text deserialization + hashing, the
     // dominant per-run cost) runs ONCE and is read twice — df aggregate
     // and index probe (the textNovelty df pattern)
-    val sh = cache.register(docs.select(col(idCol).as("doc_id"),
+    val sh = SessionFrames.track(docs.select(col(idCol).as("doc_id"),
       explode(TextFns.hashedShingles(col(textCol), n)).as("shingle")))
     // the df table filters to rare shingles, but its row count is the
     // corpus's distinct-shingle diversity — data-sized, NOT a dimension
@@ -354,7 +315,7 @@ object Dedup {
     // the dedup_savings labels join); AQE picks the strategy from REAL
     // runtime sizes, so the static-estimate build-side flip a hint would
     // guard against cannot happen here
-    val rare = cache.register(
+    val rare = SessionFrames.track(
       sh.join(
         sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
           .filter(col("__df").between(2L, maxDf)),
@@ -398,13 +359,12 @@ object Dedup {
     * doc-keyed aggregate whose `collect_list` is bounded by the doc's own
     * passage count (a per-row bound, not a corpus bound). Three keyed
     * exchanges end to end at any corpus size. */
-  def passageDedup(docs: DataFrame, textCol: String, idCol: String, p: Int,
-                   cache: CacheHandle = tracked()): DataFrame = {
+  def passageDedup(docs: DataFrame, textCol: String, idCol: String, p: Int): DataFrame = {
     val tk = TextFns.tokens(col(textCol))
     val nPass = ceil(size(tk).cast("double") / p).cast("int")
     val tiles = transform(sequence(lit(0), nPass - 1),
       i => concat_ws(" ", slice(tk, i * p + 1, lit(p))))
-    val pass = cache.register(docs
+    val pass = SessionFrames.track(docs
       .select(col(idCol).as("doc_id"), posexplode(tiles).as(Seq("pidx", "passage")))
       .withColumn("__h", xxhash64(col("passage"))))
     val dfTab = pass.groupBy(col("__h")).agg(countDistinct(col("doc_id")).as("__df"))
@@ -437,13 +397,12 @@ object Dedup {
     * exchanges end to end at any corpus size — the [[passageDedup]] shape
     * with a source key. */
   def boilerplate(docs: DataFrame, textCol: String, idCol: String,
-                  sourceCol: String, p: Int, minDf: Long,
-                  cache: CacheHandle = tracked()): DataFrame = {
+                  sourceCol: String, p: Int, minDf: Long): DataFrame = {
     val tk = TextFns.tokens(col(textCol))
     val nPass = ceil(size(tk).cast("double") / p).cast("int")
     val tiles = transform(sequence(lit(0), nPass - 1),
       i => concat_ws(" ", slice(tk, i * p + 1, lit(p))))
-    val pass = cache.register(docs
+    val pass = SessionFrames.track(docs
       .select(col(idCol).as("doc_id"), col(sourceCol).as("source"),
         explode(tiles).as("passage"))
       .withColumn("__h", xxhash64(col("passage"))))
@@ -533,8 +492,7 @@ object Dedup {
     * shingle index at the same k — the reason MOSS scales. */
   def winnowPairs(docs: DataFrame, textCol: String, idCol: String,
                   k: Int, w: Int, modulus: Long,
-                  maxDf: Long, minShared: Long,
-                  cache: CacheHandle = tracked()): DataFrame = {
+                  maxDf: Long, minShared: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // set semantics ROW-LOCALLY: a doc's duplicate fingerprint VALUES (same
     // gram text at different positions) collapse in array_distinct before
@@ -548,7 +506,7 @@ object Dedup {
     // the PERSIST point is the capped frame: kernel scan AND df-window run
     // once, and the self-join's two branches read only the small surviving
     // slice
-    val capped = cache.register(fps
+    val capped = SessionFrames.track(fps
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .filter(col("__df").between(2L, maxDf)).drop("__df"))
     capped.as("a")
@@ -562,8 +520,8 @@ object Dedup {
   /** Duplicate clustering: connected components over a near-dup pair list —
     * each doc labelled with the min doc_id reachable through pairs (the
     * cluster's canonical survivor). */
-  def duplicateClusters(pairs: DataFrame, cache: CacheHandle = tracked()): DataFrame =
-    clusterRounds(pairs, cache)._1
+  def duplicateClusters(pairs: DataFrame): DataFrame =
+    clusterRounds(pairs)._1
 
   /** Soft dedup: the REWEIGHT alternative to dropping duplicates (the
     * SoftDeDup idea — keep every copy but shrink its sampling weight to
@@ -636,13 +594,11 @@ object Dedup {
     * All comparisons use the same unrounded ratio as [[ngramJaccard]]'s
     * verify, so "direct" here means exactly "would have been a pair". */
   def clusterPurity(docs: DataFrame, textCol: String, idCol: String, n: Int,
-                    threshold: Double, maxMembers: Int = 64,
-                    cache: CacheHandle = tracked()): DataFrame = {
-    val arrs = shingleArrays(docs, textCol, idCol, n, cache)
+                    threshold: Double, maxMembers: Int = 64): DataFrame = {
+    val arrs = shingleArrays(docs, textCol, idCol, n)
     val edges = verifyJaccard(
-      prefixCandidates(shingled(arrs, cache), threshold, cache), arrs, threshold)
-    clusterPurityImpl(arrs, duplicateClusters(edges, cache), threshold,
-      maxMembers, cache)
+      prefixCandidates(shingled(arrs), threshold), arrs, threshold)
+    clusterPurityImpl(arrs, duplicateClusters(edges), threshold, maxMembers)
   }
 
   /** [[clusterPurity]] over PRE-COMPUTED CC labels (a [[duplicateClusters]]
@@ -654,22 +610,20 @@ object Dedup {
     * pipeline. */
   def clusterPurityFromLabels(docs: DataFrame, textCol: String, idCol: String,
                               n: Int, labels: DataFrame, threshold: Double,
-                              maxMembers: Int = 64,
-                              cache: CacheHandle = tracked()): DataFrame =
-    clusterPurityImpl(shingleArrays(docs, textCol, idCol, n, cache), labels,
-      threshold, maxMembers, cache)
+                              maxMembers: Int = 64): DataFrame =
+    clusterPurityImpl(shingleArrays(docs, textCol, idCol, n), labels,
+      threshold, maxMembers)
 
   private def clusterPurityImpl(arrs: DataFrame, labels0: DataFrame,
-                                threshold: Double, maxMembers: Int,
-                                cache: CacheHandle): DataFrame = {
+                                threshold: Double, maxMembers: Int): DataFrame = {
     require(maxMembers >= 2, s"clusterPurity: maxMembers must be >= 2, got $maxMembers")
     // the CC labels feed the member rollup AND both sides of the pair
     // self-join — persist them (and the slim labelled-member frame) or the
     // whole shingle→candidate→verify→CC pipeline recomputes per consumer
-    val labels = cache.register(labels0)
+    val labels = SessionFrames.track(labels0)
     val memb = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") <= maxMembers)
-    val lm = cache.register(labels.join(memb, "cluster_id")
+    val lm = SessionFrames.track(labels.join(memb, "cluster_id")
       .join(arrs.select(col("doc_id"), col("__arr"), col("__n_sh")), "doc_id"))
     val mp = lm.select(col("cluster_id"), col("n_members"), col("doc_id").as("doc_a"),
         col("__arr").as("__arr_a"), col("__n_sh").as("na"))
@@ -727,12 +681,12 @@ object Dedup {
     *
     * Block lifecycle (local mode): each round's blocks are unpersisted as
     * soon as the next round's convergence check has consumed them, the
-    * final labels are materialized into `cache` (the same caller-owned
-    * handle lifecycle as every other pipeline persist), and the last
-    * round's blocks are then released too — repeated Bench/Verify
-    * invocations in one JVM accumulate nothing beyond the handle the
-    * caller drains. */
-  def clusterRounds(pairs: DataFrame, cache: CacheHandle = tracked(),
+    * final labels are materialized into a [[graft.SessionFrames.track]]ed
+    * persist (the caller-owned lifecycle of every other pipeline persist),
+    * and the last round's blocks are then released too — repeated
+    * Bench/Verify invocations in one JVM accumulate nothing beyond what
+    * [[graft.SessionFrames.release]] drains. */
+  def clusterRounds(pairs: DataFrame,
                     localSolveMaxEdges: Long = LocalSolveMaxEdges): (DataFrame, Int) = {
     val sc = pairs.sparkSession.sparkContext
     val localMaster = sc.master.startsWith("local")
@@ -743,30 +697,21 @@ object Dedup {
           "unrecoverable after executor loss")
     if (localMaster && sc.getCheckpointDir.isEmpty)
       clusterRoundsImpl(pairs, df => df.localCheckpoint(eager = true),
-        releaseCheckpointBlocks, cache, materialize = true, localSolveMaxEdges)
+        SessionFrames.releaseBlocks, materialize = true, localSolveMaxEdges)
     else
       // reliable checkpoint files belong to the admin-configured dir; the
       // labels frame stays lazy over them (nothing to release here)
       clusterRoundsImpl(pairs, df => df.checkpoint(eager = true),
-        _ => (), cache, materialize = false, localSolveMaxEdges)
+        _ => (), materialize = false, localSolveMaxEdges)
   }
-
-  /** Drop the block-manager blocks behind a `localCheckpoint`ed frame (its
-    * analyzed plan is a leaf [[LogicalRDD]] over the persisted RDD). */
-  private[graft] def releaseCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** The alternating-rounds loop; `cut` truncates each round's lineage,
     * `release` frees a cut frame's storage once nothing will read it again,
-    * `materialize` pins the labels into the cache handle BEFORE the final
+    * `materialize` pins the labels into a tracked persist BEFORE the final
     * round's storage is released. */
   private def clusterRoundsImpl(pairs: DataFrame,
                                 cut: DataFrame => DataFrame,
                                 release: DataFrame => Unit,
-                                cache: CacheHandle,
                                 materialize: Boolean,
                                 localSolveMaxEdges: Long): (DataFrame, Int) = {
     // Set fingerprint for convergence: (count, XOR of per-edge xxhash64).
@@ -790,7 +735,7 @@ object Dedup {
     // (not cut): the fingerprint job materializes the blocks, so deciding
     // between the fast path and the loop costs ONE job over the upstream
     // pair pipeline, and both consumers below read blocks, not lineage
-    val canonical = cache.register(
+    val canonical = SessionFrames.track(
       pairs
         .select(least(col("doc_a"), col("doc_b")).as("u"),
           greatest(col("doc_a"), col("doc_b")).as("v"))
@@ -807,7 +752,7 @@ object Dedup {
       val out =
         if (!materialize) labels
         else {
-          val persisted = cache.register(labels)
+          val persisted = SessionFrames.track(labels)
           persisted.count()
           persisted
         }
@@ -832,7 +777,7 @@ object Dedup {
     val out =
       if (!materialize) labels
       else {
-        val persisted = cache.register(labels)
+        val persisted = SessionFrames.track(labels)
         persisted.count() // materialize before the final round's blocks go
         release(edges)
         persisted
@@ -970,9 +915,8 @@ object Dedup {
     * floor 11). Empty populations audit vacuously true (0 ≤ 0). */
   def simhashSeparation(docs: DataFrame, textCol: String, idCol: String,
                         jThresh: Double = 0.9,
-                        nearCeilMilli: Long = 9000L, bgFloorMilli: Long = 11000L,
-                        cache: CacheHandle = tracked()): DataFrame = {
-    val fp = cache.register(simhash(docs, textCol, idCol))
+                        nearCeilMilli: Long = 9000L, bgFloorMilli: Long = 11000L): DataFrame = {
+    val fp = SessionFrames.track(simhash(docs, textCol, idCol))
     def stats(pairs: DataFrame, pop: String, boundMilli: Long, isCeil: Boolean) = {
       val h = pairs
         .join(fp.select(col("doc_id").as("doc_a"), col("simhash").as("__ha")), "doc_a")
@@ -985,7 +929,7 @@ object Dedup {
       h.select(lit(pop).as("population"), col("n_pairs"),
         lit(boundMilli).as("bound_milli"), cmp.as("ok"))
     }
-    val near = ngramJaccard(docs, textCol, idCol, n = 3, threshold = 0.5, cache)
+    val near = ngramJaccard(docs, textCol, idCol, n = 3, threshold = 0.5)
       .filter(col("jaccard") >= jThresh).select(col("doc_a"), col("doc_b"))
     val ids = fp.select(col("doc_id"))
     val bg = ids.select(col("doc_id").as("doc_a"), (col("doc_id") + 1).as("doc_b"))
@@ -997,10 +941,9 @@ object Dedup {
 
   /** SimHash near-dup pairs: collide on one of four 16-bit bands, then
     * verify Hamming distance ≤ maxHamming via bit_count(xor). */
-  def simhashPairs(docs: DataFrame, textCol: String, idCol: String, maxHamming: Int,
-                   cache: CacheHandle = tracked()): DataFrame = {
+  def simhashPairs(docs: DataFrame, textCol: String, idCol: String, maxHamming: Int): DataFrame = {
     // both sides of the band self-join re-read the fingerprints
-    val fp = cache.register(simhash(docs, textCol, idCol))
+    val fp = SessionFrames.track(simhash(docs, textCol, idCol))
     val bandCols = (0 until 4).map(b => shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL))
     val banded = fp.select(col("doc_id"), col("simhash"), posexplode(array(bandCols: _*)).as(Seq("band", "key")))
     banded.as("a")

@@ -148,17 +148,6 @@ object Knn {
         expr(s"shiftleft(1L, cast(plane % $bitsPerBand as int))")).otherwise(0L)).as("key"))
   }
 
-  /** Single-table sign-random-projection bucket id (one bit per
-    * hyperplane): [[graft.functions.SrpBandKeys]] with one band — an inline
-    * per-row expression, so attaching a bucket to a row costs NO shuffle
-    * and no self-join. */
-  private def srpBucket(embCol: String, bits: Int): Column =
-    element_at(VectorFns.srpBandKeys(col(embCol), bands = 1, bitsPerBand = bits), 1)
-
-  /** (id, bucket) table form of [[srpBucket]]. */
-  def lshBuckets(vectors: DataFrame, idCol: String, embCol: String, bits: Int): DataFrame =
-    vectors.select(col(idCol), srpBucket(embCol, bits).as("bucket"))
-
   /** Approximate top-k: candidates are the UNION of the query's bucket in
     * `bands` independent hash tables (the OR-construction — the same
     * banding [[cosineNearDupLsh]] uses), exact-rescored and ranked. One

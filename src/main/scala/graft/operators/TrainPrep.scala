@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionFrames
 import graft.functions.TextFns
 
 /** Training-data preparation operators (SURVEY §2.8): the steps between a
@@ -14,26 +15,14 @@ import graft.functions.TextFns
   * The reference engine ships none of these (its surface stops at CDC +
   * reconciliation); they are the [EXT] scale path a 100 TB corpus pipeline
   * needs downstream of dedup.
+  *
+  * Operator intermediates read more than once (e.g. [[topTerms]]' tf
+  * aggregate, read by the df rollup and the join probe) are persisted with
+  * [[graft.SessionFrames.track]]; the caller drains them with
+  * [[graft.SessionFrames.release]] once the result is materialized
+  * (Bench/Verify/Profile do so between queries).
   */
 object TrainPrep {
-
-  /** Operator-persisted intermediates (the [[Dedup.unpersistAll]] pattern):
-    * [[topTerms]] persists its tf aggregate so the df rollup and the join
-    * probe read ONE computation instead of re-scanning the corpus. Same
-    * single-sequential-caller lifecycle — Bench/Verify drain between
-    * queries. */
-  private val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private[graft] def registered(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.add(df)
-    df
-  }
-  /** Drop every frame the operators persisted (idempotent; call between,
-    * never during, pipeline runs). */
-  def unpersistAll(): Unit = {
-    var df = persisted.poll()
-    while (df != null) { df.unpersist(false); df = persisted.poll() }
-  }
 
   /** Knuth's multiplicative constant (⌊2³²/φ⌋) — a fixed odd-ish multiplier
     * whose low decimal digits decorrelate from sequential ids. */
@@ -131,7 +120,7 @@ object TrainPrep {
     * need a data-sized sort; production DSIR likewise fixes the budget). */
   def dsirWeights(docs: DataFrame, textCol: String, idCol: String,
                   isTarget: Column): DataFrame = {
-    val tf = registered(docs
+    val tf = SessionFrames.track(docs
       .select(col(idCol), isTarget.as("__tgt"),
         explode(TextFns.tokens(col(textCol))).as("token"))
       .groupBy(col(idCol), col("__tgt"), col("token"))
@@ -538,7 +527,7 @@ object TrainPrep {
         s"multi-word masks are the >64 extension) and topK > 0, got ($vocabK, $topK)")
     // ONE corpus scan: the distinct-token arrays are persisted and feed
     // both the vocab aggregate (exploded) and the mask fold below
-    val toksF = registered(docs.select(TextFns.distinctTokens(col(textCol)).as("__toks")))
+    val toksF = SessionFrames.track(docs.select(TextFns.distinctTokens(col(textCol)).as("__toks")))
     val vocabRows = toksF.select(explode(col("__toks")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("token")).limit(vocabK)
@@ -647,7 +636,7 @@ object TrainPrep {
     * is k rows at any corpus scale. */
   def vocabTop(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k > 0, s"vocabTop: k must be positive, got $k")
-    val counts = registered(docs
+    val counts = SessionFrames.track(docs
       .select(col(idCol).as("doc_id"), explode(TextFns.tokens(col(textCol))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df")))
@@ -705,7 +694,7 @@ object TrainPrep {
     * 1-row aggregate; final top-k is a ranking window per doc. All
     * exchanges linear in distinct (doc, term) pairs. */
   def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val tf = registered(docs
+    val tf = SessionFrames.track(docs
       .select(col(idCol).as("doc_id"), explode(TextFns.tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")))
@@ -767,7 +756,7 @@ object TrainPrep {
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       TextFns.tokenSetCount(col(textCol), Seq(t)).cast("long").as(s"__tf$i")
     }
-    val proj = registered(docs.select(
+    val proj = SessionFrames.track(docs.select(
       col(idCol).as("doc_id") +:
         size(TextFns.tokens(col(textCol))).cast("long").as("dl") +: tfCols: _*))
     val dfCols = queryTerms.indices.map(i =>
@@ -844,7 +833,7 @@ object TrainPrep {
     * (shorter than n tokens) surface novelty 1000 — no evidence of
     * duplication. */
   def textNovelty(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val sh = registered(docs
+    val sh = SessionFrames.track(docs
       .select(col(idCol).as("doc_id"),
         explode(TextFns.hashedShingles(col(textCol), n)).as("sh")))
     val dfTab = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -1055,7 +1044,7 @@ object TrainPrep {
     // branch re-scans the corpus to rebuild it (6 scans observed for the
     // curriculum entry; 2 with the persist: histogram fill + join-back).
     // Domain-sized (≤ 10⁴ rows), drained by Bench/Verify between queries.
-    val hist = registered(docs.select(score.as("score"))
+    val hist = SessionFrames.track(docs.select(score.as("score"))
       .groupBy(col("score")).agg(count(lit(1)).as("n")))
     val below = Window.orderBy(col("score"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1164,7 +1153,7 @@ object TrainPrep {
           "unrecoverable after executor loss")
     val (cut, release): (DataFrame => DataFrame, DataFrame => Unit) =
       if (localMaster && sc.getCheckpointDir.isEmpty)
-        (df => df.localCheckpoint(eager = true), Dedup.releaseCheckpointBlocks)
+        (df => df.localCheckpoint(eager = true), SessionFrames.releaseBlocks)
       else (df => df.checkpoint(eager = true), _ => ())
 
     // single-char tokens never produce a pair — drop them from the state
@@ -1185,7 +1174,7 @@ object TrainPrep {
       val rows = state.collect().map(r => (r.getLong(0), r.getString(1)))
       release(state)
       import spark.implicits._
-      val out = registered(graft.Tables.orderedReport(
+      val out = SessionFrames.track(graft.Tables.orderedReport(
         localTrain(rows, nMerges)
           .toDF("merge_rank", "sym_a", "sym_b", "merged", "n_occ"),
         "merge_rank"))
@@ -1238,7 +1227,7 @@ object TrainPrep {
         org.apache.spark.sql.types.StructType.fromDDL(
           "merge_rank BIGINT, sym_a STRING, sym_b STRING, merged STRING, n_occ BIGINT")))
       .transform(graft.Tables.orderedReport(_, "merge_rank"))
-    val out = registered(merges)
+    val out = SessionFrames.track(merges)
     out.count()
     bestFrames.foreach(release)
     out

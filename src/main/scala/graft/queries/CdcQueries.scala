@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionFrames, Tables}
 import graft.Tables.{changeLog, events, eventsInRange, fmtTs, tsLit}
 import graft.operators.CdcOps
 
@@ -100,30 +100,17 @@ object CdcQueries {
       .orderBy("user_id")
   }
 
-  /** Session-scoped day-partitioned copy of the change log, written once
-    * per fixture dir (the index-build lifecycle of the PQ/IVF caches; like
-    * those, STALE if the fixture at the same path is regenerated within the
-    * process — acceptable for the fixture-per-round lifecycle, rebuild by
-    * restarting the session): the warehouse LAYOUT a 100 TB event log
-    * actually lands in — one directory per event-time day, so any
+  /** Session-shared day-partitioned copy of the change log, written once
+    * per fixture ([[graft.SessionFrames.dir]]: rewritten when the fixture
+    * changes, deleted with the JVM): the warehouse LAYOUT a 100 TB event
+    * log actually lands in — one directory per event-time day, so any
     * time-bounded consumer reads only its days' files instead of
-    * row-group-pruning a monolith. Temp dirs are removed by a JVM shutdown
-    * hook (recursive — deleteOnExit can't take a populated directory). */
-  private val partitionedLogByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * row-group-pruning a monolith. */
   private def partitionedLog(s: SparkSession, d: String): String =
-    partitionedLogByDir.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft-partlog-")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }))
+    SessionFrames.dir(s, d, "partlog") { out =>
       events(s, d).withColumn("day", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("day").parquet(out.toString)
-      out.toString
-    })
+        .write.mode("overwrite").partitionBy("day").parquet(out)
+    }
 
   /** Partitioned sink + PRUNED read-back: one day's slice served from the
     * day-partitioned copy. The plan must show the predicate as a
@@ -138,32 +125,22 @@ object CdcQueries {
         col("event_type"))
       .orderBy("event_id")
 
-  /** Session-scoped Z-ORDERED copy of the event log ([[partitionedLog]]'s
+  /** Session-shared Z-ORDERED copy of the event log ([[partitionedLog]]'s
     * lifecycle): range-partitioned and sorted by the bit-interleaved
     * (user_id, day-index) Morton key, so every file covers a bounded
     * RECTANGLE in (user, day) — the lakehouse data-skipping layout for
     * workloads that filter on BOTH dimensions, where a single-column sort
     * clusters only its own column. */
-  private val zorderLogByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def zorderLog(s: SparkSession, d: String): String =
-    zorderLogByDir.computeIfAbsent(d, _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft-zorder-")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(out).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }))
+    SessionFrames.dir(s, d, "zorder") { out =>
       val withDims = events(s, d).select(col("event_id"), col("user_id"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
           .cast("long").as("day_idx"))
       graft.operators.Bucketing.zOrderWrite(
         withDims.withColumn("z_key",
           graft.operators.Bucketing.zKey(col("user_id"), col("day_idx"), bits = 16)),
-        out.toString, "user_id", "day_idx", bits = 16, files = 8)
-      out.toString
-    })
+        out, "user_id", "day_idx", bits = 16, files = 8)
+    }
 
   /** Z-ordered sink + rectangle read-back: a (user-range × day-range)
     * slice served from the Morton-clustered copy — at 100 TB the 2-D
@@ -177,16 +154,14 @@ object CdcQueries {
       .select(col("event_id"), col("user_id"), col("day_idx"), col("z_key"))
       .orderBy("event_id")
 
-  /** Shared funnel stage frame — built ONCE per fixture dir and persisted
-    * for the session ([[partitionedLog]]'s lifecycle; goes stale only if
-    * the fixture at the same path is regenerated in-process, like the PQ
-    * codebook caches): one row per signed-up user with that user's strict
-    * stage-entry timestamps — t1 = first signup, t2 = first click STRICTLY
-    * AFTER t1, t3 = first purchase STRICTLY AFTER t2; t2/t3 null when the
-    * user never reached the stage. [[aggFunnel]] and [[aggConversionLag]]
-    * consume this one computation instead of each re-deriving per-stage
-    * min-ts frames from the log ([[aggRetention]] shares the
-    * [[signupAnchors]] layer below it).
+  /** Shared funnel stage frame — built ONCE per fixture and checkpointed
+    * for the session ([[graft.SessionFrames.frame]]): one row per signed-up
+    * user with that user's strict stage-entry timestamps — t1 = first
+    * signup, t2 = first click STRICTLY AFTER t1, t3 = first purchase
+    * STRICTLY AFTER t2; t2/t3 null when the user never reached the stage.
+    * [[aggFunnel]] and [[aggConversionLag]] consume this one computation
+    * instead of each re-deriving per-stage min-ts frames from the log
+    * ([[aggRetention]] shares the [[signupAnchors]] layer below it).
     *
     * Shape: each stage is a user-keyed min-ts aggregate joined to the
     * previous stage's (user, entry-ts) frame — stage frames are USER-sized
@@ -194,38 +169,24 @@ object CdcQueries {
     * key; the event scan is pruned per stage by the pushed event_type
     * predicate (PlanSpec pins it on the builder's plan). At 100 TB the log
     * is scanned per stage but never shuffled wider than one row per
-    * qualifying user, and the persisted frame is user-sized. */
+    * qualifying user, and the checkpointed frame is user-sized. */
   private[graft] def buildSignupAnchors(s: SparkSession, d: String): DataFrame =
     events(s, d).filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
-  private val signupAnchorsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   /** The signup anchor frame alone, shared separately from the full stage
     * frame: [[aggRetention]] needs ONLY first-signup times, so it must not
     * pay the click/purchase stage joins when run in isolation (a bench
     * regression when it did). */
-  private[graft] def signupAnchors(s: SparkSession, d: String): DataFrame = {
-    val f = signupAnchorsByDir.computeIfAbsent(d, _ => buildSignupAnchors(s, d))
-    if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    f
-  }
+  private[graft] def signupAnchors(s: SparkSession, d: String): DataFrame =
+    SessionFrames.frame(s, d, "signup_anchors")(buildSignupAnchors(s, d))
   private[graft] def buildFunnelStages(s: SparkSession, d: String): DataFrame =
     graft.operators.Funnel.stageEntryTimes(events(s, d), "user_id", "event_type", "ts",
       Seq("signup", "click", "purchase"),
       anchor = Some(signupAnchors(s, d).select(col("user_id"), col("t1").as("t_signup"))))
       .select(col("user_id"), col("t_signup").as("t1"),
         col("t_click").as("t2"), col("t_purchase").as("t3"))
-  private val stageFramesByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[graft] def funnelStages(s: SparkSession, d: String): DataFrame = {
-    val f = stageFramesByDir.computeIfAbsent(d, _ => buildFunnelStages(s, d))
-    // clearCache() (Bench's between-query drain) unpersists without telling
-    // us — re-arm so the next 3-query profile still reads one computation
-    if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    f
-  }
+  private[graft] def funnelStages(s: SparkSession, d: String): DataFrame =
+    SessionFrames.frame(s, d, "funnel_stages")(buildFunnelStages(s, d))
 
   /** Ordered conversion funnel over the event log — the classic
     * event-analytics rollup a CDC consumer runs: users reaching each stage
@@ -301,7 +262,7 @@ object CdcQueries {
     // and the week-0 denominator broadcast — without it the events join +
     // distinct runs twice (one per branch). Domain-sized (cohorts × active
     // weeks), drained by Bench/Verify between queries.
-    val cnt = graft.operators.TrainPrep.registered(
+    val cnt = SessionFrames.track(
       act.groupBy(col("cohort_week"), col("week_n"))
         .agg(count(lit(1)).as("n_users")))
     val w0 = broadcast(cnt.filter(col("week_n") === 0)
@@ -1310,7 +1271,7 @@ object CdcQueries {
     * anywhere, engine-exact at any scale. Lower-median (rank ⌈n/2⌉)
     * convention keeps every statistic an integer cents value. */
   private val aggRobustOutliers: Q = (s, d) => {
-    val hist = graft.operators.TrainPrep.registered(
+    val hist = SessionFrames.track(
       events(s, d)
         .groupBy(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
         .agg(count(lit(1)).as("hn")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SessionFrames
 import graft.Tables.{documents, embeddings, rnd4, rnd4Sql}
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Knn, Multimodal, NaiveBayes, Pca, TrainPrep}
@@ -235,8 +236,8 @@ object ExtQueries {
     * distinct group, never raw occurrences. */
   private val extTextRarity: Q = (s, d) => {
     // persisted: the df rollup and the join probe read ONE computation
-    // (TrainPrep.unpersistAll drains it between queries — topTerms' pattern)
-    val tc = TrainPrep.registered(documents(s, d)
+    // (SessionFrames.release drains it between queries — topTerms' pattern)
+    val tc = SessionFrames.track(documents(s, d)
       .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("t"))
       .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("cnt")))
     val dfTab = tc.groupBy(col("t")).agg(count(lit(1)).as("df"))
@@ -270,7 +271,7 @@ object ExtQueries {
       .select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
     // persisted for the same two-reader reason as extTextRarity's tc;
     // bigram fan-out compiled ([[graft.functions.TokenBigrams]])
-    val bc = TrainPrep.registered(docs
+    val bc = SessionFrames.track(docs
       .select(col("doc_id"), explode(TextFns.tokenBigrams(col("tk"))).as("b"))
       .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("cnt")))
     val dfTab = bc.groupBy(col("b")).agg(count(lit(1)).as("df"))
@@ -319,7 +320,7 @@ object ExtQueries {
     val occ = docs
       .select(col("doc_id"), explode(TextFns.tokenPrevCur(col("tk"))).as("bg"))
       .select(col("doc_id"), col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-    val tf = TrainPrep.registered(
+    val tf = SessionFrames.track(
       occ.groupBy(col("doc_id"), col("prev"), col("cur")).agg(count(lit(1)).as("tf")))
     val btf = tf.filter(col("prev").isNotNull) // the bigram rows
     val types = btf.groupBy(col("prev"), col("cur")).agg(sum(col("tf")).as("c2"))
@@ -380,19 +381,16 @@ object ExtQueries {
       // the vocab axis) — data-sized, so the global range sort stays
       .orderBy("label", "token")
 
-  /** Session-scoped trained NB model, keyed by fixture dir (the
-    * [[bpeMergesByDir]] / pqBooks pattern): the four audit queries below
+  /** Session-shared trained NB model (a [[SessionFrames.frame]], like
+    * [[trainedMerges]] and [[pqBooks]]): the four audit queries below
     * (score / label_noise / calibration / router_kappa) all score against
     * the SAME trained router — retraining per query would re-run the
     * (label, token) count pass four times for byte-identical grids. The
     * cached frame is the materialized (labels × vocab)-bounded model, not
     * corpus data; `ext_nb_train` itself still trains fresh (it IS the
     * training benchmark, the extBpeTrain discipline). */
-  private val nbModelByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def trainedNbModel(s: SparkSession, d: String): DataFrame =
-    nbModelByDir.computeIfAbsent(d, _ =>
-      NaiveBayes.train(documents(s, d), "text", "lang").localCheckpoint(true))
+    SessionFrames.frame(s, d, "nb_model")(NaiveBayes.train(documents(s, d), "text", "lang"))
 
   /** The completed per-(doc, label) score grid off the shared trained
     * model — the SECOND session-shared NB frame: all four audit surfaces
@@ -400,12 +398,9 @@ object ExtQueries {
     * grid, and rebuilding it per query re-runs a byte-identical corpus
     * scoring pass (token explode + model join) each time. Docs × labels
     * rows, checkpointed once. */
-  private val nbGridByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def nbScoredGrid(s: SparkSession, d: String): DataFrame =
-    nbGridByDir.computeIfAbsent(d, _ =>
-      NaiveBayes.scoredGrid(documents(s, d), "text", "lang", "doc_id",
-        trainedNbModel(s, d)).localCheckpoint(true))
+    SessionFrames.frame(s, d, "nb_grid")(
+      NaiveBayes.scoredGrid(documents(s, d), "text", "lang", "doc_id", trainedNbModel(s, d)))
 
   /** Self-scoring pass of the NB classifier ([[NaiveBayes.scoreAudit]]):
     * per doc the argmax label (priors from the TRAINED model, empty docs
@@ -506,7 +501,7 @@ object ExtQueries {
   private val extPhraseSearch: Q = (s, d) => {
     val docs = documents(s, d)
       .select(col("doc_id"), TextFns.tokens(col("text")).as("tk"))
-    val post = TrainPrep.registered(
+    val post = SessionFrames.track(
       docs.select(col("doc_id"), posexplode(col("tk")).as(Seq("pos", "term"))))
     // trigram fan-out compiled ([[graft.functions.TokenTriples]] — the
     // TokenPairsWindow lesson): the interpreted transform/element_at
@@ -891,19 +886,12 @@ object ExtQueries {
     * class as the coded-corpus checkpoints; corpus text never lands in
     * either. Downstream consumers are unchanged row-for-row: the frames
     * are the exact outputs the per-query pipelines produced. */
-  private val ngramPairsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def ngramPairsShared(s: SparkSession, d: String): DataFrame =
-    ngramPairsByDir.computeIfAbsent(d, _ =>
-      Dedup.ngramJaccard(documents(s, d), "text", "doc_id", n = 3, threshold = 0.5)
-        .localCheckpoint(true))
-  private val dupLabelsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    SessionFrames.frame(s, d, "ngram_pairs")(
+      Dedup.ngramJaccard(documents(s, d), "text", "doc_id", n = 3, threshold = 0.5))
   private def dupLabelsShared(s: SparkSession, d: String): DataFrame =
-    dupLabelsByDir.computeIfAbsent(d, _ =>
-      Dedup.duplicateClusters(
-        ngramPairsShared(s, d).select(col("doc_a"), col("doc_b")))
-        .localCheckpoint(true))
+    SessionFrames.frame(s, d, "dup_labels")(
+      Dedup.duplicateClusters(ngramPairsShared(s, d).select(col("doc_a"), col("doc_b"))))
 
   private val extDedupQuality: Q = (s, d) => {
     val docs = documents(s, d)
@@ -1393,7 +1381,7 @@ object ExtQueries {
     // persisted: warm passes read the materialized index instead of
     // re-shingling the corpus — the dominant cost (the extTextRarity
     // pattern; Bench/Verify drain between queries)
-    val sh = TrainPrep.registered(documents(s, d).select(col("doc_id"), col("source"),
+    val sh = SessionFrames.track(documents(s, d).select(col("doc_id"), col("source"),
       explode(TextFns.hashedShingles(col("text"), 13)).as("sh")))
     sh.groupBy(col("sh"))
       .agg(collect_list(struct(col("doc_id"), col("source"))).as("ds"))
@@ -1504,13 +1492,11 @@ object ExtQueries {
   private val extBpeTrain: Q = (s, d) =>
     TrainPrep.bpeTrain(documents(s, d), nMerges = BpeTrainMerges)
 
-  /** Session-scoped trained-merge cache, keyed by fixture dir (the pqBooks
-    * pattern): train once, encode repeatedly — the tokenizer lifecycle. The
+  /** Session-shared trained merges (a [[SessionFrames.value]], like
+    * [[pqBooks]]): train once, encode repeatedly — the tokenizer lifecycle. The
     * collect is bounded by construction (nMerges rows, not corpus-sized). */
-  private val bpeMergesByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
   private def trainedMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeMergesByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "bpe_merges")(
       TrainPrep.bpeTrain(documents(s, d), nMerges = BpeTrainMerges)
         .orderBy("merge_rank").select("sym_a", "sym_b")
         .collect().toIndexedSeq.map(r => (r.getString(0), r.getString(1))))
@@ -1646,19 +1632,13 @@ object ExtQueries {
     * rank ≤ 5 of the k = 8 frame IS the k = 5 result (same window, same
     * tie order), so the single-k surfaces slice it instead of rescanning. */
   private val ExactKMax = 8
-  private val exactTopByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def exactTop(s: SparkSession, d: String): DataFrame =
-    exactTopByDir.computeIfAbsent(d, _ => {
+    SessionFrames.frame(s, d, "exact_top") {
       val emb = embeddings(s, d)
-      Knn.bruteForce(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", k = ExactKMax)
-        .localCheckpoint(true)
-    })
-  private val ivfCellsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Float])]]()
+      Knn.bruteForce(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = ExactKMax)
+    }
   private def ivfCellsShared(s: SparkSession, d: String): Seq[(Int, Array[Float])] =
-    ivfCellsByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "ivf_cells")(
       Knn.ivfCentroids(embeddings(s, d), "vec_id", "embedding",
         IvfCells, IvfIters, IvfSampleN))
 
@@ -1951,10 +1931,8 @@ object ExtQueries {
     * [[ivfCellsShared]] discipline for the INT quantizer): the occupancy
     * audit and its streaming maintainer must assign against the SAME
     * centroids; a deterministic pure function of (corpus, params). */
-  private val intIvfCellsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Long])]]()
   private[graft] def intIvfCellsShared(s: SparkSession, d: String): Seq[(Int, Array[Long])] =
-    intIvfCellsByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "int_ivf_cells")(
       Knn.intIvfCells(embeddings(s, d), "vec_id", "embedding",
         IvfCells, IvfIters, IvfSampleN))
 
@@ -2152,7 +2130,7 @@ object ExtQueries {
     * n_tokens) histogram re-grouped by |n − med| — corpus touched once,
     * every later frame histogram-sized; no float quantiles anywhere. */
   private val extLengthOutliers: Q = (s, d) => {
-    val hist = TrainPrep.registered(
+    val hist = SessionFrames.track(
       documents(s, d)
         .groupBy(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
         .agg(count(lit(1)).as("hn")))
@@ -2259,12 +2237,6 @@ object ExtQueries {
   final val PqIters = 2
   final val PqSampleN = 128
 
-  /** Session-scoped built-index registry, keyed by fixture dir (all other
-    * inputs are the compile-time contract constants above). Both models
-    * are pure functions of (corpus, params), so reuse cannot change an
-    * output — it only reproduces the index-build/query lifecycle every ANN
-    * store has (train once, query repeatedly; the join_bucketed
-    * session-table pattern). Fixtures are immutable within a session. */
   /** Unigram-LM tokenizer contract constants ([[graft.operators.Unigram]]):
     * 120-piece vocab, 400 seed candidates, 4 EM iterations, trained
     * corpus-wide (distributed E-step over the full word-type frame —
@@ -2273,24 +2245,18 @@ object ExtQueries {
   final val UniSeed = 400
   final val UniIters = 4
 
-  private val uniModelByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.Unigram.Model]()
-
   /** Session-shared Viterbi-ENCODED corpus — (doc_id, text, e) with e the
     * real [[graft.functions.UnigramEncode]] struct, localCheckpoint'd once
     * per fixture dir. Both consumers of the encode (the fidelity audit in
     * [[extUnigramEncode]] and the packing in [[extPackWindowsUnigram]])
     * used to re-run the full per-doc Viterbi; the trainedMerges/nbModel
     * session-cache precedent applies — one encode pass, two readers. */
-  private val uniEncodedByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def uniEncoded(s: SparkSession, d: String): DataFrame =
-    uniEncodedByDir.computeIfAbsent(d, _ =>
+    SessionFrames.frame(s, d, "unigram_encoded")(
       documents(s, d).select(col("doc_id"), col("text"),
-        graft.operators.Unigram.encode(uniModel(s, d), col("text")).as("e"))
-        .localCheckpoint(true))
+        graft.operators.Unigram.encode(uniModel(s, d), col("text")).as("e")))
   private[graft] def uniModel(s: SparkSession, d: String): graft.operators.Unigram.Model =
-    uniModelByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "unigram_model")(
       graft.operators.Unigram.train(documents(s, d), vocabSize = UniVocab,
         seedSize = UniSeed, iters = UniIters))
 
@@ -2366,10 +2332,8 @@ object ExtQueries {
   final val PcaK = 4
   final val PcaSampleN = 512
 
-  private val pcaModelByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.Model]()
   private[graft] def pcaModel(s: SparkSession, d: String): Pca.Model =
-    pcaModelByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "pca_model")(
       Pca.fit(embeddings(s, d), "vec_id", "embedding", k = PcaK, sampleN = PcaSampleN))
 
   /** PCA CONTRACT AUDIT ([[graft.operators.Pca]]) — the recall-audit
@@ -2467,16 +2431,16 @@ object ExtQueries {
     graft.Tables.orderedReport((sRows ++ cRows).reduce(_.unionByName(_)), "metric")
   }
 
-  private val pqBooksByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Knn.Codebooks]()
-  private val ivfPqIndexByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Knn.IvfPqIndex]()
+  /** The session-shared PQ codebooks and IVF-PQ index: pure functions of
+    * (corpus, the contract constants), so reuse cannot change an output —
+    * it only reproduces the index-build/query lifecycle every ANN store has
+    * (train once, query repeatedly). */
   private def pqBooks(s: SparkSession, d: String): Knn.Codebooks =
-    pqBooksByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "pq_books")(
       Knn.pqCodebooks(embeddings(s, d), "vec_id", "embedding",
         m = PqM, k = PqK, iters = PqIters, sampleN = PqSampleN))
   private def ivfPqIdx(s: SparkSession, d: String): Knn.IvfPqIndex =
-    ivfPqIndexByDir.computeIfAbsent(d, _ =>
+    SessionFrames.value(s, d, "ivf_pq_index")(
       Knn.ivfPqIndex(embeddings(s, d), "vec_id", "embedding",
         nCells = IvfCells, cellIters = IvfIters, m = PqM, nCodes = PqK,
         pqIters = PqIters, sampleN = PqSampleN))
@@ -2488,18 +2452,12 @@ object ExtQueries {
     * recall curve's tier). Pure functions of (corpus, session codebooks),
     * byte-identical to inline coding ([[Knn.pqCodedCorpus]]). ~m bytes of
     * codes per vector — the same growth class as the pHash frame. */
-  private val pqCodedByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def pqCodedShared(s: SparkSession, d: String): DataFrame =
-    pqCodedByDir.computeIfAbsent(d, _ =>
-      Knn.pqCodedCorpus(pqBooks(s, d), embeddings(s, d), "vec_id", "embedding")
-        .localCheckpoint(true))
-  private val ivfPqCodedByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    SessionFrames.frame(s, d, "pq_coded")(
+      Knn.pqCodedCorpus(pqBooks(s, d), embeddings(s, d), "vec_id", "embedding"))
   private def ivfPqCodedShared(s: SparkSession, d: String): DataFrame =
-    ivfPqCodedByDir.computeIfAbsent(d, _ =>
-      Knn.ivfPqCodedCorpus(ivfPqIdx(s, d), embeddings(s, d), "vec_id", "embedding")
-        .localCheckpoint(true))
+    SessionFrames.frame(s, d, "ivf_pq_coded")(
+      Knn.ivfPqCodedCorpus(ivfPqIdx(s, d), embeddings(s, d), "vec_id", "embedding"))
 
   /** PQ codes + reconstruction error over the embedding column — the
     * deep-compression tier of the ANN storage story (int8 → PQ → IVF).
@@ -2974,11 +2932,8 @@ object ExtQueries {
     * discipline, now carrying both tiers in ONE decode
     * ([[Multimodal.imageFeatures]]: the phash is the feature's sign
     * fold, so nothing decodes twice). */
-  private val mmFeatByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[queries] def imageFeaturesShared(s: SparkSession, d: String): DataFrame =
-    mmFeatByDir.computeIfAbsent(d, _ =>
-      Multimodal.imageFeatures(documents(s, d))(s).localCheckpoint(true))
+    SessionFrames.frame(s, d, "image_features")(Multimodal.imageFeatures(documents(s, d))(s))
   private[queries] def imageHashesShared(s: SparkSession, d: String): DataFrame =
     imageFeaturesShared(s, d).select(col("doc_id"), col("phash"))
 

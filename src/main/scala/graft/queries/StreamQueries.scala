@@ -137,20 +137,18 @@ object StreamQueries {
     * StateLayoutSpec (doubled index ≡ single) and exercised live in
     * StreamingSpec — the benched form measures the clean-probe cost.
     * Within the probe, no eager checkpoint on the shingle rows: the
-    * self-probe fast path hands them to the PPJoin machinery, whose cache
-    * handle persists them lazily. parquet metadata makes the doc count
+    * self-probe fast path hands them to the PPJoin machinery, whose
+    * tracked persists hold them lazily. parquet metadata makes the doc count
     * ~free; df ≤ #docs, so the no-hot-shingle decision costs zero jobs. */
-  private val neardupPairsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private[graft] def neardupPairsShared(s: SparkSession, d: String): DataFrame =
-    neardupPairsByDir.computeIfAbsent(d, _ => {
+    graft.SessionFrames.frame(s, d, "neardup_pairs") {
       import graft.streaming.NeardupStream
       val docs = s.read.parquet(s"$d/documents.parquet")
       val once = NeardupStream.shingleRows(docs)
       val fresh = NeardupStream.newPairs(once, once, NeardupStream.sizeRows(once),
         totalDocs = Some(docs.count()))
-      NeardupStream.mergePairs(fresh.limit(0), fresh).localCheckpoint(true)
-    })
+      NeardupStream.mergePairs(fresh.limit(0), fresh)
+    }
 
   private val streamNeardup: Q = (s, d) =>
     neardupPairsShared(s, d).orderBy("doc_a", "doc_b")

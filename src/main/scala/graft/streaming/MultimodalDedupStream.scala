@@ -89,11 +89,6 @@ object MultimodalDedupStream {
   def featRows(batchDocs: DataFrame): DataFrame =
     Multimodal.imageFeatures(batchDocs)(batchDocs.sparkSession)
 
-  /** One decoded 60-bit hash per payload — the hash projection of
-    * [[featRows]] (kept for callers that need only the Hamming tier). */
-  def hashRows(batchDocs: DataFrame): DataFrame =
-    featRows(batchDocs).select(col("doc_id"), col("phash"))
-
   /** A hash frame fanned out to its 6 LSH band rows — the probe unit and
     * the index-state row shape (each row carries the full hash for the
     * exact Hamming verify at probe time). */

@@ -198,12 +198,9 @@ object NeardupStream {
       .select(col("doc_a"), col("doc_b"), Tables.rnd4(jac).as("jaccard"))
   }
 
-  /** Keyed idempotent merges — applied ON READ over the raw delta union
+  /** Keyed idempotent merge — applied ON READ over the raw delta union
     * (and by [[compact]]). Identical rows on every delivery ⇒ the
     * reduction collapses them; insensitive to multiplicity and order. */
-  def mergeIndex(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch).distinct()
-
   def mergePairs(state: DataFrame, batch: DataFrame): DataFrame =
     state.unionByName(batch)
       .groupBy(col("doc_a"), col("doc_b")).agg(min(col("jaccard")).as("jaccard"))

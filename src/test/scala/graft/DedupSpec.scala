@@ -214,17 +214,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("clusterRounds leaves no persisted blocks once its handle is drained") {
-    // both the fast path (default) and the star loop (threshold 0)
+    // both the fast path (default) and the star loop (threshold 0); the
+    // single drain is SessionFrames.release
     for (threshold <- Seq(Dedup.LocalSolveMaxEdges, 0L)) {
+      SessionFrames.release(spark) // earlier tests' persists of the same plans
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-      val h = new Dedup.CacheHandle
-      val (labels, _) = Dedup.clusterRounds(pairs, h, localSolveMaxEdges = threshold)
+      val (labels, _) = Dedup.clusterRounds(pairs, localSolveMaxEdges = threshold)
       labels.count()
-      h.release()
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+        s"labels were not persisted (threshold $threshold)")
+      SessionFrames.release(spark)
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty,
-        s"round blocks survived handle release (threshold $threshold): $leaked")
+        s"round blocks survived release (threshold $threshold): $leaked")
     }
   }
 
@@ -310,17 +313,16 @@ class DedupSpec extends SparkSpec {
     assert(mism === 0)
   }
 
-  test("unpersistAll leaves no persisted RDDs behind (caller-owned cache lifecycle)") {
+  test("release leaves no persisted RDDs behind (caller-owned cache lifecycle)") {
     // delta-based: other components may hold deliberate session-scoped
     // localCheckpoints (e.g. the shared NB model); the pin is that THIS
-    // operator's persists all drain through unpersistAll.
+    // operator's persists all drain through SessionFrames.release.
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val d = docs((1, "a b c d e"), (2, "b c d e X"), (3, "q r s t u"))
     Dedup.ngramJaccard(d, "text", "doc_id", n = 3, threshold = 0.4).collect()
     Dedup.simhashPairs(d, "text", "doc_id", maxHamming = 3).collect()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty) // operators did persist
-    Dedup.unpersistAll()
-    spark.catalog.clearCache()
+    SessionFrames.release(spark)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
@@ -350,7 +352,7 @@ class DedupSpec extends SparkSpec {
     // mean includes the hamming-0 (1,2) pair, so only assert the near row
     // here (the fixture-scale bounds are exercised by the driver oracle)
     assert(grid.find(_._1 == "neardup").get._4)
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
   }
 
   test("codegen'd SimHash64 matches the vote-Aggregator reference bit-exactly") {
@@ -393,13 +395,13 @@ class DedupSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("ext_dedup_sweep")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     // reference: the replaced form — filter the pair table per threshold,
     // run the relational clustering, aggregate
     val docs = graft.Tables.documents(spark, d)
     val pairs = Dedup.ngramJaccard(docs, "text", "doc_id", n = 3, threshold = 0.5)
       .localCheckpoint(true)
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     val ntok = docs.select(col("doc_id"),
       size(TextFns.tokens(col("text"))).cast("long").as("n_tokens"))
     val want = Seq(500L, 600L, 700L, 800L, 900L).map { t =>
@@ -410,7 +412,7 @@ class DedupSpec extends SparkSpec {
         .join(ntok, "doc_id")
         .select(col("doc_id"), col("cluster_id"), col("n_tokens"))
         .as[(Long, Long, Long)].collect()
-      Dedup.unpersistAll()
+      SessionFrames.release(spark)
       val nDup = cl.length.toLong
       val nCl = cl.map(_._2).distinct.length.toLong
       val dropTok = cl.filter(r => r._1 != r._2).map(_._3).sum
@@ -423,11 +425,11 @@ class DedupSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val policy = SparkEntry.queries("ext_dedup_policy")(spark, d)
       .as[(Long, String, Long, Long, Long, Long, Long, Long)].collect().toSeq
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     val sweep = SparkEntry.queries("ext_dedup_sweep")(spark, d)
       .as[(Long, Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     assert(policy.nonEmpty)
     // per threshold, the banded grid sums back to the sweep's curve row:
     // same clustering, same survivors, same token ledger
@@ -443,7 +445,7 @@ class DedupSpec extends SparkSpec {
     val quality = SparkEntry.queries("ext_dedup_quality")(spark, d)
       .as[(String, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     policy.filter(_._1 == 500L).foreach { p =>
       val q = quality(p._2)
       assert(p._3 === q._2, s"band ${p._2} n_clusters vs quality n_groups")
@@ -455,9 +457,9 @@ class DedupSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val matrix = SparkEntry.queries("ext_dedup_cross_source")(spark, d)
       .as[(String, String, Long, Long, Long)].collect().toSeq
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     val pairs = SparkEntry.queries("ext_dedup_ngram")(spark, d).collect()
-    Dedup.unpersistAll()
+    SessionFrames.release(spark)
     assert(matrix.nonEmpty)
     // every near-dup pair lands in exactly one unordered source cell
     assert(matrix.map(_._3).sum === pairs.length.toLong)

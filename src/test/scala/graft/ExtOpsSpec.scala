@@ -639,7 +639,7 @@ class ExtOpsSpec extends SparkSpec {
       assert(math.abs(cpp - c.toDouble / p) <= 1e-4, s"$lang chars/piece")
       assert(fert >= 1.0 - 1e-9, "a word is never fewer than one piece")
     }
-    graft.operators.TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
   }
 
   test("pack diversity: entropy is zero exactly on single-source windows, positive otherwise") {
@@ -671,6 +671,6 @@ class ExtOpsSpec extends SparkSpec {
       assert(g === gopher(id) && p === policy(id) && x === ppl(id), s"doc $id stage drift")
       assert(kept === (g && p && x), s"doc $id conjunction")
     }
-    graft.operators.TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
   }
 }

@@ -154,7 +154,7 @@ class OlapSpec extends SparkSpec {
       val out = xs.count(x => math.abs(x - med) > 3 * mad)
       assert(got(et) === ((xs.length.toLong, med / 100.0, mad / 100.0, out.toLong)), et)
     }
-    graft.operators.TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
   }
 
   test("transition matrix: rows sum to per-from totals and pair mass = events - users") {

@@ -31,8 +31,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("funnel stages push their event-type predicates to the scan") {
-    // pinned on the frame BUILDERS: the queries read the session-persisted
-    // copies (InMemoryTableScan), whose cached plans are these
+    // pinned on the frame BUILDERS: the queries read the session-shared
+    // checkpoints (Scan ExistingRDD) these plans fill
     val anchors = graft.queries.CdcQueries.buildSignupAnchors(spark, d)
       .queryExecution.executedPlan.toString
     assert(anchors.contains("EqualTo(event_type,signup)"),
@@ -45,10 +45,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("funnel, conversion-lag and retention read ONE session-persisted stage frame") {
-    graft.queries.CdcQueries.funnelStages(spark, d) // arm the shared persist
-    for (q <- Seq("agg_funnel", "agg_conversion_lag", "agg_retention"))
-      assert(plan(q).contains("InMemoryTableScan"),
-        s"$q must read the shared persisted stage frame, not recompute it")
+    // the stage frames are session-shared checkpoints: every plan reads the
+    // checkpoint blocks and none re-derives a stage (each stage's event
+    // scan carries its pushed event_type predicate, so none may appear)
+    for (q <- Seq("agg_funnel", "agg_conversion_lag", "agg_retention")) {
+      val p = plan(q)
+      assert(p.contains("Scan ExistingRDD"),
+        s"$q must read the shared checkpointed stage frame:\n${p.take(1500)}")
+      for (t <- Seq("signup", "click", "purchase"))
+        assert(!p.contains(s"EqualTo(event_type,$t)"),
+          s"$q re-derives the $t stage instead of reading the shared frame:\n${p.take(1500)}")
+    }
   }
 
   test("interval overlap join rides the bin equi-key — no nested loop anywhere") {
@@ -556,7 +563,7 @@ class PlanSpec extends SparkSpec {
 
   test("winnow pairs self-join reads the persisted capped index on both sides") {
     val p = plan("ext_dedup_winnow_pairs")
-    graft.operators.Dedup.unpersistAll()
+    SessionFrames.release(spark)
     // the winnow kernel scan and the df-window fold into the persisted
     // frame — both join branches are InMemoryTableScans (the embedded
     // InMemoryRelation dump still prints the cached plan's parquet scan,
@@ -673,7 +680,7 @@ class PlanSpec extends SparkSpec {
 
   test("dsir weights: one persisted tf frame feeds scoring; the LM model is checkpointed, never re-aggregated") {
     val p = plan("ext_dsir_weights")
-    graft.operators.TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
     // the (doc, token) tf frame is session-persisted and the vocab-sized
     // model rides a checkpoint — scoring must read those, not re-run the
     // explode or rebuild per-LM counts (the pre-round-15 shape paid 4

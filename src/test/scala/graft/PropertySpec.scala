@@ -457,7 +457,7 @@ class PropertySpec extends SparkSpec {
       // states must equal the batch matrix too
       val gotX = MultimodalDedupStream.crossSource(spark, dir)
         .as[(String, String, Long, Long, Long)].collect().toSeq
-      graft.operators.Dedup.unpersistAll()
+      SessionFrames.release(spark)
       assert(got === oneShot, s"trial $trial diverged from the one-shot batch tier")
       assert(gotX === oneShotX, s"trial $trial cross-source matrix diverged")
     }

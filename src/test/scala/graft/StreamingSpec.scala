@@ -573,7 +573,7 @@ class StreamingSpec extends SparkSpec {
     val expect = graft.operators.Dedup
       .ngramJaccard(all, "text", "doc_id", n = 3, threshold = NeardupStream.Threshold)
       .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
-    graft.operators.Dedup.unpersistAll()
+    SessionFrames.release(spark)
     assert(got === expect)
     assert(got.map(p => (p._1, p._2)).toSeq === Seq((1L, 2L)))
 
@@ -654,7 +654,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
     val got = MultimodalDedupStream.report(spark, tgt)
       .as[(Long, Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    graft.operators.Dedup.unpersistAll()
+    SessionFrames.release(spark)
     assert(got === expect)
     assert(got.map(r => (r._1, r._5)) === Seq((1L, true), (2L, false), (3L, true)))
 
@@ -721,7 +721,7 @@ class StreamingSpec extends SparkSpec {
     val expect = Multimodal.softDedup(all.select($"doc_id"),
         Multimodal.semPairs(Multimodal.imageFeatures(all)(spark)))
       .as[(Long, Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    graft.operators.Dedup.unpersistAll()
+    SessionFrames.release(spark)
     assert(report === expect)
 
     // redelivery of everything changes nothing (pure pairs, distinct merge)
@@ -1843,7 +1843,7 @@ class StreamingSpec extends SparkSpec {
       doc(102L, english, "feed"), doc(103L, english + " too", "feed"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val vocab = VocabDrift.vocab(refDocs, k = 16)
-    graft.operators.TrainPrep.unpersistAll() // drain vocabTop's tf persist
+    SessionFrames.release(spark) // drain vocabTop's tf persist
     assert(vocab.contains("the") && vocab.contains("cat"))
     val base = VocabDrift.baseline(refDocs, vocab)
 

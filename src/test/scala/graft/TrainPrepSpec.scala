@@ -75,7 +75,7 @@ class TrainPrepSpec extends SparkSpec {
       .select("doc_id", "n_tokens", "logratio_micro", "keep")
       .as[(Long, Long, Long, Boolean)].collect()
       .map(x => x._1 -> x).toMap
-    TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
     // closed form: V=2; tgt: q=5,z=1,T=6; raw: q=6,z=6,T=12 (×1e6 — the
     // repo-wide lnMicro unit)
     def micro(c: Long, t: Long) = math.round(math.log((c + 0.5) / (t + 0.5 * 2)) * 1e6)
@@ -483,20 +483,18 @@ class TrainPrepSpec extends SparkSpec {
     assert(got === Seq(
       (0L, 2L, 1L, 500L), (1L, 2L, 1L, 500L), (2L, 2L, 2L, 1000L),
       (3L, 0L, 0L, 1000L)))
-    TrainPrep.unpersistAll()
-    spark.catalog.clearCache()
+    SessionFrames.release(spark)
   }
 
-  test("topTerms' persisted tf drains through unpersistAll (caller-owned lifecycle)") {
+  test("topTerms' persisted tf drains through release (caller-owned lifecycle)") {
     // delta-based: other components may hold deliberate session-scoped
     // localCheckpoints (e.g. the shared NB model); the pin is that THIS
-    // operator's persists all drain through unpersistAll.
+    // operator's persists all drain through SessionFrames.release.
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val d = docs((1L, "en", "a b c a"), (2L, "en", "b c d"))
     TrainPrep.topTerms(d, "doc_id", "text", k = 2).collect()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty) // tf was persisted
-    TrainPrep.unpersistAll()
-    spark.catalog.clearCache()
+    SessionFrames.release(spark)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
@@ -800,7 +798,7 @@ class TrainPrepSpec extends SparkSpec {
                      ): Seq[(Long, String, String, String, Long)] = {
     val out = TrainPrep.bpeTrain(d, nMerges = n, localSolveMaxVocab = maxVocab)
       .as[(Long, String, String, String, Long)].collect().toSeq
-    TrainPrep.unpersistAll()
+    SessionFrames.release(spark)
     out
   }
 

@@ -101,7 +101,7 @@ class StateLayoutSpec extends SparkSpec {
     val batch = graft.operators.Dedup
       .ngramJaccard(docs, "text", "doc_id", n = 3, threshold = NeardupStream.Threshold)
       .as[(Long, Long, Double)].collect().toSet
-    graft.operators.Dedup.unpersistAll()
+    graft.SessionFrames.release(spark)
     val uncapped = run(NeardupStream.DefaultMaxDf)
     assert(uncapped === batch)
     assert(uncapped.map(p => (p._1, p._2))
@@ -143,7 +143,7 @@ class StateLayoutSpec extends SparkSpec {
       b0.unionByName(b1), "text", "doc_id", n = 3,
       threshold = NeardupStream.Threshold)
       .as[(Long, Long, Double)].collect().toSet
-    graft.operators.Dedup.unpersistAll()
+    graft.SessionFrames.release(spark)
     assert(NeardupStream.pairState(spark, dir)
       .as[(Long, Long, Double)].collect().toSet === expect)
 
