@@ -15,11 +15,17 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // process CPU (all threads: local-mode executors included) next to the
+    // wall clock, so a co-tenant's steal shows as wall without CPU
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     args.tail.foreach { n =>
       (1 to 2).foreach { i =>
         val t0 = System.nanoTime()
+        val c0 = os.getProcessCpuTime
         SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[profile] $n run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        println(f"[profile] $n run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s" +
+          f" cpu ${(os.getProcessCpuTime - c0) / 1e9}%.2f s")
       }
       // match Bench's cache hygiene between queries, so a profiled number
       // is comparable to the bench's and later queries don't time under

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -15,59 +13,31 @@ import org.apache.spark.sql.types._
   * and last higher-order kernel on a scan-sized frame).
   *
   * Semantics are identical to the higher-order form, including its null
-  * poisoning: a code outside its table's range (element_at past the end)
-  * or a codes/table length mismatch (zip_with null padding) yields NULL,
-  * not a partial sum; accumulation is the same left-to-right double fold.
+  * poisoning: a code outside its table's range (element_at past the end),
+  * a null code, table or table entry (element_at yields null) or a
+  * codes/table length mismatch (zip_with null padding) yields NULL, not a
+  * partial sum; accumulation is the same left-to-right double fold.
   */
-case class AdcDist(left: Expression, right: Expression) extends BinaryExpression {
+case class AdcDist(left: Expression, right: Expression)
+  extends BinaryRowKernel[ArrayData, ArrayData, java.lang.Double] {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+  override def inputTypes =
+    Seq(ArrayType(ArrayType(DoubleType)), ArrayType(IntegerType))
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"adc_dist expects (array<array<double>>, array<int>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val dt = a.asInstanceOf[ArrayData]
-    val codes = b.asInstanceOf[ArrayData]
+  override def kernel(dt: ArrayData, codes: ArrayData): java.lang.Double = {
     if (dt.numElements() != codes.numElements()) return null
     var acc = 0.0
     var s = 0
     while (s < dt.numElements()) {
-      val t = dt.getArray(s)
+      val t = dt.getArray(s) // null for a null table
+      if (t == null || codes.isNullAt(s)) return null
       val c = codes.getInt(s)
-      if (t == null || c < 0 || c >= t.numElements()) return null
+      if (c < 0 || c >= t.numElements() || t.isNullAt(c)) return null
       acc += t.getDouble(c)
       s += 1
     }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s")
-      val t = ctx.freshName("t")
-      val c = ctx.freshName("c")
-      val acc = ctx.freshName("acc")
-      val bad = ctx.freshName("bad")
-      s"""
-         |double $acc = 0.0;
-         |boolean $bad = ($a.numElements() != $b.numElements());
-         |for (int $s = 0; !$bad && $s < $a.numElements(); $s++) {
-         |  final org.apache.spark.sql.catalyst.util.ArrayData $t = $a.getArray($s);
-         |  final int $c = $b.getInt($s);
-         |  if ($t == null || $c < 0 || $c >= $t.numElements()) { $bad = true; }
-         |  else { $acc += $t.getDouble($c); }
-         |}
-         |${ev.isNull} = $bad;
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcDist =
-    copy(left = l, right = r)
 }

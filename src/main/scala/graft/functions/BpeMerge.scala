@@ -1,17 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Greedy byte-pair-encoding merge loop — the actual BPE tokenization
   * algorithm (rank-priority adjacent-pair merging, the GPT-2 `merges.txt`
-  * scheme), shared by the interpreted and generated paths of
-  * [[BpeMergeCount]]. The merge TABLE is caller-supplied: a real
-  * deployment loads its tokenizer's ranked merge list; specs use a tiny
-  * fixture table. Only the piece COUNT surfaces — the count is what
+  * scheme) behind [[BpeMergeCount]] and [[BpeEncode]]. The merge TABLE
+  * is caller-supplied: a real deployment loads its tokenizer's ranked
+  * merge list; specs use a tiny fixture table. Only the piece COUNT surfaces — the count is what
   * window packing and length stats consume. */
 object BpeMerge {
 
@@ -97,40 +95,6 @@ object BpeMerge {
     }
     m
   }
-
-  /** Serializable encode kernel shared by [[BpeEncode]]'s interpreted and
-    * generated paths: whitespace-tokenize, greedy-merge each token, map
-    * pieces to ids. Empty tokens (doubled spaces, edges) emit nothing —
-    * the [[count]] convention. */
-  final class Encoder(merges: Seq[(String, String)]) extends Serializable {
-    @transient private lazy val rank = rankMap(merges)
-    @transient private lazy val ids = idMap(merges)
-
-    def encode(s: String): org.apache.spark.sql.catalyst.util.ArrayData = {
-      val out = new java.util.ArrayList[java.lang.Long](s.length / 4 + 4)
-      var start = 0
-      var i = 0
-      while (i <= s.length) {
-        if (i == s.length || s.charAt(i) == ' ') {
-          val pieces = mergeToken(s.substring(start, i), rank)
-          var j = 0
-          while (j < pieces.size) {
-            val p = pieces.get(j)
-            out.add(
-              if (p.codePointCount(0, p.length) == 1) p.codePointAt(0).toLong
-              else ids.get(p)) // multi-codepoint pieces only arise from merges
-            j += 1
-          }
-          start = i + 1
-        }
-        i += 1
-      }
-      val arr = new Array[Long](out.size)
-      var k = 0
-      while (k < arr.length) { arr(k) = out.get(k); k += 1 }
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(arr)
-    }
-  }
 }
 
 /** Codegen'd exact BPE piece count under a caller-supplied merge table —
@@ -138,33 +102,19 @@ object BpeMerge {
   * [[graft.operators.TrainPrep.packWindows]] / `tokenQuantiles` /
   * `corpusPrep` (the chars/4 [[BpeCount]] proxy stays the oracle-
   * expressible default; real BPE counts are not ANSI-SQL-expressible, so
-  * plans built on this column are spec-pinned, not oracle-gated). The
-  * generated code is one static call into [[BpeMerge]] with the rank map
-  * attached as a codegen reference — no per-row interpretation of the
-  * expression tree. */
+  * plans built on this column are spec-pinned, not oracle-gated). One
+  * call into [[BpeMerge.count]] per row — no per-row interpretation of
+  * the expression tree. */
 case class BpeMergeCount(child: Expression, merges: Seq[(String, String)])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"bpe_merge_count expects string, got $t")
-  }
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
 
   @transient private lazy val rank: java.util.HashMap[String, Integer] =
     BpeMerge.rankMap(merges)
 
-  override def nullSafeEval(input: Any): Any =
-    BpeMerge.count(input.asInstanceOf[UTF8String].toString, rank)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeRank", rank, "java.util.HashMap<String, Integer>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeMerge.count($c.toString(), $ref);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): BpeMergeCount = copy(child = c)
+  override def kernel(text: UTF8String): Long = BpeMerge.count(text.toString, rank)
 }
 
 /** Codegen'd BPE ENCODE under a caller-supplied merge table: text →
@@ -172,29 +122,42 @@ case class BpeMergeCount(child: Expression, merges: Seq[(String, String)])
   * [[BpeMergeCount]] surfaces only the count). Ids follow
   * [[BpeMerge.idMap]]'s derived-vocab scheme — codepoint for single-
   * codepoint pieces, [[BpeMerge.MergedIdBase]]+rank for merged ones — so
-  * the id sequence is a pure function of (text, merge list). The
-  * generated code is one call into a reference-attached [[BpeMerge.Encoder]];
-  * no per-row interpretation of the expression tree. */
+  * the id sequence is a pure function of (text, merge list):
+  * whitespace-tokenize, greedy-merge each token, map pieces to ids. Empty
+  * tokens (doubled spaces, edges) emit nothing — the [[BpeMerge.count]]
+  * convention. */
 case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"bpe_encode expects string, got $t")
-  }
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  @transient private lazy val encoder = new BpeMerge.Encoder(merges)
+  @transient private lazy val rank = BpeMerge.rankMap(merges)
+  @transient private lazy val ids = BpeMerge.idMap(merges)
 
-  override def nullSafeEval(input: Any): Any =
-    encoder.encode(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeEncoder", encoder,
-      classOf[BpeMerge.Encoder].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encode($c.toString());")
+  override def kernel(text: UTF8String): ArrayData = {
+    val s = text.toString
+    val out = new java.util.ArrayList[java.lang.Long](s.length / 4 + 4)
+    var start = 0
+    var i = 0
+    while (i <= s.length) {
+      if (i == s.length || s.charAt(i) == ' ') {
+        val pieces = BpeMerge.mergeToken(s.substring(start, i), rank)
+        var j = 0
+        while (j < pieces.size) {
+          val p = pieces.get(j)
+          out.add(
+            if (p.codePointCount(0, p.length) == 1) p.codePointAt(0).toLong
+            else ids.get(p)) // multi-codepoint pieces only arise from merges
+          j += 1
+        }
+        start = i + 1
+      }
+      i += 1
+    }
+    val arr = new Array[Long](out.size)
+    var k = 0
+    while (k < arr.length) { arr(k) = out.get(k); k += 1 }
+    UnsafeArrayData.fromPrimitiveArray(arr)
   }
-
-  override protected def withNewChildInternal(c: Expression): BpeEncode = copy(child = c)
 }

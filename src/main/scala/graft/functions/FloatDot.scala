@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -11,42 +9,30 @@ import org.apache.spark.sql.types._
   * unchanged). Replaces the `zip_with`+`aggregate` higher-order form, whose
   * lambda interpretation dominated the similarity-search benchmarks —
   * vector scoring belongs inside WholeStageCodegen at 100 TB.
+  *
+  * A LENGTH MISMATCH or a NULL ELEMENT yields NULL — the replaced form's
+  * contract (`zip_with` null-pads the shorter array, a null product
+  * poisons the fold), so a ragged pair can never pass a downstream cosine
+  * filter with a silently partial dot; `float_dot` takes outside SQL
+  * input.
   */
-case class FloatDot(left: Expression, right: Expression) extends BinaryExpression {
+case class FloatDot(left: Expression, right: Expression)
+  extends BinaryRowKernel[ArrayData, ArrayData, java.lang.Double] {
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"float_dot expects (array<float>, array<float>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override def kernel(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var acc = 0.0
     var i = 0
-    while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+      i += 1
+    }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FloatDot =
-    copy(left = l, right = r)
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -16,21 +14,12 @@ import org.apache.spark.sql.types._
   * than silently truncating. Float arithmetic, so values are
   * bit-identical. */
 case class FloatVecSub(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"float_vec_sub expects (array<float>, array<float>), " +
-          s"got (${left.dataType}, ${right.dataType})")
-    }
+  extends BinaryRowKernel[ArrayData, ArrayData, ArrayData] {
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = true)
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def sub(a: ArrayData, b: ArrayData): GenericArrayData = {
+  override def kernel(a: ArrayData, b: ArrayData): ArrayData = {
     val na = a.numElements()
     val nb = b.numElements()
     val n = math.max(na, nb)
@@ -44,16 +33,4 @@ case class FloatVecSub(left: Expression, right: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    sub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("floatVecSubKernel", this,
-      classOf[FloatVecSub].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.sub($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression)
-      : FloatVecSub = copy(left = l, right = r)
 }

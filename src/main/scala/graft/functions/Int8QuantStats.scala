@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -21,13 +19,10 @@ import org.apache.spark.sql.types._
   * the replaced forms: skipped by min/max/scale, a single null poisons
   * the fold's sum (q_sum NULL), never counted saturated. Empty array:
   * scale/q_min/q_max NULL, q_sum 0, n_sat 0. */
-case class Int8QuantStats(child: Expression) extends UnaryExpression {
+case class Int8QuantStats(child: Expression)
+    extends UnaryRowKernel[ArrayData, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"int8_quant_stats expects array<float>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = true),
@@ -36,8 +31,7 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
     StructField("q_sum", LongType, nullable = true),
     StructField("n_sat", LongType, nullable = false)))
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def stats(input: ArrayData): InternalRow = {
+  override def kernel(input: ArrayData): InternalRow = {
     val n = input.numElements()
     // pass 1: scale = max |x| over non-null elements (null if none)
     var scale = 0.0
@@ -93,16 +87,4 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
       if (sumNull) null else java.lang.Long.valueOf(qSum),
       nSat)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    stats(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("int8QuantStatsKernel", this,
-      classOf[Int8QuantStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.stats($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Int8QuantStats =
-    copy(child = c)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -25,89 +23,67 @@ import org.apache.spark.sql.types._
   *    may differ in size (an emptied Lloyd cell shrinks one book) and keep
   *    their ORIGINAL cell ids.
   * Output: struct(cells: array<int>, d2s: array<long>) — one entry per
-  * subspace. The books ride as ONE reference-attached kernel object,
-  * shipped once per task, never rebuilt per row. */
-object IntCellAssign {
-
-  /** Serializable kernel shared by the interpreted and generated paths.
-    * `books(s)` = (cellId, centroid in 1e-6 units) list of subspace s. */
-  final class Kernel(books: Seq[Seq[(Int, Array[Long])]]) extends Serializable {
-    private val m = books.length
-    @transient private lazy val ids: Array[Array[Int]] =
-      books.map(_.map(_._1).toArray).toArray
-    @transient private lazy val cb: Array[Array[Array[Long]]] =
-      books.map(_.map(_._2.clone).toArray).toArray
-    @transient private lazy val subDims: Array[Int] =
-      books.map(_.head._2.length).toArray
-
-    /** struct(cells: array<int>, d2s: array<long>) as an InternalRow. */
-    def assign(emb: ArrayData): InternalRow = {
-      val n = emb.numElements()
-      val v = new Array[Long](n)
-      var i = 0
-      while (i < n) { // snap once per element, not once per candidate
-        v(i) = Math.floor(emb.getFloat(i).toDouble * 1e4 + 0.5).toLong * 100L
-        i += 1
-      }
-      val cells = new Array[Int](m)
-      val d2s = new Array[Long](m)
-      var off = 0
-      var s = 0
-      while (s < m) {
-        val cents = cb(s)
-        val cids = ids(s)
-        val dim = subDims(s)
-        val lim = math.min(dim, math.max(n - off, 0))
-        var best = -1
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          val cent = cents(c)
-          var d = 0L
-          var j = 0
-          while (j < lim) {
-            val diff = v(off + j) - cent(j)
-            d += diff * diff
-            j += 1
-          }
-          if (best == -1 || d < bestD) { best = c; bestD = d }
-          c += 1
-        }
-        cells(s) = cids(best)
-        d2s(s) = bestD
-        off += dim
-        s += 1
-      }
-      InternalRow(UnsafeArrayData.fromPrimitiveArray(cells),
-        UnsafeArrayData.fromPrimitiveArray(d2s))
-    }
-  }
-}
-
+  * subspace. The books ride with the expression, shipped once per task,
+  * never rebuilt per row; `books(s)` = (cellId, centroid in 1e-6 units)
+  * list of subspace s. */
 case class IntCellAssign(child: Expression, books: Seq[Seq[(Int, Array[Long])]])
-  extends UnaryExpression {
+  extends UnaryRowKernel[ArrayData, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"int_cell_assign expects array<float>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("cells", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("d2s", ArrayType(LongType, containsNull = false), nullable = false)))
 
-  @transient private lazy val kernel = new IntCellAssign.Kernel(books)
+  @transient private lazy val ids: Array[Array[Int]] =
+    books.map(_.map(_._1).toArray).toArray
+  @transient private lazy val cb: Array[Array[Array[Long]]] =
+    books.map(_.map(_._2.clone).toArray).toArray
+  @transient private lazy val subDims: Array[Int] =
+    books.map(_.head._2.length).toArray
 
-  override def nullSafeEval(input: Any): Any =
-    kernel.assign(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("intCellKernel", kernel,
-      classOf[IntCellAssign.Kernel].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.assign($c);")
+  /** struct(cells: array<int>, d2s: array<long>) as an InternalRow. */
+  override def kernel(emb: ArrayData): InternalRow = {
+    val m = cb.length
+    val n = emb.numElements()
+    val v = new Array[Long](n)
+    var i = 0
+    while (i < n) { // snap once per element, not once per candidate
+      v(i) = Math.floor(emb.getFloat(i).toDouble * 1e4 + 0.5).toLong * 100L
+      i += 1
+    }
+    val cells = new Array[Int](m)
+    val d2s = new Array[Long](m)
+    var off = 0
+    var s = 0
+    while (s < m) {
+      val cents = cb(s)
+      val cids = ids(s)
+      val dim = subDims(s)
+      val lim = math.min(dim, math.max(n - off, 0))
+      var best = -1
+      var bestD = Long.MaxValue
+      var c = 0
+      while (c < cents.length) {
+        val cent = cents(c)
+        var d = 0L
+        var j = 0
+        while (j < lim) {
+          val diff = v(off + j) - cent(j)
+          d += diff * diff
+          j += 1
+        }
+        if (best == -1 || d < bestD) { best = c; bestD = d }
+        c += 1
+      }
+      cells(s) = cids(best)
+      d2s(s) = bestD
+      off += dim
+      s += 1
+    }
+    InternalRow(UnsafeArrayData.fromPrimitiveArray(cells),
+      UnsafeArrayData.fromPrimitiveArray(d2s))
   }
-
-  override protected def withNewChildInternal(c: Expression): IntCellAssign = copy(child = c)
 }
 
 /** Top-2 variant of the integer cell assignment — same snap, same exact
@@ -119,70 +95,49 @@ case class IntCellAssign(child: Expression, books: Seq[Seq[(Int, Array[Long])]])
   * distances. One book only (the IVF coarse quantizer); requires ≥ 2
   * cells, candidates scan in ascending cell-id order so the strict-<
   * argmin tie-breaks toward the lower id like [[IntCellAssign]]. */
-object IntCellTop2 {
-
-  /** Serializable kernel shared by the interpreted and generated paths. */
-  final class Kernel(book: Seq[(Int, Array[Long])]) extends Serializable {
-    require(book.length >= 2, "silhouette needs >= 2 cells")
-    @transient private lazy val sorted = book.sortBy(_._1)
-    @transient private lazy val ids: Array[Int] = sorted.map(_._1).toArray
-    @transient private lazy val cb: Array[Array[Long]] = sorted.map(_._2.clone).toArray
-
-    /** struct(cell: int, d2: long, d2b: long) as an InternalRow. */
-    def assign(emb: ArrayData): InternalRow = {
-      val n = emb.numElements()
-      val v = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        v(i) = Math.floor(emb.getFloat(i).toDouble * 1e4 + 0.5).toLong * 100L
-        i += 1
-      }
-      var best = -1
-      var d1 = Long.MaxValue
-      var d2b = Long.MaxValue
-      var c = 0
-      while (c < cb.length) {
-        val cent = cb(c)
-        val lim = math.min(cent.length, n)
-        var d = 0L
-        var j = 0
-        while (j < lim) {
-          val diff = v(j) - cent(j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < d1) { d2b = d1; d1 = d; best = c }
-        else if (d < d2b) { d2b = d }
-        c += 1
-      }
-      InternalRow(ids(best), d1, d2b)
-    }
-  }
-}
-
 case class IntCellTop2(child: Expression, book: Seq[(Int, Array[Long])])
-  extends UnaryExpression {
+  extends UnaryRowKernel[ArrayData, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"int_cell_top2 expects array<float>, got $t")
-  }
+  require(book.length >= 2, "silhouette needs >= 2 cells")
+
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),
     StructField("d2", LongType, nullable = false),
     StructField("d2b", LongType, nullable = false)))
 
-  @transient private lazy val kernel = new IntCellTop2.Kernel(book)
+  @transient private lazy val sorted = book.sortBy(_._1)
+  @transient private lazy val ids: Array[Int] = sorted.map(_._1).toArray
+  @transient private lazy val cb: Array[Array[Long]] = sorted.map(_._2.clone).toArray
 
-  override def nullSafeEval(input: Any): Any =
-    kernel.assign(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("intCellTop2Kernel", kernel,
-      classOf[IntCellTop2.Kernel].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.assign($c);")
+  /** struct(cell: int, d2: long, d2b: long) as an InternalRow. */
+  override def kernel(emb: ArrayData): InternalRow = {
+    val n = emb.numElements()
+    val v = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      v(i) = Math.floor(emb.getFloat(i).toDouble * 1e4 + 0.5).toLong * 100L
+      i += 1
+    }
+    var best = -1
+    var d1 = Long.MaxValue
+    var d2b = Long.MaxValue
+    var c = 0
+    while (c < cb.length) {
+      val cent = cb(c)
+      val lim = math.min(cent.length, n)
+      var d = 0L
+      var j = 0
+      while (j < lim) {
+        val diff = v(j) - cent(j)
+        d += diff * diff
+        j += 1
+      }
+      if (d < d1) { d2b = d1; d1 = d; best = c }
+      else if (d < d2b) { d2b = d }
+      c += 1
+    }
+    InternalRow(ids(best), d1, d2b)
   }
-
-  override protected def withNewChildInternal(c: Expression): IntCellTop2 = copy(child = c)
 }

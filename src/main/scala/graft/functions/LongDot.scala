@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -15,52 +13,28 @@ import org.apache.spark.sql.types._
   *
   * Exactness: pure int64 products and adds, identical to the higher-order
   * fold on equal-length inputs (all callers pass fixed-dim features). A
-  * LENGTH MISMATCH yields NULL — exactly the replaced form's behaviour
-  * (`zip_with` null-pads the shorter array, the null product poisons the
-  * fold), so a ragged pair can never pass a downstream cosine filter with
-  * a silently partial dot.
+  * LENGTH MISMATCH or a NULL ELEMENT yields NULL — exactly the replaced
+  * form's behaviour (`zip_with` null-pads the shorter array, the null
+  * product poisons the fold), so a ragged pair can never pass a downstream
+  * cosine filter with a silently partial dot.
   */
-case class LongDot(left: Expression, right: Expression) extends BinaryExpression {
+case class LongDot(left: Expression, right: Expression)
+  extends BinaryRowKernel[ArrayData, ArrayData, java.lang.Long] {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"long_dot expects (array<bigint>, array<bigint>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def kernel(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0L
     var i = 0
-    while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getLong(i) * y.getLong(i)
+      i += 1
+    }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $a.numElements();
-         |long $acc = 0L;
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LongDot =
-    copy(left = l, right = r)
 }

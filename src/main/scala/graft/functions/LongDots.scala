@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -18,23 +16,17 @@ import org.apache.spark.sql.types._
   * snapped longs, products ≤ dim·(2·10⁶)² ≪ 2⁶³, so the fold is exact
   * integer arithmetic any engine replays bit-for-bit.
   *
-  * Codegen notes: the reference is a raw `long[][]` (no generics — the
-  * Janino raw-type lesson from round 13), the inner loop bounds by the
-  * query row's length so a ragged input can't read past the vector. */
+  * The inner loop bounds by the query row's length so a ragged input
+  * can't read past the vector. */
 case class LongDots(child: Expression, queries: Seq[Array[Long]])
-    extends UnaryExpression {
+    extends UnaryRowKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"long_dots expects array<bigint>, got $t")
-  }
-
+  override def inputTypes = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   @transient private lazy val matrix: Array[Array[Long]] = queries.toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def kernel(v: ArrayData): ArrayData = {
     val out = new Array[Long](matrix.length)
     var q = 0
     while (q < matrix.length) {
@@ -48,31 +40,4 @@ case class LongDots(child: Expression, queries: Seq[Array[Long]])
     }
     new GenericArrayData(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val matRef = ctx.addReferenceObj("queries", matrix, "long[][]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val q = ctx.freshName("q")
-      val row = ctx.freshName("row")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |final long[] $out = new long[$matRef.length];
-         |for (int $q = 0; $q < $matRef.length; $q++) {
-         |  final long[] $row = $matRef[$q];
-         |  final int $n = java.lang.Math.min($row.length, $c.numElements());
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $row[$i] * $c.getLong($i);
-         |  }
-         |  $out[$q] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): LongDots = copy(child = c)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -12,6 +10,9 @@ import org.apache.spark.sql.types._
   * histogram as a SORTED array of (value, hn) structs (domain-bounded by
   * the caller's contract — the array is the size of the group's value
   * DOMAIN, never its row count). Output: struct(n, med, mad, n_outliers).
+  *
+  * An EMPTY histogram, a NULL entry or a negative count yields NULL (no
+  * median exists; the caller's `collect_list` never builds any of them).
   *
   * Semantics are bit-identical to the relational window/join form it
   * replaced (the oracle SQL and both query hashes pin this):
@@ -26,17 +27,33 @@ import org.apache.spark.sql.types._
   * The relational form scheduled ~10 tiny stages (two windows, five joins)
   * per call — pure latency on a histogram-sized frame; this fold does the
   * same integer arithmetic in one pass per group. */
-object MadStats {
+case class MadStats(child: Expression, factor: Int)
+    extends UnaryRowKernel[ArrayData, InternalRow] {
+
+  override def inputTypes = Seq(ArrayType(StructType(Seq(
+    StructField("v", LongType), StructField("hn", LongType)))))
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("med", LongType, nullable = false),
+    StructField("mad", LongType, nullable = false),
+    StructField("n_outliers", LongType, nullable = false)))
+
+  override def nullable: Boolean = true
+
   /** (n, med, mad, n_outliers) off a sorted (value, hn) histogram. */
-  def fold(arr: ArrayData, factor: Int): InternalRow = {
+  override def kernel(arr: ArrayData): InternalRow = {
     val k = arr.numElements()
+    if (k == 0) return null
     val vs = new Array[Long](k)
     val hs = new Array[Long](k)
     var n = 0L
     var i = 0
     while (i < k) {
+      if (arr.isNullAt(i)) return null
       val row = arr.getStruct(i, 2)
       vs(i) = row.getLong(0); hs(i) = row.getLong(1); n += hs(i)
+      if (hs(i) < 0) return null
       i += 1
     }
     // lower median: first value whose cumulative count reaches ⌈n/2⌉
@@ -77,30 +94,4 @@ object MadStats {
     }
     InternalRow(n, med, mad, out)
   }
-}
-
-case class MadStats(child: Expression, factor: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(a, b)), _)
-      if a.dataType == LongType && b.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"mad_stats expects array<struct<long,long>>, got $t")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("med", LongType, nullable = false),
-    StructField("mad", LongType, nullable = false),
-    StructField("n_outliers", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    MadStats.fold(input.asInstanceOf[ArrayData], factor)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MadStats.fold($c, $factor);")
-
-  override protected def withNewChildInternal(c: Expression): MadStats = copy(child = c)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -20,74 +18,52 @@ import org.apache.spark.sql.types._
   *    deterministically instead of poisoning downstream `element_at`;
   *  - per-subspace codebook lengths may differ (an emptied Lloyd cell
   *    shrinks ONE codebook).
-  * The codebooks ride as ONE reference-attached kernel object — m·k·dim
-  * floats shipped once per task, not re-built per row. */
-object PqAssign {
-
-  /** Serializable assignment kernel shared by the interpreted and generated
-    * paths. `books(s)(c)` = centroid c of subspace s. */
-  final class Kernel(books: Seq[Seq[Array[Float]]]) extends Serializable {
-    private val m = books.length
-    private val sub = books.head.head.length
-    @transient private lazy val cb: Array[Array[Array[Float]]] =
-      books.map(_.map(_.clone).toArray).toArray
-
-    /** struct(codes: array<int>, err: double) as an InternalRow. */
-    def assign(emb: ArrayData): InternalRow = {
-      val v = emb.toFloatArray()
-      val codes = new Array[Int](m)
-      var err = 0.0
-      var s = 0
-      while (s < m) {
-        val cents = cb(s)
-        val off = s * sub
-        var best = -1
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          val cent = cents(c)
-          var d = 0.0
-          var j = 0
-          val lim = math.min(cent.length, math.max(v.length - off, 0))
-          while (j < lim) {
-            val diff = v(off + j) - cent(j) // float math, like the HOF form
-            d += (diff * diff).toDouble
-            j += 1
-          }
-          if (best == -1 || d < bestD) { best = c; bestD = d }
-          c += 1
-        }
-        codes(s) = best
-        err += bestD
-        s += 1
-      }
-      InternalRow(UnsafeArrayData.fromPrimitiveArray(codes), err)
-    }
-  }
-}
-
+  * The codebooks ride with the expression — m·k·dim floats shipped once
+  * per task, not re-built per row. `books(s)(c)` = centroid c of
+  * subspace s. */
 case class PqAssign(child: Expression, books: Seq[Seq[Array[Float]]])
-  extends UnaryExpression {
+  extends UnaryRowKernel[ArrayData, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_assign expects array<float>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("err", DoubleType, nullable = false)))
 
-  @transient private lazy val kernel = new PqAssign.Kernel(books)
+  @transient private lazy val cb: Array[Array[Array[Float]]] =
+    books.map(_.map(_.clone).toArray).toArray
 
-  override def nullSafeEval(input: Any): Any =
-    kernel.assign(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqKernel", kernel,
-      classOf[PqAssign.Kernel].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.assign($c);")
+  /** struct(codes: array<int>, err: double) as an InternalRow. */
+  override def kernel(emb: ArrayData): InternalRow = {
+    val m = cb.length
+    val sub = cb(0)(0).length
+    val v = emb.toFloatArray()
+    val codes = new Array[Int](m)
+    var err = 0.0
+    var s = 0
+    while (s < m) {
+      val cents = cb(s)
+      val off = s * sub
+      var best = -1
+      var bestD = Double.MaxValue
+      var c = 0
+      while (c < cents.length) {
+        val cent = cents(c)
+        var d = 0.0
+        var j = 0
+        val lim = math.min(cent.length, math.max(v.length - off, 0))
+        while (j < lim) {
+          val diff = v(off + j) - cent(j) // float math, like the HOF form
+          d += (diff * diff).toDouble
+          j += 1
+        }
+        if (best == -1 || d < bestD) { best = c; bestD = d }
+        c += 1
+      }
+      codes(s) = best
+      err += bestD
+      s += 1
+    }
+    InternalRow(UnsafeArrayData.fromPrimitiveArray(codes), err)
   }
-
-  override protected def withNewChildInternal(c: Expression): PqAssign = copy(child = c)
 }

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled distinct hashed n-gram shingles: semantics identical to the
-  * higher-order form [[TextFns.hashedShinglesRef]] —
+  * higher-order form `KernelRefs.hashedShinglesRef` (test-only) —
   * `array_distinct(transform(idx, i -> xxhash64(tok_i … tok_{i+n-1})))`
   * over `split(text, " ", -1)` — but one scan over the string's UTF-8 bytes
   * instead of an interpreted lambda chain (~4 expression nodes per token per
@@ -18,35 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB it is the single hottest scalar in the engine.
   */
 case class HashedShingles(child: Expression, n: Int, distinct: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryRowKernel[UTF8String, ArrayData] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"hashed_shingles expects string, got $t")
-    }
-  }
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleUtil.compute(input.asInstanceOf[UTF8String], n, distinct)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleUtil.compute($c, $n, $distinct);")
-
-  override protected def withNewChildInternal(c: Expression): HashedShingles = copy(child = c)
-}
-
-/** Static helper shared by interpreted eval and generated code (objects get
-  * static forwarders, so generated Java calls `ShingleUtil.compute`). */
-object ShingleUtil {
-  private final val Seed = 42L // xxhash64's fixed seed
-
-  def compute(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
+  override def kernel(s: UTF8String): ArrayData = {
     val base = s.getBaseObject
     val off = s.getBaseOffset
     val len = s.numBytes()
@@ -79,7 +57,7 @@ object ShingleUtil {
     var m = 0
     i = 0
     while (i < nShingles) {
-      var h = Seed
+      var h = 42L // xxhash64's fixed seed
       var j = 0
       while (j < n) {
         h = XXH64.hashUnsafeBytes(base, off + starts(i + j), lens(i + j), h)

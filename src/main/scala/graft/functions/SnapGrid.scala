@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -15,30 +14,22 @@ import org.apache.spark.sql.types._
   * that lambda evaluated ~4 interpreted expression nodes per embedding
   * element on every corpus scan of the integer KNN/MMR/matryoshka family.
   * Null elements pass through as null (as the `transform` lambda's cast
-  * chain did). */
-case class SnapGrid(child: Expression) extends UnaryExpression {
+  * chain did). The output type and the float/double branch follow the
+  * RESOLVED child type, which is why this stays an expression class. */
+case class SnapGrid(child: Expression) extends UnaryRowKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"snap_grid expects array<float> or array<double>, got $t")
-  }
+  override def inputTypes =
+    Seq(GraftColumnBridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType)))
 
-  private def childContainsNull: Boolean =
-    child.dataType.asInstanceOf[ArrayType].containsNull
+  private def childType: ArrayType = child.dataType.asInstanceOf[ArrayType]
 
-  private def childIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def dataType: DataType = ArrayType(LongType, childType.containsNull)
 
-  override def dataType: DataType = ArrayType(LongType, childContainsNull)
-
-  /** Kernel shared by the interpreted and generated paths. */
-  def snap(input: ArrayData): GenericArrayData = {
+  override def kernel(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val out = new Array[Any](n)
-    val isFloat = childIsFloat
-    val hasNull = childContainsNull
+    val isFloat = childType.elementType == FloatType
+    val hasNull = childType.containsNull
     var i = 0
     while (i < n) {
       out(i) =
@@ -51,15 +42,4 @@ case class SnapGrid(child: Expression) extends UnaryExpression {
     }
     new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    snap(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("snapGridKernel", this, classOf[SnapGrid].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.snap($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): SnapGrid =
-    copy(child = c)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XxHash64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArrayData, XXH64, XxHash64}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 
 /** Codegen'd sign-random-projection band keys over one `array<float>`
@@ -17,7 +14,7 @@ import org.apache.spark.sql.types._
   * n·d·nPlanes narrow rows through two exchanges just to compute a per-row
   * value — all band keys now come out of ONE codegen'd pass over the row,
   * zero shuffles, zero fan-out (the FloatDot pattern). Kept bit-identical
-  * to that form (`Knn.lshBandKeysRef`, pinned by KnnSpec):
+  * to that form (`KernelRefs.lshBandKeysRef`, pinned by KnnSpec):
   *  - weights w(plane, i) = (pmod(xxhash64('graft-lsh', plane, i), 20001)
   *    − 10000) / 10000 with plane/i hashed as INTs (the composed form's
   *    column types), via the same XXH64 primitives Spark's xxhash64 uses;
@@ -31,17 +28,12 @@ import org.apache.spark.sql.types._
   *    other in bucket 0 of every band.
   */
 case class SrpBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryRowKernel[ArrayData, ArrayData] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def nullable: Boolean = true // null input OR empty input array
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"srp_band_keys expects array<float>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(FloatType))
+  override def prettyName: String = "srp_band_keys"
 
   /** xxhash64 state after folding the constant 'graft-lsh' prefix (seed 42),
     * computed by Spark's own expression so the byte-level hashing semantics
@@ -49,8 +41,7 @@ case class SrpBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
   private lazy val prefixHash: Long =
     XxHash64(Seq(Literal("graft-lsh")), 42L).eval(null).asInstanceOf[Long]
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def kernel(arr: ArrayData): ArrayData = {
     val d = arr.numElements()
     if (d == 0) return null
     val keys = new Array[Long](bands)
@@ -59,13 +50,12 @@ case class SrpBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
       var key = 0L
       var r = 0
       while (r < bitsPerBand) {
-        val plane = b * bitsPerBand + r
-        val hp = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(plane, prefixHash)
+        val hp = XXH64.hashInt(b * bitsPerBand + r, prefixHash)
         var dot = 0.0
         var i = 0
         while (i < d) {
           if (!arr.isNullAt(i)) {
-            var m = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(i, hp) % 20001L
+            var m = XXH64.hashInt(i, hp) % 20001L
             if (m < 0) m += 20001L
             dot += arr.getFloat(i).toDouble * ((m - 10000L).toDouble / 10000.0)
           }
@@ -79,48 +69,4 @@ case class SrpBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
     }
     UnsafeArrayData.fromPrimitiveArray(keys)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-      val d = ctx.freshName("d")
-      val keys = ctx.freshName("keys")
-      val b = ctx.freshName("b")
-      val r = ctx.freshName("r")
-      val i = ctx.freshName("i")
-      val hp = ctx.freshName("hp")
-      val m = ctx.freshName("m")
-      val dot = ctx.freshName("dot")
-      val key = ctx.freshName("key")
-      s"""
-         |final int $d = $a.numElements();
-         |if ($d == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  final long[] $keys = new long[$bands];
-         |  for (int $b = 0; $b < $bands; $b++) {
-         |    long $key = 0L;
-         |    for (int $r = 0; $r < $bitsPerBand; $r++) {
-         |      final long $hp = $xxh.hashInt($b * $bitsPerBand + $r, ${prefixHash}L);
-         |      double $dot = 0.0;
-         |      for (int $i = 0; $i < $d; $i++) {
-         |        if (!$a.isNullAt($i)) {
-         |          long $m = $xxh.hashInt($i, $hp) % 20001L;
-         |          if ($m < 0) $m += 20001L;
-         |          $dot += (double) $a.getFloat($i) * (((double) ($m - 10000L)) / 10000.0);
-         |        }
-         |      }
-         |      if ($dot > 0) $key |= 1L << $r;
-         |    }
-         |    $keys[$b] = $key;
-         |  }
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($keys);
-         |}
-       """.stripMargin
-    })
-
-  override def prettyName: String = "srp_band_keys"
-
-  override protected def withNewChildInternal(newChild: Expression): SrpBandKeys =
-    copy(child = newChild)
 }

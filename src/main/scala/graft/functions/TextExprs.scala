@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,17 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * the interpreted higher-order chain evaluates ~4 expression nodes per
   * character. */
 case class RollingHash(child: Expression, mult: Long, modulus: Long)
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"rolling_hash expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def kernel(text: UTF8String): Long = {
+    val s = text.toString
     var acc = 0L
     var i = 0
     while (i < s.length) {
@@ -34,27 +31,6 @@ case class RollingHash(child: Expression, mult: Long, modulus: Long)
     }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      s"""
-         |final String $s = $c.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  final int $cp = $s.codePointAt($i);
-         |  $acc = ($acc * ${mult}L + $cp) % ${modulus}L;
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): RollingHash = copy(child = c)
 }
 
 /** Codegen'd "count whitespace tokens ∈ set": semantics identical to
@@ -62,12 +38,9 @@ case class RollingHash(child: Expression, mult: Long, modulus: Long)
   * tokens; the sets never contain ""), but one compiled scan instead of an
   * interpreted lambda chain per token. */
 case class TokenSetCount(child: Expression, words: Seq[String])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"token_set_count expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
 
@@ -77,8 +50,8 @@ case class TokenSetCount(child: Expression, words: Seq[String])
     s
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def kernel(text: UTF8String): Long = {
+    val s = text.toString
     var cnt = 0L
     var start = 0
     var i = 0
@@ -91,32 +64,6 @@ case class TokenSetCount(child: Expression, words: Seq[String])
     }
     cnt
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("wordSet", wordSet, "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val cnt = ctx.freshName("cnt")
-      val start = ctx.freshName("start")
-      val i = ctx.freshName("i")
-      s"""
-         |final String $s = $c.toString();
-         |long $cnt = 0L;
-         |int $start = 0;
-         |int $i = 0;
-         |while ($i <= $s.length()) {
-         |  if ($i == $s.length() || $s.charAt($i) == ' ') {
-         |    if ($setRef.contains($s.substring($start, $i))) $cnt++;
-         |    $start = $i + 1;
-         |  }
-         |  $i++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenSetCount = copy(child = c)
 }
 
 /** Codegen'd BPE-ish subword estimate: Σ over whitespace tokens of
@@ -126,17 +73,14 @@ case class TokenSetCount(child: Expression, words: Seq[String])
   * `length` counts code points, both reproduced here — but compiled: the
   * interpreted HOF materializes the token array and walks ~4 expression
   * nodes per token, on the hot path of four queries. */
-case class BpeCount(child: Expression) extends UnaryExpression {
+case class BpeCount(child: Expression) extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"bpe_count expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def kernel(text: UTF8String): Long = {
+    val s = text.toString
     var total = 0L
     var len = 0L
     var i = 0
@@ -148,30 +92,6 @@ case class BpeCount(child: Expression) extends UnaryExpression {
     }
     total + (len + 3) / 4
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val total = ctx.freshName("total")
-      val len = ctx.freshName("len")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      s"""
-         |final String $s = $c.toString();
-         |long $total = 0L;
-         |long $len = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  final int $cp = $s.codePointAt($i);
-         |  if ($cp == ' ') { $total += ($len + 3) / 4; $len = 0; }
-         |  else { $len += 1; }
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |${ev.value} = $total + ($len + 3) / 4;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): BpeCount = copy(child = c)
 }
 
 /** Codegen'd 64-bit SimHash of a document: per-bit majority vote over
@@ -179,22 +99,19 @@ case class BpeCount(child: Expression) extends UnaryExpression {
   * whitespace tokens, all inside ONE row-local pass. Semantics are
   * bit-identical to the aggregate form — explode(array_distinct(split))
   * → groupBy(doc) → vote Aggregator (kept as the test-only semantic pin,
-  * [[graft.operators.Dedup.simhashRef]]) — because the vote is a
+  * `KernelRefs.simhashRef`) — because the vote is a
   * commutative sum: token order never matters. The point of the
   * expression form is SHAPE, not just speed: the fingerprint needs no
   * explode fan-out and no shuffle at any corpus size, so SimHash costs
   * exactly one corpus scan at 100 TB. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"simhash64 expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def kernel(text: UTF8String): Long = {
+    val s = text.toString
     val seen = new java.util.HashSet[String]()
     val votes = new Array[Int](64)
     var start = 0
@@ -203,8 +120,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
       if (i == s.length || s.charAt(i) == ' ') {
         val tok = s.substring(start, i)
         if (seen.add(tok)) {
-          val h = org.apache.spark.sql.catalyst.expressions.XXH64
-            .hashUTF8String(UTF8String.fromString(tok), 42L)
+          val h = XXH64.hashUTF8String(UTF8String.fromString(tok), 42L)
           var b = 0
           while (b < 64) {
             votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
@@ -220,45 +136,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     while (b < 64) { if (votes(b) > 0) fp |= 1L << b; b += 1 }
     fp
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val seen = ctx.freshName("seen")
-      val votes = ctx.freshName("votes")
-      val start = ctx.freshName("start")
-      val i = ctx.freshName("i")
-      val tok = ctx.freshName("tok")
-      val h = ctx.freshName("h")
-      val b = ctx.freshName("b")
-      val fp = ctx.freshName("fp")
-      s"""
-         |final String $s = $c.toString();
-         |final java.util.HashSet<String> $seen = new java.util.HashSet<String>();
-         |final int[] $votes = new int[64];
-         |int $start = 0;
-         |int $i = 0;
-         |while ($i <= $s.length()) {
-         |  if ($i == $s.length() || $s.charAt($i) == ' ') {
-         |    final String $tok = $s.substring($start, $i);
-         |    if ($seen.add($tok)) {
-         |      final long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-         |        org.apache.spark.unsafe.types.UTF8String.fromString($tok), 42L);
-         |      for (int $b = 0; $b < 64; $b++) {
-         |        $votes[$b] += ((($h >>> $b) & 1L) == 1L) ? 1 : -1;
-         |      }
-         |    }
-         |    $start = $i + 1;
-         |  }
-         |  $i++;
-         |}
-         |long $fp = 0L;
-         |for (int $b = 0; $b < 64; $b++) { if ($votes[$b] > 0) $fp |= 1L << $b; }
-         |${ev.value} = $fp;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
 /** Codegen'd multi-set token counter: per-language stopword hit counts for
@@ -270,15 +147,12 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * `array<long>` in the caller's list order; bounded at 64 sets by the
   * bitmask width. */
 case class MultiTokenSetCount(child: Expression, sets: Seq[Seq[String]])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, ArrayData] {
 
   require(sets.nonEmpty && sets.length <= 64,
     s"multi_token_set_count supports 1..64 sets, got ${sets.length}")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"multi_token_set_count expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -293,7 +167,8 @@ case class MultiTokenSetCount(child: Expression, sets: Seq[Seq[String]])
     m
   }
 
-  private def count(s: String): Array[Long] = {
+  override def kernel(text: UTF8String): ArrayData = {
+    val s = text.toString
     val cnts = new Array[Long](sets.length)
     var start = 0
     var i = 0
@@ -312,52 +187,8 @@ case class MultiTokenSetCount(child: Expression, sets: Seq[Seq[String]])
       }
       i += 1
     }
-    cnts
+    new GenericArrayData(cnts)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      count(input.asInstanceOf[UTF8String].toString))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Janino compiles generics as raw types: a HashMap<String, Long>.get
-    // returns Object there, so the reference must be declared raw and the
-    // result cast explicitly or codegen silently falls back to interpreted.
-    val mapRef = ctx.addReferenceObj("masks", masks, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val cnts = ctx.freshName("cnts")
-      val start = ctx.freshName("start")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val rest = ctx.freshName("rest")
-      val b = ctx.freshName("b")
-      s"""
-         |final String $s = $c.toString();
-         |final long[] $cnts = new long[${sets.length}];
-         |int $start = 0;
-         |int $i = 0;
-         |while ($i <= $s.length()) {
-         |  if ($i == $s.length() || $s.charAt($i) == ' ') {
-         |    final java.lang.Long $m = (java.lang.Long) $mapRef.get($s.substring($start, $i));
-         |    if ($m != null) {
-         |      long $rest = $m.longValue();
-         |      while ($rest != 0L) {
-         |        final int $b = java.lang.Long.numberOfTrailingZeros($rest);
-         |        $cnts[$b] += 1L;
-         |        $rest &= $rest - 1L;
-         |      }
-         |    }
-         |    $start = $i + 1;
-         |  }
-         |  $i++;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($cnts);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): MultiTokenSetCount = copy(child = c)
 }
 
 /** Codegen'd Σc² over whitespace-token frequencies — the integer moment
@@ -369,17 +200,14 @@ case class MultiTokenSetCount(child: Expression, sets: Seq[Seq[String]])
   * whole metric in exact integer arithmetic until one final division.
   * Zero shuffles at any corpus size — the per-(doc, token) explode +
   * count aggregate form shuffles every token occurrence. */
-case class TokenSqFreqSum(child: Expression) extends UnaryExpression {
+case class TokenSqFreqSum(child: Expression) extends UnaryRowKernel[UTF8String, Long] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"token_sq_freq_sum expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override def kernel(text: UTF8String): Long = {
+    val s = text.toString
     val counts = new java.util.HashMap[String, Long]()
     var start = 0
     var i = 0
@@ -395,61 +223,36 @@ case class TokenSqFreqSum(child: Expression) extends UnaryExpression {
     while (it.hasNext) { val c = it.next(); sum += c * c }
     sum
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val counts = ctx.freshName("counts")
-      val start = ctx.freshName("start")
-      val i = ctx.freshName("i")
-      val prev = ctx.freshName("prev")
-      val sum = ctx.freshName("sum")
-      val it = ctx.freshName("it")
-      val cnt = ctx.freshName("cnt")
-      s"""
-         |final String $s = $c.toString();
-         |final java.util.HashMap $counts = new java.util.HashMap();
-         |int $start = 0;
-         |int $i = 0;
-         |while ($i <= $s.length()) {
-         |  if ($i == $s.length() || $s.charAt($i) == ' ') {
-         |    final java.lang.Long $prev = (java.lang.Long) $counts.get($s.substring($start, $i));
-         |    $counts.put($s.substring($start, $i),
-         |      java.lang.Long.valueOf($prev == null ? 1L : $prev.longValue() + 1L));
-         |    $start = $i + 1;
-         |  }
-         |  $i++;
-         |}
-         |long $sum = 0L;
-         |final java.util.Iterator $it = $counts.values().iterator();
-         |while ($it.hasNext()) {
-         |  final long $cnt = ((java.lang.Long) $it.next()).longValue();
-         |  $sum += $cnt * $cnt;
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): TokenSqFreqSum = copy(child = c)
 }
 
-/** Per-document character-count moments for the entropy gate — the
-  * row-local helper [[CharEntropyMoments]] compiles against (shared by the
-  * interpreted eval and the generated code, so the two paths cannot
-  * drift). One pass over code points; the log lands on the integer
-  * micro-nat grid via `Math.round` = floor(x+0.5) on a positive value —
-  * the same binary rounding the DuckDB oracle applies (libm 1-ulp
-  * differences move ln·10⁶ by ~10⁻⁹, never across a .5 boundary in
-  * practice; the shared-definition spec replays the Shannon formula). */
-object CharEntropy {
-  def moments(s: String): org.apache.spark.sql.catalyst.InternalRow = {
+/** Codegen'd `struct(n, k, s)` char-count moments: n = code-point count,
+  * k = distinct code points, s = Σ c·round(ln c · 10⁶) — semantics
+  * identical to the explode → groupBy(doc, char) → aggregate pipeline,
+  * but ROW-LOCAL: the ~70×-row char explode and its shuffle never exist,
+  * so the entropy gate stays inside the document scan at any scale. */
+case class CharEntropyMoments(child: Expression)
+    extends UnaryRowKernel[UTF8String, InternalRow] {
+
+  override def inputTypes = Seq(StringType)
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("k", LongType, nullable = false),
+    StructField("s", LongType, nullable = false)))
+
+  /** One pass over code points; the log lands on the integer micro-nat
+    * grid via `Math.round` = floor(x+0.5) on a positive value — the same
+    * binary rounding the DuckDB oracle applies (libm 1-ulp differences
+    * move ln·10⁶ by ~10⁻⁹, never across a .5 boundary in practice; the
+    * shared-definition spec replays the Shannon formula). */
+  override def kernel(text: UTF8String): InternalRow = {
+    val s = text.toString
     val counts = new java.util.HashMap[Integer, Long]()
     var n = 0L
     var i = 0
     while (i < s.length) {
       val cp = s.codePointAt(i)
-      val prev = counts.get(cp)
-      counts.put(cp, if (prev == null) 1L else prev + 1L)
+      counts.put(cp, counts.get(cp) + 1L) // an absent key reads as 0L
       n += 1L
       i += Character.charCount(cp)
     }
@@ -459,47 +262,37 @@ object CharEntropy {
       val c = it.next()
       sum += c * Math.round(Math.log(c.toDouble) * 1e6)
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n, counts.size.toLong, sum))
+    InternalRow(n, counts.size.toLong, sum)
   }
 }
 
-/** Codegen'd `struct(n, k, s)` char-count moments: n = code-point count,
-  * k = distinct code points, s = Σ c·round(ln c · 10⁶) — semantics
-  * identical to the explode → groupBy(doc, char) → aggregate pipeline,
-  * but ROW-LOCAL: the ~70×-row char explode and its shuffle never exist,
-  * so the entropy gate stays inside the document scan at any scale. */
-case class CharEntropyMoments(child: Expression) extends UnaryExpression {
+/** Codegen'd per-document repetition moments
+  * `struct(n_tokens, n_distinct, top_cnt, n_bigrams, top_big_cnt)` —
+  * value-identical to the two explode → groupBy(doc, unit) → per-doc
+  * aggregate pipelines (tokens, adjacent bigrams) they replace, but
+  * ROW-LOCAL: the token and bigram explodes, their four doc-keyed
+  * exchanges and the doc-keyed join never exist, so the Gopher repetition
+  * gate fuses into the document scan at any scale (the
+  * [[CharEntropyMoments]] lesson applied to the token/bigram stats). */
+case class TokenRepetitionStats(child: Expression)
+    extends UnaryRowKernel[UTF8String, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"char_entropy_moments expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("k", LongType, nullable = false),
-    StructField("s", LongType, nullable = false)))
+    StructField("n_tokens", LongType, nullable = false),
+    StructField("n_distinct", LongType, nullable = false),
+    StructField("top_cnt", LongType, nullable = false),
+    StructField("n_bigrams", LongType, nullable = false),
+    StructField("top_big_cnt", LongType, nullable = false)))
 
-  override def nullSafeEval(input: Any): Any =
-    CharEntropy.moments(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CharEntropy.moments($c.toString());")
-
-  override protected def withNewChildInternal(c: Expression): CharEntropyMoments =
-    copy(child = c)
-}
-
-/** Shared kernel of [[TokenRepetitionStats]] (interpreted + generated paths
-  * call the same method, so they cannot drift). One walk over the string:
-  * token counts and adjacent-bigram counts over SUBSTRING identity — a
-  * bigram `concat(tk_i, ' ', tk_{i+1})` is exactly the substring from
-  * tok_i's start to tok_{i+1}'s end (split(" ") separators are single
-  * spaces), so no string is ever concatenated. */
-object TokenRepetition {
-  def stats(s: String): org.apache.spark.sql.catalyst.InternalRow = {
+  /** One walk over the string: token counts and adjacent-bigram counts
+    * over SUBSTRING identity — a bigram `concat(tk_i, ' ', tk_{i+1})` is
+    * exactly the substring from tok_i's start to tok_{i+1}'s end
+    * (split(" ") separators are single spaces), so no string is ever
+    * concatenated. */
+  override def kernel(text: UTF8String): InternalRow = {
+    val s = text.toString
     val tokCounts = new java.util.HashMap[String, Long]()
     val bigCounts = new java.util.HashMap[String, Long]()
     var nTokens = 0L
@@ -509,13 +302,11 @@ object TokenRepetition {
     while (i <= s.length) {
       if (i == s.length || s.charAt(i) == ' ') {
         val tok = s.substring(start, i)
-        val p = tokCounts.get(tok)
-        tokCounts.put(tok, if (p == null) 1L else p + 1L)
+        tokCounts.put(tok, tokCounts.get(tok) + 1L) // an absent key reads as 0L
         nTokens += 1L
         if (prevStart >= 0) {
           val big = s.substring(prevStart, i) // tok_{k-1} + ' ' + tok_k
-          val q = bigCounts.get(big)
-          bigCounts.put(big, if (q == null) 1L else q + 1L)
+          bigCounts.put(big, bigCounts.get(big) + 1L)
         }
         prevStart = start
         start = i + 1
@@ -528,43 +319,9 @@ object TokenRepetition {
     var topBig = 0L
     val ib = bigCounts.values().iterator()
     while (ib.hasNext) { val c = ib.next(); if (c > topBig) topBig = c }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nTokens, tokCounts.size.toLong, topTok,
-        if (nTokens >= 2L) nTokens - 1L else 0L, topBig))
+    InternalRow(nTokens, tokCounts.size.toLong, topTok,
+      if (nTokens >= 2L) nTokens - 1L else 0L, topBig)
   }
-}
-
-/** Codegen'd per-document repetition moments
-  * `struct(n_tokens, n_distinct, top_cnt, n_bigrams, top_big_cnt)` —
-  * value-identical to the two explode → groupBy(doc, unit) → per-doc
-  * aggregate pipelines (tokens, adjacent bigrams) they replace, but
-  * ROW-LOCAL: the token and bigram explodes, their four doc-keyed
-  * exchanges and the doc-keyed join never exist, so the Gopher repetition
-  * gate fuses into the document scan at any scale (the
-  * [[CharEntropyMoments]] lesson applied to the token/bigram stats). */
-case class TokenRepetitionStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"token_repetition_stats expects string, got $t")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("top_cnt", LongType, nullable = false),
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("top_big_cnt", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    TokenRepetition.stats(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenRepetition.stats($c.toString());")
-
-  override protected def withNewChildInternal(c: Expression): TokenRepetitionStats =
-    copy(child = c)
 }
 
 /** Codegen'd fused regex battery: per-pattern INDEPENDENT match counts
@@ -579,14 +336,11 @@ case class TokenRepetitionStats(child: Expression) extends UnaryExpression {
   * default flags Spark's regexp functions use; replacements contain no
   * `$`/`\` so `replaceAll` equals Spark's appendReplacement fold. */
 case class MultiRegexScan(child: Expression, patterns: Seq[(String, String)])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, InternalRow] {
 
   require(patterns.nonEmpty, "multi_regex_scan: need at least one pattern")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"multi_regex_scan expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
     StructField("counts", ArrayType(LongType, containsNull = false), nullable = false),
@@ -597,9 +351,8 @@ case class MultiRegexScan(child: Expression, patterns: Seq[(String, String)])
   @transient private lazy val replacements: Array[String] =
     patterns.map(_._2).toArray
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def scan(input: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val s = input.toString
+  override def kernel(text: UTF8String): InternalRow = {
+    val s = text.toString
     val counts = new Array[Any](compiled.length)
     var i = 0
     while (i < compiled.length) {
@@ -615,22 +368,8 @@ case class MultiRegexScan(child: Expression, patterns: Seq[(String, String)])
       red = compiled(i).matcher(red).replaceAll(replacements(i))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(counts),
-      UTF8String.fromString(red)))
+    InternalRow(new GenericArrayData(counts), UTF8String.fromString(red))
   }
-
-  override def nullSafeEval(input: Any): Any =
-    scan(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("multiRegexScan", this,
-      classOf[MultiRegexScan].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.scan($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): MultiRegexScan =
-    copy(child = c)
 }
 
 /** Codegen'd per-document character inventory: the DISTINCT non-space
@@ -645,32 +384,16 @@ case class MultiRegexScan(child: Expression, patterns: Seq[(String, String)])
   * exploded every character occurrence of the corpus through a shuffle:
   * the distinct that remains downstream is over per-doc alphabets
   * (bounded by the character set, not the corpus). */
-case class DistinctChars(child: Expression) extends UnaryExpression {
+case class DistinctChars(child: Expression) extends UnaryRowKernel[UTF8String, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"distinct_chars expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    DistinctChars.chars(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DistinctChars.chars($c.toString());")
-
-  override protected def withNewChildInternal(c: Expression): DistinctChars =
-    copy(child = c)
-}
-
-/** Shared kernel of [[DistinctChars]] (interpreted + generated paths call
-  * the same method, so they cannot drift): one pass over code points,
-  * first-appearance order (order is irrelevant to the distinct+sort
-  * consumers but kept deterministic). */
-object DistinctChars {
-  def chars(s: String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  /** One pass over code points, first-appearance order (order is
+    * irrelevant to the distinct+sort consumers but kept deterministic). */
+  override def kernel(text: UTF8String): ArrayData = {
+    val s = text.toString
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
     while (i < s.length) {
@@ -683,7 +406,7 @@ object DistinctChars {
     val it = seen.iterator()
     var j = 0
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -697,13 +420,9 @@ object DistinctChars {
   * [[TokenPairsWindow]] lesson applied to the phrase-derivation fan-out:
   * the lambda tree evaluated ~5 expression nodes per token across the
   * corpus. */
-case class TokenTriples(child: Expression) extends UnaryExpression {
+case class TokenTriples(child: Expression) extends UnaryRowKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_triples expects array<string>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -712,33 +431,19 @@ case class TokenTriples(child: Expression) extends UnaryExpression {
       StructField("w3", StringType, nullable = true))),
     containsNull = false)
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def triples(input: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  override def kernel(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val m = math.max(n - 2, 0)
     val out = new Array[Any](m)
     var i = 0
     while (i < m) {
-      out(i) = org.apache.spark.sql.catalyst.InternalRow(
+      out(i) = InternalRow(
         input.getUTF8String(i), input.getUTF8String(i + 1),
         input.getUTF8String(i + 2))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    triples(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenTriplesKernel", this,
-      classOf[TokenTriples].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.triples($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenTriples =
-    copy(child = c)
 }
 
 /** Codegen'd adjacent-bigram fan-out: array<string> of every
@@ -752,19 +457,13 @@ case class TokenTriples(child: Expression) extends UnaryExpression {
   * per token across the corpus. (On a NULL input array this returns NULL
   * where the `when` form returned array(); both consumers explode the
   * result, where the two are indistinguishable.) */
-case class TokenBigrams(child: Expression) extends UnaryExpression {
+case class TokenBigrams(child: Expression) extends UnaryRowKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_bigrams expects array<string>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def bigrams(input: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  override def kernel(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val m = math.max(n - 1, 0)
     val out = new Array[Any](m)
@@ -776,20 +475,8 @@ case class TokenBigrams(child: Expression) extends UnaryExpression {
           TokenBigrams.Space, input.getUTF8String(i + 1))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    bigrams(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenBigramsKernel", this,
-      classOf[TokenBigrams].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.bigrams($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenBigrams =
-    copy(child = c)
 }
 
 object TokenBigrams {
@@ -806,13 +493,9 @@ object TokenBigrams {
   * passed through like element_at). This is the single corpus
   * tokenization the bigram-LM scorer fans out through — ~6 interpreted
   * nodes per token position across the corpus before. */
-case class TokenPrevCur(child: Expression) extends UnaryExpression {
+case class TokenPrevCur(child: Expression) extends UnaryRowKernel[ArrayData, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_prev_cur expects array<string>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -820,32 +503,18 @@ case class TokenPrevCur(child: Expression) extends UnaryExpression {
       StructField("cur", StringType, nullable = true))),
     containsNull = false)
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def pairs(input: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  override def kernel(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
-      out(i) = org.apache.spark.sql.catalyst.InternalRow(
+      out(i) = InternalRow(
         if (i == 0 || input.isNullAt(i - 1)) null else input.getUTF8String(i - 1),
         if (input.isNullAt(i)) null else input.getUTF8String(i))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    pairs(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenPrevCurKernel", this,
-      classOf[TokenPrevCur].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.pairs($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenPrevCur =
-    copy(child = c)
 }
 
 /** Codegen'd one-pass summary of a long array:
@@ -854,49 +523,36 @@ case class TokenPrevCur(child: Expression) extends UnaryExpression {
   * on the BPE-encode tail — `size(ids)`, `size(filter(ids, _ ≥ ge))`,
   * `aggregate(ids, 0L, _ + _)` (long addition wraps in both) — which
   * each re-walked the array with an interpreted lambda per element.
-  * Input must be array<long> with containsNull = false (the BPE encoder's
-  * output type): the replaced forms disagree with each other on null
-  * elements, so they are rejected at analysis rather than reproduced. */
-case class LongArrayStats(child: Expression, ge: Long) extends UnaryExpression {
+  * Its input is the BPE encoder's null-free id array. A NULL ELEMENT
+  * yields NULL: the replaced forms disagree with each other on null
+  * elements, so no partial answer is reproduced. */
+case class LongArrayStats(child: Expression, ge: Long)
+    extends UnaryRowKernel[ArrayData, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"long_array_stats expects array<long> without nulls, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(LongType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("n_ge", LongType, nullable = false),
     StructField("sum", LongType, nullable = false)))
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def stats(input: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.InternalRow = {
+  override def nullable: Boolean = true
+
+  override def kernel(input: ArrayData): InternalRow = {
     val n = input.numElements()
+    val hasNull = child.dataType.asInstanceOf[ArrayType].containsNull
     var nGe = 0L
     var sum = 0L
     var i = 0
     while (i < n) {
+      if (hasNull && input.isNullAt(i)) return null
       val v = input.getLong(i)
       if (v >= ge) nGe += 1L
       sum += v
       i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(n.toLong, nGe, sum)
+    InternalRow(n.toLong, nGe, sum)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    stats(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("longArrayStatsKernel", this,
-      classOf[LongArrayStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.stats($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): LongArrayStats =
-    copy(child = c)
 }
 
 /** Codegen'd one-pass Gopher token moments
@@ -917,14 +573,10 @@ case class LongArrayStats(child: Expression, ge: Long) extends UnaryExpression {
   * kept. `words.size` ≤ 64 (bitmask state; the stopword tables are
   * single-digit sized). */
 case class GopherTokenStats(child: Expression, words: Seq[String])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, InternalRow] {
   require(words.size <= 64, s"gopher_token_stats: ${words.size} words > 64")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"gopher_token_stats expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
@@ -945,9 +597,8 @@ case class GopherTokenStats(child: Expression, words: Seq[String])
   @transient private lazy val maxWordLen: Int =
     if (words.isEmpty) 0 else words.map(_.length).max
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def stats(input: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val s = input.toString
+  override def kernel(text: UTF8String): InternalRow = {
+    val s = text.toString
     var nTokens = 0L
     var sumLen = 0L
     var nAlpha = 0L
@@ -976,19 +627,7 @@ case class GopherTokenStats(child: Expression, words: Seq[String])
       }
       i += 1
     }
-    org.apache.spark.sql.catalyst.InternalRow(
+    InternalRow(
       nTokens, sumLen, nAlpha, java.lang.Long.bitCount(stopMask).toLong)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    stats(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gopherTokenStatsKernel", this,
-      classOf[GopherTokenStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.stats($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): GopherTokenStats =
-    copy(child = c)
 }

@@ -28,8 +28,8 @@ object TextFns {
     * string materialization (the concat form spends its time building and
     * de-duplicating shingle strings; identity-by-hash is equivalent for
     * set-similarity counts, within-set collision ≈ |set|²/2⁶⁵). Compiled
-    * ([[HashedShingles]]); [[hashedShinglesRef]] keeps the declarative
-    * reference semantics. */
+    * ([[HashedShingles]]); `KernelRefs.hashedShinglesRef` (test-only)
+    * keeps the declarative reference semantics. */
   def hashedShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       HashedShingles(org.apache.spark.sql.GraftColumnBridge.expression(text), n))
@@ -41,15 +41,6 @@ object TextFns {
     org.apache.spark.sql.GraftColumnBridge.column(
       HashedShingles(org.apache.spark.sql.GraftColumnBridge.expression(text), n,
         distinct = false))
-
-  /** Reference (interpreted higher-order) form of [[hashedShingles]] — the
-    * spec the compiled expression is property-tested against. */
-  def hashedShinglesRef(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    val idx = sequence(lit(1), size(toks) - (n - 1))
-    val grams = transform(idx, i => xxhash64((0 until n).map(j => element_at(toks, i + j)): _*))
-    array_distinct(when(size(toks) >= n, grams).otherwise(array().cast("array<bigint>")))
-  }
 
   /** Tokens-in-set count, e.g. stopword hits. Pure expression (no join). */
   def hitCount(tokensCol: Column, set: Seq[String]): Column =
@@ -115,8 +106,8 @@ object TextFns {
 
   /** BPE-ish subword count estimate: ceil(len/4) pieces per word — the
     * ~4-chars-per-token rule of thumb, as ONE codegen'd scan of the string
-    * ([[BpeCount]]; value-identical to [[bpeEstimateRef]], pinned by
-    * TrainPrepSpec). */
+    * ([[BpeCount]]; value-identical to the higher-order form
+    * `KernelRefs.bpeEstimateRef`, pinned by TrainPrepSpec). */
   def bpeEstimate(text: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       BpeCount(org.apache.spark.sql.GraftColumnBridge.expression(text)))
@@ -145,7 +136,7 @@ object TextFns {
 
   /** 64-bit SimHash fingerprint of the text's distinct whitespace tokens —
     * one codegen'd row-local pass ([[SimHash64]]; bit-identical to the
-    * vote-Aggregator form [[graft.operators.Dedup.simhashRef]], pinned by
+    * vote-Aggregator form `KernelRefs.simhashRef`, pinned by
     * DedupSpec). */
   def simhash64(text: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
@@ -212,27 +203,4 @@ object TextFns {
   def gopherTokenStats(text: Column, set: Seq[String]): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       GopherTokenStats(org.apache.spark.sql.GraftColumnBridge.expression(text), set))
-
-  /** The declarative higher-order form of [[gopherTokenStats]] — kept
-    * (test-only) as the semantic pin: the four token-walking expressions
-    * of the original Gopher battery, interpreted lambdas per token. */
-  private[graft] def gopherTokenStatsRef(text: Column, set: Seq[String]): Column = {
-    val toks = tokens(text)
-    struct(
-      size(toks).cast("long").as("n_tokens"),
-      aggregate(transform(toks, t => length(t).cast("long")), lit(0L), _ + _)
-        .as("sum_len"),
-      size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("long").as("n_alpha"),
-      size(array_intersect(array_distinct(toks), array(set.map(lit): _*)))
-        .cast("long").as("n_stop"))
-  }
-
-  /** The declarative higher-order form of [[bpeEstimate]] — kept (test-only)
-    * as the semantic pin for the codegen'd expression: it materializes the
-    * token array and walks an interpreted lambda per token. */
-  private[graft] def bpeEstimateRef(text: Column): Column =
-    aggregate(
-      tokens(text),
-      lit(0L),
-      (acc, t) => acc + ceil(length(t) / lit(4.0)).cast("long"))
 }

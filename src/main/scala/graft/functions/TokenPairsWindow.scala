@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Codegen'd co-occurrence pair fan-out for the TextRank graph: for a
@@ -20,15 +17,11 @@ import org.apache.spark.sql.types._
   * filtered are simply never emitted). String order is UTF8String binary
   * comparison — exactly `least`/`greatest` on Spark strings. */
 case class TokenPairsWindow(child: Expression, window: Int)
-    extends UnaryExpression {
+    extends UnaryRowKernel[ArrayData, ArrayData] {
 
   require(window >= 2, s"token_pairs_window: need window >= 2, got $window")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_pairs_window expects array<string>, got $t")
-  }
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -36,8 +29,7 @@ case class TokenPairsWindow(child: Expression, window: Int)
       StructField("b", StringType, nullable = true))),
     containsNull = false)
 
-  /** Kernel shared by the interpreted and generated paths. */
-  def pairs(input: ArrayData): GenericArrayData = {
+  override def kernel(input: ArrayData): ArrayData = {
     val n = input.numElements()
     val out = new java.util.ArrayList[InternalRow](math.max(n, 8) * (window - 1))
     var o = 1
@@ -66,16 +58,4 @@ case class TokenPairsWindow(child: Expression, window: Int)
     }
     new GenericArrayData(out.toArray)
   }
-
-  override def nullSafeEval(input: Any): Any =
-    pairs(input.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenPairsKernel", this,
-      classOf[TokenPairsWindow].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.pairs($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): TokenPairsWindow =
-    copy(child = c)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Maximum-likelihood Viterbi encoding under a unigram-LM piece table
   * ([[graft.operators.Unigram]]) — the BpeEncode pattern: the trained
   * model rides the expression as a literal, evaluation is one per-row pass
-  * (interpreted and generated paths share [[UnigramViterbi.Encoder]]), so
+  * (both evaluation paths call [[UnigramViterbi.Encoder]]), so
   * encoding shuffles nothing at any corpus size.
   *
   * Scores are the model's INTEGER log-micronats, so the per-text total is
@@ -101,12 +99,9 @@ object UnigramViterbi {
 }
 
 case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)])
-  extends UnaryExpression {
+  extends UnaryRowKernel[UTF8String, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"unigram_encode expects string, got $t")
-  }
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
     StructField("ids", ArrayType(LongType, containsNull = false), nullable = false),
@@ -115,17 +110,7 @@ case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)])
 
   @transient private lazy val encoder = new UnigramViterbi.Encoder(pieces)
 
-  override def nullSafeEval(input: Any): Any =
-    encoder.encode(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramEncoder", encoder,
-      classOf[UnigramViterbi.Encoder].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encode($c.toString());")
-  }
-
-  override protected def withNewChildInternal(c: Expression): UnigramEncode =
-    copy(child = c)
+  override def kernel(text: UTF8String): InternalRow = encoder.encode(text.toString)
 }
 
 /** Fused encode-fidelity audit — the `ext_unigram_encode` contract
@@ -146,102 +131,79 @@ case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)])
   *  - empty/whitespace-only docs audit true with n_pieces = 0.
   * The audit's decode/score arithmetic is independent of the Viterbi DP it
   * checks — only the piece TABLE is shared, as in the column form. */
-object UnigramAudit {
-
-  final class Kernel(pieces: Seq[(String, Long)]) extends Serializable {
-    @transient private lazy val pieceArr: Array[String] = pieces.map(_._1).toArray
-    @transient private lazy val microArr: Array[Long] = pieces.map(_._2).toArray
-    @transient private lazy val charMicro: java.util.HashMap[Integer, java.lang.Long] = {
-      val m = new java.util.HashMap[Integer, java.lang.Long]()
-      pieces.foreach { case (p, mi) =>
-        if (p.nonEmpty && p.codePointCount(0, p.length) == 1)
-          m.put(Int.box(p.codePointAt(0)), java.lang.Long.valueOf(math.max(mi, -1000000000000L)))
-      }
-      m
-    }
-
-    /** struct(n_chars: long, ok: boolean) as an InternalRow. */
-    def audit(text: UTF8String, e: InternalRow): InternalRow = {
-      val s = text.toString
-      val sb = new java.lang.StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val ch = s.charAt(i)
-        if (ch != ' ') sb.append(ch)
-        i += 1
-      }
-      val st = sb.toString
-      val nChars = st.codePointCount(0, st.length).toLong
-      val ids = e.getArray(0)
-      val scoreMicro = e.getLong(1)
-      val nUnk = e.getLong(2)
-      val nPieces = ids.numElements()
-      var pos = 0
-      var decodedOk = true
-      var scoreSum = 0L
-      var k = 0
-      while (k < nPieces) {
-        val id = ids.getLong(k)
-        if (id < 0L || id >= pieceArr.length) {
-          decodedOk = false
-          scoreSum += 1L // the column form's unk sentinel
-        } else {
-          val p = pieceArr(id.toInt)
-          if (decodedOk) {
-            if (st.startsWith(p, pos)) pos += p.length
-            else decodedOk = false
-          }
-          scoreSum += microArr(id.toInt)
-        }
-        k += 1
-      }
-      if (pos != st.length) decodedOk = false
-      var charScore = 0L
-      var missing = false
-      var ci = 0
-      while (ci < st.length) {
-        val cp = st.codePointAt(ci)
-        val m = charMicro.get(Int.box(cp))
-        if (m == null) missing = true else charScore += m.longValue()
-        ci += Character.charCount(cp)
-      }
-      val floorOk = nChars == 0L || (!missing && scoreMicro >= charScore)
-      val boundOk =
-        if (nChars == 0L) nPieces == 0 else nPieces >= 1 && nPieces <= nChars
-      val ok = nUnk == 0L && decodedOk && scoreMicro == scoreSum && floorOk && boundOk
-      InternalRow(nChars, ok)
-    }
-  }
-}
-
 case class UnigramAudit(left: Expression, right: Expression,
                         pieces: Seq[(String, Long)])
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryRowKernel[UTF8String, InternalRow, InternalRow] {
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, StructType(Array(a, b, c)))
-      if a.dataType == ArrayType(LongType, containsNull = false) &&
-        b.dataType == LongType && c.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"unigram_audit expects (string, struct(ids,score_micro,n_unk)), got ($l, $r)")
-  }
+  override def inputTypes = Seq(StringType, StructType(Seq(
+    StructField("ids", ArrayType(LongType)),
+    StructField("score_micro", LongType),
+    StructField("n_unk", LongType))))
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("ok", BooleanType, nullable = false)))
 
-  @transient private lazy val kernel = new UnigramAudit.Kernel(pieces)
-
-  override def nullSafeEval(text: Any, e: Any): Any =
-    kernel.audit(text.asInstanceOf[UTF8String], e.asInstanceOf[InternalRow])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramAuditKernel", kernel,
-      classOf[UnigramAudit.Kernel].getName)
-    nullSafeCodeGen(ctx, ev, (t, e) => s"${ev.value} = $ref.audit($t, $e);")
+  @transient private lazy val pieceArr: Array[String] = pieces.map(_._1).toArray
+  @transient private lazy val microArr: Array[Long] = pieces.map(_._2).toArray
+  @transient private lazy val charMicro: java.util.HashMap[Integer, java.lang.Long] = {
+    val m = new java.util.HashMap[Integer, java.lang.Long]()
+    pieces.foreach { case (p, mi) =>
+      if (p.nonEmpty && p.codePointCount(0, p.length) == 1)
+        m.put(Int.box(p.codePointAt(0)), java.lang.Long.valueOf(math.max(mi, -1000000000000L)))
+    }
+    m
   }
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): UnigramAudit =
-    copy(left = l, right = r)
+  /** struct(n_chars: long, ok: boolean) as an InternalRow. */
+  override def kernel(text: UTF8String, e: InternalRow): InternalRow = {
+    val s = text.toString
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val ch = s.charAt(i)
+      if (ch != ' ') sb.append(ch)
+      i += 1
+    }
+    val st = sb.toString
+    val nChars = st.codePointCount(0, st.length).toLong
+    val ids = e.getArray(0)
+    val scoreMicro = e.getLong(1)
+    val nUnk = e.getLong(2)
+    val nPieces = ids.numElements()
+    var pos = 0
+    var decodedOk = true
+    var scoreSum = 0L
+    var k = 0
+    while (k < nPieces) {
+      val id = ids.getLong(k)
+      if (id < 0L || id >= pieceArr.length) {
+        decodedOk = false
+        scoreSum += 1L // the column form's unk sentinel
+      } else {
+        val p = pieceArr(id.toInt)
+        if (decodedOk) {
+          if (st.startsWith(p, pos)) pos += p.length
+          else decodedOk = false
+        }
+        scoreSum += microArr(id.toInt)
+      }
+      k += 1
+    }
+    if (pos != st.length) decodedOk = false
+    var charScore = 0L
+    var missing = false
+    var ci = 0
+    while (ci < st.length) {
+      val cp = st.codePointAt(ci)
+      val m = charMicro.get(Int.box(cp))
+      if (m == null) missing = true else charScore += m.longValue()
+      ci += Character.charCount(cp)
+    }
+    val floorOk = nChars == 0L || (!missing && scoreMicro >= charScore)
+    val boundOk =
+      if (nChars == 0L) nPieces == 0 else nPieces >= 1 && nPieces <= nChars
+    val ok = nUnk == 0L && decodedOk && scoreMicro == scoreSum && floorOk && boundOk
+    InternalRow(nChars, ok)
+  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Character convention — CODE POINTS, the contract shared with
   * [[RollingHash]]: the kernel decodes the string to its code-point
-  * sequence once (one `codePointAt` walk, surrogate pairs collapse to
+  * sequence once (`String.codePoints`, surrogate pairs collapse to
   * one gram character) and grams index THAT sequence, so gram values and
   * positions agree with a code-point engine (DuckDB's `text[i:j]`) and
   * with Spark's own code-point `length()` on ANY text, astral included —
@@ -39,18 +37,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the per-doc fan-in that makes the downstream pair join |selected|-
   * sized instead of |grams|-sized. */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int, modulus: Long)
-    extends UnaryExpression {
+    extends UnaryRowKernel[UTF8String, ArrayData] {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"winnow_fingerprints expects string, got $t")
-  }
-
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    val cps = WinnowFingerprints.codePoints(s)
+  override def kernel(text: UTF8String): ArrayData = {
+    val cps = text.toString.codePoints().toArray
     val ng = cps.length - k + 1
     if (ng <= 0) return new GenericArrayData(Array.emptyLongArray)
     val h = new Array[Long](ng)
@@ -76,76 +69,5 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int, modulus: Long)
       st += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, nOut))
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val ng = ctx.freshName("ng")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val nw = ctx.freshName("nw")
-      val out = ctx.freshName("out")
-      val nOut = ctx.freshName("nOut")
-      val last = ctx.freshName("last")
-      val st = ctx.freshName("st")
-      val end = ctx.freshName("end")
-      val best = ctx.freshName("best")
-      val cps = ctx.freshName("cps")
-      s"""
-         |final String $s = $c.toString();
-         |final int[] $cps = graft.functions.WinnowFingerprints.codePoints($s);
-         |final int $ng = $cps.length - $k + 1;
-         |if ($ng <= 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  final long[] $h = new long[$ng];
-         |  for (int $i = 0; $i < $ng; $i++) {
-         |    long $acc = 0L;
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      $acc = ($acc * 31L + $cps[$i + $j]) % ${modulus}L;
-         |    }
-         |    $h[$i] = $acc;
-         |  }
-         |  final int $nw = java.lang.Math.max($ng - $w + 1, 1);
-         |  final long[] $out = new long[$nw];
-         |  int $nOut = 0;
-         |  int $last = -1;
-         |  for (int $st = 0; $st < $nw; $st++) {
-         |    final int $end = java.lang.Math.min($st + $w - 1, $ng - 1);
-         |    int $best = $st;
-         |    for (int $j = $st; $j <= $end; $j++) {
-         |      if ($h[$j] <= $h[$best]) $best = $j;
-         |    }
-         |    if ($best != $last) { $out[$nOut++] = $h[$best]; $last = $best; }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    java.util.Arrays.copyOf($out, $nOut));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
-    copy(child = c)
-}
-
-object WinnowFingerprints {
-  /** The string's code-point sequence as a flat int array — the gram
-    * alphabet shared with [[RollingHash]]'s fold. Called from the
-    * generated code via the companion's static forwarder; one
-    * `codePointAt` walk, no per-character boxing. */
-  def codePoints(s: String): Array[Int] = {
-    val out = new Array[Int](s.codePointCount(0, s.length))
-    var i = 0
-    var n = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      out(n) = cp
-      n += 1
-      i += Character.charCount(cp)
-    }
-    out
   }
 }

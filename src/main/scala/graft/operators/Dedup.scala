@@ -847,55 +847,14 @@ object Dedup {
       .distinct()
   }
 
-  /** Per-bit majority vote over token hashes as ONE typed Aggregator (a
-    * 64-int vote buffer, map-side partial merge) instead of 64 separate
-    * conditional-sum aggregate columns: same integer arithmetic and
-    * therefore the same fingerprints, but the generated aggregate stays
-    * small — the 64-column form compiled a codegen function big enough to
-    * dominate the query's cold time. Now the TEST-ONLY semantic pin for
-    * the row-local [[graft.functions.SimHash64]] expression (the
-    * lshBandKeysRef pattern), which replaced it on the production path. */
-  private object SimhashAgg extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Int], Long] {
-    override def zero: Array[Int] = new Array[Int](64)
-    override def reduce(b: Array[Int], h: Long): Array[Int] = {
-      var i = 0
-      while (i < 64) { b(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1); i += 1 }
-      b
-    }
-    override def merge(a: Array[Int], b: Array[Int]): Array[Int] = {
-      var i = 0
-      while (i < 64) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def finish(r: Array[Int]): Long = {
-      var fp = 0L
-      var i = 0
-      while (i < 64) { if (r(i) > 0) fp |= 1L << i; i += 1 }
-      fp
-    }
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-  }
-
   /** 64-bit SimHash per doc: per-bit majority vote over the distinct-token
     * hashes, as ONE row-local codegen'd expression
     * ([[graft.functions.SimHash64]]) — no explode fan-out, no shuffle, one
-    * corpus scan at any scale. Bit-identical to [[simhashRef]] (the vote
-    * is a commutative sum; DedupSpec pins the fixture-wide equality). */
+    * corpus scan at any scale. Bit-identical to the vote-Aggregator form
+    * `KernelRefs.simhashRef` (test-only; the vote is a commutative sum,
+    * DedupSpec pins the fixture-wide equality). */
   def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs.select(col(idCol).as("doc_id"), TextFns.simhash64(col(textCol)).as("simhash"))
-
-  /** The aggregate reference form of [[simhash]] — explode distinct tokens,
-    * shuffle on doc, vote via [[SimhashAgg]]. Kept (test-only) as the
-    * semantic pin for the codegen'd expression. */
-  private[graft] def simhashRef(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val vote = udaf(SimhashAgg, org.apache.spark.sql.Encoders.scalaLong)
-    docs.select(col(idCol).as("doc_id"), explode(TextFns.distinctTokens(col(textCol))).as("t"))
-      .groupBy(col("doc_id"))
-      .agg(vote(xxhash64(col("t"))).as("simhash"))
-  }
 
   /** SEPARATION AUDIT of the SimHash fingerprint — the recallAudit
     * graduation pattern for hash-dependent operators: the fingerprints

@@ -107,46 +107,19 @@ object Knn {
       .transform(graft.Tables.orderedReport(_, "query_id"))
   }
 
-  /** Deterministic pseudo-random hyperplanes: weight(plane, dim) derived
-    * from xxhash64 — reproducible across runs with zero data movement, and
-    * defined for EVERY (plane, dim) pair, so the embedding dimension is
-    * whatever `size(embCol)` says per row (nothing hard-codes it). */
-  private def hyperplaneWeight(plane: Column, dim: Column): Column =
-    (pmod(xxhash64(lit("graft-lsh"), plane, dim), lit(20001L)) - 10000L).cast("double") / 10000.0
-
   /** Per-band sign-random-projection keys: `bands` independent hash tables
     * of `bitsPerBand` hyperplane-sign bits each → one (id, band, key) row
     * per vector per band. All band keys come out of ONE codegen'd
     * expression pass over each row ([[graft.functions.SrpBandKeys]] — the
     * FloatDot pattern) followed by a posexplode: zero shuffles, zero
     * row fan-out, any embedding dimension. Bit-identical to the
-    * declarative [[lshBandKeysRef]] form it replaced (KnnSpec pins the
-    * equality), so bucket assignments — and every LSH query output —
-    * are unchanged. */
+    * declarative form it replaced (`KernelRefs.lshBandKeysRef`, test-only;
+    * KnnSpec pins the equality), so bucket assignments — and every LSH
+    * query output — are unchanged. */
   def lshBandKeys(vectors: DataFrame, idCol: String, embCol: String,
                   bands: Int, bitsPerBand: Int): DataFrame =
     vectors.select(col(idCol),
       posexplode(VectorFns.srpBandKeys(col(embCol), bands, bitsPerBand)).as(Seq("band", "key")))
-
-  /** The declarative reference form of [[lshBandKeys]]: vector elements
-    * fan out to (element × plane) rows, projections come back through a
-    * (id, plane) aggregation and sign bits pack through a (id, band) one —
-    * two shuffles and n·d·nPlanes intermediate rows. Kept (test-only) as
-    * the semantic pin for the codegen'd expression; weights come from
-    * [[hyperplaneWeight]] at each element's actual position. */
-  private[graft] def lshBandKeysRef(vectors: DataFrame, idCol: String, embCol: String,
-                                    bands: Int, bitsPerBand: Int): DataFrame = {
-    val nPlanes = bands * bitsPerBand
-    vectors
-      .select(col(idCol), posexplode(col(embCol)).as(Seq("pos", "v")))
-      .select(col(idCol), col("pos"), col("v"),
-        explode(sequence(lit(0), lit(nPlanes - 1))).as("plane"))
-      .groupBy(col(idCol), col("plane"))
-      .agg(sum(col("v") * hyperplaneWeight(col("plane"), col("pos"))).as("dot"))
-      .groupBy(col(idCol), (col("plane") / bitsPerBand).cast("int").as("band"))
-      .agg(sum(when(col("dot") > 0,
-        expr(s"shiftleft(1L, cast(plane % $bitsPerBand as int))")).otherwise(0L)).as("key"))
-  }
 
   /** Approximate top-k: candidates are the UNION of the query's bucket in
     * `bands` independent hash tables (the OR-construction — the same
@@ -437,17 +410,12 @@ object Knn {
 
   /** One snap to the exact 1e-4 grid, held as ×100 integers (1e-6 units) —
     * the shared coordinate discipline of every integer-exact quantizer.
-    * Codegen'd ([[graft.functions.SnapGrid]]); [[snap100Ref]] keeps the
-    * declarative transform as the test-only semantic pin. */
+    * Codegen'd ([[graft.functions.SnapGrid]]); `KernelRefs.snap100Ref`
+    * keeps the declarative transform as the test-only semantic pin. */
   private[graft] def snap100(c: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.SnapGrid(
         org.apache.spark.sql.GraftColumnBridge.expression(c)))
-
-  /** The interpreted higher-order form of [[snap100]] — the spec the
-    * compiled expression is property-tested against (KnnSpec). */
-  private[graft] def snap100Ref(c: Column): Column =
-    transform(c, x => (floor(x.cast("double") * 1e4 + 0.5).cast("long") * 100L))
 
   /** The trained integer-Lloyd codebook alone (the `ext_sim_knn_ivf_cells`
     * quantizer) — for callers that FREEZE it: a streaming index monitor
@@ -886,17 +854,13 @@ object Knn {
 
   /** Codegen'd element-wise `a − b` ([[graft.functions.FloatVecSub]],
     * zip_with-exact incl. the ragged-null contract) — the residual kernel
-    * of the corpus-sized IVF-PQ coding pass; [[floatVecSubRef]] keeps the
-    * declarative form as the test-only semantic pin. */
+    * of the corpus-sized IVF-PQ coding pass; `KernelRefs.floatVecSubRef`
+    * keeps the declarative form as the test-only semantic pin. */
   private[graft] def floatVecSub(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.FloatVecSub(
         org.apache.spark.sql.GraftColumnBridge.expression(a),
         org.apache.spark.sql.GraftColumnBridge.expression(b)))
-
-  /** The interpreted higher-order form of [[floatVecSub]]. */
-  private[graft] def floatVecSubRef(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x - y)
 
   /** Train the [[IvfPqIndex]]: coarse cells on the sample, then PQ
     * codebooks on the SAMPLE's residuals (sampling BEFORE assignment, so

@@ -81,7 +81,8 @@ object Robust {
       graft.functions.MadStats(
         org.apache.spark.sql.GraftColumnBridge.expression(col("__h")), madFactor))
     hist.groupBy(col(groupCol))
-      .agg(sort_array(collect_list(struct(col(valueCol).cast("long"), col("hn").cast("long"))))
+      .agg(sort_array(collect_list(struct(col(valueCol).cast("long").as("v"),
+        col("hn").cast("long").as("hn"))))
         .as("__h"))
       .withColumn("__m", stats)
       .select(col(groupCol), col("__m.n").as("__n"), col("__m.med").as("med"),

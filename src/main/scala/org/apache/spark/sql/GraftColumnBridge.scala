@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, TypeCollection}
 
 /** Bridge into the `private[sql]` Column ↔ Expression converters, so the
   * library can lift custom codegen'd Catalyst expressions (e.g.
@@ -10,6 +11,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An input type accepting any one of `types` (for `inputTypes`). */
+  def anyOf(types: AbstractDataType*): AbstractDataType = TypeCollection(types: _*)
 
   /** Register a function builder on an ALREADY-BUILT session (the
     * SparkSessionExtensions path only applies at session build time). */

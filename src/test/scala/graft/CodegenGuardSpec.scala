@@ -1,31 +1,38 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions._
 
-/** Codegen-fallback guard — every custom Catalyst Expression in the repo
-  * must ACTUALLY compile under Janino, not silently degrade to interpreted
-  * eval. Spark's production projection factories
-  * (`UnsafeProjection.create`, whole-stage codegen) catch a failed compile
-  * and fall back with only a WARN, which is how two kernels shipped
-  * Janino-invalid Java for a round without failing any test (Janino
-  * compiles generics as RAW types, so `HashMap<String, Long>.get` returns
-  * `Object` there and an unboxed assignment is a compile error javac never
-  * shows). `GenerateUnsafeProjection.generate` has NO fallback: a compile
-  * failure throws and fails the suite.
+/** Codegen guard for the row kernels ([[graft.functions.RowKernel]]):
+  * every custom Catalyst expression in the repo must ACTUALLY compile under
+  * Janino, not silently degrade to interpreted eval. Spark's production
+  * projection factories (`UnsafeProjection.create`, whole-stage codegen)
+  * catch a failed compile and fall back with only a WARN, which is how two
+  * kernels once shipped Janino-invalid Java without failing any test
+  * (Janino compiles generics as RAW types). `GenerateUnsafeProjection.
+  * generate` has NO fallback: a compile failure throws and fails the suite.
   *
-  * Each case also cross-checks the generated projection's value against
-  * the interpreted `expr.eval` on the same row, so a kernel whose
-  * generated code compiles but DIVERGES from its `nullSafeEval` twin is
-  * caught here too, plus the null-input contract (all kernels are
-  * null-intolerant via nullSafeCodeGen/nullSafeEval). */
+  * Both evaluation paths call the same `kernel` method, so each case pins
+  * the generated plumbing around that call — the typed reference call, the
+  * null-result shape, the null-input contract — against `expr.eval` on
+  * the same row. The property runs every kernel registered by `check` over
+  * generated rows (empty strings, runs of spaces, non-BMP code points,
+  * arrays with null elements, empty arrays, ragged pairs) and pins that
+  * neither path throws and both agree. The source guard keeps every row
+  * expression on the one shared codegen path and in this list. */
 class CodegenGuardSpec extends AnyFunSuite {
 
   private val text =
@@ -57,10 +64,14 @@ class CodegenGuardSpec extends AnyFunSuite {
     case (x, _) => x
   }
 
+  /** Every kernel registered by [[check]], for the generated-row property. */
+  private val kernels = scala.collection.mutable.ArrayBuffer.empty[(String, Expression)]
+
   /** Compile expr with the no-fallback generator, evaluate on `row`, and
     * pin codegen == interpreted; then pin the null contract. */
   private def check(name: String, expr: Expression, row: InternalRow,
-                    inputTypes: Seq[DataType]): Unit =
+                    inputTypes: Seq[DataType]): Unit = {
+    kernels += name -> expr
     test(s"$name compiles under codegen and matches interpreted eval") {
       assert(expr.checkInputDataTypes().isSuccess, s"$name input types")
       val proj = GenerateUnsafeProjection.generate(Seq(expr)) // throws on Janino error
@@ -72,6 +83,7 @@ class CodegenGuardSpec extends AnyFunSuite {
       assert(proj(nullRow).isNullAt(0), s"$name null input must yield null")
       assert(expr.eval(nullRow) == null, s"$name interpreted null contract")
     }
+  }
 
   private def str0 = BoundReference(0, strType, nullable = true)
   private def fvec0 = BoundReference(0, floatArrType, nullable = true)
@@ -245,5 +257,112 @@ class CodegenGuardSpec extends AnyFunSuite {
     assert(norm(e.eval(row), e.dataType) == expected)
     val proj = GenerateUnsafeProjection.generate(Seq(e))
     assert(norm(proj(row).get(0, e.dataType), e.dataType) == expected)
+  }
+
+  /** (generated, interpreted) results of `e` on `row`, NULL as null. */
+  private def bothPaths(e: Expression, row: InternalRow,
+                        proj: InternalRow => InternalRow = null): (Any, Any) = {
+    val g = Option(proj).getOrElse(GenerateUnsafeProjection.generate(Seq(e)))(row)
+    (if (g.isNullAt(0)) null else norm(g.get(0, e.dataType), e.dataType),
+      norm(e.eval(row), e.dataType))
+  }
+
+  private val fvec2 = FloatDot(BoundReference(0, floatArrType, nullable = true),
+    BoundReference(1, floatArrType, nullable = true))
+
+  test("FloatDot ragged arrays yield NULL (zip_with null-poisoning contract)") {
+    // a partial dot over min(len) could pass a downstream cosine filter
+    val row = InternalRow(farr(1.0f, 2.0f, 3.0f), farr(0.5f, -1.0f))
+    assert(bothPaths(fvec2, row) == ((null, null)))
+  }
+
+  test("FloatDot yields NULL on a null element") {
+    val withNull = ArrayType(FloatType, containsNull = true)
+    val f = FloatDot(BoundReference(0, withNull, nullable = true),
+      BoundReference(1, withNull, nullable = true))
+    val fr = InternalRow(new GenericArrayData(Array[Any](1.0f, null, 3.0f)), farr(0.5f, -1.0f, 2.0f))
+    assert(bothPaths(f, fr) == ((null, null)))
+  }
+
+  test("LongDot yields NULL on a null element") {
+    val longsWithNull = ArrayType(LongType, containsNull = true)
+    val l = LongDot(BoundReference(0, longsWithNull, nullable = true),
+      BoundReference(1, longsWithNull, nullable = true))
+    val lr = InternalRow(ArrayData.toArrayData(Array(3L, -2L, 7L)),
+      new GenericArrayData(Array[Any](-4L, 5L, null)))
+    assert(bothPaths(l, lr) == ((null, null)))
+  }
+
+  /** Text that stresses tokenizers: empty, runs of spaces, non-BMP. */
+  private val genText: Gen[String] = Gen.listOf(Gen.frequency(
+    3 -> Gen.oneOf("the", "fox", "a", "naïve", "日本", "Über"),
+    3 -> Gen.oneOf(" ", "  ", "   "),
+    2 -> Gen.oneOf(0x1F600, 0x10348, 0x20BB7).map(cp => new String(Character.toChars(cp))),
+    1 -> Gen.alphaNumStr.map(_.take(5)))).map(_.mkString)
+
+  /** A value of `dt`. Arrays hold null elements and are empty or ragged:
+    * each takes either the row's shared length or its own. */
+  private def genValue(dt: DataType, len: Int): Gen[Any] = dt match {
+    case StringType => genText.map(UTF8String.fromString)
+    case LongType => Gen.chooseNum(-1000000L, 1000000L)
+    case IntegerType => Gen.chooseNum(-1, 4)
+    case FloatType => Gen.chooseNum(-2.0f, 2.0f)
+    case DoubleType => Gen.chooseNum(-2.0, 2.0)
+    case ArrayType(et, _) =>
+      for {
+        n <- Gen.oneOf(Gen.const(len), Gen.choose(0, 6))
+        xs <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(null), 5 -> genValue(et, len)))
+      } yield new GenericArrayData(xs.toArray[Any])
+    case st: StructType =>
+      Gen.sequence[Seq[Any], Any](st.fields.toSeq.map(f => genValue(f.dataType, len)))
+        .map(vs => InternalRow.fromSeq(vs))
+  }
+
+  /** `dt` with every array allowed to hold null elements. */
+  private def withNullElements(dt: DataType): DataType = dt match {
+    case ArrayType(et, _) => ArrayType(withNullElements(et), containsNull = true)
+    case st: StructType => StructType(st.fields.map(f => f.copy(dataType = withNullElements(f.dataType))))
+    case other => other
+  }
+
+  test("every kernel: generated projection equals eval and neither throws on generated rows") {
+    var seed = rng.Seed(20260417L)
+    for ((name, registered) <- kernels) {
+      val e = registered.transform {
+        case b: BoundReference => b.copy(dataType = withNullElements(b.dataType))
+      }
+      assert(e.checkInputDataTypes().isSuccess, s"$name accepts arrays with null elements")
+      val inputs = e.collect { case b: BoundReference => b }.sortBy(_.ordinal).map(_.dataType)
+      val genRow = Gen.choose(0, 6).flatMap(len =>
+        Gen.sequence[Seq[Any], Any](inputs.map(genValue(_, len))).map(InternalRow.fromSeq))
+      val proj = GenerateUnsafeProjection.generate(Seq(e))
+      for (_ <- 0 until 150) {
+        val row = genRow.pureApply(Gen.Parameters.default, seed)
+        seed = seed.next
+        val out = Try(bothPaths(e, row, proj))
+        assert(out.isSuccess, s"$name threw on $row: ${out.failed.map(_.toString).getOrElse("")}")
+        val (generated, interpreted) = out.get
+        assert(generated == interpreted,
+          s"$name on $row: generated $generated vs interpreted $interpreted")
+      }
+    }
+  }
+
+  test("source guard: one codegen path in functions/, and every row kernel is checked here") {
+    val root = Paths.get("src/main/scala/graft/functions")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val files = Files.list(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val handWritten = for {
+      p <- files if p.getFileName.toString != "RowKernel.scala"
+      word <- Seq("doGenCode", "addReferenceObj", "CodegenFallback") if text(p).contains(word)
+    } yield s"$p: $word"
+    assert(handWritten.isEmpty, handWritten.mkString("\n"))
+    val rowKernel = """case class (\w+)[^{]*?extends\s+(?:Unary|Binary)RowKernel""".r
+    val names = files.flatMap(p => rowKernel.findAllMatchIn(text(p)).map(_.group(1)))
+    val spec = text(Paths.get("src/test/scala/graft/CodegenGuardSpec.scala"))
+    val unchecked = names.filterNot(n => spec.contains("check(\"" + n + "\""))
+    assert(unchecked.isEmpty, s"row kernels without a codegen check: ${unchecked.mkString(", ")}")
+    assert(names.toSet == kernels.map(_._1).toSet, "each check names one row kernel class")
   }
 }

@@ -261,7 +261,7 @@ class DedupSpec extends SparkSpec {
     // fixture-wide: every document at sf0.001, identical arrays incl. order
     val fixture = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(TextFns.hashedShingles(col("text"), 3).as("fast"),
-        TextFns.hashedShinglesRef(col("text"), 3).as("ref"))
+        KernelRefs.hashedShinglesRef(col("text"), 3).as("ref"))
       .filter(col("fast") =!= col("ref")).count()
     assert(fixture === 0)
     // edges: empty/short text, repeated+leading+trailing spaces, multi-byte
@@ -270,7 +270,7 @@ class DedupSpec extends SparkSpec {
       " a b c", "a b c ", "ä ü 中 文 word").toDF("text")
     val mism = edge
       .select(TextFns.hashedShingles(col("text"), 3).as("fast"),
-        TextFns.hashedShinglesRef(col("text"), 3).as("ref"))
+        KernelRefs.hashedShinglesRef(col("text"), 3).as("ref"))
       .filter(col("fast") =!= col("ref")).count()
     assert(mism === 0)
   }
@@ -362,7 +362,7 @@ class DedupSpec extends SparkSpec {
     val fixture = Tables.documents(spark, "/root/testdata/sf0.001")
     val fast = Dedup.simhash(fixture, "text", "doc_id")
       .as[(Long, Long)].collect().toMap
-    val ref = Dedup.simhashRef(fixture, "text", "doc_id")
+    val ref = KernelRefs.simhashRef(fixture, "text", "doc_id")
       .as[(Long, Long)].collect().toMap
     assert(fast.size === ref.size && fast.nonEmpty)
     assert(fast === ref)

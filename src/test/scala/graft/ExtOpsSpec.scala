@@ -277,7 +277,7 @@ class ExtOpsSpec extends SparkSpec {
       .select(col("doc_id"), col("m.n_tokens"), col("m.sum_len"),
         col("m.n_alpha"), col("m.n_stop")))
     val decl = rows(d.select(col("doc_id"),
-        TextFns.gopherTokenStatsRef(col("text"), set).as("m"))
+        KernelRefs.gopherTokenStatsRef(col("text"), set).as("m"))
       .select(col("doc_id"), col("m.n_tokens"), col("m.sum_len"),
         col("m.n_alpha"), col("m.n_stop")))
     assert(fused === decl)

@@ -21,7 +21,7 @@ class KnnSpec extends SparkSpec {
       3L -> Seq.empty[Float])
     val fused = v.select(col("vec_id"), Knn.snap100(col("embedding")).as("s"))
       .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
-    val decl = v.select(col("vec_id"), Knn.snap100Ref(col("embedding")).as("s"))
+    val decl = v.select(col("vec_id"), KernelRefs.snap100Ref(col("embedding")).as("s"))
       .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
     assert(fused === decl)
   }
@@ -36,7 +36,7 @@ class KnnSpec extends SparkSpec {
       .toDF("id", "a", "b")
     val fused = d.select(col("id"), Knn.floatVecSub(col("a"), col("b")).as("r"))
       .as[(Long, Seq[Option[Float]])].collect().sortBy(_._1).toSeq
-    val decl = d.select(col("id"), Knn.floatVecSubRef(col("a"), col("b")).as("r"))
+    val decl = d.select(col("id"), KernelRefs.floatVecSubRef(col("a"), col("b")).as("r"))
       .as[(Long, Seq[Option[Float]])].collect().sortBy(_._1).toSeq
     assert(fused === decl)
     assert(fused.find(_._1 == 1L).get._2 === Seq(Some(0.75f), Some(1.5f), None))
@@ -96,12 +96,12 @@ class KnnSpec extends SparkSpec {
     def keys(f: (DataFrame, String, String, Int, Int) => DataFrame) =
       f(emb, "vec_id", "embedding", 16, 2)
         .as[(Long, Int, Long)].collect().toSet
-    assert(keys(Knn.lshBandKeys) === keys(Knn.lshBandKeysRef))
+    assert(keys(Knn.lshBandKeys) === keys(KernelRefs.lshBandKeysRef))
     // and on a non-64 dimension with negative components
     val v = vecs(1L -> Seq(1f, -2f, 3f), 2L -> Seq(-2f, 4f, -6f), 3L -> Seq(0.5f, 0.5f, 0.5f))
     def keys3(f: (DataFrame, String, String, Int, Int) => DataFrame) =
       f(v, "vec_id", "embedding", 3, 4).as[(Long, Int, Long)].collect().toSet
-    assert(keys3(Knn.lshBandKeys) === keys3(Knn.lshBandKeysRef))
+    assert(keys3(Knn.lshBandKeys) === keys3(KernelRefs.lshBandKeysRef))
     // an EMPTY embedding emits no band-key rows in either form (the
     // expression returns NULL, matching the reference's posexplode of an
     // empty array) — empty vectors must not all collide in bucket 0
@@ -109,7 +109,7 @@ class KnnSpec extends SparkSpec {
     def keysE(f: (DataFrame, String, String, Int, Int) => DataFrame) =
       f(e, "vec_id", "embedding", 3, 4).as[(Long, Int, Long)].collect().toSet
     val got = keysE(Knn.lshBandKeys)
-    assert(got === keysE(Knn.lshBandKeysRef))
+    assert(got === keysE(KernelRefs.lshBandKeysRef))
     assert(got.map(_._1) === Set(1L))
   }
 

@@ -715,4 +715,30 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"),
       s"the audit must never expand all pairs:\n${p.take(2000)}")
   }
+
+  test("bench-timed row kernels run inside a WholeStageCodegen stage") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // one Boolean per plan node that evaluates `kernel`: is it in a stage?
+    def sites(p: SparkPlan, kernel: String, inStage: Boolean): Seq[Boolean] = p match {
+      case a: AdaptiveSparkPlanExec => sites(a.executedPlan, kernel, inStage)
+      case q: QueryStageExec => sites(q.plan, kernel, inStage = false)
+      case w: WholeStageCodegenExec => sites(w.child, kernel, inStage = true)
+      case i: InputAdapter => sites(i.child, kernel, inStage = false)
+      case _ =>
+        val here = p.expressions.exists(_.exists(_.prettyName == kernel))
+        (if (here) Seq(inStage) else Nil) ++ p.children.flatMap(sites(_, kernel, inStage))
+    }
+    for ((query, kernel) <- Seq(
+      "ext_embed_quantize" -> "int8quantstats",
+      "ext_text_repetition" -> "tokenrepetitionstats",
+      "ext_quality_gopher" -> "gophertokenstats",
+      "ext_pack_windows" -> "bpecount")) {
+      val df = SparkEntry.queries(query)(spark, d)
+      df.collect() // the final adaptive plan holds the codegen stages
+      val found = sites(df.queryExecution.executedPlan, kernel, inStage = false)
+      assert(found.nonEmpty && found.forall(identity),
+        s"$query: $kernel outside a codegen stage:\n${df.queryExecution.executedPlan}")
+    }
+  }
 }

@@ -290,7 +290,7 @@ class TrainPrepSpec extends SparkSpec {
     // fixture-wide parity at sf0.001
     val fx = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(TextFns.bpeEstimate(col("text")).as("a"),
-        TextFns.bpeEstimateRef(col("text")).as("b"))
+        KernelRefs.bpeEstimateRef(col("text")).as("b"))
       .as[(Long, Long)].collect()
     assert(fx.nonEmpty && fx.forall { case (a, b) => a == b })
     // edge strings: empty, multi-space (empty tokens), trailing space,
@@ -298,7 +298,7 @@ class TrainPrepSpec extends SparkSpec {
     val edges = Seq("", "  ", "abcd efghi", "tail ", "的是了在和", "a😀b 的的的的的")
       .toDF("text")
       .select(TextFns.bpeEstimate(col("text")).as("a"),
-        TextFns.bpeEstimateRef(col("text")).as("b"))
+        KernelRefs.bpeEstimateRef(col("text")).as("b"))
       .as[(Long, Long)].collect()
     assert(edges.forall { case (a, b) => a == b },
       s"edge parity: ${edges.mkString(",")}")
