@@ -103,12 +103,14 @@ object CdcOps {
   /** Idempotent upsert merge (js:149–202): rows from `batchState` win; rows
     * from `base` survive only for keys absent from the batch — `updateOne
     * {upsert:true}` semantics at table scale. Expressed as anti-join + union
-    * so Catalyst can broadcast the (small, deduped) batch key set; applying
-    * the same batch twice is a no-op (the reference's at-least-once
+    * so Catalyst can broadcast the (small) batch key set — un-deduped: a
+    * repeated key cannot change a left-anti join's result, and a
+    * `distinct` would cost an aggregate, a shuffle and a job. Applying the
+    * same batch twice is a no-op (the reference's at-least-once
     * idempotence contract, js:114–115). */
   def upsertMerge(base: DataFrame, batchState: DataFrame, key: String): DataFrame =
     base
-      .join(batchState.select(col(key)).distinct(), Seq(key), "left_anti")
+      .join(batchState.select(col(key)), Seq(key), "left_anti")
       .unionByName(batchState)
 
   /** Per-op-type counters — the reference's `stats {inserts, updates, errors}`

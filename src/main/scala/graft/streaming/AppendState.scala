@@ -258,7 +258,9 @@ private[streaming] object AppendState {
     val all = rawFrom(spark, targetDir, baseId(targetDir), folded).get
     val target = baseDir(targetDir, upTo)
     if (target.exists()) deleteQuietly(target) // orphan from a previous crash
-    val merged = merge(all).localCheckpoint(true)
+    // one pass: the fold streams into the fresh base (it never reads the
+    // dir it writes, so nothing state-sized is materialized first)
+    val merged = merge(all)
     val w = merged.write
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(target.toString)
@@ -266,7 +268,8 @@ private[streaming] object AppendState {
     // marker flip below is what retires the folded deltas — so republish a
     // zero-row partitioned base unpartitioned: the schema-only part file
     // keeps the per-dir read well-formed, and unionByName absorbs the
-    // column-order difference vs partition-discovered deltas.
+    // column-order difference vs partition-discovered deltas. The
+    // republish recomputes the fold, which is empty here.
     if (partitionCols.nonEmpty && !hasParquetFile(target)) {
       deleteQuietly(target)
       merged.write.parquet(target.toString)

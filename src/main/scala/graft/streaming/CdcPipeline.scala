@@ -95,14 +95,19 @@ object CdcPipeline {
     * atomic publish (a crash mid-write can never tear the only copy; the
     * replayed-batch merge is a no-op by idempotence, the id guard just
     * skips its I/O). In production this body is a transactional MERGE INTO
-    * keyed on `user_id`; the dedup-then-merge shape is identical. */
+    * keyed on `user_id`; the dedup-then-merge shape is identical.
+    *
+    * One pass per commit: the live version is opened with the batch
+    * state's schema (no footer inference) and scanned once, streaming
+    * into the new version's write; the batch's last-write-wins frame is
+    * the one O(batch) materialization, read by both the anti-join keys
+    * and the union, so the batch's source files are scanned once too. The
+    * seed batch (no live version yet) streams straight into its write. */
   def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
                  batchId: Long = -1L): Unit = {
     val batchState = CdcOps.lastWriteWins(batch, "user_id", "ts", "event_id")
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        CdcOps.upsertMerge(base,
-          batchState.select(base.columns.toIndexedSeq.map(col): _*), "user_id")
+    StateCommit.applyBatch(spark, targetDir, batchId, Some(batchState.schema)) {
+      case Some(base) => CdcOps.upsertMerge(base, batchState.localCheckpoint(true), "user_id")
       case None => batchState
     }
   }

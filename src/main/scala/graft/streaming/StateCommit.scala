@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned, atomically-flipped micro-batch state commit — the shared
   * exactly-once discipline for ADDITIVE foreachBatch state (counts,
@@ -13,12 +14,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     directory — the live version is never touched;
   *  2. the marker file flips to B via an atomic same-directory rename,
   *     so marker and state commit together;
-  *  3. the superseded version is deleted only after the flip
-  *     (best-effort — leftovers are garbage, never state).
+  *  3. every superseded version (`targetDir.v<id>`, id < B) is deleted
+  *     only after the flip, found by LISTING the parent dir (best-effort
+  *     — leftovers are garbage, never state, and the next commit sweeps
+  *     them).
   * A crash at any point leaves the marker naming a complete,
   * fully-applied version: before the flip the replay re-merges from the
   * still-intact previous version (overwriting any orphan vB); after the
-  * flip the batch-id guard refuses the replay. */
+  * flip the batch-id guard refuses the replay.
+  *
+  * Cost: one pass. The merge streams from the live version straight into
+  * the fresh version dir — nothing target-sized is materialized first
+  * (the base is always `v<last>` or the legacy flat dir, never the dir
+  * being written, so an eager copy would protect nothing). Bytes written
+  * per commit stay O(state): every version is a complete state in flat
+  * parquet files directly under `targetDir.vB`, the contract every
+  * external reader relies on. */
 private[streaming] object StateCommit {
 
   private def markerFile(targetDir: String) = new java.io.File(targetDir + ".applied")
@@ -93,16 +104,20 @@ private[streaming] object StateCommit {
     * means "out-of-band apply, no checkpoint identity": the commit gets
     * the next version id and the replay guard is skipped — valid ONLY for
     * idempotent merges (the guard is what protects additive ones; the
-    * atomic publish protects both). */
-  def applyBatch(spark: SparkSession, targetDir: String, batchId0: Long)
+    * atomic publish protects both). A caller that knows the state's
+    * `schema` passes it, so opening the live version reads no parquet
+    * footer (no schema-inference job per commit). */
+  def applyBatch(spark: SparkSession, targetDir: String, batchId0: Long,
+                 schema: Option[StructType] = None)
                 (merge: Option[DataFrame] => DataFrame): Unit = {
     val last = lastApplied(targetDir)
     if (batchId0 >= 0 && batchId0 <= last) return // replayed batch: no-op
     val batchId = if (batchId0 >= 0) batchId0 else last + 1
-    val base =
-      if (last >= 0) Some(spark.read.parquet(committedDir(targetDir, last))) else None
-    merge(base).localCheckpoint(true)
-      .write.mode("overwrite").parquet(versionDir(targetDir, batchId))
+    val base = if (last < 0) None else {
+      val r = spark.read
+      Some(schema.fold(r)(r.schema).parquet(committedDir(targetDir, last)))
+    }
+    merge(base).write.mode("overwrite").parquet(versionDir(targetDir, batchId))
     if (!layoutFile(targetDir).exists()) {
       val lt = new java.io.File(targetDir + ".layout.tmp")
       java.nio.file.Files.writeString(lt.toPath, LayoutId)
@@ -115,7 +130,21 @@ private[streaming] object StateCommit {
     java.nio.file.Files.move(tmp.toPath, markerFile(targetDir).toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    if (last >= 0) deleteQuietly(new java.io.File(versionDir(targetDir, last)))
+    retireVersionsBelow(targetDir, batchId)
+  }
+
+  /** Delete every `targetDir.v<id>` with id < `live`, found by listing the
+    * parent dir: a crash between an earlier flip and its delete left a
+    * version that deleting only `v<last>` would never revisit. */
+  private def retireVersionsBelow(targetDir: String, live: Long): Unit = {
+    val t = new java.io.File(targetDir).getAbsoluteFile
+    val version = (java.util.regex.Pattern.quote(t.getName) + "\\.v(\\d+)").r
+    Option(t.getParentFile.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
+      f.getName match {
+        case version(id) if id.toLong < live => deleteQuietly(f)
+        case _ =>
+      }
+    }
   }
 
   private def deleteQuietly(f: java.io.File): Unit = {

@@ -62,6 +62,24 @@ class CdcOpsSpec extends SparkSpec {
     assert(r === Set(1L, 9L))
   }
 
+  test("upsertMerge without distinct keys: a batch repeating keys gives exactly the rows of the distinct form") {
+    val base = log((1, 1, "2024-01-01 00:00:00", "insert"),
+      (2, 2, "2024-01-01 00:00:00", "insert"), (3, 3, "2024-01-01 00:00:00", "insert"))
+    // keys 2 and 4 repeat (an un-deduped batch); key 3 repeats the base's
+    val batch = log((4, 2, "2024-01-02 00:00:00", "update"),
+      (5, 2, "2024-01-03 00:00:00", "update"), (6, 4, "2024-01-02 00:00:00", "insert"),
+      (7, 4, "2024-01-02 00:00:00", "update"), (8, 3, "2024-01-02 00:00:00", "update"))
+    val distinctForm = base
+      .join(batch.select(col("user_id")).distinct(), Seq("user_id"), "left_anti")
+      .unionByName(batch)
+    def rows(df: DataFrame) =
+      df.select("user_id", "event_id", "op_type").as[(Long, Long, String)].collect().sorted.toSeq
+    val got = rows(CdcOps.upsertMerge(base, batch, "user_id"))
+    assert(got === rows(distinctForm))
+    assert(got === Seq((1L, 1L, "insert"), (2L, 4L, "update"), (2L, 5L, "update"),
+      (3L, 8L, "update"), (4L, 6L, "insert"), (4L, 7L, "update")))
+  }
+
   private def attrLog(rows: (Long, Long, String, String)*): DataFrame =
     rows.toDF("event_id", "user_id", "ts_s", "attr")
       .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")

@@ -433,4 +433,27 @@ class StateLayoutSpec extends SparkSpec {
     assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet
       === Set((1L, 10L), (2L, 20L), (3L, 30L)))
   }
+
+  test("StateCommit: a version left behind by a crash between the marker flip and its delete is retired by the next commit") {
+    val root = tmp("scleak")
+    val dir = root.resolve("state").toString
+    // the crash: the marker flipped to 5, but v4 was never deleted
+    Seq((1L, 10L)).toDF("k", "n").write.parquet(s"$dir.v4")
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "n").write.parquet(s"$dir.v5")
+    Files.writeString(new java.io.File(dir + ".layout").toPath, StateCommit.LayoutId)
+    Files.writeString(new java.io.File(dir + ".applied").toPath, "5")
+    // a sibling state sharing the name prefix is not ours to retire
+    Seq((9L, 90L)).toDF("k", "n").write.parquet(s"${dir}x.v1")
+
+    StateCommit.applyBatch(spark, dir, 6L) { base =>
+      base.get.unionByName(Seq((3L, 30L)).toDF("k", "n"))
+    }
+    val versions = root.toFile.listFiles().map(_.getName)
+      .filter(_.matches("state\\.v\\d+")).sorted.toSeq
+    assert(versions === Seq("state.v6"), s"superseded versions must be swept, got $versions")
+    assert(new java.io.File(s"${dir}x.v1").exists())
+    assert(StateCommit.lastApplied(dir) === 6L)
+    assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet
+      === Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
 }
