@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
@@ -60,6 +61,26 @@ object CdcPipeline {
         case f => f
       })
     } catch { case NonFatal(_) => eventsFileSchema }
+
+  /** The events stream over `sourceDir`, the one opener every events
+    * monitor starts from: [[observedEventsSchema]], then a file source
+    * resolved on a session the stream owns. That session lists each
+    * micro-batch's files (and, on restart, the last committed batch's) on
+    * the driver, as the source already lists its directory every trigger;
+    * on the caller's conf, a batch of more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
+    * would cost a Spark job of one task per file. The analyzed plan is
+    * then re-rooted on `spark`, so the query registers with `spark.streams`
+    * and its listeners while the source keeps the owned session. The clone
+    * is taken after the schema probe, so it carries the nanos-as-long flag
+    * the probe set: a relation reads parquet with the conf of the session
+    * that resolved it. */
+  def eventStream(spark: SparkSession, sourceDir: String): DataFrame = {
+    val schema = observedEventsSchema(spark, sourceDir)
+    val lister = GraftColumnBridge.cloneSession(spark)
+    lister.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, Int.MaxValue.toLong)
+    GraftColumnBridge.ofRows(spark, lister.readStream.schema(schema).parquet(sourceDir))
+  }
 
   /** The shared batch/stream transformation: ts normalization, op-type
     * mapping, delete filtering, write-op projection (js:157–186). Applying
@@ -154,8 +175,7 @@ object CdcPipeline {
     * `false` runs continuously with the reference's 5 s cadence (js:349). */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(observedEventsSchema(spark, sourceDir)).parquet(sourceDir)
+    val raw = eventStream(spark, sourceDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
     transform(raw)

@@ -140,8 +140,7 @@ object FunnelStream {
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
             stages: Seq[String] = Stages): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(CdcPipeline.observedEventsSchema(spark, sourceDir)).parquet(sourceDir)
+    val raw = CdcPipeline.eventStream(spark, sourceDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
     CdcPipeline.transform(raw)

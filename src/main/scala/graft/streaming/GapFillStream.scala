@@ -86,8 +86,7 @@ object GapFillStream {
     * `targetDir` state table ([[report]] re-grids it any time). */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(CdcPipeline.observedEventsSchema(spark, sourceDir)).parquet(sourceDir)
+    val raw = CdcPipeline.eventStream(spark, sourceDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
     CdcPipeline.transform(raw)

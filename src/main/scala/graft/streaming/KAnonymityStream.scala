@@ -166,9 +166,7 @@ object KAnonymityStream {
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
             dedupDelay: String = DefaultDedupDelay): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(CdcPipeline.observedEventsSchema(spark, sourceDir))
-      .parquet(sourceDir)
+    val raw = CdcPipeline.eventStream(spark, sourceDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
     CdcPipeline.dedupEvents(graft.Tables.normalizeTs(raw), dedupDelay)

@@ -116,9 +116,7 @@ object LDiversityStream {
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
             compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(CdcPipeline.observedEventsSchema(spark, sourceDir))
-      .parquet(sourceDir)
+    val raw = CdcPipeline.eventStream(spark, sourceDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
     raw.writeStream

@@ -21,4 +21,15 @@ object GraftColumnBridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** A new session on `spark`'s SparkContext holding a copy of its conf,
+    * catalog and functions; conf set on either afterwards stays its own. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a DataFrame of `spark`: queries started from it
+    * register with `spark`, while the relations inside keep the session
+    * that resolved them. */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
 }

@@ -74,6 +74,55 @@ class StreamingSpec extends SparkSpec {
     assert(before === after)
   }
 
+  test("a TIMESTAMP(NANOS) events source streams through CdcPipeline.start to the batch answer") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+
+    val src = tmp("nanos-src")
+    val tgt = tmp("nanos-tgt").resolve("state").toString
+    val ckp = tmp("nanos-ckp").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    // 300 events on 40 keys over two files; event times 1.000000123 s
+    // apart, so the sub-microsecond part is truncated away on read
+    val types = Seq("signup", "click", "purchase", "error")
+    val groups = new SimpleGroupFactory(schema)
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond * 1000000000L
+    Seq(0 until 150, 150 until 300).zipWithIndex.foreach { case (ids, part) =>
+      val writer = ExampleParquetWriter.builder(new HPath(src.resolve(s"events-$part.parquet").toUri))
+        .withType(schema).build()
+      try ids.foreach { i =>
+        writer.write(groups.newGroup()
+          .append("event_id", i.toLong).append("ts", t0 + i * 1000000123L)
+          .append("user_id", (i * 7 % 40).toLong).append("event_type", types(i % types.size))
+          .append("value", i * 0.5).append("props", "{}"))
+      } finally writer.close()
+    }
+
+    // the stream's own schema probe must arm the nanos flag: without it
+    // footer inference fails, and the fallback TimestampType schema cannot
+    // scan a NANOS column
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    CdcPipeline.start(spark, src.toString, tgt, ckp).awaitTermination()
+
+    val want = CdcOps.lastWriteWins(
+      CdcPipeline.transform(spark.read.parquet(src.toString)), "user_id", "ts", "event_id")
+      .select("user_id", "event_id", "ts", "event_type")
+    val got = CdcPipeline.state(spark, tgt).select("user_id", "event_id", "ts", "event_type")
+    assert(got.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
+    assert(want.count() > 0 && got.count() === want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("watermarked windowed aggregation emits exactly the batch answer for closed windows") {
     val sf = "/root/testdata/sf0.001"
     val src = tmp("agg-src")
@@ -126,9 +175,7 @@ class StreamingSpec extends SparkSpec {
     staging.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
       .foreach(f => Files.move(f.toPath, src.resolve(f.getName)))
 
-    val stream = spark.readStream
-      .schema(CdcPipeline.observedEventsSchema(spark, src.toString)).parquet(src.toString)
-    val q = CdcPipeline.windowedDailyBars(stream)
+    val q = CdcPipeline.windowedDailyBars(CdcPipeline.eventStream(spark, src.toString))
       .writeStream
       .option("checkpointLocation", ckp)
       .format("memory").queryName("win_bars")

@@ -16,6 +16,10 @@ bytes and parquet files of the version the batch committed.
 directories of two checkouts) and prints, per metric, the median and
 quartiles of each set's untraced runs (tracing slows a run), the change in
 per cent and, over the seeds both sets ran, how many pairs the change won.
+Beside the run's end-to-end figures it compares each run's median live-batch
+`getBatch` and `addBatch` (`batch.getBatch_s`, `batch.addBatch_s`), read
+from the progress that every run records, so an A/B shows which phase of a
+batch moved without a traced run.
 """
 import argparse
 import glob
@@ -27,7 +31,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT = os.path.join(ROOT, ".bench_work", "artifacts")
 PHASES = ("getBatch", "addBatch", "triggerExecution")
 COMPARED = ("warm_cpu_s", "warm_pass_s", "latency_p50_s", "latency_tail_s", "cold_pass_s",
-            "setup_s", "heap_peak_mb", "host.steal_s", "cdc_state_bytes")
+            "setup_s", "heap_peak_mb", "batch.getBatch_s", "batch.addBatch_s", "host.steal_s",
+            "cdc_state_bytes")
 
 
 def artifacts(paths):
@@ -51,6 +56,10 @@ def figures(run):
     out = dict(run.get("end_to_end", {}))
     out["host.steal_s"] = run.get("host", {}).get("host.steal_s")
     out["cdc_state_bytes"] = run.get("info", {}).get("cdc_state_bytes")
+    batches = live_batches(run["raw"])
+    for phase in ("getBatch", "addBatch"):
+        ms = [p["duration_ms"][phase] for p in batches if phase in p["duration_ms"]]
+        out[f"batch.{phase}_s"] = median(ms) / 1e3 if ms else None
     return out
 
 
