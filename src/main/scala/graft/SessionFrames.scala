@@ -14,14 +14,15 @@ import org.apache.spark.storage.StorageLevel
   * Two lifetimes:
   *  - SESSION-SHARED entries, derived from a fixture dir and reused by every
   *    query of the session: checkpointed [[frame]]s, driver-side
-  *    [[value]]s (codebooks, models, merge lists) and [[dir]]s (re-laid-out
-  *    copies of a table). An entry is valid only for the SparkContext it was
-  *    built in and the fixture FINGERPRINT it was built from (every table
-  *    file's byte size and modification time, read through Hadoop
-  *    `FileSystem`). A lookup that finds an entry from a stopped context or
-  *    an older fingerprint releases that entry's blocks or directory and
-  *    rebuilds, so a regenerated fixture or a restarted session can never be
-  *    served stale frames.
+  *    [[value]]s (codebooks, models, merge lists, the tables' inferred
+  *    parquet schemas) and [[dir]]s (re-laid-out copies of a table). An
+  *    entry is valid only for the SparkContext it was built in and the
+  *    fixture FINGERPRINT it was built from (every table file's byte size
+  *    and modification time, read through Hadoop `FileSystem`). A lookup
+  *    that finds an entry from a stopped context or an older fingerprint
+  *    releases that entry's blocks or directory and rebuilds, so a
+  *    regenerated fixture or a restarted session can never be served stale
+  *    frames.
   *  - PER-QUERY intermediates, persisted by operators via [[track]] and
   *    dropped by [[release]] — the drain Bench, Verify and Profile run
   *    between queries. The returned queries are lazy, so an operator cannot
@@ -79,7 +80,8 @@ object SessionFrames {
     }
 
   /** A fixture-derived driver-side value (trained model, codebook, merge
-    * list), built once per (context, fingerprint, name). */
+    * list, inferred table schema), built once per (context, fingerprint,
+    * name). */
   def value[T](s: SparkSession, d: String, name: String)(build: => T): T =
     shared(s, d, name)(build)(_ => ())
 

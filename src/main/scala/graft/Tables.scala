@@ -18,8 +18,37 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Open one fixture table, `<sfDir>/<name>.parquet` — the one loader every
+    * fixture read goes through.
+    *
+    * Parquet schema inference is a Spark job (a one-task footer read), so
+    * the inferred schema is a [[SessionFrames.value]]: inferred on the first
+    * open per (SparkContext, fixture fingerprint) and handed to
+    * `read.schema(..)` on every open, which still lists the table's files on
+    * the driver but launches no job. A table rewritten in place changes the
+    * fingerprint, so its next open re-infers.
+    *
+    * The entry is also keyed by the session's values of [[inferenceConfs]],
+    * the settings that change what inference returns for the same files
+    * (a BINARY column read as string, an INT96 or NANOS column as a
+    * timestamp or a long, NTZ vs LTZ timestamps, one footer vs the merge of
+    * all). Without them, a session that flips one — as [[eventsRaw]] flips
+    * the nanos flag — or a cloned session with other settings would be
+    * served a schema inferred under different ones. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = inferenceConfs.map(spark.conf.get).mkString(s"schema:$name:", ",", "")
+    val schema = SessionFrames.value(spark, sfDir, key)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The SQL confs that change the schema parquet inference returns. */
+  private val inferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
 
   /** The nanos-as-long legacy flag the events reader needs. Set at most ONCE
     * per session (check-then-set): repeated blind writes to a shared

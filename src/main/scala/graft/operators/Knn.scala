@@ -362,10 +362,8 @@ object Knn {
     * centroid list exactly as in [[lloyd]]. */
   def ivfCellsInt(corpus: DataFrame, idCol: String, embCol: String,
                   nCells: Int, iters: Int, sampleN: Int): DataFrame = {
-    val (_, cs) = intCentroids(corpus, idCol, embCol, nCells, iters, sampleN)
-    corpus.select(col(idCol).as("vec_id"),
-      element_at(intAssign(col(embCol), Seq(cs)).getField("cells"), 1)
-        .cast("long").as("cell"))
+    val cs = intIvfCells(corpus, idCol, embCol, nCells, iters, sampleN)
+    corpus.select(col(idCol).as("vec_id"), intCellOf(col(embCol), cs).as("cell"))
   }
 
   /** The snap + train phase of [[ivfCellsInt]]: the 1e-6-unit snapped

@@ -1914,17 +1914,19 @@ object ExtQueries {
       threshold = SemThreshold, cellExpr = pmod(col("vec_id"), lit(16)))
       .orderBy("vec_id")
 
-  /** The IVF QUANTIZER itself under the oracle ([[Knn.ivfCellsInt]]):
-    * the k-means cell table — lowest-id sample, lowest-id seeds, Lloyd
-    * floor-mean updates, argmin assignment of the FULL corpus — in the
-    * repo's exact-integer discipline, hash-gated against an unrolled SQL
-    * replay of the identical recurrence. With this, `ext_sim_semdedup_cells`
+  /** The IVF QUANTIZER itself under the oracle (the [[Knn.ivfCellsInt]]
+    * cell table): lowest-id sample, lowest-id seeds, Lloyd floor-mean
+    * updates, argmin assignment of the FULL corpus — in the repo's
+    * exact-integer discipline, hash-gated against an unrolled SQL replay of
+    * the identical recurrence. The codebook is the session's
+    * [[intIvfCellsShared]] (the same training, trained once per fixture),
+    * so a warm build runs no job. With this, `ext_sim_semdedup_cells`
     * (grouping) and the recall audits, the spec-only ANN surface shrinks
     * to PQ codebooks / PCA / unigram-EM. Mirrors `ext_sim_knn_ivf`'s
     * (nCells, iters, sampleN) contract. */
   private val extSimKnnIvfCells: Q = (s, d) =>
-    Knn.ivfCellsInt(embeddings(s, d), "vec_id", "embedding",
-      nCells = IvfCells, iters = IvfIters, sampleN = IvfSampleN)
+    embeddings(s, d).select(col("vec_id"),
+      Knn.intCellOf(col("embedding"), intIvfCellsShared(s, d)).as("cell"))
       .orderBy("vec_id")
 
   /** The frozen integer-Lloyd codebook per fixture dir (the

@@ -93,7 +93,7 @@ object StreamQueries {
     * The live path (file stream, checkpointed restart, cross-batch
     * convergence) is exercised end-to-end by StreamingSpec. */
   private val streamCorpusIngest: Q = (s, d) => {
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val once = graft.streaming.CorpusIngest.transform(docs)
     val twice = once.unionByName(once) // two deliveries
     graft.streaming.CorpusIngest.mergeSurvivors(twice.limit(0), twice)
@@ -110,7 +110,7 @@ object StreamQueries {
     * stream, checkpointed restart, redelivery) is in StreamingSpec. */
   private val streamDecontam: Q = (s, d) => {
     import graft.streaming.{CorpusIngest, Decontam}
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val index = Decontam.evalIndex(docs.filter(col("source") === "src0"))
     val once = Decontam.gate(docs.filter(col("source") =!= "src0"), index)
     val twice = once.unionByName(once) // two deliveries
@@ -143,7 +143,7 @@ object StreamQueries {
   private[graft] def neardupPairsShared(s: SparkSession, d: String): DataFrame =
     graft.SessionFrames.frame(s, d, "neardup_pairs") {
       import graft.streaming.NeardupStream
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = Tables.documents(s, d)
       val once = NeardupStream.shingleRows(docs)
       val fresh = NeardupStream.newPairs(once, once, NeardupStream.sizeRows(once),
         totalDocs = Some(docs.count()))
@@ -160,7 +160,7 @@ object StreamQueries {
     * ext_source_caps' SQL. Live restart/redelivery in StreamingSpec. */
   private val streamSourceCaps: Q = (s, d) => {
     import graft.streaming.SourceCapsStream
-    val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "source")
+    val docs = Tables.documents(s, d).select("doc_id", "source")
     val twice = docs.unionByName(docs) // two deliveries
     graft.Tables.orderedReport(
       SourceCapsStream.capK(twice, ExtQueries.SourceCapK), "source", "rk")
@@ -210,7 +210,7 @@ object StreamQueries {
     * StreamingSpec. */
   private val streamDsirModel: Q = (s, d) => {
     import graft.streaming.DsirModelStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"))
     val once = docs.unionByName(docs).dropDuplicates("doc_id") // two deliveries
     val grid = DsirModelStream.gridSlice(once)
@@ -269,7 +269,7 @@ object StreamQueries {
     * oracle IS ext_dedup_cross_source's SQL. Live path (pair completion
     * across batches + the meta ledger) in StreamingSpec. */
   private val streamCrossSource: Q = (s, d) => {
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val meta = docs.select(col("doc_id"), col("source"), col("n_chars"))
     graft.operators.Dedup.crossSourceMatrix(
       neardupPairsShared(s, d), // the SAME pair state stream_neardup reads
@@ -291,7 +291,7 @@ object StreamQueries {
     * StreamingSpec. */
   private val streamMultimodalDedup: Q = (s, d) => {
     import graft.streaming.MultimodalDedupStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val once = ExtQueries.imageHashesShared(s, d)
     val twice = once.unionByName(once).distinct() // two deliveries collapse
       .localCheckpoint(true) // probe side AND index side read the bands
@@ -316,7 +316,7 @@ object StreamQueries {
     * payload); live cross-batch completion in StreamingSpec. */
   private val streamMultimodalSemdedup: Q = (s, d) => {
     import graft.streaming.MultimodalDedupStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val once = ExtQueries.imageFeaturesShared(s, d)
     val twice = once.unionByName(once).distinct() // two deliveries collapse
       .localCheckpoint(true) // probe side, index side AND ledger read it
@@ -344,7 +344,7 @@ object StreamQueries {
     * StreamingSpec. */
   private val streamMultimodalCrossSource: Q = (s, d) => {
     import graft.streaming.MultimodalDedupStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val once = ExtQueries.imageHashesShared(s, d)
     val twice = once.unionByName(once).distinct().localCheckpoint(true)
     val bands = MultimodalDedupStream.bandRows(twice)
@@ -398,7 +398,7 @@ object StreamQueries {
     * StreamingSpec. */
   private val streamUrlDedup: Q = (s, d) => {
     import graft.streaming.UrlDedupStream
-    val urls = s.read.parquet(s"$d/documents.parquet")
+    val urls = Tables.documents(s, d)
       .select(col("doc_id"), ExtQueries.syntheticUrl.as("raw_url"))
     val twice = UrlDedupStream.slice(urls.unionByName(urls))
     UrlDedupStream.report(twice).orderBy("canon_url")
@@ -406,7 +406,7 @@ object StreamQueries {
 
   private val streamPrefixDup: Q = (s, d) => {
     import graft.streaming.PrefixDupStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val twice = PrefixDupStream.slice(docs.unionByName(docs))
     PrefixDupStream.report(twice)
   }
@@ -680,7 +680,7 @@ object StreamQueries {
     * restart, redelivery) is in StreamingSpec. */
   private val streamQualityDrift: Q = (s, d) => {
     import graft.streaming.{CorpusIngest, QualityDrift}
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val blockPar = expr("(doc_id div 20L) % 2")
     val base = QualityDrift.baseline(docs.filter(blockPar === 0))
     val once = QualityDrift.gate(docs.filter(blockPar === 1))
@@ -705,7 +705,7 @@ object StreamQueries {
     * degraded wave) is in StreamingSpec. */
   private val streamVocabDrift: Q = (s, d) => {
     import graft.streaming.{CorpusIngest, VocabDrift}
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val blockPar = expr("(doc_id div 20L) % 2")
     val refDocs = docs.filter(blockPar === 0)
     val vocab = VocabDrift.vocab(refDocs, VocabDriftK)
@@ -727,7 +727,7 @@ object StreamQueries {
     * StreamingSpec. */
   private val streamKsDrift: Q = (s, d) => {
     import graft.streaming.KsDriftStream
-    val once = KsDriftStream.transform(s.read.parquet(s"$d/documents.parquet"))
+    val once = KsDriftStream.transform(Tables.documents(s, d))
     val twice = once.unionByName(once)
     KsDriftStream.report(KsDriftStream.histogram(
       KsDriftStream.mergeDocs(twice.limit(0), twice)))
@@ -743,7 +743,7 @@ object StreamQueries {
     * compaction) is exercised in StreamingSpec. */
   private val streamLengthOutliers: Q = (s, d) => {
     import graft.streaming.LengthProfileStream
-    val docs = s.read.parquet(s"$d/documents.parquet")
+    val docs = Tables.documents(s, d)
     val once = LengthProfileStream.transform(docs)
     val twice = once.unionByName(once) // two deliveries
     LengthProfileStream.report(
