@@ -32,10 +32,13 @@ object Tables {
     * the settings that change what inference returns for the same files
     * (a BINARY column read as string, an INT96 or NANOS column as a
     * timestamp or a long, NTZ vs LTZ timestamps, one footer vs the merge of
-    * all). Without them, a session that flips one — as [[eventsRaw]] flips
-    * the nanos flag — or a cloned session with other settings would be
-    * served a schema inferred under different ones. */
+    * all). Without them, a session that flips one, or a cloned session
+    * with other settings, would be served a schema inferred under different
+    * ones. The nanos flag the events table needs is armed here, before the
+    * key is formed, so a table opened before the first events read is not
+    * inferred again after it. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    ensureNanosAsLong(spark)
     val path = s"$sfDir/$name.parquet"
     val key = inferenceConfs.map(spark.conf.get).mkString(s"schema:$name:", ",", "")
     val schema = SessionFrames.value(spark, sfDir, key)(spark.read.parquet(path).schema)
@@ -75,10 +78,8 @@ object Tables {
   }
 
   /** The events fixture as stored on disk (`ts` NOT yet normalized). */
-  def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureNanosAsLong(spark)
+  def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "events")
-  }
 
   /** The events fixture with `ts` normalized to TimestampType. */
   def events(spark: SparkSession, sfDir: String): DataFrame =

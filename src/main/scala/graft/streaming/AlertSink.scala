@@ -109,8 +109,8 @@ final class AlertSink(spark: SparkSession, targetDir: String,
     // not safe), and a skipped fold just waits for the next raise
     if (AppendState.compactionDue(targetDir, AppendState.DefaultCompactEvery) &&
         compactLock.tryLock()) {
-      try AppendState.compactIfDue(spark, targetDir,
-        AppendState.DefaultCompactEvery)(df => df) // log rows are unique events
+      try if (AppendState.compactionDue(targetDir, AppendState.DefaultCompactEvery))
+        AppendState.compact(spark, targetDir, df => df) // log rows are unique events
       finally compactLock.unlock()
     }
     due

@@ -130,9 +130,6 @@ private[streaming] object AppendState {
       .filter(_ > base).sorted).getOrElse(Nil)
   }
 
-  def exists(targetDir: String): Boolean =
-    baseId(targetDir) >= 0 || deltaIds(targetDir).nonEmpty
-
   /** The next unclaimed delta id: one past everything committed. */
   private def nextFreeId(targetDir: String): Long =
     (deltaIds(targetDir) :+ baseId(targetDir)).max + 1
@@ -295,7 +292,7 @@ private[streaming] object AppendState {
       }
   }
 
-  /** Default [[compactIfDue]] trigger, and the default every stream's
+  /** Default compaction trigger, and the default every stream's
     * applyBatch now applies: a long-lived stream otherwise accumulates one
     * delta dir per micro-batch and read amplification grows UNBOUNDED
     * until someone remembers the manual compact call (the round-15 gap).
@@ -308,21 +305,11 @@ private[streaming] object AppendState {
   /** The LSM trigger condition, centralized: true when `every` > 0 and at
     * least that many deltas await folding on `targetDir`. Streams whose
     * fold spans SEVERAL state dirs (their own `compact`) test this on
-    * their largest dir and run their fold; single-dir states use
-    * [[compactIfDue]] directly. One definition — a future policy change
-    * (e.g. byte-based) edits one place, not every applyBatch. */
+    * their largest dir and run their fold. One definition — a future
+    * policy change (e.g. byte-based) edits one place, not every
+    * applyBatch. */
   def compactionDue(targetDir: String, every: Int): Boolean =
     every > 0 && deltaIds(targetDir).size >= every
-
-  /** The standard leveled-compaction policy: fold whenever `every`
-    * committed deltas have accumulated past the base (the LSM trigger,
-    * keeping merge-on-read at O(base + every·batch)). Safe to call at any
-    * time — compaction publishes atomically and folded ids replay as
-    * no-ops — so streams run it inline after their per-batch append;
-    * `every` ≤ 0 disables. */
-  def compactIfDue(spark: SparkSession, targetDir: String, every: Int)
-                  (merge: DataFrame => DataFrame): Unit =
-    if (compactionDue(targetDir, every)) compact(spark, targetDir, merge)
 
   private def deleteQuietly(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteQuietly))

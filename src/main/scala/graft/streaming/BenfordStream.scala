@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.CdcOps
 
@@ -22,7 +22,9 @@ import graft.operators.CdcOps
   * digit aggregate. [[report]] shares [[CdcOps.benfordReport]] with the
   * batch query — one definition, twins can't drift; batch-replay form
   * oracle-gated as `stream_benford`. */
-object BenfordStream {
+object BenfordStream extends Monitor.Additive {
+  protected def slice(batch: DataFrame): DataFrame = digitCounts(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** Per-digit counts of a slice — batch or micro-batch. */
   def digitCounts(events: DataFrame): DataFrame =
@@ -39,37 +41,10 @@ object BenfordStream {
     * emits ([[CdcOps.benfordReport]]). */
   def report(state: DataFrame): DataFrame = CdcOps.benfordReport(state)
 
-  /** The LIVE state table ([[StateCommit.state]]). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply — the [[TopkStream.applyBatch]]
-    * protocol over the digit counts. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        mergeCounts(base, digitCounts(batch))
-      case None =>
-        val slice = digitCounts(batch)
-        mergeCounts(slice.limit(0), slice)
-    }
-
-  /** Start the ingest Benford monitor: events source dir → shared CDC
-    * transform → watermarked event-id dedup → foreachBatch additive apply
-    * into `targetDir` ([[report]] reads it any time). */
+  /** Start the ingest Benford monitor over the events in `sourceDir`:
+    * [[CdcPipeline.uniqueChanges]] folded into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(CdcPipeline.transform(raw))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, targetDir, id)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.uniqueChanges(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

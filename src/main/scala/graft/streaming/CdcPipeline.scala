@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 
@@ -52,35 +51,31 @@ object CdcPipeline {
     * the schema, which the parquet reader accepts on either flavor (the
     * session is pinned UTC, so the instant is identical). Falls back to
     * [[eventsFileSchema]] when nothing is there to probe yet. */
-  def observedEventsSchema(spark: SparkSession, sourceDir: String): StructType =
-    try {
-      graft.Tables.ensureNanosAsLong(spark)
-      StructType(spark.read.parquet(sourceDir).schema.map {
-        case f if f.name == "ts" && f.dataType == TimestampNTZType =>
-          f.copy(dataType = TimestampType)
-        case f => f
-      })
-    } catch { case NonFatal(_) => eventsFileSchema }
+  def observedEventsSchema(spark: SparkSession, sourceDir: String): StructType = {
+    graft.Tables.ensureNanosAsLong(spark)
+    StructType(Monitor.observedSchema(spark, sourceDir, eventsFileSchema).map {
+      case f if f.name == "ts" && f.dataType == TimestampNTZType =>
+        f.copy(dataType = TimestampType)
+      case f => f
+    })
+  }
 
   /** The events stream over `sourceDir`, the one opener every events
-    * monitor starts from: [[observedEventsSchema]], then a file source
-    * resolved on a session the stream owns. That session lists each
-    * micro-batch's files (and, on restart, the last committed batch's) on
-    * the driver, as the source already lists its directory every trigger;
-    * on the caller's conf, a batch of more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files
-    * would cost a Spark job of one task per file. The analyzed plan is
-    * then re-rooted on `spark`, so the query registers with `spark.streams`
-    * and its listeners while the source keeps the owned session. The clone
-    * is taken after the schema probe, so it carries the nanos-as-long flag
-    * the probe set: a relation reads parquet with the conf of the session
-    * that resolved it. */
-  def eventStream(spark: SparkSession, sourceDir: String): DataFrame = {
-    val schema = observedEventsSchema(spark, sourceDir)
-    val lister = GraftColumnBridge.cloneSession(spark)
-    lister.conf.set(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key, Int.MaxValue.toLong)
-    GraftColumnBridge.ofRows(spark, lister.readStream.schema(schema).parquet(sourceDir))
-  }
+    * monitor starts from: [[observedEventsSchema]], then
+    * [[Monitor.fileStream]]. The stream's own session is cloned after the
+    * schema probe, so it carries the nanos-as-long flag the probe set. */
+  def eventStream(spark: SparkSession, sourceDir: String): DataFrame =
+    Monitor.fileStream(spark, sourceDir, observedEventsSchema(spark, sourceDir))
+
+  /** The change stream the CDC monitors read: [[eventStream]] through
+    * [[transform]], watermarked an hour behind (later events drop). */
+  def changes(spark: SparkSession, sourceDir: String): DataFrame =
+    transform(eventStream(spark, sourceDir)).withWatermark("ts", "1 hour")
+
+  /** [[changes]] with redelivered event ids collapsed ([[dedupEvents]]):
+    * the source of every monitor whose merge adds. */
+  def uniqueChanges(spark: SparkSession, sourceDir: String): DataFrame =
+    dedupEvents(transform(eventStream(spark, sourceDir)))
 
   /** The shared batch/stream transformation: ts normalization, op-type
     * mapping, delete filtering, write-op projection (js:157–186). Applying
@@ -174,20 +169,9 @@ object CdcPipeline {
     * `availableNow = true` drains what exists and stops (test/replay mode);
     * `false` runs continuously with the reference's 5 s cadence (js:349). */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    transform(raw)
-      .withWatermark("ts", "1 hour")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(changes(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 
   /** Restart-backoff policy, the reference's two-tier scheme: stream errors
     * restart after 5 s (js:286–299), startup failures after 60 s

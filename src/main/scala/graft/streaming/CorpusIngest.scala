@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.functions.TextFns
@@ -25,7 +25,9 @@ import graft.functions.TextFns
   * periodic [[compact]], the LSM shape; a lakehouse deployment would use
   * MERGE INTO keyed on digest with identical convergence).
   */
-object CorpusIngest {
+object CorpusIngest extends Monitor.Union {
+  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeSurvivors(state, rows)
+  protected def emptySchema = "digest STRING, doc_id BIGINT, lang STRING, quality DOUBLE"
 
   /** `documents.parquet` physical schema (the file-stream source needs it
     * declared up front). */
@@ -53,9 +55,7 @@ object CorpusIngest {
     * and silently dropping them biases the corpus — quarantine is the
     * only shape that does neither. */
   def jsonlDocs(spark: SparkSession, path: String): DataFrame =
-    jsonlReadOptions.foldLeft(spark.read.schema(jsonlSchema)) {
-      case (r, (k, v)) => r.option(k, v)
-    }.json(path)
+    spark.read.schema(jsonlSchema).options(jsonlReadOptions).json(path)
 
   /** The one exclusion predicate both halves split on: corrupt lines,
     * text-less lines, and explicit ids that violate the NON-NEGATIVE id
@@ -107,10 +107,13 @@ object CorpusIngest {
     raw.filter(excluded).select(out: _*)
   }
 
+  /** The corpus-prep quality threshold, the default of every gate here. */
+  val DefaultMinQuality = 0.3
+
   /** Shared batch/stream transform: quality gate (the corpus-prep
     * threshold) + the ingest projection — digest identity and the kept
     * metadata. Gating BEFORE the state merge means junk never shuffles. */
-  def transform(docs: DataFrame, minQuality: Double = 0.3): DataFrame =
+  def transform(docs: DataFrame, minQuality: Double = DefaultMinQuality): DataFrame =
     docs
       .withColumn("quality", TextFns.qualityScore(col("text")))
       .filter(col("quality") >= minQuality)
@@ -122,37 +125,7 @@ object CorpusIngest {
     * surviving row is exactly the min-id document's — the batch analog is
     * [[graft.operators.Dedup.exactSurvivors]]. */
   def mergeSurvivors(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("digest"))
-      .agg(min(struct(col("doc_id"), col("lang"), col("quality"))).as("m"))
-      .select(col("digest"), col("m.doc_id").as("doc_id"),
-        col("m.lang").as("lang"), col("m.quality").as("quality"))
-
-  /** The LIVE survivor state: min-id-wins merge-on-read over the
-    * append-only deltas ([[AppendState]] — per-batch I/O is O(batch), the
-    * corpus-sized survivor set is never rewritten per micro-batch). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => mergeSurvivors(r.limit(0), r))
-      .getOrElse(spark.range(0).select(lit("").as("digest"),
-        col("id").as("doc_id"), lit("").as("lang"), lit(0.0).as("quality")))
-
-  /** Fold the deltas (run periodically to bound read amplification). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, r => mergeSurvivors(r.limit(0), r))
-
-  /** One micro-batch apply: batch-local digest reduction, then an atomic
-    * append-only delta publish — replayed batches skip by id, out-of-band
-    * replays collapse through the idempotent merge-on-read. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(
-      mergeSurvivors(batch.limit(0), batch).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir)
-  }
+    Monitor.minByKey(state.unionByName(batch), "digest", "doc_id", "lang", "quality")
 
   /** The quarantine LEDGER dir a live json ingest maintains next to its
     * survivor state: one (raw_line, src_file, batch_id) row per rejected
@@ -162,63 +135,55 @@ object CorpusIngest {
     * "what did THIS stream reject and when". */
   def quarantineDir(targetDir: String): String = targetDir + "_quarantine"
 
-  /** The live quarantine ledger (empty-but-typed before the first
-    * reject). Rows are unique events — no merge beyond the union. */
-  def quarantineState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, quarantineDir(targetDir)).getOrElse(
-      spark.range(0).select(lit("").as("raw_line"), lit("").as("src_file"),
-        col("id").as("batch_id")))
+  /** The quarantine ledger's state kind. Rows are unique events, so the
+    * merge is the plain union. */
+  private object Quarantine extends Monitor.Union {
+    protected def merge(state: DataFrame, rows: DataFrame): DataFrame = state.unionByName(rows)
+    protected def emptySchema = "raw_line STRING, src_file STRING, batch_id BIGINT"
+  }
 
-  /** Start the ingest: document source dir → gate/project → foreachBatch
-    * digest-keyed survivor merge into `targetDir`. `availableNow = true`
-    * drains what exists and stops (test/replay mode). `format` picks the
-    * file source: "parquet" (the fixture shape) or "json" (a JSONL crawl
-    * dump — parsed against the declared schema and normalized through
+  /** The live quarantine ledger (empty-but-typed before the first
+    * reject). */
+  def quarantineState(spark: SparkSession, targetDir: String): DataFrame =
+    Quarantine.state(spark, quarantineDir(targetDir))
+
+  /** The documents-file stream over `sourceDir` ([[docsFileSchema]]). */
+  def docStream(spark: SparkSession, sourceDir: String): DataFrame =
+    Monitor.fileStream(spark, sourceDir, docsFileSchema)
+
+  /** Start the ingest over `sourceDir`: gate/project, then the
+    * digest-keyed survivor merge into `targetDir`. `format` picks the file
+    * source: "parquet" (the fixture shape) or "json" (a JSONL crawl dump,
+    * parsed against the declared schema and normalized through
     * [[cleanDocs]]). For json, every line the contract excludes lands in
-    * the [[quarantineDir]] ledger with its source file and batch id —
+    * the [[quarantineDir]] ledger with its source file and batch id,
     * visible LIVE via [[quarantineState]], never crashing the stream and
-    * never dropped silently; the same micro-batch feeds both states, so
-    * a checkpoint replay re-derives both under the same batch-id guard
-    * (each dir skips what it already holds). */
+    * never dropped silently; the same micro-batch feeds both states, so a
+    * checkpoint replay re-derives both under the same batch-id guard (each
+    * dir skips what it already holds). */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, minQuality: Double = 0.3,
+            checkpointDir: String, minQuality: Double = DefaultMinQuality,
             availableNow: Boolean = true,
             compactEvery: Int = AppendState.DefaultCompactEvery,
-            format: String = "parquet"): StreamingQuery = {
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    def run(src: DataFrame)(apply: (DataFrame, Long) => Unit): StreamingQuery =
-      src.writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, batchId: Long) => apply(batch, batchId) }
-        .start()
-    format match {
-      case "parquet" =>
-        run(transform(
-          spark.readStream.schema(docsFileSchema).parquet(sourceDir), minQuality)) {
-          (batch, batchId) => applyBatch(spark, batch, targetDir, batchId, compactEvery)
-        }
-      case "json" =>
-        val raw = jsonlReadOptions.foldLeft(spark.readStream.schema(jsonlSchema)) {
-          case (r, (k, v)) => r.option(k, v)
-        }.json(sourceDir).withColumn("src_file", input_file_name())
-        run(raw) { (batch, batchId) =>
-          // checkpoint ONCE: survivors and quarantine split one
-          // materialized micro-batch, not two scans of the source files
-          val b = batch.localCheckpoint(true)
-          applyBatch(spark, transform(cleanDocs(b), minQuality), targetDir,
-            batchId, compactEvery)
-          val rejects = quarantined(b).withColumn("batch_id", lit(batchId))
-            .localCheckpoint(true)
-          if (rejects.count() > 0) {
-            val qDir = quarantineDir(targetDir)
-            AppendState.append(rejects, qDir, batchId)
-            AppendState.compactIfDue(spark, qDir, compactEvery)(df => df)
-          }
-        }
-      case other => throw new IllegalArgumentException(
-        s"CorpusIngest.start: unsupported source format '$other' (parquet | json)")
-    }
+            format: String = "parquet"): StreamingQuery = format match {
+    case "parquet" =>
+      Monitor.run(transform(docStream(spark, sourceDir), minQuality), checkpointDir,
+        availableNow)(applyBatch(spark, _, targetDir, _, compactEvery))
+    case "json" =>
+      val raw = Monitor.fileStream(spark, sourceDir, jsonlSchema, "json", jsonlReadOptions)
+        .withColumn("src_file", input_file_name())
+      Monitor.run(raw, checkpointDir, availableNow) { (batch, batchId) =>
+        // checkpoint ONCE: survivors and quarantine split one
+        // materialized micro-batch, not two scans of the source files
+        val b = batch.localCheckpoint(true)
+        applyBatch(spark, transform(cleanDocs(b), minQuality), targetDir,
+          batchId, compactEvery)
+        val rejects = quarantined(b).withColumn("batch_id", lit(batchId))
+          .localCheckpoint(true)
+        if (rejects.count() > 0)
+          Quarantine.applyBatch(spark, rejects, quarantineDir(targetDir), batchId, compactEvery)
+      }
+    case other => throw new IllegalArgumentException(
+      s"CorpusIngest.start: unsupported source format '$other' (parquet | json)")
   }
 }

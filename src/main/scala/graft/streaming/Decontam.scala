@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFns
 
@@ -26,7 +26,9 @@ import graft.functions.TextFns
   * explodes to slim (doc_id, hash) rows that aggregate straight back to
   * doc_id with map-side combine. Text never rides an exchange.
   */
-object Decontam {
+object Decontam extends Monitor.Union {
+  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeVerdicts(state, rows)
+  protected def emptySchema = "doc_id BIGINT, source STRING, n_shared BIGINT, clean BOOLEAN"
 
   /** The eval-set inverted index: distinct 13-gram hashes over the eval
     * documents. Built once, reused by every micro-batch. */
@@ -55,57 +57,18 @@ object Decontam {
     * same doc are identical on every delivery (pure per-row decision), so
     * the struct-min is just a deterministic way to keep exactly one. */
   def mergeVerdicts(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("source"), col("n_shared"), col("clean"))).as("m"))
-      .select(col("doc_id"), col("m.source").as("source"),
-        col("m.n_shared").as("n_shared"), col("m.clean").as("clean"))
+    Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_shared", "clean")
 
-  /** The LIVE verdict table: keyed merge-on-read over the append-only
-    * deltas ([[AppendState]] — per-batch I/O is O(batch), the corpus-sized
-    * verdict table is never rewritten per micro-batch). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => mergeVerdicts(r.limit(0), r))
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), lit(0L).as("n_shared"), lit(true).as("clean")))
-
-  /** Fold the deltas (run periodically to bound read amplification). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, r => mergeVerdicts(r.limit(0), r))
-
-  /** One micro-batch apply: batch-local verdict reduction, then an atomic
-    * append-only delta publish — replayed batches skip by id, out-of-band
-    * replays collapse through the idempotent merge-on-read. */
-  def applyBatch(spark: SparkSession, verdicts: DataFrame, targetDir: String,
-                 batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(
-      mergeVerdicts(verdicts.limit(0), verdicts).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir)
-  }
-
-  /** Start the gate: document source dir → per-batch verdicts against the
-    * (statically computed, then reused) eval index → doc_id-keyed verdict
-    * table in `targetDir`. `availableNow = true` drains what exists and
-    * stops (test/replay mode). */
+  /** Start the gate over the documents in `sourceDir`: per-batch verdicts
+    * against the eval index (computed once, then reused), merged into the
+    * doc_id-keyed verdict table in `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, evalDocs: DataFrame,
             targetDir: String, checkpointDir: String,
             availableNow: Boolean = true,
             compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
     val index = evalIndex(evalDocs)
     index.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, gate(batch, index), targetDir, batchId, compactEvery)
-      }
-      .start()
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir), checkpointDir, availableNow)(
+      (batch, id) => applyBatch(spark, gate(batch, index), targetDir, id, compactEvery))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuously-maintained DSIR importance MODEL (SURVEY §2.7 × §2.8) —
   * the incremental form of the model half of `ext_dsir_weights` (Data
@@ -44,7 +44,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `stream_dsir_model` over a DOUBLED delivery collapsed by the same
   * doc_id dedup the ledger discipline applies; live
   * restart/redelivery/replay/compaction in StreamingSpec. */
-object DsirModelStream {
+object DsirModelStream extends Monitor.Ledgered {
+  protected def key = "doc_id"
+  protected def slice(batch: DataFrame): DataFrame = gridSlice(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
 
   /** The target slice every DSIR form in the repo scores toward (the
     * `en` documents — `ext_dsir_weights`' DsirTargetLang). */
@@ -52,9 +55,6 @@ object DsirModelStream {
 
   /** The default target predicate over a documents frame. */
   def isTarget: Column = col("lang") === TargetLang
-
-  private def seenDir(targetDir: String) = s"$targetDir/seen"
-  private def gridDir(targetDir: String) = s"$targetDir/grid"
 
   /** One slice's token-count grid contribution: per token the corpus
     * count and the target-slice count — ONE explode + ONE map-side-
@@ -98,79 +98,10 @@ object DsirModelStream {
       .orderBy("token")
   }
 
-  /** The LIVE count grid ([[StateCommit.state]] — readers resolve through
-    * the marker, never a half-written version). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, gridDir(targetDir))
-
-  /** One exactly-once micro-batch apply (ordering per the object doc):
-    * batch-local doc_id dedup → ledger anti-join → grid fold under the
-    * batch-id guard → ledger append under the same id. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    val fresh = batch.select(col("doc_id"), col("lang"), col("text"))
-      .dropDuplicates("doc_id")
-    val newRows = (AppendState.raw(spark, seenDir(targetDir)) match {
-      case Some(seen) => fresh.join(seen.select(col("doc_id")), Seq("doc_id"),
-        "left_anti")
-      case None => fresh
-    }).localCheckpoint(true) // grid fold + ledger append read it once each
-    StateCommit.applyBatch(spark, gridDir(targetDir), batchId) {
-      case Some(base) =>
-        mergeGrid(base, gridSlice(newRows).select(
-          base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val s = gridSlice(newRows)
-        mergeGrid(s.limit(0), s)
-    }
-    AppendState.append(newRows.select(col("doc_id")), seenDir(targetDir), batchId)
-    if (AppendState.compactionDue(seenDir(targetDir), compactEvery))
-      compact(spark, targetDir)
-  }
-
-  /** Fold ledger deltas into a fresh compacted base (`distinct`). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, seenDir(targetDir), _.distinct())
-
-  /** The delivered-id ledger, distinct — exposed for growth-class pins
-    * (one 8-byte row per document ever delivered). */
-  def seenIds(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, seenDir(targetDir)).map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_id")))
-
-  /** The document-file schema the monitor needs when the source dir is
-    * still empty (the [[EmbedDriftStream.start]] discipline: observed
-    * schema preferred, fallback must not crash a monitor deployed before
-    * the first file lands). */
-  private def observedSchema(spark: SparkSession,
-                             sourceDir: String): org.apache.spark.sql.types.StructType =
-    try spark.read.parquet(sourceDir).schema
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-    }
-
-  /** Start the continuous importance-model maintainer over a documents
-    * parquet stream. */
+  /** Start the importance-model maintainer over the documents parquet
+    * files in `sourceDir`, read with their observed schema. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(observedSchema(spark, sourceDir)).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(Monitor.observedStream(spark, sourceDir, "doc_id BIGINT, lang STRING, text STRING"),
+      checkpointDir, availableNow)(applyBatch(spark, _, targetDir, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuously-maintained embedding-space drift monitor — the incremental
   * form of the batch `ext_embed_drift` gate: per embedding dimension, the
@@ -46,10 +46,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `stream_embed_drift` over a DOUBLED delivery collapsed by the same
   * vec_id dedup the ledger discipline applies; live
   * restart/redelivery/replay in StreamingSpec. */
-object EmbedDriftStream {
-
-  private def seenDir(targetDir: String) = s"$targetDir/seen"
-  private def gridDir(targetDir: String) = s"$targetDir/grid"
+object EmbedDriftStream extends Monitor.Ledgered {
+  protected def key = "vec_id"
+  protected def slice(batch: DataFrame): DataFrame = gridSlice(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
 
   /** One slice's per-dimension grid contribution — 1e-4-snapped sums and
     * counts per (pos, parity-slice): reference = even vec_id, current =
@@ -99,79 +99,11 @@ object EmbedDriftStream {
       .transform(graft.Tables.orderedReport(_, "pos"))
   }
 
-  /** The LIVE grid ([[StateCommit.state]] — readers resolve through the
-    * marker, never a half-written version). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, gridDir(targetDir))
-
-  /** One exactly-once micro-batch apply (ordering per the object doc):
-    * batch-local vec_id dedup → ledger anti-join → grid fold under the
-    * batch-id guard → ledger append under the same id. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    val fresh = batch.select(col("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id")
-    val newRows = (AppendState.raw(spark, seenDir(targetDir)) match {
-      case Some(seen) => fresh.join(seen.select(col("vec_id")), Seq("vec_id"),
-        "left_anti")
-      case None => fresh
-    }).localCheckpoint(true) // grid fold + ledger append read it once each
-    StateCommit.applyBatch(spark, gridDir(targetDir), batchId) {
-      case Some(base) =>
-        mergeGrid(base, gridSlice(newRows).select(
-          base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val s = gridSlice(newRows)
-        mergeGrid(s.limit(0), s)
-    }
-    AppendState.append(newRows.select(col("vec_id")), seenDir(targetDir), batchId)
-    if (AppendState.compactionDue(seenDir(targetDir), compactEvery))
-      compact(spark, targetDir)
-  }
-
-  /** Fold ledger deltas into a fresh compacted base (`distinct`). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, seenDir(targetDir), _.distinct())
-
-  /** The delivered-id ledger, distinct — exposed for growth-class pins
-    * (one 8-byte row per vector ever delivered; empty before the first
-    * batch). */
-  def seenIds(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, seenDir(targetDir)).map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("vec_id")))
-
-  /** The vector-file schema the monitor needs; the observed source schema
-    * is preferred when files already exist (it may carry extra columns —
-    * parquet prunes), but an EMPTY source dir must not crash a monitor
-    * deployed before the first file lands (the CdcPipeline
-    * observedEventsSchema discipline). */
-  private def observedSchema(spark: SparkSession,
-                             sourceDir: String): org.apache.spark.sql.types.StructType =
-    try spark.read.parquet(sourceDir).schema
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType))))
-    }
-
-  /** Start the drift monitor over an embeddings parquet stream. */
+  /** Start the drift monitor over the embeddings parquet files in
+    * `sourceDir`, read with their observed schema. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(observedSchema(spark, sourceDir)).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(
+      Monitor.observedStream(spark, sourceDir, "vec_id BIGINT, embedding ARRAY<FLOAT>"),
+      checkpointDir, availableNow)(applyBatch(spark, _, targetDir, _))
 }

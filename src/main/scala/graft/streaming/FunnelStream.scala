@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming conversion funnel — the incremental form of the batch
   * `agg_funnel` rollup (SURVEY §2.4 × §2.7): an event stream arrives
@@ -116,41 +116,21 @@ object FunnelStream {
           unix_timestamp(col(s"t_${stages.head}"))).as("lag_sec")))
   }
 
-  /** The LIVE per-user first-event state (versioned atomic commits). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One idempotent micro-batch apply: fold the batch slice's state into
-    * current state under [[StateCommit]]'s versioned atomic publish
-    * (min-merge is idempotent — the id guard only skips replay I/O). */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 stages: Seq[String] = Stages, batchId: Long = -1L): Unit = {
-    val slice = userState(batch, stages)
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        mergeStates(base, slice.select(base.columns.toIndexedSeq.map(col): _*))
-      case None => mergeStates(slice.limit(0), slice)
-    }
+  /** The funnel state kind over `stages`: [[userState]] slices, merged
+    * by [[mergeStates]] under [[StateCommit]]. */
+  def kind(stages: Seq[String] = Stages): Monitor.Kind = new Monitor.Additive {
+    protected def slice(batch: DataFrame): DataFrame = userState(batch, stages)
+    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeStates(state, slice)
   }
 
-  /** Start the incremental funnel: events source dir → shared CDC transform
-    * (ts normalization + delete drop) → watermark → foreachBatch min-merge
-    * into the `targetDir` state table ([[report]] reads it any time).
-    * `availableNow = true` drains what exists and stops (test/replay). */
+  /** The live per-user first-event state. */
+  def state(spark: SparkSession, targetDir: String): DataFrame = kind().state(spark, targetDir)
+
+  /** Start the incremental funnel over the events in `sourceDir`:
+    * [[CdcPipeline.changes]] merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            stages: Seq[String] = Stages): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.transform(raw)
-      .withWatermark("ts", "1 hour")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, stages, batchId)
-      }
-      .start()
-  }
+            stages: Seq[String] = Stages): StreamingQuery =
+    Monitor.run(CdcPipeline.changes(spark, sourceDir), checkpointDir, availableNow)(
+      kind(stages).applyBatch(spark, _, targetDir, _))
 }

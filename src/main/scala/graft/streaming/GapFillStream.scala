@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming gap-fill — the incremental form of the batch
   * `window_gap_fill` resample (SURVEY §2.5 × §2.7): observations arrive
@@ -26,7 +26,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (key, day) in production); the report is [[graft.operators.TimeSeries
   * .gapFillDaily]]'s per-key window stack over the compacted facts.
   */
-object GapFillStream {
+object GapFillStream extends Monitor.Additive {
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeFacts(state, slice)
 
   /** One state row per (user, day): the day's winning observation
     * (argmax by (ts, event_id)) with its rounded value. */
@@ -36,14 +37,14 @@ object GapFillStream {
     * row per (user, day) via the same argmax the merge applies — so a
     * slice is itself a valid state table. */
   def slice(events: DataFrame): DataFrame =
-    compact(events.filter(col("event_type") === "purchase")
+    latestPerDay(events.filter(col("event_type") === "purchase")
       .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"),
         col("event_id"), round(col("value"), 4).as("v")))
 
   /** Per-(user, day) argmax-by-(ts, event_id) as ONE struct-max aggregate
     * — constant-size mergeable partials (the `agg_daily_bars` shape), no
     * ranking window over raw rows. */
-  private def compact(rows: DataFrame): DataFrame =
+  private def latestPerDay(rows: DataFrame): DataFrame =
     rows.groupBy(col("user_id"), col("day"))
       .agg(max(struct(col("ts"), col("event_id"), col("v"))).as("__m"))
       .select(col("user_id"), col("day"), col("__m.ts").as("ts"),
@@ -53,7 +54,7 @@ object GapFillStream {
     * (ts, event_id, v) struct is commutative, associative, idempotent ⇒
     * convergent under at-least-once delivery and any micro-batch split. */
   def mergeFacts(state: DataFrame, batch: DataFrame): DataFrame =
-    compact(state.unionByName(batch))
+    latestPerDay(state.unionByName(batch))
 
   /** Derive the filled calendar grid from the state table —
     * [[graft.operators.TimeSeries.gapFillDaily]] over the compacted facts
@@ -64,39 +65,10 @@ object GapFillStream {
       state.select(col("user_id"), col("ts"), col("event_id"), col("v")),
       "user_id", "ts", "v", "event_id")
 
-  /** The LIVE per-day argmax state (versioned atomic commits). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One idempotent micro-batch apply: fold the batch slice into current
-    * state under [[StateCommit]]'s versioned atomic publish (argmax merge
-    * is idempotent — the id guard only skips replay I/O). */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long = -1L): Unit = {
-    val s = slice(batch)
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        mergeFacts(base, s.select(base.columns.toIndexedSeq.map(col): _*))
-      case None => mergeFacts(s.limit(0), s)
-    }
-  }
-
-  /** Start the incremental gap-fill state build: events source dir →
-    * shared CDC transform → watermark → foreachBatch argmax merge into the
-    * `targetDir` state table ([[report]] re-grids it any time). */
+  /** Start the gap-fill state build over the events in `sourceDir`:
+    * [[CdcPipeline.changes]] merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.transform(raw)
-      .withWatermark("ts", "1 hour")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.changes(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming heavy hitters — the incremental form of the batch
   * `agg_heavy_hitters` Misra–Gries sketch: the top-frequency user_ids,
@@ -29,7 +29,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * sketch is exact, and batch/stream replays agree with the exact top-k —
   * the oracle-gated regime (`stream_heavy_hitters` at sf ≤ 0.01, the
   * `agg_heavy_hitters` discipline). */
-object HeavyHittersStream {
+object HeavyHittersStream extends Monitor.Additive {
+  protected def slice(batch: DataFrame): DataFrame = sketch(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeSketch(state, slice)
 
   /** Counter budget — matches the batch `agg_heavy_hitters` sketch. */
   final val K = 256
@@ -85,38 +87,10 @@ object HeavyHittersStream {
     state.filter(col("k") === NKey).select(col("est_n"))
       .collect().headOption.map(_.getLong(0)).getOrElse(0L)
 
-  /** The LIVE sketch state ([[StateCommit.state]]). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply: reduce the batch to its
-    * sketch and merge it in under the transactional [[StateCommit]]
-    * protocol. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) => mergeSketch(base, sketch(batch))
-      case None =>
-        val s = sketch(batch)
-        mergeSketch(s.limit(0), s)
-    }
-
-  /** Start the incremental heavy-hitters monitor: events source dir →
-    * shared CDC transform → watermarked event-id dedup → foreachBatch
-    * sketch merge into `targetDir` ([[report]] reads [[state]] any time).
-    * `availableNow` drains what exists and stops (test/replay). */
+  /** Start the heavy-hitters monitor over the events in `sourceDir`:
+    * [[CdcPipeline.uniqueChanges]] folded into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(CdcPipeline.transform(raw))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, targetDir, id)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.uniqueChanges(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

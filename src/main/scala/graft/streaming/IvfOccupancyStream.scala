@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuously-maintained IVF index-health monitor (SURVEY §2.7 × §2.8)
   * — the incremental form of the batch `ext_sim_ivf_occupancy` audit: as
@@ -38,9 +38,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * restart/redelivery/replay/compaction in StreamingSpec. */
 object IvfOccupancyStream {
 
-  private def seenDir(targetDir: String) = s"$targetDir/seen"
-  private def gridDir(targetDir: String) = s"$targetDir/grid"
-
   /** One slice's per-cell count contribution under the frozen codebook —
     * row-local assignment, ONE map-side-combined aggregate onto the
     * nCells-bounded grid. */
@@ -75,71 +72,40 @@ object IvfOccupancyStream {
       .transform(graft.Tables.orderedReport(_, "cell"))
   }
 
-  /** The LIVE count grid ([[StateCommit.state]]). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, gridDir(targetDir))
+  /** The ledger+grid state kind assigning against `cells`. */
+  def kind(cells: Seq[(Int, Array[Long])]): Monitor.Ledgered = new Monitor.Ledgered {
+    protected def key = "vec_id"
+    protected def slice(batch: DataFrame): DataFrame = gridSlice(batch, cells)
+    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
+  }
 
-  /** One exactly-once micro-batch apply ([[EmbedDriftStream.applyBatch]]'s
-    * ordering): batch-local vec_id dedup → ledger anti-join → grid fold
-    * under the batch-id guard → ledger append under the same id. */
+  /** The kind for what never assigns a vector: reading the grid, and
+    * folding or reading the ledger. */
+  private val stored = kind(Nil)
+
+  /** The LIVE count grid. */
+  def state(spark: SparkSession, targetDir: String): DataFrame = stored.state(spark, targetDir)
+
+  /** Fold the ledger's deltas. */
+  def compact(spark: SparkSession, targetDir: String): Unit = stored.compact(spark, targetDir)
+
+  /** The applied-vector ledger, distinct. */
+  def seenIds(spark: SparkSession, targetDir: String): DataFrame = stored.seenIds(spark, targetDir)
+
+  /** Apply one micro-batch, assigning against `cells`. */
   def applyBatch(spark: SparkSession, batch: DataFrame,
                  cells: Seq[(Int, Array[Long])], targetDir: String,
                  batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    val fresh = batch.select(col("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id")
-    val newRows = (AppendState.raw(spark, seenDir(targetDir)) match {
-      case Some(seen) => fresh.join(seen.select(col("vec_id")), Seq("vec_id"),
-        "left_anti")
-      case None => fresh
-    }).localCheckpoint(true) // grid fold + ledger append read it once each
-    StateCommit.applyBatch(spark, gridDir(targetDir), batchId) {
-      case Some(base) =>
-        mergeGrid(base, gridSlice(newRows, cells).select(
-          base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val s = gridSlice(newRows, cells)
-        mergeGrid(s.limit(0), s)
-    }
-    AppendState.append(newRows.select(col("vec_id")), seenDir(targetDir), batchId)
-    if (AppendState.compactionDue(seenDir(targetDir), compactEvery))
-      compact(spark, targetDir)
-  }
+                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit =
+    kind(cells).applyBatch(spark, batch, targetDir, batchId, compactEvery)
 
-  /** Fold ledger deltas into a fresh compacted base (`distinct`). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, seenDir(targetDir), _.distinct())
-
-  /** The delivered-id ledger, distinct — exposed for growth-class pins. */
-  def seenIds(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, seenDir(targetDir)).map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("vec_id")))
-
-  /** Start the index-health monitor over an embeddings parquet stream,
-    * assigning against the caller's frozen codebook. */
+  /** Start the index-health monitor over the embeddings parquet files in
+    * `sourceDir`, read with their observed schema, assigning against the
+    * caller's frozen codebook. */
   def start(spark: SparkSession, sourceDir: String,
             cells: Seq[(Int, Array[Long])], targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val schema =
-      try spark.read.parquet(sourceDir).schema
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("embedding",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.FloatType))))
-      }
-    val raw = spark.readStream.schema(schema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, cells, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(
+      Monitor.observedStream(spark, sourceDir, "vec_id BIGINT, embedding ARRAY<FLOAT>"),
+      checkpointDir, availableNow)(applyBatch(spark, _, cells, targetDir, _))
 }

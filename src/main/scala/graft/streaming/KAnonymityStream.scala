@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming k-anonymity audit at ingest (SURVEY §2.7 × §2.4) — the
   * incremental form of the batch `agg_k_anonymity` release gate: as change
@@ -33,7 +33,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `stream_k_anonymity` over a DOUBLED delivery collapsed by the same
   * event-id dedup gate the live stream runs; live restart/redelivery in
   * StreamingSpec. */
-object KAnonymityStream {
+object KAnonymityStream extends Monitor.Additive {
+  protected def slice(batch: DataFrame): DataFrame = classSlice(graft.Tables.normalizeTs(batch))
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** One slice's quasi-identifier equivalence-class counts — batch or
     * micro-batch: (event_type, event-time day, width-10 value bucket) → n.
@@ -129,25 +131,6 @@ object KAnonymityStream {
       .transform(graft.Tables.orderedReport(_, "event_type", "day"))
   }
 
-  /** The LIVE class grid ([[StateCommit.state]]): readers resolve through
-    * the marker, never observing a half-written version. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply: skip if `batchId` was already
-    * applied, else fold the batch's class counts into the grid under the
-    * [[StateCommit]] versioned-write + atomic-marker-flip protocol. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        val slice = classSlice(graft.Tables.normalizeTs(batch))
-        mergeCounts(base, slice.select(base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val slice = classSlice(graft.Tables.normalizeTs(batch))
-        mergeCounts(slice.limit(0), slice)
-    }
-
   /** Row-level exactly-once horizon for the additive grid: the event-id
     * dedup state expires `dedupDelay` behind the event-time watermark, so
     * an event REDELIVERED LATER than that permanently double-counts its
@@ -158,24 +141,14 @@ object KAnonymityStream {
     * delay to the source's redelivery horizon, not to state comfort. */
   val DefaultDedupDelay = "1 hour"
 
-  /** Start the continuous release-risk monitor over an events parquet
-    * stream: watermarked event-id dedup → foreachBatch additive grid apply
-    * into `targetDir` ([[report]] reads it any time). `dedupDelay` is the
-    * redelivery horizon of the row-level gate — see [[DefaultDedupDelay]]
-    * for the over-count direction when it's undersized. */
+  /** Start the continuous release-risk monitor over the events in
+    * `sourceDir`: event-id dedup within `dedupDelay` (the redelivery
+    * horizon, see [[DefaultDedupDelay]]), then the grid fold into
+    * `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            dedupDelay: String = DefaultDedupDelay): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(graft.Tables.normalizeTs(raw), dedupDelay)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            dedupDelay: String = DefaultDedupDelay): StreamingQuery =
+    Monitor.run(CdcPipeline.dedupEvents(graft.Tables.normalizeTs(
+      CdcPipeline.eventStream(spark, sourceDir)), dedupDelay), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

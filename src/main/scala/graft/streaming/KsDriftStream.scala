@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables.rnd4
 
@@ -33,7 +33,9 @@ import graft.Tables.rnd4
   * [[compact]] bounds read amplification. The report reads two columns of
   * the merged state (column-pruned scan) and collapses it map-side to the
   * (sources × lengths) histogram before any window. */
-object KsDriftStream {
+object KsDriftStream extends Monitor.Union {
+  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeDocs(state, rows)
+  protected def emptySchema = "doc_id BIGINT, source STRING, n_chars BIGINT"
 
   /** Shared batch/stream projection — the three columns the monitor keeps. */
   def transform(docs: DataFrame): DataFrame =
@@ -43,11 +45,7 @@ object KsDriftStream {
     * (duplicates of a doc carry identical payloads; the struct min makes
     * the pick deterministic regardless). */
   def mergeDocs(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("source"), col("n_chars"))).as("m"))
-      .select(col("doc_id"), col("m.source").as("source"),
-        col("m.n_chars").as("n_chars"))
+    Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_chars")
 
   /** (source, n_chars, hn) histogram of a doc set — state or batch slice. */
   def histogram(docs: DataFrame): DataFrame =
@@ -82,50 +80,11 @@ object KsDriftStream {
           .as("ks_stat"))
   }
 
-  /** The LIVE survivor state: first-wins merge-on-read over the
-    * append-only deltas ([[AppendState]] — per-batch I/O is O(batch), the
-    * corpus-sized survivor set is never rewritten per micro-batch). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => mergeDocs(r.limit(0), r))
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), lit(0L).as("n_chars")))
-
-  /** Fold the deltas (run periodically to bound read amplification). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, r => mergeDocs(r.limit(0), r))
-
-  /** One micro-batch apply: batch-local first-wins reduction, then an
-    * atomic append-only delta publish — a replayed batch is skipped by id,
-    * and even an out-of-band replay (fresh id, same docs) collapses
-    * through the idempotent merge-on-read. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    val b = batch.select(col("doc_id"), col("source"), col("n_chars"))
-    AppendState.append(mergeDocs(b.limit(0), b).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir)
-  }
-
-  /** Start the drift monitor: document source dir → projection →
-    * foreachBatch idempotent merge into `targetDir` ([[report]] over
-    * [[histogram]] of [[state]] reads the current KS table any time). */
+  /** Start the drift monitor over the documents in `sourceDir`, merged into
+    * `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    transform(raw)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(transform(CorpusIngest.docStream(spark, sourceDir)), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, compactEvery))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming l-diversity audit at ingest (SURVEY §2.7 × §2.4) — the
   * incremental companion of [[KAnonymityStream]]: k-anonymity counts how
@@ -39,7 +39,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * slicing, so the doubled-delivery batch-replay form (oracle-gated as
   * `stream_l_diversity` against the SAME SQL) collapses to the one-shot
   * answer; live restart/redelivery/compaction in StreamingSpec. */
-object LDiversityStream {
+object LDiversityStream
+    extends Monitor.Members("event_type STRING, day DATE, vbucket BIGINT, user_id BIGINT") {
+  override protected def slice(batch: DataFrame): DataFrame =
+    memberSlice(graft.Tables.normalizeTs(batch))
 
   /** One slice's (quasi-class, sensitive-value) membership rows —
     * batch or micro-batch: (event_type, event-time day, width-10 value
@@ -85,46 +88,13 @@ object LDiversityStream {
       .transform(graft.Tables.orderedReport(_, "band"))
   }
 
-  /** The live membership state — raw delta union, empty before the first
-    * batch. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir).getOrElse(
-      spark.range(0).select(lit("").as("event_type"),
-        lit(null).cast("date").as("day"), col("id").as("vbucket"),
-        col("id").as("user_id")))
-
-  /** One micro-batch apply: slice the batch's membership rows, append as
-    * an immutable delta (atomic, replay-skipped by the delta's batch-id
-    * name — a replayed batch rewrites the same file). */
-  def applyBatch(batch: DataFrame, targetDir: String, batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(memberSlice(graft.Tables.normalizeTs(batch)),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(batch.sparkSession, targetDir)
-  }
-
-  /** Fold current deltas into a fresh compacted base (`distinct` — the
-    * membership union's own idempotent reduction). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, _.distinct())
-
-  /** Start the continuous homogeneity-risk monitor over an events parquet
-    * stream. No watermark/dedup gate: membership state is idempotent
-    * under redelivery by construction, so the gate would shrink deltas
-    * without changing any answer. */
+  /** Start the continuous homogeneity-risk monitor over the events in
+    * `sourceDir`. No watermark or dedup gate: membership absorbs a
+    * redelivered row, so the gate would shrink deltas without changing
+    * any answer. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CdcPipeline.eventStream(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, compactEvery))
 }

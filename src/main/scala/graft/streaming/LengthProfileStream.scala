@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFns
 
@@ -26,7 +26,9 @@ import graft.functions.TextFns
   * LSM shape). The report costs one state scan into a (source, n_tok)-
   * bounded histogram; every later frame is histogram-sized
   * ([[graft.operators.Robust]]'s discipline). */
-object LengthProfileStream {
+object LengthProfileStream extends Monitor.Union {
+  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeMembers(state, rows)
+  protected def emptySchema = "doc_id BIGINT, source STRING, n_tok BIGINT"
 
   /** Shared batch/stream transform: the membership projection. */
   def transform(docs: DataFrame): DataFrame =
@@ -37,33 +39,7 @@ object LengthProfileStream {
     * (ids are unique, so min-struct just collapses redelivered copies —
     * identical rows on every delivery). */
   def mergeMembers(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("source"), col("n_tok"))).as("m"))
-      .select(col("doc_id"), col("m.source").as("source"), col("m.n_tok").as("n_tok"))
-
-  /** The LIVE membership state (merge-on-read over the deltas). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => mergeMembers(r.limit(0), r))
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), lit(0L).as("n_tok")))
-
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, r => mergeMembers(r.limit(0), r))
-
-  /** One micro-batch apply: batch-local doc reduction, atomic delta
-    * publish — replays skip by id, out-of-band duplicates collapse
-    * through the merge-on-read. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(
-      mergeMembers(batch.limit(0), batch).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir)
-  }
+    Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tok")
 
   /** The outlier report off a membership frame — histogram once, then the
     * shared median/MAD machinery; identical output shape (and oracle) to
@@ -79,21 +55,11 @@ object LengthProfileStream {
       .transform(graft.Tables.orderedReport(_, "source"))
   }
 
-  /** Start the monitor: document source dir → membership projection →
-    * foreachBatch doc-keyed merge into `targetDir`. */
+  /** Start the length monitor over the documents in `sourceDir`, merged into
+    * `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    transform(raw)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(transform(CorpusIngest.docStream(spark, sourceDir)), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, compactEvery))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
 
@@ -167,21 +167,21 @@ object MultimodalDedupStream {
       .distinct()
   }
 
+  // the membership sub-states, one dir each under the target
+  private val Docs = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
+  private val Pairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, hamming BIGINT")
+  private val Feats = new Monitor.Members("doc_id BIGINT, feat ARRAY<BIGINT>, __n2 BIGINT")
+  private val SemPairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, cosine DOUBLE")
+
   /** The per-doc metadata ledger (doc_id, source, n_chars), distinct —
     * ~16 bytes + the source string per doc ever delivered, never the
     * payload; empty before the first batch. */
   def docState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/docs")
-      .map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), col("id").as("n_chars")))
+    Docs.state(spark, s"$targetDir/docs")
 
   /** The LIVE pair table (distinct-merge-on-read over the deltas). */
   def pairState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/pairs")
-      .map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_a"),
-        col("id").as("doc_b"), lit(0L).as("hamming")))
+    Pairs.state(spark, s"$targetDir/pairs")
 
   /** The doc-keyed FEATURE ledger backing the semantic verify — one
     * (doc_id, feat, ‖feat‖²) row per non-degenerate doc ever delivered
@@ -189,17 +189,11 @@ object MultimodalDedupStream {
     * distinct-on-read. ~60 longs per doc — the same order as the
     * metadata ledger, and stored ONCE, never fanned into the band rows. */
   def featState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/feat")
-      .map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        array().cast("array<bigint>").as("feat"), lit(0L).as("__n2")))
+    Feats.state(spark, s"$targetDir/feat")
 
   /** The LIVE semantic pair table (distinct-merge-on-read). */
   def semPairState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/sem_pairs")
-      .map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_a"),
-        col("id").as("doc_b"), lit(0.0).as("cosine")))
+    SemPairs.state(spark, s"$targetDir/sem_pairs")
 
   /** The probe-facing index view, PRUNED to the given buckets via the
     * partition column (whole delta files skip) — duplicate rows stay;
@@ -239,10 +233,10 @@ object MultimodalDedupStream {
   def compact(spark: SparkSession, targetDir: String): Unit = {
     AppendState.compact(spark, s"$targetDir/index", _.distinct(),
       partitionCols = Seq("bucket"))
-    AppendState.compact(spark, s"$targetDir/docs", _.distinct())
-    AppendState.compact(spark, s"$targetDir/pairs", _.distinct())
-    AppendState.compact(spark, s"$targetDir/feat", _.distinct())
-    AppendState.compact(spark, s"$targetDir/sem_pairs", _.distinct())
+    Docs.compact(spark, s"$targetDir/docs")
+    Pairs.compact(spark, s"$targetDir/pairs")
+    Feats.compact(spark, s"$targetDir/feat")
+    SemPairs.compact(spark, s"$targetDir/sem_pairs")
   }
 
   /** One micro-batch apply: decode the batch's hashes ONCE, append the
@@ -294,16 +288,7 @@ object MultimodalDedupStream {
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
             maxHamming: Int = MaxHamming,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId, maxHamming, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, maxHamming, compactEvery))
 }

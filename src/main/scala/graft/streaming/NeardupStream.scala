@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables
 import graft.functions.TextFns
@@ -241,10 +241,9 @@ object NeardupStream {
     * ledger growth class — ~16 bytes + the source string per doc, never
     * the text). Empty before the first batch. */
   def metaState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/meta")
-      .map(_.distinct())
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), col("id").as("n_chars")))
+    Meta.state(spark, s"$targetDir/meta")
+
+  private val Meta = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
 
   /** Cross-source duplication matrix off the LIVE pair + metadata states
     * ([[graft.operators.Dedup.crossSourceMatrix]] — the report definition
@@ -264,7 +263,7 @@ object NeardupStream {
     AppendState.compact(spark, s"$targetDir/sizes",
       _.groupBy(col("doc_id")).agg(min(col("__n")).as("__n")))
     AppendState.compact(spark, s"$targetDir/pairs", p => mergePairs(p.limit(0), p))
-    AppendState.compact(spark, s"$targetDir/meta", _.distinct())
+    Meta.compact(spark, s"$targetDir/meta")
   }
 
   /** One micro-batch apply: append the batch's metadata ledger rows,
@@ -315,16 +314,7 @@ object NeardupStream {
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
             maxDf: Long = DefaultMaxDf,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId, maxDf, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, maxDf, compactEvery))
 }

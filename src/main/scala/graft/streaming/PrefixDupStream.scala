@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFns
 
@@ -33,14 +33,14 @@ import graft.functions.TextFns
   * `ext_prefix_dup` SQL, over a DOUBLED delivery — proving redelivery
   * collapses) equals the one-shot batch answer; live checkpointed
   * restart/redelivery in StreamingSpec. */
-object PrefixDupStream {
+object PrefixDupStream extends Monitor.Members("prefix STRING, source STRING, doc_id BIGINT") {
 
   /** Tokens in the template prefix — the `ext_prefix_dup` contract. */
   final val PrefixTokens = 8
 
   /** One batch's state slice: row-local (prefix, source, doc_id)
     * membership rows. */
-  def slice(docs: DataFrame): DataFrame =
+  override def slice(docs: DataFrame): DataFrame =
     docs.select(
       concat_ws(" ", org.apache.spark.sql.functions.slice(
         TextFns.tokens(col("text")), 1, PrefixTokens)).as("prefix"),
@@ -58,44 +58,11 @@ object PrefixDupStream {
       .filter(col("n_docs") >= 2)
       .orderBy("prefix")
 
-  /** Raw delta union (duplicates possible — report absorbs them), empty
-    * before the first batch. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir).getOrElse(
-      spark.range(0).select(lit("").as("prefix"), lit("").as("source"),
-        col("id").as("doc_id")))
-
-  /** One micro-batch apply: project the batch's membership rows, append
-    * them as an immutable delta (atomic, replay-skipped). */
-  def applyBatch(batch: DataFrame, targetDir: String, batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(slice(batch), targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(batch.sparkSession, targetDir)
-  }
-
-  /** Fold current deltas into a fresh compacted base (`distinct` — the
-    * union state's own idempotent reduction). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, _.distinct())
-
-  /** Start the ingest template monitor: document source dir → per-batch
-    * membership slice → append-only delta state under `targetDir`.
-    * `compactEvery` > 0 runs the leveled fold inline once that many deltas
-    * accumulate ([[AppendState.compactionDue]] — semantics unchanged, read
-    * amplification bounded). */
+  /** Start the ingest template monitor over the documents in `sourceDir`,
+    * merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _, compactEvery))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables.rnd4
 import graft.functions.TextFns
@@ -32,7 +32,9 @@ import graft.functions.TextFns
   * gate's scan); the report is a map-side-combined aggregate onto a
   * ≤ |sources| frame.
   */
-object QualityDrift {
+object QualityDrift extends Monitor.Union {
+  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeVerdicts(state, rows)
+  protected def emptySchema = "doc_id BIGINT, source STRING, n_tokens BIGINT, pass BIGINT"
 
   /** The corpus-report quality gate, reused verbatim ([[rnd4]]'d score
     * ≥ 0.3) so the monitor alarms on exactly the rate the batch report
@@ -55,11 +57,7 @@ object QualityDrift {
   /** One verdict row per doc_id across state ∪ batch (identical on every
     * delivery — the struct-min keeps exactly one). */
   def mergeVerdicts(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("doc_id"))
-      .agg(min(struct(col("source"), col("n_tokens"), col("pass"))).as("m"))
-      .select(col("doc_id"), col("m.source").as("source"),
-        col("m.n_tokens").as("n_tokens"), col("m.pass").as("pass"))
+    Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tokens", "pass")
 
   /** Per-source monitor report over the verdict table vs the baseline:
     * observed/baseline pass permilles and the drift flag. Sources absent
@@ -77,49 +75,13 @@ object QualityDrift {
         col("base_permille").isNull ||
           abs(col("pass_permille") - col("base_permille")) > driftPermille)
 
-  /** The LIVE verdict table: keyed merge-on-read over the append-only
-    * deltas ([[AppendState]] — per-batch I/O is O(batch), the corpus-sized
-    * verdict table is never rewritten per micro-batch, and a crash can
-    * never tear the only copy of the state). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => mergeVerdicts(r.limit(0), r))
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"), lit("").as("source"), lit(0L).as("n_tokens"), lit(0L).as("pass")))
-
-  /** Fold the deltas (run periodically to bound read amplification). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, r => mergeVerdicts(r.limit(0), r))
-
-  /** One micro-batch apply: batch-local verdict reduction, then an atomic
-    * append-only delta publish — replayed batches skip by id, out-of-band
-    * replays collapse through the idempotent merge-on-read. */
-  def applyBatch(spark: SparkSession, verdicts: DataFrame, targetDir: String,
-                 batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(
-      mergeVerdicts(verdicts.limit(0), verdicts).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir)
-  }
-
-  /** Start the monitor: document source dir → per-batch verdicts →
-    * doc_id-keyed verdict table in `targetDir`. The report is derived
-    * from the table on read ([[report]]) so a dashboard and the stream
-    * never disagree. `availableNow = true` drains and stops (test/replay
-    * mode). */
+  /** Start the monitor over the documents in `sourceDir`: per-batch
+    * verdicts, merged into the doc_id-keyed verdict table in `targetDir`
+    * ([[report]] derives from it, so a dashboard and the stream never
+    * disagree). */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, gate(batch), targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir), checkpointDir, availableNow)(
+      (batch, id) => applyBatch(spark, gate(batch), targetDir, id, compactEvery))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming per-type value quantiles — the incremental form of the batch
   * `agg_value_quantiles` monitor: p50/p90/p99 of `value` per event type,
@@ -26,7 +26,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * aggregate; the report's windows sort domain-sized frames. Same
   * code path batch and stream — the oracle-gated `stream_value_quantiles`
   * replay runs [[histogram]] + [[report]] on the bounded frame. */
-object QuantilesStream {
+object QuantilesStream extends Monitor.Additive {
+  protected def slice(batch: DataFrame): DataFrame = histogram(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeHist(state, slice)
 
   /** (type, cents, hn) histogram of a slice — batch or micro-batch. */
   def histogram(events: DataFrame): DataFrame =
@@ -58,39 +60,10 @@ object QuantilesStream {
       .transform(graft.Tables.orderedReport(_, "event_type"))
   }
 
-  /** The LIVE state histogram ([[StateCommit.state]]). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply: fold the slice's histogram
-    * into the state under the transactional [[StateCommit]] protocol. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        val slice = histogram(batch)
-        mergeHist(base, slice.select(base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val slice = histogram(batch)
-        mergeHist(slice.limit(0), slice)
-    }
-
-  /** Start the incremental quantile monitor: events source dir → shared
-    * CDC transform → watermarked event-id dedup → foreachBatch additive
-    * apply into `targetDir` ([[report]] reads [[state]] any time).
-    * `availableNow` drains what exists and stops (test/replay). */
+  /** Start the quantile monitor over the events in `sourceDir`:
+    * [[CdcPipeline.uniqueChanges]] folded into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(CdcPipeline.transform(raw))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, targetDir, id)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.uniqueChanges(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming retention cohorts — the incremental companion of the batch
   * `agg_retention` rollup, built with the same bounded-mergeable-state
@@ -75,40 +75,21 @@ object RetentionStream {
       .transform(graft.Tables.orderedReport(_, "cohort_week", "week_n"))
   }
 
-  /** The LIVE (user, week) fact table (versioned atomic commits). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One idempotent micro-batch apply: fold the batch slice into the fact
-    * table under [[StateCommit]]'s versioned atomic publish (distinct-
-    * union is idempotent — the id guard only skips replay I/O). */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 anchorType: String = "signup", batchId: Long = -1L): Unit = {
-    val slice = userWeeks(batch, anchorType)
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        mergeFacts(base, slice.select(base.columns.toIndexedSeq.map(col): _*))
-      case None => mergeFacts(slice.limit(0), slice)
-    }
+  /** The fact-table state kind for cohorts anchored on `anchorType`:
+    * [[userWeeks]] slices, merged by [[mergeFacts]] under [[StateCommit]]. */
+  def kind(anchorType: String = "signup"): Monitor.Kind = new Monitor.Additive {
+    protected def slice(batch: DataFrame): DataFrame = userWeeks(batch, anchorType)
+    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeFacts(state, slice)
   }
 
-  /** Start the incremental retention pipeline: events source dir → shared
-    * CDC transform → watermark → foreachBatch distinct-union into the
-    * `targetDir` fact table ([[report]] reads it any time). */
+  /** The live (user, kind, week) fact table. */
+  def state(spark: SparkSession, targetDir: String): DataFrame = kind().state(spark, targetDir)
+
+  /** Start the incremental retention pipeline over the events in
+    * `sourceDir`: [[CdcPipeline.changes]] merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            anchorType: String = "signup"): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.transform(raw)
-      .withWatermark("ts", "1 hour")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, anchorType, batchId)
-      }
-      .start()
-  }
+            anchorType: String = "signup"): StreamingQuery =
+    Monitor.run(CdcPipeline.changes(spark, sourceDir), checkpointDir, availableNow)(
+      kind(anchorType).applyBatch(spark, _, targetDir, _))
 }

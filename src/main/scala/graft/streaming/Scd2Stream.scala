@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.CdcOps
 
@@ -31,7 +31,8 @@ import graft.operators.CdcOps
   * a transactional MERGE INTO keyed on event_id — insert-if-absent); the
   * report's window stack is per-key ([[CdcOps.scd2]]'s one-shuffle shape).
   */
-object Scd2Stream {
+object Scd2Stream extends Monitor.Additive {
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeEvents(state, slice)
 
   /** The change columns one state row carries — the [[CdcOps.scd2]] inputs
     * (key, tracked attr, event time, tiebreak), fixture-instantiated. */
@@ -72,42 +73,10 @@ object Scd2Stream {
   def report(state: DataFrame): DataFrame =
     CdcOps.scd2(state, "user_id", "event_type", "ts", "event_id")
 
-  /** The LIVE compacted change-set state (versioned atomic commits). */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One idempotent micro-batch apply: fold the batch slice into current
-    * state under [[StateCommit]]'s versioned atomic publish (idempotent
-    * merge — the id guard only skips replay I/O; the publish is what a
-    * crash can no longer tear). */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long = -1L): Unit = {
-    val s = slice(batch)
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        mergeEvents(base, s.select(base.columns.toIndexedSeq.map(col): _*))
-      case None => mergeEvents(s.limit(0), s)
-    }
-  }
-
-  /** Start the incremental SCD2 build: events source dir → shared CDC
-    * transform (ts normalization; the delete drop lives in [[slice]] so the
-    * batch-replay form shares it) → watermark → foreachBatch set-union
-    * merge into the `targetDir` state table ([[report]] reads it any
-    * time). `availableNow = true` drains what exists and stops. */
+  /** Start the SCD2 build over the events in `sourceDir`:
+    * [[CdcPipeline.changes]] merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.transform(raw)
-      .withWatermark("ts", "1 hour")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.changes(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental JSON payload-shape monitoring at ingest (SURVEY §2.7 ×
   * §2.4) — the streaming form of `agg_schema_profile`: as change events
@@ -47,7 +47,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `stream_schema_profile` over a DOUBLED delivery collapsed by the same
   * event-id dedup gate the live stream runs; live restart/redelivery in
   * StreamingSpec, grid-growth class pinned in StateLayoutSpec. */
-object SchemaProfileStream {
+object SchemaProfileStream extends Monitor.Additive {
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeState(state, slice)
 
   /** Row-local keyed payload fan-out off a ts-normalized events frame:
     * one (event_type, day, key, val) row per payload KEY (payload width,
@@ -68,8 +69,10 @@ object SchemaProfileStream {
     * (event_type, key, val) grid (count + day bounds), unioned with the
     * per-type total rows (key/val null; a keyless payload still counts).
     * Two scans of the batch — one with the JSON parse, one slim two-column
-    * count — both map-side combined onto domain-bounded frames. */
-  def slice(events: DataFrame): DataFrame = {
+    * count — both map-side combined onto domain-bounded frames. `ts` is
+    * normalized first, so either fixture encoding slices alike. */
+  def slice(raw: DataFrame): DataFrame = {
+    val events = graft.Tables.normalizeTs(raw)
     val kv = kvSlice(events)
       .groupBy(col("event_type"), col("key"), col("val"))
       .agg(count(lit(1)).as("n"),
@@ -118,40 +121,11 @@ object SchemaProfileStream {
         expr("n_present * 1000 div __t").as("permille"))
   }
 
-  /** The LIVE state grid ([[StateCommit.state]]): readers resolve through
-    * the marker, never observing a half-written version. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply: skip if `batchId` was already
-    * applied, else fold the batch's grid delta into the state under the
-    * [[StateCommit]] versioned-write + atomic-marker-flip protocol. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        val delta = slice(graft.Tables.normalizeTs(batch))
-        mergeState(base, delta.select(base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val delta = slice(graft.Tables.normalizeTs(batch))
-        mergeState(delta.limit(0), delta)
-    }
-
-  /** Start the ingest shape monitor over an events parquet stream:
-    * watermarked event-id dedup → foreachBatch additive grid apply into
-    * `targetDir` ([[report]] reads it any time). */
+  /** Start the ingest shape monitor over the events in `sourceDir`:
+    * watermarked event-id dedup, then the grid fold into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(graft.Tables.normalizeTs(raw))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, batchId)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.dedupEvents(graft.Tables.normalizeTs(
+      CdcPipeline.eventStream(spark, sourceDir))), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Per-source document cap maintained at INGEST (SURVEY §2.7 × §2.8) — the
   * incremental form of the batch `ext_source_caps` RefinedWeb
@@ -40,50 +40,29 @@ object SourceCapsStream {
       .filter(col("rk") <= k)
   }
 
-  /** The LIVE capped table: re-reduce base + deltas on read. */
-  def state(spark: SparkSession, targetDir: String, k: Int): DataFrame =
-    AppendState.raw(spark, targetDir)
-      .map(r => capK(r, k))
-      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
-        lit("").as("source"), lit(0L).as("rk")))
-
-  /** Fold the deltas (state returns to O(sources · k) rows). */
-  def compact(spark: SparkSession, targetDir: String, k: Int): Unit =
-    AppendState.compact(spark, targetDir,
-      r => capK(r, k).select(col("doc_id"), col("source")))
-
-  /** One micro-batch apply: reduce the batch to its own per-source
-    * k-smallest, append atomically (replays skip by id; out-of-band
-    * replays collapse through the idempotent min-k merge-on-read), then
-    * fold once `compactEvery` deltas accumulate ([[AppendState
-    * .DefaultCompactEvery]] — read amplification stays bounded with no
-    * manual compact call; ≤ 0 opts out). */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 k: Int, batchId: Long = -1L,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(
-      capK(batch, k).select(col("doc_id"), col("source")).localCheckpoint(true),
-      targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(spark, targetDir, k)
+  /** The capped-table state kind for `k`: each batch's own per-source
+    * k-smallest as a delta, re-reduced by [[capK]] on read and on
+    * compaction (state returns to O(sources · k) rows). */
+  def kind(k: Int): Monitor.Kind = new Monitor.Union {
+    protected def merge(state: DataFrame, rows: DataFrame): DataFrame =
+      capK(state.unionByName(rows), k).select(col("doc_id"), col("source"))
+    protected def emptySchema = "doc_id BIGINT, source STRING"
   }
 
-  /** Start the cap stream: document source dir → per-batch bounded delta →
-    * append-only state under `targetDir`. */
+  /** The LIVE capped table, ranked 1..k per source. */
+  def state(spark: SparkSession, targetDir: String, k: Int): DataFrame =
+    capK(kind(k).state(spark, targetDir), k)
+
+  /** Fold the deltas. */
+  def compact(spark: SparkSession, targetDir: String, k: Int): Unit =
+    kind(k).compact(spark, targetDir)
+
+  /** Start the cap stream over the documents in `sourceDir`, merged into
+    * `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, k: Int,
             availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val raw = spark.readStream.schema(CorpusIngest.docsFileSchema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.select(col("doc_id"), col("source"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(spark, batch, targetDir, k, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(CorpusIngest.docStream(spark, sourceDir).select(col("doc_id"), col("source")),
+      checkpointDir, availableNow)(kind(k).applyBatch(spark, _, targetDir, _, compactEvery))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming top-k leaderboard — the incremental form of the batch
   * `window_rank_change` / `sort_topk_group` ranking family: per event-time
@@ -30,7 +30,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * types-per-day rows per day. The same [[dailyTypeCounts]] + [[report]]
   * run on a bounded frame (batch/stream unification) — the oracle-gated
   * `stream_topk` replay. */
-object TopkStream {
+object TopkStream extends Monitor.Additive {
+  protected def slice(batch: DataFrame): DataFrame = dailyTypeCounts(batch)
+  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** Leaderboard depth. */
   final val K = 3
@@ -95,43 +97,10 @@ object TopkStream {
     graft.operators.CdcOps.holt(state, "event_type", "day", "n")
       .transform(graft.Tables.orderedReport(_, "event_type", "day"))
 
-  /** The LIVE state table ([[StateCommit.state]]): readers resolve through
-    * the marker, never observing a half-written version. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    StateCommit.state(spark, targetDir)
-
-  /** One batch-id-guarded micro-batch apply (see the object doc): skip if
-    * `batchId` was already applied, else add the slice's counts and commit
-    * under the [[StateCommit]] versioned-write + atomic-marker-flip
-    * protocol — the additive merge genuinely needs the replay guard to be
-    * transactional, unlike the idempotent-merge streams. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
-                 batchId: Long): Unit =
-    StateCommit.applyBatch(spark, targetDir, batchId) {
-      case Some(base) =>
-        val slice = dailyTypeCounts(batch)
-        mergeCounts(base, slice.select(base.columns.toIndexedSeq.map(col): _*))
-      case None =>
-        val slice = dailyTypeCounts(batch)
-        mergeCounts(slice.limit(0), slice)
-    }
-
-  /** Start the incremental leaderboard: events source dir → shared CDC
-    * transform → watermarked event-id dedup → foreachBatch additive apply
-    * into `targetDir` ([[report]] reads it any time). `availableNow`
-    * drains what exists and stops (test/replay). */
+  /** Start the incremental leaderboard over the events in `sourceDir`:
+    * [[CdcPipeline.uniqueChanges]] folded into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
-            checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
-    val raw = CdcPipeline.eventStream(spark, sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    CdcPipeline.dedupEvents(CdcPipeline.transform(raw))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, targetDir, id)
-      }
-      .start()
-  }
+            checkpointDir: String, availableNow: Boolean = true): StreamingQuery =
+    Monitor.run(CdcPipeline.uniqueChanges(spark, sourceDir), checkpointDir, availableNow)(
+      applyBatch(spark, _, targetDir, _))
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Incremental URL-canonicalization dedup at ingest (SURVEY §2.7 × §2.8) —
   * the streaming form of `ext_dedup_url`: as crawl records arrive, each
@@ -24,11 +25,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch-replay form (oracle-gated as `stream_url_dedup` against the
   * `ext_dedup_url` SQL over a DOUBLED delivery) equals the one-shot batch
   * answer; live checkpointed restart/redelivery in StreamingSpec. */
-object UrlDedupStream {
+object UrlDedupStream extends Monitor.Members("canon_url STRING, raw_url STRING, doc_id BIGINT") {
 
   /** One batch's state slice: row-local (canon_url, raw_url, doc_id)
     * membership rows off a (doc_id, raw_url) frame. */
-  def slice(urls: DataFrame): DataFrame =
+  override def slice(urls: DataFrame): DataFrame =
     urls.select(
       graft.operators.Dedup.urlCanon(col("raw_url")).as("canon_url"),
       col("raw_url"), col("doc_id"))
@@ -49,48 +50,12 @@ object UrlDedupStream {
       .select(col("canon_url"), col("host"), col("n_docs"), col("n_raw"),
         col("keep_id"), col("host_docs"))
 
-  /** Raw delta union (duplicates possible — report absorbs them), empty
-    * before the first batch. */
-  def state(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, targetDir).getOrElse(
-      spark.range(0).select(lit("").as("canon_url"), lit("").as("raw_url"),
-        col("id").as("doc_id")))
-
-  /** One micro-batch apply: canonicalize the batch, append the membership
-    * rows as an immutable delta (atomic, replay-skipped). */
-  def applyBatch(batch: DataFrame, targetDir: String, batchId: Long,
-                 compactEvery: Int = AppendState.DefaultCompactEvery): Unit = {
-    AppendState.append(slice(batch), targetDir, batchId)
-    if (AppendState.compactionDue(targetDir, compactEvery))
-      compact(batch.sparkSession, targetDir)
-  }
-
-  /** Fold current deltas into a fresh compacted base (`distinct` — the
-    * union state's own idempotent reduction). */
-  def compact(spark: SparkSession, targetDir: String): Unit =
-    AppendState.compact(spark, targetDir, _.distinct())
-
-  /** Start the ingest URL-dedup monitor over a (doc_id, raw_url) parquet
-    * stream: per-batch canonicalized slice → append-only delta state under
-    * `targetDir`; `compactEvery` > 0 folds inline once that many deltas
-    * accumulate. */
+  /** Start the ingest URL-dedup monitor over the (doc_id, raw_url)
+    * parquet files in `sourceDir`, merged into `targetDir`. */
   def start(spark: SparkSession, sourceDir: String, targetDir: String,
             checkpointDir: String, availableNow: Boolean = true,
-            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("raw_url",
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val raw = spark.readStream.schema(schema).parquet(sourceDir)
-    val trigger =
-      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime("5 seconds")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, targetDir, batchId, compactEvery)
-      }
-      .start()
-  }
+            compactEvery: Int = AppendState.DefaultCompactEvery): StreamingQuery =
+    Monitor.run(Monitor.fileStream(spark, sourceDir,
+      StructType.fromDDL("doc_id BIGINT NOT NULL, raw_url STRING NOT NULL")),
+      checkpointDir, availableNow)(applyBatch(spark, _, targetDir, _, compactEvery))
 }

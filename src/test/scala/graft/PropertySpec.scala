@@ -262,42 +262,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("embed-drift ledger-guarded grid fold converges under any batch split and redelivery") {
-    import graft.streaming.EmbedDriftStream
-    // random vectors; the property under test is the exactly-once algebra:
-    // vec_id dedup → ledger anti-join → additive grid fold must equal the
-    // one-shot grid over the distinct set, for ANY batching/redelivery
-    val rnd0 = new scala.util.Random(11)
-    val vecs = (0L until 24L).map(i =>
-      (i, Seq.fill(4)(rnd0.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
-    def rows(df: DataFrame) = EmbedDriftStream.report(df)
-      .as[(Long, Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val oneShot = rows(EmbedDriftStream.gridSlice(vecs))
-    def run(batches: Seq[DataFrame]): Seq[(Long, Long, Long, Long, Long, Long, Long)] = {
-      val empty = EmbedDriftStream.gridSlice(vecs.limit(0))
-      val (_, grid) = batches.foldLeft(
-        (vecs.select(col("vec_id")).limit(0), empty)) { case ((seen, g), b) =>
-        val fresh = b.dropDuplicates("vec_id")
-        val nw = fresh.join(seen, Seq("vec_id"), "left_anti").localCheckpoint(true)
-        (seen.unionByName(nw.select(col("vec_id"))).distinct(),
-          EmbedDriftStream.mergeGrid(g, EmbedDriftStream.gridSlice(nw)))
-      }
-      rows(grid)
-    }
-    val rnd = new scala.util.Random(13)
-    (0 until 3).foreach { _ =>
-      val cut1 = rnd.nextInt(25)
-      val cut2 = cut1 + rnd.nextInt(25 - cut1)
-      val parts = Seq(
-        vecs.filter(col("vec_id") < cut1),
-        vecs.filter(col("vec_id") >= cut1 && col("vec_id") < cut2),
-        vecs.filter(col("vec_id") >= cut2))
-      val delivered = rnd.shuffle(parts.flatMap(p => Seq.fill(1 + rnd.nextInt(2))(p)))
-      assert(run(delivered) === oneShot,
-        "split/redelivery diverged from the one-shot grid")
-    }
-  }
-
   test("privacy trio reports agree on the quasi grid and respect their bounds") {
     import graft.streaming.{KAnonymityStream, LDiversityStream}
     val rnd = new scala.util.Random(17)
@@ -338,78 +302,6 @@ class PropertySpec extends SparkSpec {
     val t = KAnonymityStream.reportTCloseness(KAnonymityStream.classSlice(ev))
       .as[(String, String, Long, Long, Long)].collect().toSeq
     assert(t === Seq(("click", "2024-02-01", 60L, 0L, 0L)))
-  }
-
-  test("DSIR model ledger-guarded grid fold converges under any batch split and redelivery") {
-    import graft.streaming.DsirModelStream
-    val rnd0 = new scala.util.Random(19)
-    val langs = Seq("en", "fr", "de")
-    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon")
-    val docs = (0L until 30L).map { i =>
-      (i, langs(rnd0.nextInt(3)),
-        Seq.fill(1 + rnd0.nextInt(6))(words(rnd0.nextInt(5))).mkString(" "))
-    }.toDF("doc_id", "lang", "text")
-    def rows(grid: DataFrame) = DsirModelStream.report(grid)
-      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
-    val oneShot = rows(DsirModelStream.gridSlice(docs))
-    def run(batches: Seq[DataFrame]) = {
-      val (_, grid) = batches.foldLeft(
-        (docs.select(col("doc_id")).limit(0),
-          DsirModelStream.gridSlice(docs.limit(0)))) { case ((seen, g), b) =>
-        val fresh = b.dropDuplicates("doc_id")
-        val nw = fresh.join(seen, Seq("doc_id"), "left_anti").localCheckpoint(true)
-        (seen.unionByName(nw.select(col("doc_id"))).distinct(),
-          DsirModelStream.mergeGrid(g, DsirModelStream.gridSlice(nw)))
-      }
-      rows(grid)
-    }
-    val rnd = new scala.util.Random(23)
-    (0 until 3).foreach { _ =>
-      val cut1 = rnd.nextInt(31)
-      val cut2 = cut1 + rnd.nextInt(31 - cut1)
-      val parts = Seq(
-        docs.filter(col("doc_id") < cut1),
-        docs.filter(col("doc_id") >= cut1 && col("doc_id") < cut2),
-        docs.filter(col("doc_id") >= cut2))
-      val delivered = rnd.shuffle(parts.flatMap(p => Seq.fill(1 + rnd.nextInt(2))(p)))
-      assert(run(delivered) === oneShot,
-        "split/redelivery diverged from the one-shot model")
-    }
-  }
-
-  test("IVF occupancy ledger-guarded grid fold converges under any batch split and redelivery") {
-    import graft.streaming.IvfOccupancyStream
-    val rnd0 = new scala.util.Random(29)
-    val cells = Seq(0 -> Array(1000000L, 0L), 1 -> Array(0L, 1000000L),
-      2 -> Array(-1000000L, -1000000L))
-    val vecs = (0L until 24L).map(i =>
-      (i, Seq.fill(2)(rnd0.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
-    def rows(grid: DataFrame) = IvfOccupancyStream.report(grid)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val oneShot = rows(IvfOccupancyStream.gridSlice(vecs, cells))
-    def run(batches: Seq[DataFrame]) = {
-      val (_, grid) = batches.foldLeft(
-        (vecs.select(col("vec_id")).limit(0),
-          IvfOccupancyStream.gridSlice(vecs.limit(0), cells))) { case ((seen, g), b) =>
-        val fresh = b.dropDuplicates("vec_id")
-        val nw = fresh.join(seen, Seq("vec_id"), "left_anti").localCheckpoint(true)
-        (seen.unionByName(nw.select(col("vec_id"))).distinct(),
-          IvfOccupancyStream.mergeGrid(g, IvfOccupancyStream.gridSlice(nw, cells)))
-      }
-      rows(grid)
-    }
-    val rnd = new scala.util.Random(31)
-    (0 until 3).foreach { _ =>
-      val cut1 = rnd.nextInt(25)
-      val cut2 = cut1 + rnd.nextInt(25 - cut1)
-      val parts = Seq(
-        vecs.filter(col("vec_id") < cut1),
-        vecs.filter(col("vec_id") >= cut1 && col("vec_id") < cut2),
-        vecs.filter(col("vec_id") >= cut2))
-      val delivered = rnd.shuffle(parts.flatMap(p => Seq.fill(1 + rnd.nextInt(2))(p)))
-      assert(run(delivered) === oneShot,
-        "split/redelivery diverged from the one-shot occupancy grid")
-    }
   }
 
   test("multimodal dedup stream converges to the batch tier under any batch split, redelivery and compaction") {
@@ -460,6 +352,129 @@ class PropertySpec extends SparkSpec {
       SessionFrames.release(spark)
       assert(got === oneShot, s"trial $trial diverged from the one-shot batch tier")
       assert(gotX === oneShotX, s"trial $trial cross-source matrix diverged")
+    }
+  }
+
+  test("every monitor's applyBatch converges to the one-shot answer under any split, replay, redelivery and compaction") {
+    import scala.jdk.CollectionConverters._
+    import graft.streaming._
+    // THE incremental-equals-batch property, driven through each state
+    // kind's real applyBatch on disk: for random splits of a monitor's
+    // input into micro-batches, a replayed batch id carrying rows the input
+    // never had (a no-op, or the answer moves), the same rows redelivered
+    // under a new id, and compactEvery 1 and 2, the state (union kinds) or
+    // the report (additive and ledgered kinds) equals one batch of it all.
+    // Additive COUNT merges absorb a redelivery upstream, in the stream's
+    // event-id dedup, so they are exempt from the redelivery step only.
+    val rnd = new scala.util.Random(43)
+    val types = Seq("signup", "click", "purchase", "view", "error")
+    def ts(sec: Int) = java.sql.Timestamp.from(
+      java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(sec.toLong))
+    // 48 rows per source; keys past 40 are the foreign rows a replay carries
+    val events = (1L to 48L).map { i =>
+      (i, ts(rnd.nextInt(20 * 86400)), 1L + rnd.nextInt(6), types(rnd.nextInt(types.size)),
+        rnd.nextInt(10000) / 100.0, Seq("{}", """{"k":"a"}""", """{"k":"b","j":1}""")(rnd.nextInt(3)))
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val words = Seq("the", "a", "model", "data", "crawl", "page", "token", "shard")
+    val docs = (1L to 48L).map { i =>
+      val text = (Seq.fill(14)(words(rnd.nextInt(3))) ++
+        Seq.fill(2 + rnd.nextInt(6))(words(rnd.nextInt(words.size)))).mkString(" ")
+      (i, text, Seq("en", "fr")(rnd.nextInt(2)), Seq("web", "blog", "news")(rnd.nextInt(3)),
+        text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val urls = (1L to 48L).map { i =>
+      (i, Seq("http://Example.com/a?utm_source=x", "https://example.com/a", "http://other.org/x",
+        s"http://h${i % 5}.example.com/p")(rnd.nextInt(4)))
+    }.toDF("doc_id", "raw_url")
+    val vecs = (1L to 48L).map(i => (i, Seq.fill(2)(rnd.nextFloat() * 2f - 1f)))
+      .toDF("vec_id", "embedding")
+    val cells = Seq(0 -> Array(1000000L, 0L), 1 -> Array(0L, 1000000L),
+      2 -> Array(-1000000L, -1000000L))
+    val index = Decontam.evalIndex(docs.filter(col("doc_id") <= 2L)).localCheckpoint(true)
+
+    final case class Case(name: String, kind: Monitor.Kind, input: DataFrame, key: String,
+                          prep: DataFrame => DataFrame, answer: String => DataFrame,
+                          absorbsRedelivery: Boolean = true)
+    def additive(name: String, kind: Monitor.Additive, input: DataFrame,
+                 report: DataFrame => DataFrame, absorbsRedelivery: Boolean = true) =
+      Case(name, kind, input, "event_id", identity, d => report(kind.state(spark, d)),
+        absorbsRedelivery)
+    def union(name: String, kind: Monitor.Kind, input: DataFrame, key: String = "doc_id",
+              prep: DataFrame => DataFrame = identity) =
+      Case(name, kind, input, key, prep, kind.state(spark, _))
+    val changes = CdcPipeline.transform(events)
+    val cases = Seq(
+      additive("topk", TopkStream, changes, TopkStream.report(_), absorbsRedelivery = false),
+      additive("benford", BenfordStream, changes, BenfordStream.report, absorbsRedelivery = false),
+      additive("heavy hitters", HeavyHittersStream, changes, HeavyHittersStream.report(_),
+        absorbsRedelivery = false),
+      additive("quantiles", QuantilesStream, changes, QuantilesStream.report,
+        absorbsRedelivery = false),
+      additive("schema profile", SchemaProfileStream, events, SchemaProfileStream.report,
+        absorbsRedelivery = false),
+      additive("k-anonymity", KAnonymityStream, events, KAnonymityStream.report,
+        absorbsRedelivery = false),
+      Case("funnel", FunnelStream.kind(), changes, "event_id", identity,
+        d => FunnelStream.report(FunnelStream.state(spark, d))),
+      Case("retention", RetentionStream.kind(), changes, "event_id", identity,
+        d => RetentionStream.report(RetentionStream.state(spark, d))),
+      additive("gap fill", GapFillStream, changes, GapFillStream.report),
+      additive("scd2", Scd2Stream, changes, Scd2Stream.report),
+      union("length profile", LengthProfileStream, docs, prep = LengthProfileStream.transform),
+      union("ks drift", KsDriftStream, docs, prep = KsDriftStream.transform),
+      union("quality drift", QualityDrift, docs, prep = QualityDrift.gate),
+      union("vocab drift", VocabDrift, docs, prep = VocabDrift.gate(_, Seq("the", "model"))),
+      union("decontam", Decontam, docs, prep = Decontam.gate(_, index)),
+      union("source caps", SourceCapsStream.kind(2), docs),
+      union("prefix dup", PrefixDupStream, docs),
+      union("url dedup", UrlDedupStream, urls),
+      union("l-diversity", LDiversityStream, events, key = "event_id"),
+      union("corpus ingest", CorpusIngest, docs, prep = CorpusIngest.transform(_, 0.0)),
+      Case("dsir model", DsirModelStream, docs, "doc_id", identity,
+        d => DsirModelStream.report(DsirModelStream.state(spark, d))),
+      Case("embed drift", EmbedDriftStream, vecs, "vec_id", identity,
+        d => EmbedDriftStream.report(EmbedDriftStream.state(spark, d))),
+      Case("ivf occupancy", IvfOccupancyStream.kind(cells), vecs, "vec_id", identity,
+        d => IvfOccupancyStream.report(IvfOccupancyStream.state(spark, d))))
+
+    def snap(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    // compactEvery only moves the kinds that keep deltas
+    def folds(k: Monitor.Kind) = k match {
+      case _: Monitor.Union | _: Monitor.Ledgered => Seq(1, 2)
+      case _ => Seq(1)
+    }
+    for (c <- cases; compactEvery <- folds(c.kind)) {
+      def dir() = java.nio.file.Files.createTempDirectory("conv").resolve("state").toString
+      val rows = c.input.filter(col(c.key) <= 40L).collect().toSeq
+      val foreign = c.prep(c.input.filter(col(c.key) > 40L))
+      def frame(rs: Seq[org.apache.spark.sql.Row]) =
+        c.prep(spark.createDataFrame(rs.asJava, c.input.schema))
+      val oneShotDir = dir()
+      c.kind.applyBatch(spark, frame(rows), oneShotDir, 0L, compactEvery)
+      val oneShot = snap(c.answer(oneShotDir))
+
+      val shuffled = rnd.shuffle(rows)
+      val cuts = (Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(rows.size + 1)) :+ rows.size)
+        .distinct.sorted
+      val batches = cuts.foldLeft((Seq.empty[Seq[org.apache.spark.sql.Row]], 0)) {
+        case ((acc, from), to) => (acc :+ shuffled.slice(from, to), to)
+      }._1
+      val replayAfter = rnd.nextInt(batches.size)
+      val redeliverAfter = rnd.nextInt(batches.size)
+      val d = dir()
+      var nextId = 0L
+      batches.zipWithIndex.foreach { case (b, i) =>
+        c.kind.applyBatch(spark, frame(b), d, nextId, compactEvery)
+        nextId += 1
+        if (i == replayAfter) // a replayed id: ignored whatever it carries
+          c.kind.applyBatch(spark, foreign, d, rnd.nextInt(nextId.toInt).toLong, compactEvery)
+        if (i == redeliverAfter && c.absorbsRedelivery) { // delivered rows, a new id
+          c.kind.applyBatch(spark, frame(batches(rnd.nextInt(i + 1))), d, nextId, compactEvery)
+          nextId += 1
+        }
+      }
+      assert(snap(c.answer(d)) === oneShot,
+        s"${c.name} (compactEvery=$compactEvery, ${batches.map(_.size)}) diverged from one batch")
     }
   }
 

@@ -101,6 +101,18 @@ class SessionFramesSpec extends SparkSpec {
     assert(again === first)
   }
 
+  test("a table opened before the first events read is not inferred again after it") {
+    // a fixture of its own and a session with the nanos flag unarmed, so
+    // nothing cached by an earlier test can answer the second open
+    val d = Files.createTempDirectory("graft-fixture-")
+    for (t <- Seq("region", "events")) Files.copy(fixture.resolve(s"$t.parquet"), d.resolve(s"$t.parquet"))
+    val s = spark.newSession()
+    Tables.region(s, d.toString)
+    Tables.events(s, d.toString)
+    val (_, jobs) = jobsIn(Tables.region(s, d.toString).schema)
+    assert(jobs === 0, "the events read re-keyed the region schema")
+  }
+
   test("a table rewritten at the same path with a new column shows it on the next open") {
     val d = copyDocuments()
     val path = s"$d/documents.parquet"

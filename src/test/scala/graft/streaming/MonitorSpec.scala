@@ -1,0 +1,89 @@
+package graft.streaming
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkSpec
+
+/** The monitor skeleton ([[Monitor]]): it is the only place a stream is
+  * opened, triggered or committed additively, and a documents monitor's
+  * batches are listed on the driver like the CDC pipeline's. */
+class MonitorSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("only the skeleton opens, triggers and commits a monitor's stream") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val rules = Seq(
+      ("writeStream", """\.writeStream\b""".r, Set("Monitor.scala")),
+      ("a trigger", """\bTrigger\.""".r, Set("Monitor.scala")),
+      ("readStream", """\.readStream\b""".r, Set("Monitor.scala", "MongoSource.scala")),
+      ("StateCommit.applyBatch", """\bStateCommit\.applyBatch\b""".r,
+        Set("Monitor.scala", "CdcPipeline.scala")))
+    val offences = for {
+      p <- Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      src = new String(Files.readAllBytes(p), "UTF-8")
+      (what, re, allowed) <- rules
+      if !allowed(p.getFileName.toString) && re.findFirstIn(src).isDefined
+    } yield s"$p: $what outside ${allowed.mkString(" / ")}"
+    assert(offences.isEmpty, offences.mkString("\n"))
+  }
+
+  test("a documents monitor lists a batch of more than 32 files on the driver, on start and on restart") {
+    val root = Files.createTempDirectory("monitor-listing")
+    root.toFile.deleteOnExit()
+    val src = Files.createDirectories(root.resolve("source"))
+    val target = root.resolve("target").toString
+    val checkpoint = root.resolve("checkpoint").toString
+    val files = 40 // over the default parallel-listing threshold of 32
+
+    // each wave lands flat in the source dir while no query runs, so each
+    // start takes exactly one batch of `files` files
+    def land(wave: Int): Unit = {
+      val stage = root.resolve(s"stage-$wave").toString
+      (0 until 200).map { i =>
+        val id = wave * 1000L + i
+        val text = s"opener ${i % 20} shared by a template group doc $id"
+        (id, text, "en", if (i / 20 % 2 == 0) "web" else "blog", text.length.toLong)
+      }.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .repartition(files).write.parquet(stage)
+      val parts = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(parts.length === files)
+      parts.zipWithIndex.foreach { case (f, i) =>
+        Files.move(f.toPath, src.resolve(s"w$wave-$i.parquet"))
+      }
+    }
+
+    val descriptions = mutable.ArrayBuffer.empty[String]
+    val jobs = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = descriptions.synchronized {
+        descriptions += Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("")
+      }
+    }
+    val listingJobsBefore = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      land(0)
+      PrefixDupStream.start(spark, src.toString, target, checkpoint).awaitTermination()
+      land(1)
+      PrefixDupStream.start(spark, src.toString, target, checkpoint).awaitTermination()
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(jobs)
+
+    assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === listingJobsBefore,
+      "a batch's files must be listed on the driver, not by a Spark job")
+    assert(!descriptions.exists(_.startsWith("Listing leaf files")), descriptions)
+    // both waves landed: every opener groups 20 docs over both sources
+    val groups = PrefixDupStream.report(PrefixDupStream.state(spark, target))
+      .as[(String, Long, Long, Long)].collect()
+    assert(groups.length === 20 && groups.forall(g => g._2 === 20L && g._3 === 2L), groups.toSeq)
+  }
+}

@@ -277,7 +277,7 @@ class StateLayoutSpec extends SparkSpec {
     // compactEvery must keep the live delta count under the trigger and
     // leave the folded state byte-equivalent to the union
     (0 until 20).foreach { b =>
-      UrlDedupStream.applyBatch(
+      UrlDedupStream.applyBatch(spark,
         Seq((b.toLong, s"http://h$b.example.com/p?utm_source=x")).toDF("doc_id", "raw_url"),
         dir, batchId = b.toLong)
     }
@@ -288,7 +288,7 @@ class StateLayoutSpec extends SparkSpec {
     // opting out (compactEvery ≤ 0) accumulates one delta per batch
     val dir2 = tmp("ac2").resolve("state").toString
     (0 until 10).foreach { b =>
-      UrlDedupStream.applyBatch(
+      UrlDedupStream.applyBatch(spark,
         Seq((b.toLong, s"http://h$b.example.com/p")).toDF("doc_id", "raw_url"),
         dir2, batchId = b.toLong, compactEvery = 0)
     }
