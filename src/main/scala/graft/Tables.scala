@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Fixture table loaders and the CDC view over `events`.
@@ -160,9 +164,9 @@ object Tables {
     * constant, which is deterministic under retries by itself). Reports
     * (top-k grids, per-day/class aggregates, audit matrices) are bounded
     * at ANY corpus scale, so one reducer sorting them is the production
-    * plan too; DATA-SIZED outputs (per-doc/per-event frames) keep the
-    * global range sort — a single reducer there is the scale-killer this
-    * helper must never become. */
+    * plan too; DATA-SIZED outputs (per-doc/per-event frames) go through
+    * [[orderedRows]] instead — a single reducer there is the scale-killer
+    * this helper must never become. */
   def orderedReport(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(1, lit(0)).sortWithinPartitions(cols: _*)
 
@@ -170,6 +174,48 @@ object Tables {
     * `orderBy(String*)` shape most report tails use). */
   def orderedReport(df: DataFrame, c0: String, cs: String*): DataFrame =
     orderedReport(df, (c0 +: cs).map(col): _*)
+
+  /** Total-order final sort for a DATA-SIZED result: `df.orderBy(cols)`,
+    * sorted in place when `df` is one partition anyway.
+    *
+    * Catalyst places the range exchange of a global sort from the sort's
+    * required distribution alone, so a one-partition input still pays a
+    * `RangePartitioner` sampling job (which recomputes the whole input)
+    * and a shuffle into `spark.sql.shuffle.partitions` partitions that AQE
+    * coalesces back into one. Here `df` is planned on the driver (no
+    * Spark job); when [[onePartitionInput]] holds, the result is
+    * `df.coalesce(1).orderBy(cols)`: `coalesce(1)` reports a single
+    * partition, which satisfies the sort's ordered distribution, so no
+    * exchange is planned and the sort runs in the input's own task.
+    * Otherwise it is `df.orderBy(cols)`, the range sort. Either way the
+    * plan is a true global sort, so the test guards only parallelism,
+    * never the order of the rows. */
+  def orderedRows(df: DataFrame, cols: Column*): DataFrame =
+    if (onePartitionInput(df.queryExecution.sparkPlan)) df.coalesce(1).orderBy(cols: _*)
+    else df.orderBy(cols: _*)
+
+  /** [[orderedRows]] with column-name sort keys (ascending). */
+  def orderedRows(df: DataFrame, c0: String, cs: String*): DataFrame =
+    orderedRows(df, (c0 +: cs).map(col): _*)
+
+  /** Whether `p` reads one partition through narrow operators only —
+    * project, filter, the streamed side of a broadcast hash join — decided
+    * on the driver without a job. The leaf qualifies if it is an RDD scan
+    * (a `SessionFrames` checkpoint) of one partition, or a file scan, not
+    * bucketed, of at most one file no larger than the scan's split size
+    * (one such file is one split; more files may pack into one split too,
+    * but the test need only be sound, not complete). */
+  private def onePartitionInput(p: SparkPlan): Boolean = p match {
+    case _: ProjectExec | _: FilterExec => onePartitionInput(p.children.head)
+    case j: BroadcastHashJoinExec =>
+      onePartitionInput(if (j.buildSide == BuildRight) j.left else j.right)
+    case r: RDDScanExec => r.rdd.getNumPartitions <= 1
+    case f: FileSourceScanExec if !f.bucketedScan =>
+      val files = f.selectedPartitions
+      files.totalNumberOfFiles <= 1 &&
+        files.totalFileSize <= FilePartition.maxSplitBytes(f.relation.sparkSession, files)
+    case _ => false
+  }
 
   /** Engine-independent 4-dp rounding of a computed double ratio:
     * `floor(x·10⁴ + 0.5)/10⁴` — half-up applied to the binary double itself.

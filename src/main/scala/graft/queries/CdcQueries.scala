@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{SessionFrames, Tables}
-import graft.Tables.{changeLog, events, eventsInRange, fmtTs, tsLit}
+import graft.Tables.{changeLog, events, eventsInRange, fmtTs, orderedRows, tsLit}
 import graft.operators.CdcOps
 
 /** Event-log (CDC) queries over the `events` fixture, each paired with ANSI
@@ -28,26 +28,26 @@ object CdcQueries {
     CdcOps.dropDeletes(changeLog(s, d))
       .select(col("event_id"), col("user_id"), col("event_type"), col("op_type"),
         round(col("value"), 4).as("value"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:226–232 — clusterTime range appended to the $match. */
   private val filterTimeRange: Q = (s, d) =>
     eventsInRange(s, d, "2024-01-05 00:00:00", "2024-01-10 00:00:00")
       .select(col("event_id"), fmtTs(col("ts")).as("ts_s"), col("user_id"), col("event_type"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:489–496 — conjunctive ns / ts-range / op-IN oplog predicate. */
   private val filterOplogPred: Q = (s, d) =>
     eventsInRange(s, d, "2024-01-02 00:00:00", "2024-01-20 00:00:00")
       .filter(col("event_type").isin("click", "purchase") && col("user_id") % 2 === 0)
       .select(col("event_id"), col("user_id"), col("event_type"), round(col("value"), 4).as("value"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:160–176 — change event → write-op shape (key + post-image). */
   private val projectEvent: Q = (s, d) =>
     CdcOps.dropDeletes(changeLog(s, d))
       .select(col("event_id"), col("op_type"), col("user_id").as("doc_key"), col("props").as("doc"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:499 — `o._id ?? o2._id`: key encoded differently per op type. */
   private val projectIdExtract: Q = (s, d) =>
@@ -57,7 +57,7 @@ object CdcQueries {
         coalesce(
           when(col("event_type") === "purchase", get_json_object(col("props"), "$.k").cast("long")),
           col("user_id")).as("doc_id"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   // -- sources --------------------------------------------------------------
 
@@ -85,7 +85,7 @@ object CdcQueries {
     CdcOps.lastWriteWins(CdcOps.dropDeletes(changeLog(s, d)), "user_id", "ts", "event_id")
       .select(col("user_id"), fmtTs(col("ts")).as("last_ts"), col("event_type").as("last_event"),
         round(col("value"), 4).as("last_value"), col("props").as("last_props"))
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
 
   /** js:149–202 — idempotent upsert merge of a batch into a base state. */
   private val sinkUpsert: Q = (s, d) => {
@@ -97,7 +97,7 @@ object CdcQueries {
     CdcOps.upsertMerge(base, batch, "user_id")
       .select(col("user_id"), fmtTs(col("ts")).as("last_ts"), col("event_type").as("last_event"),
         round(col("value"), 4).as("last_value"))
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
   }
 
   /** Session-shared day-partitioned copy of the change log, written once
@@ -123,7 +123,7 @@ object CdcQueries {
       .filter(col("day") === to_date(lit("2024-01-10")))
       .select(col("event_id"), fmtTs(col("ts")).as("ts_s"), col("user_id"),
         col("event_type"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** Session-shared Z-ORDERED copy of the event log ([[partitionedLog]]'s
     * lifecycle): range-partitioned and sorted by the bit-interleaved
@@ -152,7 +152,7 @@ object CdcQueries {
     s.read.parquet(zorderLog(s, d))
       .filter(col("user_id").between(40, 80) && col("day_idx").between(5, 12))
       .select(col("event_id"), col("user_id"), col("day_idx"), col("z_key"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** Shared funnel stage frame — built ONCE per fixture and checkpointed
     * for the session ([[graft.SessionFrames.frame]]): one row per signed-up
@@ -283,7 +283,7 @@ object CdcQueries {
   private val aggDistinctIds: Q = (s, d) =>
     eventsInRange(s, d, "2024-01-05 00:00:00", "2024-01-20 00:00:00")
       .select(col("user_id")).distinct()
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
 
   /** HLL approximate distinct — the 100 TB form of [[aggDistinctIds]]: exact
     * distinct shuffles every key; the HLL++ sketch is fixed-size and merges
@@ -370,7 +370,7 @@ object CdcQueries {
     events(s, d)
       .select(col("user_id"), col("event_id"), round(col("value"), 4).as("value"),
         round(sum(col("value")).over(w), 4).as("running"))
-      .orderBy("user_id", "event_id")
+      .transform(orderedRows(_, "user_id", "event_id"))
   }
 
   /** Old-vs-new image delta per key — lag/lead (CDC delta detection). */
@@ -380,7 +380,7 @@ object CdcQueries {
       .select(col("user_id"), col("event_id"),
         round(col("value") - lag(col("value"), 1).over(w), 4).as("delta"),
         lead(col("event_type"), 1).over(w).as("next_event"))
-      .orderBy("user_id", "event_id")
+      .transform(orderedRows(_, "user_id", "event_id"))
   }
 
   /** Gap-based sessionization (30-min inactivity): classic event-stream
@@ -399,7 +399,7 @@ object CdcQueries {
       .agg(count(lit(1)).as("n_events"),
         fmtTs(min(col("ts"))).as("session_start"),
         fmtTs(max(col("ts"))).as("session_end"))
-      .orderBy("user_id", "session_id")
+      .transform(orderedRows(_, "user_id", "session_id"))
   }
 
   /** Rolling 7-event median of purchase value per user — the robust
@@ -422,7 +422,7 @@ object CdcQueries {
         size(col("__s")).cast("long").as("n_frame"),
         round(element_at(col("__s"),
           floor((size(col("__s")) + 1) / 2).cast("int")), 4).as("rolling_median"))
-      .orderBy("user_id", "event_id")
+      .transform(orderedRows(_, "user_id", "event_id"))
   }
 
   /** SCD type-2 dimension history from the change log — the warehouse
@@ -447,7 +447,7 @@ object CdcQueries {
       .select(col("user_id"), col("version"), col("event_type"),
         fmtTs(col("valid_from")).as("valid_from"),
         fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
-      .orderBy("user_id", "version")
+      .transform(orderedRows(_, "user_id", "version"))
 
   /** orderBy + limit — TakeOrderedAndProject (top-k, SURVEY §2.5). */
   private val sortTopk: Q = (s, d) =>
@@ -468,7 +468,7 @@ object CdcQueries {
         dayofweek(col("ts")).cast("long").as("dow"),
         unix_timestamp(col("ts")).as("epoch_s"),
         date_format(col("ts") + expr("INTERVAL 1 DAY"), "yyyy-MM-dd").as("next_day"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:84, 490 — string scalars: namespace interpolation (`db.coll`),
     * regexp_replace, case/length/substring family. */
@@ -481,7 +481,7 @@ object CdcQueries {
         regexp_replace(col("event_type"), "[aeiou]", "_").as("et_devowel"),
         substring(col("event_type"), 1, 3).as("et3"),
         length(col("event_type")).cast("long").as("et_len"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** js:97, 110, 469 — JSON extract over the dynamic payload column. */
   private val scalarJson: Q = (s, d) =>
@@ -490,7 +490,7 @@ object CdcQueries {
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"),
         length(col("props")).cast("long").as("props_len"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** Calendar resample + gap fill (§2.5): each user's per-day last purchase
     * value, re-gridded onto that user's full [first-day, last-day] calendar
@@ -508,7 +508,7 @@ object CdcQueries {
       "user_id", "ts", "v", "event_id")
       .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("value"), col("observed"))
-      .orderBy("user_id", "day")
+      .transform(orderedRows(_, "user_id", "day"))
 
   /** [[windowGapFill]]'s straight-line sibling (§2.5): missing days take
     * the linear interpolation between surrounding observations instead of
@@ -521,7 +521,7 @@ object CdcQueries {
       "user_id", "ts", "v", "event_id")
       .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("value"), col("observed"))
-      .orderBy("user_id", "day")
+      .transform(orderedRows(_, "user_id", "day"))
 
   /** Cumulative distinct-user reach per day (§2.5) — "users ever seen
     * through day D", the growth-curve companion of
@@ -1122,7 +1122,7 @@ object CdcQueries {
     islands.groupBy(col("user_id"))
       .agg(max(col("len")).as("longest_streak"),
         count(lit(1)).as("n_streaks"), sum(col("len")).as("n_active_days"))
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
   }
 
   /** CUSUM level-shift detection on the daily volume series (Page 1954 —
@@ -1303,7 +1303,7 @@ object CdcQueries {
         (col("__peak") / 100.0).as("peak_value"),
         (col("__dd") / 100.0).as("drawdown"),
         (max(col("__dd")).over(w) / 100.0).as("max_drawdown"))
-      .orderBy("user_id", "event_id")
+      .transform(orderedRows(_, "user_id", "event_id"))
   }
 
   /** Audience overlap between event types: for every type pair, how many

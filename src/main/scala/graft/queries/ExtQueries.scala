@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SessionFrames
-import graft.Tables.{documents, embeddings, rnd4, rnd4Sql}
+import graft.Tables.{documents, embeddings, orderedRows, rnd4, rnd4Sql}
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Knn, Multimodal, NaiveBayes, Pca, TrainPrep}
 
@@ -51,7 +51,7 @@ object ExtQueries {
       size(TextFns.distinctTokens(col("text"))).cast("long").as("n_distinct"),
       // single-space separated ⇒ letters = chars − (n−1) separators
       rnd4((length(col("text")) - nTok + 1).cast("double") / nTok).as("avg_token_len"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Gopher-style repetition signals (Rae et al. 2021, MassiveText quality
@@ -80,7 +80,7 @@ object ExtQueries {
         when(col("m.n_bigrams") > 0,
           rnd4(col("m.top_big_cnt").cast("double") / col("m.n_bigrams")))
           .otherwise(lit(0.0)).as("top_bigram_frac"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** PII/URL signal scan — the pre-training scrub pass: per-doc counts of
@@ -123,7 +123,7 @@ object ExtQueries {
         col("n_digit_runs"), col("has_pii"), col("n_redacted_chars"))
   }
 
-  private val extTextPii: Q = (s, d) => piiScan(documents(s, d)).orderBy("doc_id")
+  private val extTextPii: Q = (s, d) => piiScan(documents(s, d)).transform(orderedRows(_, "doc_id"))
 
   /** The REDACTION pass itself — [[piiScan]] emits the audit counts; this
     * emits the rewritten corpus a shard-writer actually ships (each PII
@@ -138,7 +138,7 @@ object ExtQueries {
       .select(col("doc_id"), col("__p.redacted").as("text_redacted"),
         PiiClasses.indices.map(i => element_at(col("__p.counts"), i + 1))
           .reduce(_ + _).as("n_redactions"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Corpus-level top-50 bigrams with term and document frequency — the
     * frequency index contamination checks and LM analyses read. One
@@ -166,7 +166,7 @@ object ExtQueries {
       col("doc_id"),
       size(TextFns.tokens(col("text"))).cast("long").as("n_ws_tokens"),
       TextFns.bpeEstimate(col("text")).as("n_bpe_est"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Stopword-ratio language ID: argmax over per-language stopword hit
     * counts, first-in-order tie-break, 'und' when nothing hits. All
@@ -194,7 +194,7 @@ object ExtQueries {
     langGuessed(documents(s, d))
       .select(col("doc_id"), col("lang_guess"), col("lang"),
         (col("lang_guess") === col("lang")).as("hit"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Declared-vs-detected language confusion matrix — the corpus-QC view
     * of [[extLangId]]: which declared languages the detector mistakes for
@@ -216,7 +216,7 @@ object ExtQueries {
       rnd4(TextFns.stopRatio(col("text"))).as("stop_ratio"),
       rnd4(TextFns.typeTokenRatio(col("text"))).as("ttr"),
       rnd4(TextFns.qualityScore(col("text"))).as("quality"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Corpus-frequency rarity profile per doc — the unigram-LM quality
     * proxy with integer-exact semantics (a log-prob perplexity proxy would
@@ -247,7 +247,7 @@ object ExtQueries {
         rnd4(sum(col("cnt") * col("df")).cast("double") / sum(col("cnt"))).as("mean_df"),
         rnd4(sum(when(col("df") <= 2, col("cnt")).otherwise(0L)).cast("double")
           / sum(col("cnt"))).as("rare_frac"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Bigram-LM coherence — the oracle-exact stand-in for LM-perplexity
@@ -281,7 +281,7 @@ object ExtQueries {
         rnd4(sum(col("cnt") * col("df")).cast("double") / sum(col("cnt"))).as("mean_df"),
         rnd4(sum(when(col("df") >= 2, col("cnt")).otherwise(0L)).cast("double")
           / sum(col("cnt"))).as("attested_frac"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Add-½-smoothed bigram language-model cross-entropy per document — the
@@ -343,7 +343,7 @@ object ExtQueries {
         rnd4(-col("tot").cast("double") / (col("nb") * lit(10000.0))).as("xent_nats"))
   }
 
-  private val extLmPerplexity: Q = (s, d) => lmXent(s, d).orderBy("doc_id")
+  private val extLmPerplexity: Q = (s, d) => lmXent(s, d).transform(orderedRows(_, "doc_id"))
 
   /** CCNet-style perplexity-bucket filter thresholds (Wenzek et al. 2020
     * split corpora into head/middle/tail by reference-LM perplexity and
@@ -369,7 +369,7 @@ object ExtQueries {
           .otherwise("tail"))
       .select(col("doc_id"), col("xent_nats"), col("bucket"),
         col("bucket").isin("head", "middle").as("kept"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Multinomial Naive Bayes language-model classifier, trained on the
     * corpus's own `lang` labels ([[NaiveBayes.train]]) — the fastText-
@@ -378,8 +378,8 @@ object ExtQueries {
   private val extNbTrain: Q = (s, d) =>
     NaiveBayes.train(documents(s, d), "text", "lang")
       // the (label × vocab) model grid grows with the corpus (Heaps' law on
-      // the vocab axis) — data-sized, so the global range sort stays
-      .orderBy("label", "token")
+      // the vocab axis) — data-sized, so the sort stays global
+      .transform(orderedRows(_, "label", "token"))
 
   /** Session-shared trained NB model (a [[SessionFrames.frame]], like
     * [[trainedMerges]] and [[pqBooks]]): the four audit queries below
@@ -414,7 +414,7 @@ object ExtQueries {
     docs.select(col("doc_id"), col("lang").as("label"))
       .join(NaiveBayes.scoreFromGrid(nbScoredGrid(s, d), "doc_id"), Seq("doc_id"))
       .withColumn("correct", col("label") === col("pred_label"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Label-noise audit ([[NaiveBayes.labelNoise]]): docs whose `lang`
@@ -424,7 +424,7 @@ object ExtQueries {
   private val NoiseMarginMicro = 1000000L
   private val extLabelNoise: Q = (s, d) =>
     NaiveBayes.labelNoiseFromGrid(nbScoredGrid(s, d), "doc_id", NoiseMarginMicro)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Router calibration table ([[NaiveBayes.calibration]]): accuracy per
     * whole-log-nat confidence-margin bucket — the audit that decides
@@ -472,7 +472,7 @@ object ExtQueries {
   private val extDsirWeights: Q = (s, d) =>
     TrainPrep.dsirWeights(documents(s, d), "text", "doc_id",
       col("lang") === DsirTargetLang)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** The exportable DSIR importance MODEL — the vocab-bounded token-level
     * log p_target/p_corpus table `ext_dsir_weights` derives internally,
@@ -523,7 +523,7 @@ object ExtQueries {
     p1.join(p2, Seq("doc_id", "pos")).join(p3, Seq("doc_id", "pos"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_hits"), min(col("pos")).cast("long").as("first_pos"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Gopher/MassiveText quality-rule battery thresholds (Rae et al. 2021,
@@ -588,7 +588,7 @@ object ExtQueries {
       m("pass_symbol").as("pass_symbol"), m("pass_alpha").as("pass_alpha"),
       m("pass_stop").as("pass_stop"),
       m("pass").as("pass"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   private val extQualityGopher: Q = (s, d) => gopherQuality(documents(s, d))
@@ -630,7 +630,7 @@ object ExtQueries {
       m("n_blocked_hits").as("n_blocked_hits"),
       m("pass_bounds").as("pass_bounds"), m("pass_blocklist").as("pass_blocklist"),
       m("pass").as("pass"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   private val extFilterPolicy: Q = (s, d) => policyFilter(documents(s, d))
@@ -648,7 +648,7 @@ object ExtQueries {
     documents(s, d).select(col("doc_id"), n.as("n_tokens"), syl.as("n_syllables"),
       rnd4(lit(206.835) - lit(1.015) * n.cast("double") -
         lit(84.6) * (syl.cast("double") / n.cast("double"))).as("flesch"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** The ASSEMBLED final keep gate — what a pretraining pipeline actually
@@ -669,7 +669,7 @@ object ExtQueries {
       coalesce(col("xent_nats") <= PplMiddleMax, lit(false)).as("ppl_pass"))
     flags.join(x, "doc_id")
       .withColumn("kept", col("gopher_pass") && col("policy_pass") && col("ppl_pass"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Integer log-micronats: round(ln x · 10⁶) — the cross-engine-safe log
@@ -698,7 +698,7 @@ object ExtQueries {
         col("m.k").as("n_distinct_chars"),
         rnd4((col("m.n") * lnMicro(col("m.n")) - col("m.s")).cast("double") /
           (col("m.n") * lit(1000000L)).cast("double")).as("entropy_nats"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Corpus-level Zipf diagnostic: least-squares slope of ln(frequency) on
     * ln(rank) over the top-100 terms — natural text sits near −1; a corpus
@@ -739,7 +739,7 @@ object ExtQueries {
         graft.functions.RollingHash(
           org.apache.spark.sql.GraftColumnBridge.expression(col("text")), 31L, P))
         .as("fingerprint"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-shard corpus FINGERPRINT manifest — the reproducibility record a
     * dataset card pins ("is this byte-for-byte the corpus the model saw"):
@@ -766,7 +766,7 @@ object ExtQueries {
   // -- dedup -----------------------------------------------------------------
 
   private val extDedupExact: Q = (s, d) =>
-    Dedup.exactGroups(documents(s, d), "text", "doc_id").orderBy("keep_id")
+    Dedup.exactGroups(documents(s, d), "text", "doc_id").transform(orderedRows(_, "keep_id"))
 
   /** Shared-prefix template groups: documents opening with the same first
     * 8 tokens — the template/SEO-spam signature full-document hashing
@@ -783,7 +783,7 @@ object ExtQueries {
         countDistinct(col("source")).as("n_sources"),
         min(col("doc_id")).as("keep_id"))
       .filter(col("n_docs") >= 2)
-      .orderBy("prefix")
+      .transform(orderedRows(_, "prefix"))
 
   /** URL-canonicalization dedup ([[Dedup.urlCanon]]) — the tier every
     * web-corpus pipeline runs BEFORE text dedup (C4/RefinedWeb drop by
@@ -823,7 +823,7 @@ object ExtQueries {
     graft.streaming.UrlDedupStream.report(
       graft.streaming.UrlDedupStream.slice(
         documents(s, d).select(col("doc_id"), syntheticUrl.as("raw_url"))))
-      .orderBy("canon_url")
+      .transform(orderedRows(_, "canon_url"))
 
 
   /** Winnowing fingerprint summary ([[graft.functions.WinnowFingerprints]],
@@ -846,7 +846,7 @@ object ExtQueries {
         when(size(col("__fp")) === 0, lit(null).cast("long"))
           .otherwise(aggregate(col("__fp"), lit(0L), (a, x) => a + x) % P)
           .as("fp_sum"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** MOSS-style shared-fingerprint pairs ([[Dedup.winnowPairs]]): docs
     * sharing ≥ 3 winnowed fingerprints after the df-cap (df ≤ 16 — the
@@ -858,7 +858,7 @@ object ExtQueries {
   private val extDedupWinnowPairs: Q = (s, d) =>
     Dedup.winnowPairs(documents(s, d), "text", "doc_id", k = 8, w = 4,
       modulus = P, maxDf = 16L, minShared = 3L)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Dedup × quality interaction audit — the report that justifies (or
     * vetoes) aggressive dedup: per NEAR-DUP cluster-size band (unique /
@@ -920,7 +920,7 @@ object ExtQueries {
 
   private val extDedupNgram: Q = (s, d) =>
     ngramPairsShared(s, d)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Cross-SOURCE duplication matrix — where the near-dup mass sits
     * BETWEEN crawls: per unordered source pair, the pair count, the
@@ -949,7 +949,7 @@ object ExtQueries {
   private val extDedupMinhash: Q = (s, d) =>
     Dedup.minhashLsh(documents(s, d), "text", "doc_id", n = 3,
       bands = 12, rowsPerBand = 4, threshold = 0.5)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Directional sub-document duplication ([[Dedup.containmentPairs]]):
     * docs ≥60%-contained in ANOTHER doc's shingle set — the asymmetric
@@ -963,7 +963,7 @@ object ExtQueries {
     * and fall to the cross-doc cut, vs ~0% of 3-grams. */
   private val extDedupContainment: Q = (s, d) =>
     Dedup.containmentPairs(documents(s, d), "text", "doc_id", n = 5, threshold = 0.6)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Edit-distance near-dup tier ([[Dedup.fuzzyPairs]]): rare-5-shingle
     * blocking + Levenshtein ≤ 40 confirm. maxDist 40 sits in the fixture's
@@ -972,7 +972,7 @@ object ExtQueries {
     * maxDf 10 keeps the inverted index to genuinely rare shingles. */
   private val extDedupFuzzy: Q = (s, d) =>
     Dedup.fuzzyPairs(documents(s, d), "text", "doc_id", n = 5, maxDf = 10L, maxDist = 40)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Cross-doc repeated-passage removal at 10-token tiles
     * ([[Dedup.passageDedup]]): every passage text appearing in ≥ 2 docs is
@@ -980,7 +980,7 @@ object ExtQueries {
     * dedup pass, vs the pair/span REPORTING tiers around it. */
   private val extDedupPassages: Q = (s, d) =>
     Dedup.passageDedup(documents(s, d), "text", "doc_id", p = 10)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-source boilerplate fraction at 5-token tiles
     * ([[Dedup.boilerplate]]): tiles repeated in ≥ 2 distinct docs of the
@@ -991,7 +991,7 @@ object ExtQueries {
   private val extTextBoilerplate: Q = (s, d) =>
     Dedup.boilerplate(documents(s, d), "text", "doc_id", "source",
       p = 5, minDf = 2L)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Exact duplicate-SUBSTRING spans (Lee et al. 2022 style): maximal
     * per-doc token ranges covered by any 13-gram occurring ≥2 times
@@ -1000,7 +1000,7 @@ object ExtQueries {
     * standard). Two exchanges at any scale (see [[Dedup.duplicateSpans]]). */
   private val extDedupSpans: Q = (s, d) =>
     Dedup.duplicateSpans(documents(s, d), "text", "doc_id", n = 13)
-      .orderBy("doc_id", "span_start")
+      .transform(orderedRows(_, "doc_id", "span_start"))
 
   /** Per-doc duplication summary off the span map — the signal a pipeline
     * thresholds on ("drop docs >50% duplicated"). Composition: spans →
@@ -1018,7 +1018,7 @@ object ExtQueries {
         coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"),
         rnd4(coalesce(col("dup_tokens"), lit(0L)).cast("double") / col("n_tokens"))
           .as("dup_frac"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** SimHash separation audit ([[Dedup.simhashSeparation]] — the
@@ -1036,7 +1036,7 @@ object ExtQueries {
     * pipeline. */
   private val extDedupCluster: Q = (s, d) =>
     dupLabelsShared(s, d)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Cluster-purity audit over the near-dup clusters (see
     * [[Dedup.clusterPurity]]): per cluster, direct vs chained (weak) member
@@ -1045,7 +1045,7 @@ object ExtQueries {
   private val extDedupPurity: Q = (s, d) =>
     Dedup.clusterPurityFromLabels(documents(s, d), "text", "doc_id", n = 3,
       dupLabelsShared(s, d), threshold = 0.5)
-      .orderBy("cluster_id")
+      .transform(orderedRows(_, "cluster_id"))
 
   /** The keep side of near-dup dedup: every document except non-canonical
     * cluster members — what actually flows downstream once the
@@ -1057,7 +1057,7 @@ object ExtQueries {
     val drop = labels.filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
     documents(s, d).join(broadcast(drop), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Soft dedup ([[Dedup.softWeights]]): every document survives, but
@@ -1068,7 +1068,7 @@ object ExtQueries {
   private val extDedupSoft: Q = (s, d) => {
     val docs = documents(s, d)
     Dedup.softWeights(docs, "doc_id", dupLabelsShared(s, d))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Per-source document cap K=15 ([[TrainPrep.groupCap]]): the
@@ -1080,7 +1080,7 @@ object ExtQueries {
     TrainPrep.groupCap(documents(s, d).select(col("doc_id"), col("source")),
       "source", "doc_id", k = SourceCapK)
       .select(col("doc_id"), col("source"), col("rk"))
-      .orderBy("source", "rk")
+      .transform(orderedRows(_, "source", "rk"))
 
   /** Quality-ranked duplicate survivors — [[extDedupKeep]]'s production
     * sibling: within each near-dup cluster keep the HIGHEST-QUALITY copy
@@ -1100,7 +1100,7 @@ object ExtQueries {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("doc_id"), col("lang"), col("source"), col("quality"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Per-source corpus dashboard — the rollup a pipeline review reads:
@@ -1339,7 +1339,7 @@ object ExtQueries {
         sum(when(col("doc_id") === col("cluster_id"), col("n_tokens")).otherwise(0L))
           .as("kept_tokens"))
       .withColumn("saved_tokens", col("total_tokens") - col("kept_tokens"))
-      .orderBy("cluster_id")
+      .transform(orderedRows(_, "cluster_id"))
   }
 
   /** Train/eval contamination detection: near-duplicate pairs that CROSS
@@ -1357,9 +1357,9 @@ object ExtQueries {
       .filter(col("source_a") =!= col("source_b"))
       .select(col("doc_a"), col("doc_b"), col("source_a"), col("source_b"), col("jaccard"))
       // PAIR report — data-sized (cross-source contaminated-pair sets scale
-      // with the corpus), so the global range sort stays; a single-partition
-      // tail here funnels a corpus-scale frame through one reducer
-      .orderBy("doc_a", "doc_b")
+      // with the corpus), so the sort stays global; a single-partition
+      // report tail here funnels a corpus-scale frame through one reducer
+      .transform(orderedRows(_, "doc_a", "doc_b"))
   }
 
   /** N-gram exact-overlap contamination — the 13-gram collision standard
@@ -1392,9 +1392,9 @@ object ExtQueries {
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.source").as("source_a"), col("b.source").as("source_b"))
       .agg(count(lit(1)).as("n_shared"))
-      // PAIR report — data-sized, global range sort stays (see
+      // PAIR report — data-sized, the sort stays global (see
       // extContamination's tail note)
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
   }
 
   /** Per-doc 8-gram novelty ([[TrainPrep.textNovelty]]): the share of each
@@ -1404,7 +1404,7 @@ object ExtQueries {
     * partial reuse still registers. */
   private val extTextNovelty: Q = (s, d) =>
     TrainPrep.textNovelty(documents(s, d), "doc_id", "text", n = 8)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Cross-source duplication matrix — the corpus-review heatmap over the
     * near-dup pair set: per unordered source pair, how many near-dup pairs
@@ -1445,7 +1445,7 @@ object ExtQueries {
         countDistinct(col("doc")).as("n_docs"),
         expr("sum(dt) div 2").as("dup_tokens"))
       .select("source_lo", "source_hi", "n_pairs", "n_docs", "dup_tokens")
-      .orderBy("source_lo", "source_hi")
+      .transform(orderedRows(_, "source_lo", "source_hi"))
   }
 
   private val extOverlapSources: Q = (s, d) =>
@@ -1553,7 +1553,7 @@ object ExtQueries {
     TrainPrep.packWindows(documents(s, d), "doc_id", "text",
       budgetTokens = 2048L, nShards = 8,
       tokenCount = TextFns.bpeMergeCount(trainedMerges(s, d)))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** The unigram-tokenizer twin of [[extPackWindowsBpe]]: the EM-trained
     * model's Viterbi piece count ([[graft.operators.Unigram.encode]], one
@@ -1574,7 +1574,7 @@ object ExtQueries {
         size(col("e.ids")).cast("long").as("__n_pieces")),
       "doc_id", "__n_pieces", budgetTokens = 2048L, nShards = 8,
       tokenCount = c => c)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Tokenizer-efficiency table by language: corpus fertility (BPE pieces
     * per whitespace word) and compression (chars per piece) — the numbers a
@@ -1615,7 +1615,7 @@ object ExtQueries {
         col("__st.n").as("n_pieces"),
         col("__st.n_ge").as("n_merged"),
         col("__st.sum").as("id_sum"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   // -- similarity search -----------------------------------------------------
@@ -1899,7 +1899,7 @@ object ExtQueries {
       threshold = SemThreshold,
       cellExpr = Knn.intCellExpr(emb, "vec_id", "embedding",
         nCells = SemCells, iters = SemIters, sampleN = SemSampleN))
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
   }
 
   /** The SemDeDup GROUPING machinery under an injected relational cell
@@ -1912,7 +1912,7 @@ object ExtQueries {
   private val extSimSemdedupCells: Q = (s, d) =>
     Knn.semanticDedupIn(embeddings(s, d), "vec_id", "embedding",
       threshold = SemThreshold, cellExpr = pmod(col("vec_id"), lit(16)))
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** The IVF QUANTIZER itself under the oracle (the [[Knn.ivfCellsInt]]
     * cell table): lowest-id sample, lowest-id seeds, Lloyd floor-mean
@@ -1927,7 +1927,7 @@ object ExtQueries {
   private val extSimKnnIvfCells: Q = (s, d) =>
     embeddings(s, d).select(col("vec_id"),
       Knn.intCellOf(col("embedding"), intIvfCellsShared(s, d)).as("cell"))
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** The frozen integer-Lloyd codebook per fixture dir (the
     * [[ivfCellsShared]] discipline for the INT quantizer): the occupancy
@@ -1964,7 +1964,7 @@ object ExtQueries {
   private val extSimSilhouette: Q = (s, d) =>
     Knn.silhouetteInt(embeddings(s, d), "vec_id", "embedding",
       nCells = IvfCells, iters = IvfIters, sampleN = IvfSampleN)
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** Embedding QC: distance-to-assigned-centroid outlier flags (corrupt
     * encoders / junk vectors surface as far-from-every-centroid rows) —
@@ -1978,7 +1978,7 @@ object ExtQueries {
   private val extEmbedOutliers: Q = (s, d) =>
     Knn.centroidOutliersInt(embeddings(s, d), "vec_id", "embedding",
       nCells = IvfCells, iters = IvfIters, factorPct = 120, sampleN = IvfSampleN)
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** Per-dimension embedding QC — mean / population variance / zero share
     * per coordinate: the "is the encoder emitting dead or collapsed
@@ -2029,13 +2029,13 @@ object ExtQueries {
         TrainPrep.splitLabel(col("id_b"), 100, 50).as("split_b"),
         col("cosine"))
       .filter(col("split_a") =!= col("split_b"))
-      .orderBy("id_a", "id_b")
+      .transform(orderedRows(_, "id_a", "id_b"))
 
   /** Embedding-cosine near-duplicate pairs within one label partition. */
   private val extSimNeardup: Q = (s, d) =>
     Knn.cosineNearDup(embeddings(s, d).filter(col("label") === 0),
       "vec_id", "embedding", threshold = 0.3)
-      .orderBy("id_a", "id_b")
+      .transform(orderedRows(_, "id_a", "id_b"))
 
   /** Semantic duplicate clusters: embedding-cosine near-dup pairs (LSH
     * candidate path) → connected components — the embedding-space analog of
@@ -2049,10 +2049,10 @@ object ExtQueries {
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
       .withColumnRenamed("doc_id", "vec_id")
       // one row per semantically-duplicated vector — scales with the
-      // corpus dup mass, so the global range sort stays (the per-pair
+      // corpus dup mass, so the sort stays global (the per-pair
       // siblings extSimNeardup/extSimNeardupLsh keep theirs for the same
       // reason)
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** LSH-banded near-dup — candidates from (band, key) collisions instead of
     * the O(n²) cross join, exact-cosine verified. 16 bands × 2 bits holds
@@ -2066,7 +2066,7 @@ object ExtQueries {
   private val extSimNeardupLsh: Q = (s, d) =>
     Knn.cosineNearDupLsh(embeddings(s, d).filter(col("label") === 0),
       "vec_id", "embedding", threshold = 0.3, bands = 16, bitsPerBand = 2)
-      .orderBy("id_a", "id_b")
+      .transform(orderedRows(_, "id_a", "id_b"))
 
   // -- training-data preparation ---------------------------------------------
 
@@ -2078,7 +2078,7 @@ object ExtQueries {
     TrainPrep.stratifiedSample(documents(s, d), "doc_id", "lang",
       permille = Map("en" -> 250), defaultPermille = 800)
       .select(col("doc_id"), col("lang"), col("bucket"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Quality-weighted resampling: survival probability = the composite
     * quality score (stop ratio / TTR / length saturation), so better docs
@@ -2091,9 +2091,9 @@ object ExtQueries {
       TextFns.qualityScore(col("text")))
       .select(col("doc_id"), col("lang"), col("bucket"),
         rnd4(TextFns.qualityScore(col("text"))).as("weight"))
-      // per-document output (kept docs scale with the corpus) — global
-      // range sort stays, like extSampleStratified
-      .orderBy("doc_id")
+      // per-document output (kept docs scale with the corpus) — the sort
+      // stays global, like extSampleStratified
+      .transform(orderedRows(_, "doc_id"))
 
   /** Deterministic fixed-size sample: the 20 docs per language that come
     * first in the shuffle order — an absolute-size uniform sample (eval
@@ -2119,7 +2119,7 @@ object ExtQueries {
     TrainPrep.splitAssign(documents(s, d), "doc_id",
       testPermille = 100, valPermille = 50)
       .select(col("doc_id"), col("lang"), col("split_bucket"), col("split"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-source robust document-length outliers — the ADAPTIVE form of
     * Gopher's hard length bounds: per source the median and MAD of the
@@ -2200,7 +2200,7 @@ object ExtQueries {
         TrainPrep.splitLabel(col("doc_b"), 100, 50).as("split_b"),
         col("jaccard"))
       .filter(col("split_a") =!= col("split_b"))
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Deterministic global training-order shuffle plan (8 shards): each doc
     * gets a hash shuffle key, a shard, and its in-shard rank — the
@@ -2208,7 +2208,7 @@ object ExtQueries {
     * (see [[TrainPrep.shuffleShard]]). */
   private val extShuffleShard: Q = (s, d) =>
     TrainPrep.shuffleShard(documents(s, d), "doc_id", nShards = 8)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Symmetric int8 quantization plan over the embedding column — the
     * compression step an ANN store applies before indexing at 100 TB
@@ -2226,7 +2226,7 @@ object ExtQueries {
       .select(col("vec_id"), rnd4(col("m.scale")).as("scale"),
         col("m.q_min").as("q_min"), col("m.q_max").as("q_max"),
         col("m.q_sum").as("q_sum"), col("m.n_sat").as("n_sat"))
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** Product-quantization contract — shared with KnnSpec so the entry and
     * its pins can't drift. m=8 8-dim subspaces × 16 codes: 8 nibbles
@@ -2325,7 +2325,7 @@ object ExtQueries {
     uniEncoded(s, d) // session-shared encode; this entry pays only the audit
       .withColumn("__a", audit)
       .select(col("doc_id"), col("__a.n_chars").as("n_chars"), col("__a.ok").as("ok"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
 
@@ -2476,7 +2476,7 @@ object ExtQueries {
   private val extEmbedPq: Q = (s, d) =>
     Knn.pqCodesInt(embeddings(s, d), "vec_id", "embedding",
       m = PqM, k = PqK, iters = PqIters, sampleN = PqSampleN)
-      .orderBy("vec_id")
+      .transform(orderedRows(_, "vec_id"))
 
   /** ADC search contract: top `PqRerank` candidates by codes-only distance,
     * exact-L2 re-ranked — the standard PQ index pipeline. Shared with
@@ -2521,7 +2521,7 @@ object ExtQueries {
   private val extPackWindows: Q = (s, d) =>
     TrainPrep.packWindows(documents(s, d), "doc_id", "text",
       budgetTokens = 2048L, nShards = 8)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Context-window domain-DIVERSITY audit over the concat-and-chunk pack
     * plan: per (shard, window), the contributing docs, distinct sources
@@ -2552,7 +2552,7 @@ object ExtQueries {
       .select(col("shard"), col("window_id"), col("n_docs"), col("n_sources"),
         rnd4((col("n_docs") * lnMicro(col("n_docs")) - col("__s")).cast("double") /
           (col("n_docs") * lit(1000000L)).cast("double")).as("entropy_nats"))
-      .orderBy("shard", "window_id")
+      .transform(orderedRows(_, "shard", "window_id"))
   }
 
   /** Document-PRESERVING greedy packing (docs never split; oversize docs
@@ -2563,7 +2563,7 @@ object ExtQueries {
   private val extPackGreedy: Q = (s, d) =>
     TrainPrep.packGreedy(documents(s, d), "doc_id", "text",
       budgetTokens = 2048L, nShards = 8)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Loader manifest over the greedy plan: per (shard, window) the
     * contiguous doc span, token fill and the oversize flag — no spill
@@ -2576,7 +2576,7 @@ object ExtQueries {
       .agg(count(lit(1)).as("n_docs"),
         min("doc_id").as("first_doc"), max("doc_id").as("last_doc"),
         sum("n_tokens").as("n_tokens"), max(col("oversize")).as("oversize"))
-      .orderBy("shard", "window_id")
+      .transform(orderedRows(_, "shard", "window_id"))
 
   /** Loader-efficiency report over the greedy plan — the padding-waste
     * metric a training pipeline tracks per shard: window count, doc and
@@ -2603,7 +2603,7 @@ object ExtQueries {
         sum(col("fill")).as("n_tokens"), sum(col("pad")).as("padding_tokens"),
         sum(col("tr")).as("truncated_tokens"),
         expr("sum(used) * 1000 div (count(1) * 2048)").as("fill_permille"))
-      .orderBy("shard")
+      .transform(orderedRows(_, "shard"))
 
   /** Materialized window text off the greedy plan — the actual training
     * rows a loader emits: per (shard, window) the member docs' texts
@@ -2624,7 +2624,7 @@ object ExtQueries {
           transform(sort_array(collect_list(struct(col("doc_id"), col("text")))),
             p => p.getField("text")),
           "\n").as("window_text"))
-      .orderBy("shard", "window_id")
+      .transform(orderedRows(_, "shard", "window_id"))
   }
 
   /** Top-3 tf·idf terms per doc with the log-free BM25-shaped idf (see
@@ -2632,7 +2632,7 @@ object ExtQueries {
     * engine-identical, which is what makes this oracle-checkable). */
   private val extTfidfTerms: Q = (s, d) =>
     TrainPrep.topTerms(documents(s, d), "doc_id", "text", k = 3)
-      .orderBy("doc_id", "rank")
+      .transform(orderedRows(_, "doc_id", "rank"))
 
   /** The retrieval queries' shared parameterization: a fixed two-term
     * lexical query (2 terms keeps the per-doc score a commutative 2-double
@@ -2695,7 +2695,7 @@ object ExtQueries {
     * [[TrainPrep.vocabOov]] — the vocab-size/UNK-handling signal). */
   private val extVocabOov: Q = (s, d) =>
     TrainPrep.vocabOov(documents(s, d), "doc_id", "text", k = 20)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-language p50/p90/p99 token-count quantiles — exact, rank-based,
     * integer-arithmetic ranks (see [[TrainPrep.tokenQuantiles]]). */
@@ -2727,13 +2727,13 @@ object ExtQueries {
     * objective prep emitted as a replayable plan table. */
   private val extSpanCorruption: Q = (s, d) =>
     TrainPrep.spanCorruptionPlan(documents(s, d), "doc_id", "text")
-      .orderBy("doc_id", "sentinel_id")
+      .transform(orderedRows(_, "doc_id", "sentinel_id"))
 
   private val extPackManifest: Q = (s, d) =>
     TrainPrep.packManifest(
       TrainPrep.packWindows(documents(s, d), "doc_id", "text",
         budgetTokens = 2048L, nShards = 8), "doc_id", budgetTokens = 2048L)
-      .orderBy("shard", "window_id")
+      .transform(orderedRows(_, "shard", "window_id"))
 
   /** Sliding-window document chunking (32-token chunks, stride 24 — 8-token
     * overlap): every doc split into the overlapping segments a RAG index or
@@ -2756,7 +2756,7 @@ object ExtQueries {
         least(col("chunk_id") * S + C, col("n")).as("tok_end"),
         concat_ws(" ", expr(s"slice(tk, CAST(chunk_id * $S + 1 AS INT), " +
           s"CAST(least(chunk_id * $S + $C, n) - chunk_id * $S AS INT))")).as("chunk_text"))
-      .orderBy("doc_id", "chunk_id")
+      .transform(orderedRows(_, "doc_id", "chunk_id"))
   }
 
   /** Target token shares (permille) per language — ONE definition for the
@@ -2813,7 +2813,7 @@ object ExtQueries {
       .select(col("doc_id"), col("lang"),
         explode(when(col("n_copies") >= 1L, sequence(lit(1L), col("n_copies")))
           .otherwise(array().cast("array<bigint>"))).as("copy"))
-      .orderBy("doc_id", "copy")
+      .transform(orderedRows(_, "doc_id", "copy"))
   }
 
   /** Temperature-scaled mixture plan over `source` (α = 1/2; see
@@ -2875,7 +2875,7 @@ object ExtQueries {
     * reverse; the ORDER is the artifact, the direction is the trainer's). */
   private val extCurriculum: Q = (s, d) =>
     curriculumStaged(s, d).select(col("doc_id"), col("score"), col("stage"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-stage curriculum manifest: doc/token mass + score span — the
     * stage-schedule summary a trainer sizes epochs against. One map-side-
@@ -2897,7 +2897,7 @@ object ExtQueries {
       budgetTokens = 2048L, nShards = 8)
       .select(col("doc_id"), col("lang"), col("quality"), col("n_tokens"),
         col("window_id"), col("window_offset"), col("n_windows"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Per-doc prep accounting ([[TrainPrep.prepAudit]]) under exactly the
     * `ext_corpus_prep` contract (0.3 gate, en→250‰/800‰) — the two queries
@@ -2905,7 +2905,7 @@ object ExtQueries {
   private val extPrepAudit: Q = (s, d) =>
     TrainPrep.prepAudit(documents(s, d), "doc_id", "text", "lang",
       minQuality = 0.3, permille = Map("en" -> 250), defaultPermille = 800)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   // -- multimodal ------------------------------------------------------------
 
@@ -2916,7 +2916,7 @@ object ExtQueries {
       .select(col("docId").as("doc_id"), col("nBytes").as("n_bytes"),
         col("width").cast("long").as("width"), col("height").cast("long").as("height"),
         col("nFrames").cast("long").as("n_frames"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Perceptual-hash image dedup over the media column
     * ([[Multimodal.imageHashes]] → [[Multimodal.phashPairs]]): 60-bit
@@ -2941,7 +2941,7 @@ object ExtQueries {
 
   private val extMultimodalPhash: Q = (s, d) =>
     Multimodal.phashPairs(imageHashesShared(s, d))
-      .orderBy("doc_a", "doc_b")
+      .transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** Image near-dup DECISION tier — the text family's cluster/keep/soft
     * machinery applied to the pHash pair graph: banded Hamming pairs
@@ -2961,7 +2961,7 @@ object ExtQueries {
   private val extMultimodalDedup: Q = (s, d) =>
     Multimodal.softDedup(documents(s, d),
         Multimodal.phashPairs(imageHashesShared(s, d)))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** SEMANTIC image-dedup tier — the multimodal SemDeDup split: pHash
     * bands catch re-encodes at Hamming ≤ 5 losslessly
@@ -2982,7 +2982,7 @@ object ExtQueries {
   private val extMultimodalSemdedup: Q = (s, d) =>
     Multimodal.softDedup(documents(s, d),
         Multimodal.semPairs(imageFeaturesShared(s, d)))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   /** Cross-SOURCE image-duplication matrix — `ext_dedup_cross_source`'s
     * wholesale-drop grid over the pHash pair graph: per unordered source
@@ -3007,7 +3007,7 @@ object ExtQueries {
   private val extMultimodalFrames: Q = (s, d) =>
     Multimodal.frameSample(documents(s, d), stride = 3)
       .select(col("doc_id"), col("n_frames"), col("frame_idx"), col("frame_hash"))
-      .orderBy("doc_id", "frame_idx")
+      .transform(orderedRows(_, "doc_id", "frame_idx"))
 
   /** Feature-extraction batch shape: one fixed-width vector per payload
     * (stub arithmetic standing in for a model forward pass), unpivoted to
@@ -3017,13 +3017,13 @@ object ExtQueries {
       .select(col("doc_id"), posexplode(col("features")).as(Seq("pos", "v")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         rnd4(col("v").cast("double")).as("feature"))
-      .orderBy("doc_id", "pos")
+      .transform(orderedRows(_, "doc_id", "pos"))
 
   /** Aspect-preserving resize plan to a 224-box — integer rounded division
     * only (see [[Multimodal.resizePlan]]); zero shuffles. */
   private val extMultimodalResize: Q = (s, d) =>
     Multimodal.resizePlan(documents(s, d), target = 224)
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
 
   // -- corpus statistics / drift ---------------------------------------------
 
@@ -3057,7 +3057,7 @@ object ExtQueries {
         rnd4((col("n_chars").cast("double") - mean) / sqrt(variance)).as("z_score"),
         rnd4((col("n_chars") - col("__lo")).cast("double")
           / (col("__hi") - col("__lo"))).as("minmax"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Token-concentration diversity per document — Simpson diversity
@@ -3084,7 +3084,7 @@ object ExtQueries {
           / (col("n_tokens") * col("n_tokens"))).as("simpson"),
         rnd4((col("n_tokens") * col("n_tokens")).cast("double") / col("__s2"))
           .as("eff_vocab"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** Kolmogorov–Smirnov drift per source — "does this slice's length
@@ -3154,7 +3154,7 @@ object ExtQueries {
       .agg(centroid(col("embedding")).as("c"))
       .select(col("label"), posexplode(col("c")).as(Seq("pos", "v")))
       .select(col("label"), col("pos").cast("long").as("pos"), rnd4(col("v")).as("centroid"))
-      .orderBy("label", "pos")
+      .transform(orderedRows(_, "label", "pos"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Tables.{customer, eventsInRange}
+import graft.Tables.{customer, eventsInRange, orderedRows}
 import graft.operators.{CdcOps, Reconcile}
 
 /** Reconciliation queries — the relational re-expression of the reference's
@@ -82,12 +82,12 @@ object ReconcileQueries {
   /** js:457–475 table-scale: one row per differing field / one-sided key. */
   private val joinFullOuterDiff: Q = (s, d) =>
     Reconcile.fieldDiff(customer(s, d), Reconcile.driftedCustomer(customer(s, d)), key, fields)
-      .orderBy(key, "field")
+      .transform(orderedRows(_, key, "field"))
 
   /** js:409–432 — per-key existence flags source vs target. */
   private val joinExistence: Q = (s, d) =>
     Reconcile.existence(customer(s, d), Reconcile.driftedCustomer(customer(s, d)), key)
-      .orderBy(key)
+      .transform(orderedRows(_, key))
 
   /** js:520–525 — {totalDocumentsCompared, documentsWithDifferences}. */
   private val aggDiffSummary: Q = (s, d) =>
@@ -97,14 +97,14 @@ object ReconcileQueries {
   private val setopExcept: Q = (s, d) =>
     customer(s, d).select(col(key))
       .except(Reconcile.driftedCustomer(customer(s, d)).select(col(key)))
-      .orderBy(key)
+      .transform(orderedRows(_, key))
 
   /** Keys present on BOTH sides (js:459's key-set union, restricted to the
     * comparable middle) — INTERSECT, completing the set-op family. */
   private val setopIntersect: Q = (s, d) =>
     customer(s, d).select(col(key))
       .intersect(Reconcile.driftedCustomer(customer(s, d)).select(col(key)))
-      .orderBy(key)
+      .transform(orderedRows(_, key))
 
   /** js:399–454 — `compareDocuments(documentId)`: the single-document
     * troubleshooting tool (README.md:195–198). Point lookup of ONE key on
@@ -202,7 +202,7 @@ object ReconcileQueries {
     Reconcile.fieldDiff(scoped(src), scoped(tgt), key, fields)
       .select(pmod(col(key), lit(256L)).as("bucket"), col(key), col("field"),
         col("diff_type"), col("src_val"), col("tgt_val"))
-      .orderBy(key, "field")
+      .transform(orderedRows(_, key, "field"))
   }
 
   val queries: Map[String, Q] = Map(

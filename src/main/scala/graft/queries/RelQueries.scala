@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.{changeLog, customer, events, fmtTs, fmtTsSql, lineitem, nation, orders, region}
+import graft.Tables.{changeLog, customer, events, fmtTs, fmtTsSql, lineitem, nation, orders, orderedRows, region}
 import graft.operators.{AsOf, Bucketing, CdcOps, RangeJoin, Skew}
 
 /** Relational join-strategy queries (SURVEY §2.3). The reference reconciles
@@ -61,7 +61,7 @@ object RelQueries {
       .join(orders(s, d).filter(col("o_orderpriority") === "1-URGENT"),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy("c_custkey")
+      .transform(orderedRows(_, "c_custkey"))
 
   /** js:236 — `fullDocument:'updateLookup'`: latest event per key, joined to
     * the dimension row it targets (stream-static join analog). */
@@ -72,7 +72,7 @@ object RelQueries {
         col("user_id"), fmtTs(col("ts")).as("last_ts"), col("event_type").as("last_event"),
         col("c_name"), col("c_mktsegment"),
         round(col("c_acctbal"), 4).as("acctbal"))
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
 
   /** As-of join (SURVEY §2.3): each purchase matched to the user's latest
     * click at-or-before it — "state as of T" (js:478–538) without the
@@ -86,7 +86,7 @@ object RelQueries {
     AsOf.asOfJoin(purchases, clicks, "user_id", "ts", "ts", "event_id", Seq("event_id", "value"))
       .select(col("user_id"), col("event_id"), fmtTs(col("ts")).as("ts_s"),
         col("asof_event_id").as("click_id"), round(col("asof_value"), 4).as("click_value"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
   }
 
   /** Nearest-in-time as-of: each purchase matched to the user's CLOSEST
@@ -104,7 +104,7 @@ object RelQueries {
         col("nearest_dir"), col("nearest_delta_s"),
         col("nearest_event_id").as("click_id"),
         round(col("nearest_value"), 4).as("click_value"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
   }
 
   /** Range join, binned (SURVEY §2.3 extension): per order, line items
@@ -133,7 +133,7 @@ object RelQueries {
       binSeconds = 86400L)
       .groupBy(col("o_orderkey"))
       .agg(sum(col("n_day")).as("n_shipped"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(_, "o_orderkey"))
   }
 
   /** Hot-key fact ⋈ dim enrichment under explicit salting (§2.3 skew
@@ -149,7 +149,7 @@ object RelQueries {
       "user_id", saltFactor = 8)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("c_name"), col("c_mktsegment"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
 
   /** Point-in-time join (§2.3 × §2.4): each purchase labeled with the
     * user's funnel-touchpoint dimension version (SCD2 over the
@@ -174,7 +174,7 @@ object RelQueries {
         round(col("value"), 4).as("value"),
         col("version").as("touch_version"), col("event_type").as("touch"),
         fmtTs(col("valid_from")).as("touch_since"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
   }
 
   /** Fact ⋈ fact on identically-bucketed layouts (§4 partitioning story):
@@ -201,7 +201,7 @@ object RelQueries {
     Bucketing.bucketedJoin(s, ordersT, lineitemT, "o_orderkey", "l_orderkey")
       .groupBy(col("o_orderkey"), col("o_orderstatus"))
       .agg(count(lit(1)).as("n_lines"))
-      .orderBy("o_orderkey")
+      .transform(orderedRows(_, "o_orderkey"))
   }
 
   /** Which user sessions overlapped an error incident — a true interval ×
@@ -243,7 +243,7 @@ object RelQueries {
           greatest(unix_timestamp(col("s_lo")), unix_timestamp(col("i_lo"))) + 1)
           .as("overlap_secs"),
         col("n_events"), col("n_errors"))
-      .orderBy("user_id", "session_id", "incident_id")
+      .transform(orderedRows(_, "user_id", "session_id", "incident_id"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Tables.{fmtTs, fmtTsSql, tsLit}
+import graft.Tables.{fmtTs, fmtTsSql, orderedRows, tsLit}
 import graft.operators.CdcOps
 import graft.streaming.CdcPipeline
 
@@ -27,7 +27,7 @@ object StreamQueries {
     CdcPipeline.transform(raw)
       .select(col("event_id"), fmtTs(col("ts")).as("ts_s"), col("user_id"),
         col("op_type"), col("props"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
   }
 
   /** js:104, 272–299 — checkpoint/resume with an at-least-once replay
@@ -45,7 +45,7 @@ object StreamQueries {
     CdcOps.upsertMerge(stateAtCkpt, replayed, "user_id")
       .select(col("user_id"), fmtTs(col("ts")).as("last_ts"), col("event_id").as("last_event_id"),
         col("event_type").as("last_event"))
-      .orderBy("user_id")
+      .transform(orderedRows(_, "user_id"))
   }
 
   /** The custom-state sessionization operator run in BATCH mode (the same
@@ -58,7 +58,7 @@ object StreamQueries {
   private val streamSessionize: Q = (s, d) => {
     val raw = Tables.eventsRaw(s, d)
     graft.streaming.Sessionize.sessions(CdcPipeline.transform(raw)).toDF()
-      .orderBy("user_id", "session_start")
+      .transform(orderedRows(_, "user_id", "session_start"))
   }
 
   /** The watermarked tumbling-window aggregation run in BATCH mode — the
@@ -83,7 +83,7 @@ object StreamQueries {
     CdcPipeline.dedupEvents(once.unionByName(once)) // two deliveries
       .select(col("event_id"), fmtTs(col("ts")).as("ts_s"), col("user_id"),
         col("event_type"), col("value"))
-      .orderBy("event_id")
+      .transform(orderedRows(_, "event_id"))
   }
 
   /** The corpus-ingest pipeline run in BATCH mode over a DOUBLED delivery
@@ -98,7 +98,7 @@ object StreamQueries {
     val twice = once.unionByName(once) // two deliveries
     graft.streaming.CorpusIngest.mergeSurvivors(twice.limit(0), twice)
       .select(col("doc_id"), col("lang"), Tables.rnd4(col("quality")).as("quality"))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** The streaming decontamination gate run in BATCH mode over a DOUBLED
@@ -114,7 +114,7 @@ object StreamQueries {
     val index = Decontam.evalIndex(docs.filter(col("source") === "src0"))
     val once = Decontam.gate(docs.filter(col("source") =!= "src0"), index)
     val twice = once.unionByName(once) // two deliveries
-    Decontam.mergeVerdicts(twice.limit(0), twice).orderBy("doc_id")
+    Decontam.mergeVerdicts(twice.limit(0), twice).transform(orderedRows(_, "doc_id"))
   }
 
   /** The ingest near-dup pipeline run in BATCH mode over a DOUBLED
@@ -151,7 +151,7 @@ object StreamQueries {
     }
 
   private val streamNeardup: Q = (s, d) =>
-    neardupPairsShared(s, d).orderBy("doc_a", "doc_b")
+    neardupPairsShared(s, d).transform(orderedRows(_, "doc_a", "doc_b"))
 
   /** The incremental per-source cap run in BATCH mode over a DOUBLED
     * delivery (at-least-once): min-k per source is commutative/associative/
@@ -300,7 +300,7 @@ object StreamQueries {
     graft.operators.Multimodal.softDedup(
         docs.select(col("doc_id")),
         MultimodalDedupStream.mergePairs(fresh.limit(0), fresh))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** The SEMANTIC image-dedup grid off the multimodal dedup stream's
@@ -328,7 +328,7 @@ object StreamQueries {
     graft.operators.Multimodal.softDedup(
         docs.select(col("doc_id")),
         MultimodalDedupStream.mergePairs(fresh.limit(0), fresh))
-      .orderBy("doc_id")
+      .transform(orderedRows(_, "doc_id"))
   }
 
   /** The cross-source IMAGE-duplication matrix read off the multimodal
@@ -401,7 +401,7 @@ object StreamQueries {
     val urls = Tables.documents(s, d)
       .select(col("doc_id"), ExtQueries.syntheticUrl.as("raw_url"))
     val twice = UrlDedupStream.slice(urls.unionByName(urls))
-    UrlDedupStream.report(twice).orderBy("canon_url")
+    UrlDedupStream.report(twice).transform(orderedRows(_, "canon_url"))
   }
 
   private val streamPrefixDup: Q = (s, d) => {
@@ -626,7 +626,7 @@ object StreamQueries {
       .select(col("user_id"), col("version"), col("event_type"),
         fmtTs(col("valid_from")).as("valid_from"),
         fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
-      .orderBy("user_id", "version")
+      .transform(orderedRows(_, "user_id", "version"))
   }
 
   /** Incremental retention cohorts run in BATCH mode over a DOUBLED
@@ -662,7 +662,7 @@ object StreamQueries {
     GapFillStream.report(GapFillStream.mergeFacts(twice.limit(0), twice))
       .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("value"), col("observed"))
-      .orderBy("user_id", "day")
+      .transform(orderedRows(_, "user_id", "day"))
   }
 
   /** Drift alarm threshold shared by the query entry and StreamingSpec —

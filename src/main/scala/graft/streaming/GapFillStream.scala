@@ -29,10 +29,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object GapFillStream extends Monitor.Additive {
   protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeFacts(state, slice)
 
-  /** One state row per (user, day): the day's winning observation
-    * (argmax by (ts, event_id)) with its rounded value. */
-  val StateCols: Seq[String] = Seq("user_id", "day", "ts", "event_id", "v")
-
   /** One slice's state contribution: purchases only, rounded value, one
     * row per (user, day) via the same argmax the merge applies — so a
     * slice is itself a valid state table. */

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
@@ -75,22 +73,6 @@ class SessionFramesSpec extends SparkSpec {
       assert(src.contains("SessionFrames.release(spark)"), s"$main does not drain via release")
       assert(!src.contains("clearCache"), s"$main drains outside SessionFrames.release")
     }
-  }
-
-  /** The Spark jobs `body` runs, counted once the listener bus is drained. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(l)
   }
 
   test("a warm open of every fixture table runs no Spark job") {

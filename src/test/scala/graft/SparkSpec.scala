@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -10,6 +12,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared session; never stopped per-suite
+
+  /** The Spark jobs `body` runs, counted once the listener bus is drained.
+    * `body` runs under a job group of its own, and only that group's jobs
+    * count, so a job another thread starts meanwhile is not charged to it. */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "counted by jobsIn")
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
 }
 
 object SparkSpec {

@@ -211,4 +211,46 @@ class AlertSinkSpec extends SparkSpec {
     assert(trail.map(_._3) === Seq("delivered", "suppressed", "delivered"))
     assert(sink.log.filter(col("rule") === "drift:stream_vocab_drift").count() === 3L)
   }
+
+  test("the schema-profile rule pages when a key goes missing from a type's payloads, off the grid the monitor wrote") {
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[AlertSink.Alert]
+    val sink = new AlertSink(spark, dir(), cooldownMs = 1000L, deliver = delivered += _)
+    val stateDir = Files.createTempDirectory("schemastate").resolve("st").toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 10:00:00")
+    def events(from: Long, n: Int, props: String) =
+      (from until from + n).map(id => (id, "click", ts, props)).toDF("event_id", "event_type", "ts", "props")
+    val rule = DriftAlerts.schemaProfile(spark, stateDir, minPermille = 500L)
+
+    // every click carries both keys: present 1000‰, no page
+    SchemaProfileStream.applyBatch(spark, events(0L, 4, """{"k": "1", "p": "x"}"""), stateDir, batchId = 0L)
+    assert(sink.sweepDrift(Seq(rule), nowMs = 0L) === 0)
+
+    // the producer stops sending `p`: 4 of 10 clicks carry it, 400‰ < 500‰
+    SchemaProfileStream.applyBatch(spark, events(4L, 6, """{"k": "2"}"""), stateDir, batchId = 1L)
+    assert(sink.sweepDrift(Seq(rule), nowMs = 100L) === 1)
+    assert(delivered.map(_.rule).toSeq === Seq("drift:stream_schema_profile"))
+    assert(delivered.head.message === "event_type=click key=p present=400‰")
+  }
+
+  test("the source-caps rule pages when a source fills its cap, off the state the monitor wrote") {
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[AlertSink.Alert]
+    val sink = new AlertSink(spark, dir(), cooldownMs = 1000L, deliver = delivered += _)
+    val stateDir = Files.createTempDirectory("capstate").resolve("st").toString
+    val k = 3
+    val kind = SourceCapsStream.kind(k)
+    val rule = DriftAlerts.sourceCaps(spark, stateDir, k)
+
+    // two sources, both under the cap: no page
+    kind.applyBatch(spark, Seq((1L, "web"), (2L, "web"), (3L, "wiki")).toDF("doc_id", "source"),
+      stateDir, batchId = 0L)
+    assert(sink.sweepDrift(Seq(rule), nowMs = 0L) === 0)
+
+    // `web` reaches k retained docs (a redelivered doc does not count twice)
+    kind.applyBatch(spark, Seq((2L, "web"), (7L, "web"), (9L, "web")).toDF("doc_id", "source"),
+      stateDir, batchId = 1L)
+    assert(SourceCapsStream.state(spark, stateDir, k).filter($"source" === "web")
+      .select("doc_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 7L))
+    assert(sink.sweepDrift(Seq(rule), nowMs = 100L) === 1)
+    assert(delivered.map(_.message).toSeq === Seq("source=web at cap k=3"))
+  }
 }
