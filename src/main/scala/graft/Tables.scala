@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join, LogicalPlan, Project, ResolvedHint, SubqueryAlias, UnaryNode}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Fixture table loaders and the CDC view over `events`.
@@ -182,8 +183,9 @@ object Tables {
     * required distribution alone, so a one-partition input still pays a
     * `RangePartitioner` sampling job (which recomputes the whole input)
     * and a shuffle into `spark.sql.shuffle.partitions` partitions that AQE
-    * coalesces back into one. Here `df` is planned on the driver (no
-    * Spark job); when [[onePartitionInput]] holds, the result is
+    * coalesces back into one. When [[onePartitionInput]] holds for `df`'s
+    * analyzed plan (which the Dataset already holds: no optimization, no
+    * physical planning, no Spark job), the result is
     * `df.coalesce(1).orderBy(cols)`: `coalesce(1)` reports a single
     * partition, which satisfies the sort's ordered distribution, so no
     * exchange is planned and the sort runs in the input's own task.
@@ -191,29 +193,60 @@ object Tables {
     * plan is a true global sort, so the test guards only parallelism,
     * never the order of the rows. */
   def orderedRows(df: DataFrame, cols: Column*): DataFrame =
-    if (onePartitionInput(df.queryExecution.sparkPlan)) df.coalesce(1).orderBy(cols: _*)
+    if (onePartitionInput(df.queryExecution.analyzed)) df.coalesce(1).orderBy(cols: _*)
     else df.orderBy(cols: _*)
 
   /** [[orderedRows]] with column-name sort keys (ascending). */
   def orderedRows(df: DataFrame, c0: String, cs: String*): DataFrame =
     orderedRows(df, (c0 +: cs).map(col): _*)
 
-  /** Whether `p` reads one partition through narrow operators only —
-    * project, filter, the streamed side of a broadcast hash join — decided
-    * on the driver without a job. The leaf qualifies if it is an RDD scan
-    * (a `SessionFrames` checkpoint) of one partition, or a file scan, not
-    * bucketed, of at most one file no larger than the scan's split size
-    * (one such file is one split; more files may pack into one split too,
-    * but the test need only be sound, not complete). */
-  private def onePartitionInput(p: SparkPlan): Boolean = p match {
-    case _: ProjectExec | _: FilterExec => onePartitionInput(p.children.head)
-    case j: BroadcastHashJoinExec =>
-      onePartitionInput(if (j.buildSide == BuildRight) j.left else j.right)
-    case r: RDDScanExec => r.rdd.getNumPartitions <= 1
-    case f: FileSourceScanExec if !f.bucketedScan =>
-      val files = f.selectedPartitions
-      files.totalNumberOfFiles <= 1 &&
-        files.totalFileSize <= FilePartition.maxSplitBytes(f.relation.sparkSession, files)
+  /** Whether the analyzed plan `p` reads one partition through narrow
+    * operators only: project and filter without a subquery (an IN or
+    * EXISTS subquery is planned as a join), and the streamed side of a join
+    * whose other side alone carries a broadcast hint the join type can
+    * build (the planner then broadcasts that side). The leaf qualifies if
+    * it is an RDD of one partition (a `SessionFrames` checkpoint), or a
+    * file relation, not bucketed, of at most one file no larger than its
+    * split size (one such file is one split; more files may pack into one
+    * split too). Every other node answers false, and false is always safe:
+    * it keeps the range sort, which is correct for any input. So widen the
+    * match only together with a test that pins the new shape's jobs. */
+  private def onePartitionInput(p: LogicalPlan): Boolean = p match {
+    case _: Project | _: Filter if !p.expressions.exists(SubqueryExpression.hasSubquery) =>
+      onePartitionInput(p.children.head)
+    case a: SubqueryAlias => onePartitionInput(a.child)
+    case j: Join => (broadcastHint(j.left), broadcastHint(j.right)) match {
+      case (false, true) if buildsRight(j.joinType) => onePartitionInput(j.left)
+      case (true, false) if buildsLeft(j.joinType) => onePartitionInput(j.right)
+      case _ => false
+    }
+    case r: LogicalRDD => r.rdd.getNumPartitions <= 1
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation if fs.bucketSpec.isEmpty =>
+        val files = fs.location.listFiles(Nil, Nil)
+        files.map(_.files.size).sum <= 1 &&
+          files.flatMap(_.files).map(_.getLen).sum <= FilePartition.maxSplitBytes(fs.sparkSession, files)
+      case _ => false
+    }
+    case _ => false
+  }
+
+  /** Whether `p` carries a broadcast hint, looked for as the optimizer
+    * pulls hints into a join: down through single-child nodes. */
+  private def broadcastHint(p: LogicalPlan): Boolean = p match {
+    case h: ResolvedHint => h.hints.strategy.contains(BROADCAST) ||
+      (h.hints.strategy.isEmpty && broadcastHint(h.child))
+    case u: UnaryNode => broadcastHint(u.child)
+    case _ => false
+  }
+
+  private def buildsRight(t: JoinType): Boolean = t match {
+    case Inner | Cross | LeftOuter | LeftSemi | LeftAnti => true
+    case _ => false
+  }
+
+  private def buildsLeft(t: JoinType): Boolean = t match {
+    case Inner | Cross | RightOuter => true
     case _ => false
   }
 

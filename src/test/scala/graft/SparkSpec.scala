@@ -14,15 +14,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = () // shared session; never stopped per-suite
 
   /** The Spark jobs `body` runs, counted once the listener bus is drained.
-    * `body` runs under a job group of its own, and only that group's jobs
-    * count, so a job another thread starts meanwhile is not charged to it. */
+    * `body` runs under a job group of its own, and a job counts if it
+    * carries that group or none at all (as a job started on a thread that
+    * did not inherit the caller's local properties does), so only a job
+    * another thread runs under its own group, such as a running stream's,
+    * is not charged to `body`. The caller's job group is restored after. */
   def jobsIn[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"jobs-in-${java.util.UUID.randomUUID}"
+    val saved = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+      .map(k => k -> sc.getLocalProperty(k))
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).forall(_ == group))
           jobs.incrementAndGet()
     }
     ListenerBusAccess.drain(sc)
@@ -32,7 +37,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = body
       ListenerBusAccess.drain(sc)
       (out, jobs.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    } finally {
+      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) } // null removes the key
+      sc.removeSparkListener(l)
+    }
   }
 }
 
