@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Micro-profiler: times the named queries twice (cold/warm) against a
   * fixture dir. Usage: sbt "runMain graft.Profile <sfDir> <query> [query...]" */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     // process CPU (all threads: local-mode executors included) next to the
     // wall clock, so a co-tenant's steal shows as wall without CPU

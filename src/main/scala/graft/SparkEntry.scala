@@ -27,4 +27,18 @@ object SparkEntry {
     CdcQueries.oracle ++ ReconcileQueries.oracle ++
       graft.queries.RelQueries.oracle ++ graft.queries.ExtQueries.oracle ++
       graft.queries.StreamQueries.oracle
+
+  /** The local session the command-line mains run on: `cpus` task slots
+    * and as many shuffle partitions, UTC, adaptive execution with
+    * partition coalescing and skew-join splitting, no UI. */
+  private[graft] def localSession(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
 }

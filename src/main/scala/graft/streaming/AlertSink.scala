@@ -212,18 +212,12 @@ object AlertSink {
           when(col("delivered"), lit(StatusAttempted))
             .otherwise(lit(StatusSuppressed)).as("status"))
         val rows = mapped.collect()
-        val dir = new java.io.File(targetDir)
-        Option(dir.listFiles()).foreach(_.foreach(deleteRecursively))
+        StateCommit.sweep(new java.io.File(targetDir))(_ => true)
         AppendState.append(
           spark.createDataFrame(java.util.Arrays.asList(rows: _*), LogSchema),
           targetDir, -1L)
       }
     }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
 
   /** A drift-alert rule: a monitor's maintained REPORT frame (the
     * one-state-many-reports discipline — zero new state is kept for

@@ -1,8 +1,12 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.file.{FileSystemException, Files, StandardCopyOption}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import StateCommit.{deleteTree, readId, stamped, sweep, writeAtomically}
 
 /** Append-only micro-batch state for MONOTONE UNION state — the companion
   * discipline to [[StateCommit]] (which covers ADDITIVE state). Union
@@ -38,7 +42,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 100 TB shape: per-batch I/O is O(batch) — the delta is the only write.
   * Merge-on-read touches base + deltas, which periodic compaction keeps at
   * O(corpus + recent); production would run compaction as the same leveled
-  * merge an LSM tree uses. */
+  * merge an LSM tree uses.
+  *
+  * The `.layout` and `.base` writes, the stamp check, the marker read,
+  * the retire sweep and every delete are [[StateCommit]]'s shared steps;
+  * this module adds only its own legacy rule ([[isLegacyLayoutEntry]])
+  * and the delta publish, the rename of `.tmp-<id>` to `delta=<id>`. The
+  * bucketed posting index of the dedup monitors is [[Monitor.Postings]],
+  * the one caller that passes `partitionCols`. */
 private[streaming] object AppendState {
 
   /** Layout-version stamp written into every state dir (`.layout`). A
@@ -51,25 +62,23 @@ private[streaming] object AppendState {
     * no stamp at all (pre-versioning, or written by [[StateCommit]] /
     * something else). Bump the version on any layout-breaking change. */
   private[streaming] val LayoutId = "graft-append-state v1"
-  private def layoutMarker(targetDir: String) = new java.io.File(targetDir, ".layout")
-
-  /** Crash garbage is not state content: a torn stamp (.layout.tmp), a
-    * torn marker (.base.tmp) or a torn delta (.tmp-<id>) may be the ONLY
-    * leftover of a crash inside the first append's stamp window, and the
-    * module's contract is that replays clear such garbage. */
-  private def isCrashGarbage(name: String): Boolean =
-    name == ".layout.tmp" || name == ".base.tmp" || name.startsWith(".tmp-")
+  private def layoutMarker(targetDir: String) = new File(targetDir, ".layout")
 
   /** A directory entry THIS module's pre-versioning releases wrote:
-    * exactly the delta=/base=/.base layout (plus crash garbage). A dir
+    * exactly the delta=/base=/.base layout, plus crash garbage. A dir
     * containing only these is a legacy AppendState dir — readable as-is
     * and stamped in place at the next write, mirroring [[StateCommit]]'s
-    * legacy path — not an unknown state class to refuse. */
-  private def isLegacyLayoutEntry(f: java.io.File): Boolean =
-    isCrashGarbage(f.getName) ||
-      (f.isDirectory && (f.getName.matches("delta=\\d+") ||
-        f.getName.matches("base=\\d+"))) ||
-      (f.isFile && f.getName == ".base")
+    * legacy path — not an unknown state class to refuse. Crash garbage is
+    * not state content: a torn stamp (.layout.tmp), a torn marker
+    * (.base.tmp) or a torn delta (.tmp-<id>) may be the ONLY leftover of a
+    * crash inside the first append's stamp window, and the module's
+    * contract is that replays clear such garbage. */
+  private def isLegacyLayoutEntry(f: File): Boolean = {
+    val n = f.getName
+    n == ".layout.tmp" || n == ".base.tmp" || n.startsWith(".tmp-") ||
+      (f.isDirectory && Numbered.matches(n)) || (f.isFile && n == ".base")
+  }
+  private val Numbered = "(delta|base)=(\\d+)".r
 
   /** Enforce the layout stamp; on a fresh/absent dir with `forWrite`,
     * create the dir and stamp it. An unstamped NON-empty dir whose
@@ -78,53 +87,38 @@ private[streaming] object AppendState {
     * immediately, stamped at the next write — the hard failure is
     * reserved for genuinely unrecognized content. */
   private def checkLayout(targetDir: String, forWrite: Boolean = false): Unit = {
-    val dir = new java.io.File(targetDir)
-    val m = layoutMarker(targetDir)
-    if (m.exists()) {
-      val got = java.nio.file.Files.readString(m.toPath).trim
-      require(got == LayoutId,
-        s"AppendState: state dir $targetDir has layout '$got' but this build " +
-          s"reads '$LayoutId' — incompatible state layout; rebuild the state " +
-          "from a replay (state dir and checkpoint dir live and die as a unit)")
-    } else if (Option(dir.listFiles()).exists(_.exists(f =>
-        !isLegacyLayoutEntry(f)))) {
-      throw new IllegalArgumentException(
+    val dir = new File(targetDir)
+    if (!stamped(layoutMarker(targetDir), LayoutId)) {
+      require(Option(dir.listFiles()).forall(_.forall(isLegacyLayoutEntry)),
         s"AppendState: state dir $targetDir is non-empty but carries no " +
           s"'.layout' stamp and its contents are not this module's " +
           s"delta=/base= layout — it was written by a different state " +
           s"class; refusing to read it as '$LayoutId'. " +
           "Rebuild the state from a replay on a fresh target dir")
-    } else if (forWrite) {
-      dir.mkdirs()
-      val tmp = new java.io.File(targetDir, ".layout.tmp")
-      java.nio.file.Files.writeString(tmp.toPath, LayoutId)
-      java.nio.file.Files.move(tmp.toPath, m.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      if (forWrite) {
+        dir.mkdirs()
+        writeAtomically(layoutMarker(targetDir), LayoutId)
+      }
     }
   }
 
-  private def deltaDir(targetDir: String, batchId: Long) =
-    new java.io.File(targetDir, s"delta=$batchId")
-  private def tmpDir(targetDir: String, batchId: Long) =
-    new java.io.File(targetDir, s".tmp-$batchId")
-  private def baseDir(targetDir: String, upTo: Long) =
-    new java.io.File(targetDir, s"base=$upTo")
-  private def baseMarker(targetDir: String) = new java.io.File(targetDir, ".base")
+  private def deltaDir(targetDir: String, batchId: Long) = new File(targetDir, s"delta=$batchId")
+  private def tmpDir(targetDir: String, batchId: Long) = new File(targetDir, s".tmp-$batchId")
+  private def baseDir(targetDir: String, upTo: Long) = new File(targetDir, s"base=$upTo")
+  private def baseMarker(targetDir: String) = new File(targetDir, ".base")
 
   /** Highest batch id folded into the compacted base, or −1 if never
     * compacted. */
   def baseId(targetDir: String): Long = {
     checkLayout(targetDir)
-    val m = baseMarker(targetDir)
-    if (m.exists()) java.nio.file.Files.readString(m.toPath).trim.toLong else -1L
+    readId(baseMarker(targetDir))
   }
 
   /** Committed delta batch ids (ascending), EXCLUDING those folded into the
     * base. */
   def deltaIds(targetDir: String): Seq[Long] = {
     val base = baseId(targetDir)
-    Option(new java.io.File(targetDir).listFiles()).map(_.toSeq
+    Option(new File(targetDir).listFiles()).map(_.toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("delta="))
       .map(_.getName.stripPrefix("delta=").toLong)
       .filter(_ > base).sorted).getOrElse(Nil)
@@ -166,9 +160,9 @@ private[streaming] object AppendState {
     // could publish the other's rows — a crash mid-write orphans at most
     // one dot-dir (invisible to readers, bounded by crash count)
     val tmp =
-      if (oob) new java.io.File(targetDir, s".tmp-oob-${UUID.randomUUID()}")
+      if (oob) new File(targetDir, s".tmp-oob-${UUID.randomUUID()}")
       else tmpDir(targetDir, batchId)
-    if (tmp.exists()) deleteQuietly(tmp) // torn write from a previous crash
+    if (tmp.exists()) deleteTree(tmp) // torn write from a previous crash
     val w = delta.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
@@ -178,36 +172,29 @@ private[streaming] object AppendState {
     // idempotent, so an absent empty delta reads identically to a present
     // one, and a replay of the batch recomputes empty and skips again.
     if (partitionCols.nonEmpty && !hasParquetFile(tmp)) {
-      deleteQuietly(tmp)
+      deleteTree(tmp)
       return
     }
-    var id = batchId
-    var attempts = 0
-    var published = false
-    while (!published) {
-      try {
-        java.nio.file.Files.move(tmp.toPath, deltaDir(targetDir, id).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        published = true
-      } catch {
-        case e: java.nio.file.FileSystemException if oob =>
-          attempts += 1
-          if (attempts > 5) {
-            deleteQuietly(tmp)
+    def publish(id: Long, attempt: Int): Unit =
+      try { Files.move(tmp.toPath, deltaDir(targetDir, id).toPath, StandardCopyOption.ATOMIC_MOVE) }
+      catch {
+        case e: FileSystemException if oob =>
+          if (attempt > 5) {
+            deleteTree(tmp)
             throw new IllegalStateException(
               s"AppendState: out-of-band delta id allocation kept colliding " +
-                s"on $targetDir ($attempts attempts) — append-only state " +
+                s"on $targetDir ($attempt attempts) — append-only state " +
                 "dirs require a SINGLE writer process (out-of-band ids are " +
                 "check-then-act); serialize writers or give each its own dir", e)
           }
-          id = math.max(nextFreeId(targetDir), id + 1)
+          publish(math.max(nextFreeId(targetDir), id + 1), attempt + 1)
       }
-    }
+    publish(batchId, 1)
   }
 
   /** Any schema-bearing parquet part file anywhere under `dir`? */
-  private def hasParquetFile(dir: java.io.File): Boolean =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).exists { f =>
+  private def hasParquetFile(dir: File): Boolean =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).exists { f =>
       (f.isFile && f.getName.endsWith(".parquet")) ||
         (f.isDirectory && hasParquetFile(f))
     }
@@ -254,7 +241,7 @@ private[streaming] object AppendState {
     val upTo = folded.max
     val all = rawFrom(spark, targetDir, baseId(targetDir), folded).get
     val target = baseDir(targetDir, upTo)
-    if (target.exists()) deleteQuietly(target) // orphan from a previous crash
+    if (target.exists()) deleteTree(target) // orphan from a previous crash
     // one pass: the fold streams into the fresh base (it never reads the
     // dir it writes, so nothing state-sized is materialized first)
     val merged = merge(all)
@@ -268,28 +255,21 @@ private[streaming] object AppendState {
     // column-order difference vs partition-discovered deltas. The
     // republish recomputes the fold, which is empty here.
     if (partitionCols.nonEmpty && !hasParquetFile(target)) {
-      deleteQuietly(target)
+      deleteTree(target)
       merged.write.parquet(target.toString)
     }
-    val tmp = new java.io.File(targetDir, ".base.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, upTo.toString)
-    java.nio.file.Files.move(tmp.toPath, baseMarker(targetDir).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeAtomically(baseMarker(targetDir), upTo.toString)
     // Retire by LISTING, not by the folded set: a previous compaction that
     // crashed after its marker flip left folded-but-undeleted delta dirs
     // (ids ≤ the marker) and a superseded base dir that no later fold
     // would revisit via `folded`/`oldBase` — readers filter on the marker
     // so they are invisible, but without this sweep the disk leak is
     // permanent. Only this module's own numbered entries are touched.
-    Option(new java.io.File(targetDir).listFiles())
-      .getOrElse(Array.empty[java.io.File]).foreach { f =>
-        val n = f.getName
-        if (n.matches("delta=\\d+") && n.stripPrefix("delta=").toLong <= upTo)
-          deleteQuietly(f)
-        else if (n.matches("base=\\d+") && n.stripPrefix("base=").toLong != upTo)
-          deleteQuietly(f)
-      }
+    sweep(new File(targetDir)) {
+      case Numbered("delta", id) => id.toLong <= upTo
+      case Numbered("base", id) => id.toLong != upTo
+      case _ => false
+    }
   }
 
   /** Default compaction trigger, and the default every stream's
@@ -310,9 +290,4 @@ private[streaming] object AppendState {
     * applyBatch. */
   def compactionDue(targetDir: String, every: Int): Boolean =
     every > 0 && deltaIds(targetDir).size >= every
-
-  private def deleteQuietly(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteQuietly))
-    f.delete(); ()
-  }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, min, struct}
+import org.apache.spark.sql.functions.{col, lit, min, pmod, struct}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -142,6 +142,38 @@ object Monitor {
   class Members(protected val emptySchema: String) extends Union {
     protected def merge(state: DataFrame, rows: DataFrame): DataFrame =
       state.unionByName(rows).distinct()
+  }
+
+  /** A posting index under [[AppendState]]: rows carrying the long column
+    * `key`, each delta (and compacted base) laid out in Hive-style
+    * `bucket=K` subdirs, K = pmod(key, 16). A batch's probe reads only the
+    * buckets of its own keys, so the scan prunes whole state files
+    * (PartitionFilters) instead of reading the full index: at 100 TB the
+    * index is the corpus-sized state, and a small batch touches a bounded
+    * subset of buckets. The bucket column lives only in the state layout
+    * and no probe returns it. Duplicate rows are merged by distinct, at
+    * compaction and by each reader. */
+  private[streaming] final class Postings(key: String) {
+    private val IndexBuckets = 16
+    private def bucketed(rows: DataFrame): DataFrame =
+      rows.withColumn("bucket", pmod(col(key), lit(IndexBuckets.toLong)).cast("int"))
+
+    def append(rows: DataFrame, targetDir: String, batchId: Long): Unit =
+      AppendState.append(bucketed(rows), targetDir, batchId, partitionCols = Seq("bucket"))
+
+    /** The raw postings in the buckets of `batch`'s keys, duplicates kept;
+      * None before the first append. A collect of at most 16 buckets
+      * decides the partition filter, which is lossless: a posting that
+      * matches a batch key lies in that key's bucket. */
+    def probe(spark: SparkSession, targetDir: String, batch: DataFrame): Option[DataFrame] = {
+      val buckets = bucketed(batch.select(col(key))).select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      AppendState.raw(spark, targetDir)
+        .map(_.filter(col("bucket").isin(buckets: _*)).drop("bucket"))
+    }
+
+    def compact(spark: SparkSession, targetDir: String): Unit =
+      AppendState.compact(spark, targetDir, _.distinct(), partitionCols = Seq("bucket"))
   }
 
   /** One row per `key`: the least struct of its `payload` columns, a pick

@@ -27,10 +27,10 @@ import graft.operators.Multimodal
   *    leave a doc-without-pairs (a singleton until the replay lands),
   *    never a pair member with no doc row (silent under-count) — the
   *    [[NeardupStream]] meta-first discipline.
-  *  - `index`: (doc_id, band, __key, phash) — 6 band rows per doc,
-  *    partitionBy'd on `bucket = pmod(__key, IndexBuckets)` so a batch's
-  *    posting fetch prunes whole delta files (PartitionFilters), the
-  *    [[NeardupStream.IndexBuckets]] layout discipline. Distinct-on-read.
+  *  - `index`: (doc_id, band, __key, phash) — 6 band rows per doc, a
+  *    [[Monitor.Postings]] bucketed on `__key` (as [[NeardupStream]]'s
+  *    is on `sh`), so a batch's posting fetch prunes whole delta files
+  *    (PartitionFilters). Distinct-on-read.
   *    Deliberately SLIM — features live once per doc in `feat`, never 6×
   *    in the band rows.
   *  - `feat`: (doc_id, feat, ‖feat‖²) — the doc-keyed integer-feature
@@ -72,12 +72,6 @@ object MultimodalDedupStream {
     * lossless-banding bound (6 bands × 10 bits). */
   val MaxHamming = 5
 
-  /** Band-key bucket count for the index state's file layout (the
-    * [[NeardupStream.IndexBuckets]] discipline): deltas and bases are
-    * partitionBy'd on `pmod(__key, IndexBuckets)` so the probe prunes to
-    * the batch's buckets before the posting join runs. */
-  val IndexBuckets = 16
-
   /** Sem-pair acceptance: cosine ≥ 0.9 over the integer features —
     * [[Multimodal.semPairs]]'s default, the batch twin's bound. */
   val MinCosine = 0.9
@@ -96,10 +90,6 @@ object MultimodalDedupStream {
     hashes.select(col("doc_id"), col("phash"),
       explode(sequence(lit(0), lit(5))).as("band"))
       .withColumn("__key", expr("(phash >> (band * 10)) & 1023"))
-
-  private def bucketed(bands: DataFrame): DataFrame =
-    bands.withColumn("bucket",
-      pmod(col("__key"), lit(IndexBuckets.toLong)).cast("int"))
 
   /** Pairs completed by this batch: probe bands ⋈ merged-index bands on
     * (band, key), exact `bit_count(xor)` verify, min/max-normalized and
@@ -172,6 +162,7 @@ object MultimodalDedupStream {
   private val Pairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, hamming BIGINT")
   private val Feats = new Monitor.Members("doc_id BIGINT, feat ARRAY<BIGINT>, __n2 BIGINT")
   private val SemPairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, cosine DOUBLE")
+  private val Index = new Monitor.Postings("__key")
 
   /** The per-doc metadata ledger (doc_id, source, n_chars), distinct —
     * ~16 bytes + the source string per doc ever delivered, never the
@@ -194,15 +185,6 @@ object MultimodalDedupStream {
   /** The LIVE semantic pair table (distinct-merge-on-read). */
   def semPairState(spark: SparkSession, targetDir: String): DataFrame =
     SemPairs.state(spark, s"$targetDir/sem_pairs")
-
-  /** The probe-facing index view, PRUNED to the given buckets via the
-    * partition column (whole delta files skip) — duplicate rows stay;
-    * [[newPairs]]'s distinct absorbs them. */
-  private def indexForBuckets(spark: SparkSession, targetDir: String,
-                              buckets: Seq[Int]): Option[DataFrame] =
-    AppendState.raw(spark, s"$targetDir/index")
-      .map(_.filter(col("bucket").isin(buckets: _*))
-        .select(col("doc_id"), col("phash"), col("band"), col("__key")))
 
   /** The live keep/reweight decision grid — [[Multimodal.softDedup]]
     * (shared verbatim with the batch `ext_multimodal_dedup`) over the
@@ -231,8 +213,7 @@ object MultimodalDedupStream {
   /** Fold all three states' deltas ([[AppendState.compact]] — run from
     * [[applyBatch]] once `compactEvery` deltas accumulate on the index). */
   def compact(spark: SparkSession, targetDir: String): Unit = {
-    AppendState.compact(spark, s"$targetDir/index", _.distinct(),
-      partitionCols = Seq("bucket"))
+    Index.compact(spark, s"$targetDir/index")
     Docs.compact(spark, s"$targetDir/docs")
     Pairs.compact(spark, s"$targetDir/pairs")
     Feats.compact(spark, s"$targetDir/feat")
@@ -260,16 +241,10 @@ object MultimodalDedupStream {
     AppendState.append(
       feats.filter(col("__n2") > 0).select(col("doc_id"), col("feat"), col("__n2")),
       s"$targetDir/feat", batchId)
-    val batchBands =
-      bucketed(bandRows(feats.select(col("doc_id"), col("phash")))).localCheckpoint(true)
-    AppendState.append(batchBands, s"$targetDir/index", batchId,
-      partitionCols = Seq("bucket"))
-    // the partition filter is decided by an IndexBuckets-bounded collect;
-    // lossless: a posting matching a batch band key is in a batch bucket
-    val batchBuckets =
-      batchBands.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
-    val merged = indexForBuckets(spark, targetDir, batchBuckets)
-      .getOrElse(batchBands.select(col("doc_id"), col("phash"), col("band"), col("__key")))
+    val batchBands = bandRows(feats.select(col("doc_id"), col("phash"))).localCheckpoint(true)
+    Index.append(batchBands, s"$targetDir/index", batchId)
+    // duplicate postings stay in the probe: newPairs' distinct absorbs them
+    val merged = Index.probe(spark, s"$targetDir/index", batchBands).getOrElse(batchBands)
       .localCheckpoint(true) // BOTH tiers probe it; materialize the fetch once
     val fresh = newPairs(batchBands, merged, maxHamming)
     AppendState.append(fresh.localCheckpoint(true), s"$targetDir/pairs", batchId)

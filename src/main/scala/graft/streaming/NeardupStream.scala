@@ -59,11 +59,10 @@ import graft.functions.TextFns
   *
   * 100 TB shape, per batch: df and postings are computed over the index
   * SEMI-JOINED to the batch's shingles (posting-list fetch, not a corpus
-  * aggregate) — and the index LAYOUT backs that claim: deltas and bases
-  * are partitionBy'd on `pmod(sh, IndexBuckets)`, so the fetch first
-  * prunes to the batch's buckets via PartitionFilters (whole state files
-  * skip) before the semi-join runs. The only writes are the three
-  * O(batch) deltas.
+  * aggregate) — and the index LAYOUT backs that claim: the index is a
+  * [[Monitor.Postings]] bucketed on `sh`, so the fetch first prunes to the
+  * batch's buckets via PartitionFilters (whole state files skip) before
+  * the semi-join runs. The only writes are the three O(batch) deltas.
   * Batch-replay form oracle-gated as `stream_neardup` against the
   * exact-Jaccard SQL; live restart / redelivery / torn-write paths in
   * StreamingSpec. */
@@ -77,22 +76,6 @@ object NeardupStream {
     * correction). Generous by default — at fixture scale nothing reaches
     * it; the mechanism is pinned in StateLayoutSpec with a small cap. */
   val DefaultMaxDf = 10000L
-
-  /** Shingle-hash bucket count for the index state's file layout: every
-    * index delta (and compacted base) is partitionBy'd on
-    * `bucket = pmod(sh, IndexBuckets)`, so the probe's posting fetch
-    * filters to the BATCH's buckets and the scan prunes whole delta files
-    * (PartitionFilters — pinned in StateLayoutSpec) instead of reading
-    * the full accumulated index. This is what makes the scaladoc's
-    * "partitioned by shingle, pruned co-located read" claim true in the
-    * LAYOUT, not just the prose: at 100 TB the index is the corpus-sized
-    * state, and a small micro-batch touches a bounded subset of buckets.
-    * The bucket column is derived (pmod of sh), lives only in the state
-    * layout, and is dropped from every reader-facing frame. */
-  val IndexBuckets = 16
-
-  private def bucketed(sh: DataFrame): DataFrame =
-    sh.withColumn("bucket", pmod(col("sh"), lit(IndexBuckets.toLong)).cast("int"))
 
   /** Distinct (doc_id, sh) shingle rows of a document frame — the unit of
     * both the probe side and the index state. Deterministic per doc. */
@@ -213,16 +196,6 @@ object NeardupStream {
       .map(_.select(col("doc_id"), col("sh")).distinct())
       .getOrElse(spark.range(0).select(col("id").as("doc_id"), lit(0L).as("sh")))
 
-  /** The probe-facing index view: the raw delta union PRUNED to the given
-    * buckets via the partition column (whole delta files skip), then
-    * narrowed to the reader schema. Duplicate rows stay — [[newPairs]] is
-    * duplicate-tolerant, so the probe never pays a corpus-wide distinct. */
-  private def indexForBuckets(spark: SparkSession, targetDir: String,
-                              buckets: Seq[Int]): Option[DataFrame] =
-    AppendState.raw(spark, s"$targetDir/index")
-      .map(_.filter(col("bucket").isin(buckets: _*))
-        .select(col("doc_id"), col("sh")))
-
   def sizeState(spark: SparkSession, targetDir: String): DataFrame =
     AppendState.raw(spark, s"$targetDir/sizes")
       .map(_.groupBy(col("doc_id")).agg(min(col("__n")).as("__n")))
@@ -244,6 +217,7 @@ object NeardupStream {
     Meta.state(spark, s"$targetDir/meta")
 
   private val Meta = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
+  private val Index = new Monitor.Postings("sh")
 
   /** Cross-source duplication matrix off the LIVE pair + metadata states
     * ([[graft.operators.Dedup.crossSourceMatrix]] — the report definition
@@ -258,8 +232,7 @@ object NeardupStream {
   /** Fold all four states' deltas (run periodically; bounds read
     * amplification — see [[AppendState.compact]]). */
   def compact(spark: SparkSession, targetDir: String): Unit = {
-    AppendState.compact(spark, s"$targetDir/index", _.distinct(),
-      partitionCols = Seq("bucket"))
+    Index.compact(spark, s"$targetDir/index")
     AppendState.compact(spark, s"$targetDir/sizes",
       _.groupBy(col("doc_id")).agg(min(col("__n")).as("__n")))
     AppendState.compact(spark, s"$targetDir/pairs", p => mergePairs(p.limit(0), p))
@@ -284,17 +257,12 @@ object NeardupStream {
     AppendState.append(
       batchDocs.select(col("doc_id"), col("source"), col("n_chars")).distinct(),
       s"$targetDir/meta", batchId)
-    AppendState.append(bucketed(batchSh), s"$targetDir/index", batchId,
-      partitionCols = Seq("bucket"))
+    Index.append(batchSh, s"$targetDir/index", batchId)
     AppendState.append(sizeRows(batchSh), s"$targetDir/sizes", batchId)
-    // probe the raw delta union PRUNED to the batch's buckets (an
-    // IndexBuckets-bounded collect decides the partition filter; lossless:
-    // a posting for a batch shingle is by construction in a batch bucket)
-    // — newPairs is duplicate-tolerant, so the per-batch path never pays
-    // the corpus-wide distinct that indexState (the reader view) applies
-    val batchBuckets = bucketed(batchSh.select(col("sh")).distinct())
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
-    val merged = indexForBuckets(spark, targetDir, batchBuckets)
+    // probe the raw delta union PRUNED to the batch's buckets — newPairs
+    // is duplicate-tolerant, so the per-batch path never pays the
+    // corpus-wide distinct that indexState (the reader view) applies
+    val merged = Index.probe(spark, s"$targetDir/index", batchSh)
       .getOrElse(batchSh.limit(0))
     val fresh = newPairs(batchSh, merged, sizeState(spark, targetDir), maxDf)
     AppendState.append(fresh.localCheckpoint(true), s"$targetDir/pairs", batchId)

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -29,10 +33,18 @@ import org.apache.spark.sql.types.StructType
   * being written, so an eager copy would protect nothing). Bytes written
   * per commit stay O(state): every version is a complete state in flat
   * parquet files directly under `targetDir.vB`, the contract every
-  * external reader relies on. */
+  * external reader relies on.
+  *
+  * The steps both commit protocols take are written once, at the foot of
+  * this object, and [[AppendState]] calls them: [[writeAtomically]] (every
+  * marker and stamp: `.applied`, `.layout`, `.base`), [[readId]] (a
+  * marker's batch id), [[stamped]] (the `.layout` check), [[sweep]] (the
+  * retire-by-listing of superseded versions, deltas and bases) and
+  * [[deleteTree]]. Each module keeps only its own legacy rule: here the
+  * flat-dir fallback of [[committedDir]]. */
 private[streaming] object StateCommit {
 
-  private def markerFile(targetDir: String) = new java.io.File(targetDir + ".applied")
+  private def markerFile(targetDir: String) = new File(targetDir + ".applied")
   private def versionDir(targetDir: String, batchId: Long) = s"$targetDir.v$batchId"
 
   /** Layout-version stamp (sibling `.layout` file, like the `.applied`
@@ -47,35 +59,22 @@ private[streaming] object StateCommit {
     * pre-versioning StateCommit layout and stays readable (the flat-dir
     * fallback in [[committedDir]]); the stamp is added at the next commit. */
   private[streaming] val LayoutId = "graft-state-commit v1"
-  private def layoutFile(targetDir: String) = new java.io.File(targetDir + ".layout")
+  private def layoutFile(targetDir: String) = new File(targetDir + ".layout")
 
   private def checkLayout(targetDir: String): Unit = {
-    val lf = layoutFile(targetDir)
-    if (lf.exists()) {
-      val got = java.nio.file.Files.readString(lf.toPath).trim
-      require(got == LayoutId,
-        s"StateCommit: state at $targetDir has layout '$got' but this build " +
-          s"reads '$LayoutId' — incompatible state layout; rebuild the state " +
-          "from a replay (state dir and checkpoint dir live and die as a unit)")
-    }
-    if (!markerFile(targetDir).exists()) {
-      val dir = new java.io.File(targetDir)
-      val entries = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      require(!entries.exists(f => f.getName.startsWith("delta=") ||
-        f.getName.startsWith("base=") || f.getName == ".base" || f.getName == ".layout"),
-        s"StateCommit: $targetDir holds an AppendState-layout state " +
-          "(delta=/base= entries) — a monitor restarted against a state dir " +
-          "written by an earlier layout generation; refusing to silently " +
-          "reset it. Rebuild the state from a replay on a fresh target dir")
-    }
+    stamped(layoutFile(targetDir), LayoutId)
+    require(markerFile(targetDir).exists() || !Option(new File(targetDir).listFiles()).exists(
+      _.exists(_.getName.matches("(delta|base)=.*|\\.base|\\.layout"))),
+      s"StateCommit: $targetDir holds an AppendState-layout state " +
+        "(delta=/base= entries) — a monitor restarted against a state dir " +
+        "written by an earlier layout generation; refusing to silently " +
+        "reset it. Rebuild the state from a replay on a fresh target dir")
   }
 
   /** Last committed batch id, or −1 before the first commit. */
   def lastApplied(targetDir: String): Long = {
     checkLayout(targetDir)
-    val marker = markerFile(targetDir)
-    if (marker.exists()) java.nio.file.Files.readString(marker.toPath).trim.toLong
-    else -1L
+    readId(markerFile(targetDir))
   }
 
   /** Directory holding the committed state for `id` — normally the
@@ -85,7 +84,7 @@ private[streaming] object StateCommit {
     * pair restarts instead of crashing (the next applyBatch migrates it
     * into the versioned layout). */
   private def committedDir(targetDir: String, id: Long): String = {
-    val versioned = new java.io.File(versionDir(targetDir, id))
+    val versioned = new File(versionDir(targetDir, id))
     if (versioned.exists()) versioned.toString else targetDir
   }
 
@@ -118,18 +117,8 @@ private[streaming] object StateCommit {
       Some(schema.fold(r)(r.schema).parquet(committedDir(targetDir, last)))
     }
     merge(base).write.mode("overwrite").parquet(versionDir(targetDir, batchId))
-    if (!layoutFile(targetDir).exists()) {
-      val lt = new java.io.File(targetDir + ".layout.tmp")
-      java.nio.file.Files.writeString(lt.toPath, LayoutId)
-      java.nio.file.Files.move(lt.toPath, layoutFile(targetDir).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    val tmp = new java.io.File(targetDir + ".applied.tmp")
-    java.nio.file.Files.writeString(tmp.toPath, batchId.toString)
-    java.nio.file.Files.move(tmp.toPath, markerFile(targetDir).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    if (!layoutFile(targetDir).exists()) writeAtomically(layoutFile(targetDir), LayoutId)
+    writeAtomically(markerFile(targetDir), batchId.toString)
     retireVersionsBelow(targetDir, batchId)
   }
 
@@ -137,18 +126,52 @@ private[streaming] object StateCommit {
     * parent dir: a crash between an earlier flip and its delete left a
     * version that deleting only `v<last>` would never revisit. */
   private def retireVersionsBelow(targetDir: String, live: Long): Unit = {
-    val t = new java.io.File(targetDir).getAbsoluteFile
-    val version = (java.util.regex.Pattern.quote(t.getName) + "\\.v(\\d+)").r
-    Option(t.getParentFile.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
-      f.getName match {
-        case version(id) if id.toLong < live => deleteQuietly(f)
-        case _ =>
-      }
+    val t = new File(targetDir).getAbsoluteFile
+    val version = (Pattern.quote(t.getName) + "\\.v(\\d+)").r
+    sweep(t.getParentFile) {
+      case version(id) => id.toLong < live
+      case _ => false
     }
   }
 
-  private def deleteQuietly(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteQuietly))
+  // -- the commit steps both protocols share (AppendState calls them too) --
+
+  /** Write `text` to `<file>.tmp`, then rename it over `file` atomically:
+    * readers see the old text or the new, never a torn one, and a crash
+    * leaves only the `.tmp` that the next write overwrites. */
+  private[streaming] def writeAtomically(file: File, text: String): Unit = {
+    val tmp = new File(file.getPath + ".tmp")
+    Files.writeString(tmp.toPath, text)
+    Files.move(tmp.toPath, file.toPath,
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The batch id a marker file holds, or −1 when it is absent. */
+  private[streaming] def readId(marker: File): Long =
+    if (marker.exists()) Files.readString(marker.toPath).trim.toLong else -1L
+
+  /** Whether the `layout` stamp exists; refuses one that names another
+    * layout than `layoutId` (state dir and checkpoint dir live and die as
+    * a unit, so a state of another generation is rebuilt by replay). */
+  private[streaming] def stamped(layout: File, layoutId: String): Boolean =
+    layout.exists() && {
+      val got = Files.readString(layout.toPath).trim
+      require(got == layoutId,
+        s"$layout stamps layout '$got' but this build " +
+          s"reads '$layoutId' — incompatible state layout; rebuild the state " +
+          "from a replay (state dir and checkpoint dir live and die as a unit)")
+      true
+    }
+
+  /** Delete, best-effort, every entry of `dir` whose name `doomed` accepts. */
+  private[streaming] def sweep(dir: File)(doomed: String => Boolean): Unit =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
+      if (doomed(f.getName)) deleteTree(f)
+    }
+
+  /** Delete `f` and, if it is a directory, everything under it. */
+  private[streaming] def deleteTree(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
     f.delete(); ()
   }
 }

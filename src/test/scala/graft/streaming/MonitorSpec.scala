@@ -35,6 +35,53 @@ class MonitorSpec extends SparkSpec {
     assert(offences.isEmpty, offences.mkString("\n"))
   }
 
+  /** The commit steps both state protocols share, each with the files
+    * allowed to hold it and how many code lines there: the atomic rename
+    * in the one text write and in `AppendState.append`'s delta publish,
+    * the one file delete (inside the recursive `deleteTree`), and the one
+    * bucket `pmod(` of the posting index. */
+  private val sharedSteps = Seq(
+    ("ATOMIC_MOVE", """\bATOMIC_MOVE\b""".r, Map("StateCommit.scala" -> 1, "AppendState.scala" -> 1)),
+    ("a file delete", """\.delete\(\)""".r, Map("StateCommit.scala" -> 1)),
+    ("a bucket pmod(", """pmod\(.*Buckets""".r, Map("Monitor.scala" -> 1)))
+
+  /** Every (file, step) whose count of code lines (comment lines and
+    * trailing `//` comments dropped) differs from the allowed one. */
+  private def stepCopies(files: Seq[(String, String)]): Seq[String] =
+    for {
+      (name, src) <- files
+      code = src.split("\n").toSeq.map(_.replaceAll("""\s//.*$""", ""))
+        .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith))
+      (what, re, allowed) <- sharedSteps
+      n = code.count(l => re.findFirstIn(l).isDefined)
+      if n != allowed.getOrElse(name, 0)
+    } yield s"$name: $what on $n lines, allowed ${allowed.getOrElse(name, 0)}"
+
+  test("each shared commit step is written once in streaming/") {
+    val planted = Seq("TopkStream.scala" ->
+      """  /** a copy in a comment is not code: ATOMIC_MOVE, f.delete() */
+        |  private def publish(tmp: File, to: File): Unit = // ATOMIC_MOVE
+        |    Files.move(tmp.toPath, to.toPath, StandardCopyOption.ATOMIC_MOVE)
+        |  private def rm(f: File): Unit = {
+        |    if (f.isDirectory) f.listFiles().foreach(rm)
+        |    f.delete(); ()
+        |  }
+        |  private def bucketed(df: DataFrame) =
+        |    df.withColumn("bucket", pmod(col("k"), lit(IndexBuckets.toLong)))
+        |""".stripMargin)
+    assert(stepCopies(planted) === Seq(
+      "TopkStream.scala: ATOMIC_MOVE on 1 lines, allowed 0",
+      "TopkStream.scala: a file delete on 1 lines, allowed 0",
+      "TopkStream.scala: a bucket pmod( on 1 lines, allowed 0"))
+    val root = Paths.get("src/main/scala/graft/streaming")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val files = Files.list(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8")).toSeq
+    assert(files.map(_._1).contains("StateCommit.scala"))
+    val copies = stepCopies(files)
+    assert(copies.isEmpty, copies.mkString("\n"))
+  }
+
   test("a documents monitor lists a batch of more than 32 files on the driver, on start and on restart") {
     val root = Files.createTempDirectory("monitor-listing")
     root.toFile.deleteOnExit()

@@ -456,4 +456,61 @@ class StateLayoutSpec extends SparkSpec {
     assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet
       === Set((1L, 10L), (2L, 20L), (3L, 30L)))
   }
+
+  test("StateCommit: a torn marker tmp naming a later batch beside a live marker is invisible, and the next batch commits") {
+    val dir = tmp("sctorn").resolve("state").toString
+    StateCommit.applyBatch(spark, dir, 0L)(_ => Seq((1L, 10L)).toDF("k", "n"))
+    // the crash: batch 1's version and marker tmp were written, the rename
+    // never ran
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "n").write.parquet(s"$dir.v1")
+    Files.writeString(new java.io.File(dir + ".applied.tmp").toPath, "1")
+    assert(StateCommit.lastApplied(dir) === 0L)
+    assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet === Set((1L, 10L)))
+
+    // the replay of batch 1 commits from v0 and flips the marker
+    StateCommit.applyBatch(spark, dir, 1L) { base =>
+      base.get.unionByName(Seq((3L, 30L)).toDF("k", "n"))
+    }
+    assert(StateCommit.lastApplied(dir) === 1L)
+    assert(!new java.io.File(dir + ".applied.tmp").exists())
+    assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet
+      === Set((1L, 10L), (3L, 30L)))
+  }
+
+  test("StateCommit: a first commit that died after its version write and before the stamp and marker is replayed and stamped") {
+    val dir = tmp("scfirst").resolve("state").toString
+    // the crash: v0 landed (with rows the replay will not reproduce), but
+    // neither `.layout` nor `.applied` was written
+    Seq((9L, 90L)).toDF("k", "n").write.parquet(s"$dir.v0")
+    assert(StateCommit.lastApplied(dir) === -1L)
+    intercept[IllegalArgumentException] { StateCommit.state(spark, dir) }
+
+    StateCommit.applyBatch(spark, dir, 0L) { base =>
+      assert(base.isEmpty) // the orphan v0 is not a base
+      Seq((1L, 10L)).toDF("k", "n")
+    }
+    assert(StateCommit.lastApplied(dir) === 0L)
+    assert(Files.readString(new java.io.File(dir + ".layout").toPath).trim
+      === StateCommit.LayoutId)
+    assert(StateCommit.state(spark, dir).as[(Long, Long)].collect().toSet === Set((1L, 10L)))
+  }
+
+  test("AppendState: a fresh dir holding only a torn stamp or a torn base marker reads empty, and the first append publishes delta=0") {
+    for (torn <- Seq(".layout.tmp", ".base.tmp")) {
+      val dir = tmp("astorn").resolve("state").toString
+      new java.io.File(dir).mkdirs()
+      Files.writeString(new java.io.File(dir, torn).toPath,
+        if (torn == ".layout.tmp") AppendState.LayoutId else "7")
+      assert(AppendState.raw(spark, dir).isEmpty, torn)
+      assert(AppendState.baseId(dir) === -1L, torn)
+      assert(AppendState.deltaIds(dir).isEmpty, torn)
+
+      AppendState.append(Seq((1L, "a")).toDF("k", "v"), dir, 0L)
+      assert(AppendState.deltaIds(dir) === Seq(0L), torn)
+      assert(Files.readString(new java.io.File(dir, ".layout").toPath).trim
+        === AppendState.LayoutId, torn)
+      assert(AppendState.raw(spark, dir).get.as[(Long, String)].collect().toSet
+        === Set((1L, "a")), torn)
+    }
+  }
 }
