@@ -998,7 +998,7 @@ object CdcQueries {
     * makes the one-shot slice the fully-merged grid). */
   private val aggKAnonymity: Q = (s, d) => {
     import graft.streaming.KAnonymityStream
-    KAnonymityStream.report(KAnonymityStream.classSlice(events(s, d)))
+    KAnonymityStream.report(KAnonymityStream.slice(events(s, d)))
   }
 
   /** l-diversity release audit (Machanavajjhala et al. 2007) — the
@@ -1019,7 +1019,7 @@ object CdcQueries {
     * fully-merged state). */
   private val aggLDiversity: Q = (s, d) => {
     import graft.streaming.LDiversityStream
-    LDiversityStream.report(LDiversityStream.memberSlice(events(s, d)))
+    LDiversityStream.report(LDiversityStream.slice(events(s, d)))
   }
 
   /** t-closeness release audit (Li, Li & Venkatasubramanian 2007) — the
@@ -1033,7 +1033,7 @@ object CdcQueries {
     * arithmetic and the domain-bounded plan. */
   private val aggTCloseness: Q = (s, d) => {
     import graft.streaming.KAnonymityStream
-    KAnonymityStream.reportTCloseness(KAnonymityStream.classSlice(events(s, d)))
+    KAnonymityStream.reportTCloseness(KAnonymityStream.slice(events(s, d)))
   }
 
   /** Heavy hitters via a Misra–Gries sketch ([[graft.functions.MisraGries]],

@@ -483,7 +483,7 @@ object ExtQueries {
     * makes the one-shot grid slice the fully-merged count grid). */
   private val extDsirModel: Q = (s, d) => {
     import graft.streaming.DsirModelStream
-    DsirModelStream.report(DsirModelStream.gridSlice(documents(s, d)))
+    DsirModelStream.report(DsirModelStream.slice(documents(s, d)))
   }
 
   /** Positional-index phrase search — the retrieval primitive BM25's
@@ -1949,8 +1949,8 @@ object ExtQueries {
     * against the shared Lloyd replay + occupancy rollup. */
   private val extSimIvfOccupancy: Q = (s, d) => {
     import graft.streaming.IvfOccupancyStream
-    IvfOccupancyStream.report(IvfOccupancyStream.gridSlice(
-      embeddings(s, d), intIvfCellsShared(s, d)))
+    IvfOccupancyStream.report(
+      IvfOccupancyStream.kind(intIvfCellsShared(s, d)).slice(embeddings(s, d)))
   }
 
   /** Clustering-quality audit of that same quantizer: per-vector
@@ -3141,7 +3141,7 @@ object ExtQueries {
     * makes the one-shot slice the fully-merged grid). */
   private val extEmbedDrift: Q = (s, d) => {
     import graft.streaming.EmbedDriftStream
-    EmbedDriftStream.report(EmbedDriftStream.gridSlice(embeddings(s, d)))
+    EmbedDriftStream.report(EmbedDriftStream.slice(embeddings(s, d)))
   }
 
   /** Per-label embedding centroid via the typed Aggregator (map-side partial

@@ -4,21 +4,44 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Tables.{fmtTs, fmtTsSql, orderedRows, tsLit}
-import graft.operators.CdcOps
-import graft.streaming.CdcPipeline
+import graft.Tables.{fmtTs, fmtTsSql, orderedReport, orderedRows, tsLit}
+import graft.operators.{CdcOps, Dedup, Multimodal}
+import graft.streaming._
 
 /** Batch-replay forms of the streaming operators (SURVEY §2.1/§2.7).
-  * Structured Streaming's batch/stream unification means
-  * [[CdcPipeline.transform]] is the SAME function the streaming query runs —
-  * these entries pin its semantics under the oracle, while the live
-  * readStream/watermark/foreachBatch/checkpoint path is exercised end-to-end
-  * by `StreamingSpec`.
+  * Structured Streaming's prefix consistency says a stream's result is the
+  * batch query over the same input, so each monitor entry here is three
+  * parts: the monitor's source in batch form (what its `start` reads),
+  * the kind's `batchAnswer` over that input delivered twice (the SAME seed
+  * and fold the live `applyBatch` commits, so the oracle checks the live
+  * composition), and the monitor's report. The live
+  * readStream/watermark/foreachBatch/checkpoint path is exercised
+  * end-to-end by `StreamingSpec`.
   */
 object StreamQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private val OP = Tables.opTypeSql
+
+  /** `rows` delivered twice — the at-least-once redelivery (js:114–115)
+    * every replay below feeds its monitor, which must absorb it. */
+  private def twoDeliveries(rows: DataFrame): DataFrame = rows.unionByName(rows)
+
+  /** [[CdcPipeline.changes]] in batch form, over the events delivered
+    * twice (watermarks are a no-op on bounded input). */
+  private def changes(s: SparkSession, d: String): DataFrame =
+    CdcPipeline.transform(twoDeliveries(Tables.eventsRaw(s, d)))
+
+  /** [[CdcPipeline.uniqueChanges]] in batch form: [[changes]] with the
+    * redelivered event ids collapsed (one hash-aggregate shuffle). */
+  private def uniqueChanges(s: SparkSession, d: String): DataFrame =
+    CdcPipeline.dedupEvents(changes(s, d))
+
+  /** The deduped events, deletes kept, that the privacy and schema
+    * monitors read ([[CdcPipeline.dedupEvents]] over the normalized
+    * stream), over the events delivered twice. */
+  private def uniqueEvents(s: SparkSession, d: String): DataFrame =
+    CdcPipeline.dedupEvents(twoDeliveries(Tables.events(s, d)))
 
   /** js:221–248 — the change-stream tail (server-side $match + projection),
     * replayed over the bounded event log. */
@@ -57,7 +80,7 @@ object StreamQueries {
     * StreamingSpec and the split-invariance property in PropertySpec. */
   private val streamSessionize: Q = (s, d) => {
     val raw = Tables.eventsRaw(s, d)
-    graft.streaming.Sessionize.sessions(CdcPipeline.transform(raw)).toDF()
+    Sessionize.sessions(CdcPipeline.transform(raw)).toDF()
       .transform(orderedRows(_, "user_id", "session_start"))
   }
 
@@ -70,7 +93,7 @@ object StreamQueries {
     val raw = Tables.eventsRaw(s, d)
     CdcPipeline.windowedOpCounts(raw)
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("op_type"), col("n"))
-      .transform(graft.Tables.orderedReport(_, "day", "op_type"))
+      .transform(orderedReport(_, "day", "op_type"))
   }
 
   /** js:114–115 — the at-least-once replay contract: the same change batch
@@ -78,368 +101,250 @@ object StreamQueries {
     * ([[CdcPipeline.dedupEvents]], batch form). The streaming state-store
     * path (`dropDuplicatesWithinWatermark`, cross-micro-batch) is
     * exercised end-to-end by StreamingSpec. */
-  private val streamDedup: Q = (s, d) => {
-    val once = Tables.normalizeTs(Tables.eventsRaw(s, d))
-    CdcPipeline.dedupEvents(once.unionByName(once)) // two deliveries
+  private val streamDedup: Q = (s, d) =>
+    CdcPipeline.dedupEvents(twoDeliveries(Tables.events(s, d)))
       .select(col("event_id"), fmtTs(col("ts")).as("ts_s"), col("user_id"),
         col("event_type"), col("value"))
       .transform(orderedRows(_, "event_id"))
-  }
 
-  /** The corpus-ingest pipeline run in BATCH mode over a DOUBLED delivery
-    * (at-least-once): gate → digest-keyed min-id-wins survivor merge. The
-    * merge is commutative + idempotent, so the doubled log collapses to the
-    * clean single-run answer — which is what the oracle computes directly.
-    * The live path (file stream, checkpointed restart, cross-batch
-    * convergence) is exercised end-to-end by StreamingSpec. */
-  private val streamCorpusIngest: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val once = graft.streaming.CorpusIngest.transform(docs)
-    val twice = once.unionByName(once) // two deliveries
-    graft.streaming.CorpusIngest.mergeSurvivors(twice.limit(0), twice)
+  /** The corpus-ingest pipeline over a doubled delivery: gate → digest-keyed
+    * min-id-wins survivor merge. The merge is commutative + idempotent, so
+    * the doubled log collapses to the clean single-run answer — which is
+    * what the oracle computes directly. */
+  private val streamCorpusIngest: Q = (s, d) =>
+    CorpusIngest.batchAnswer(twoDeliveries(CorpusIngest.transform(Tables.documents(s, d))))
       .select(col("doc_id"), col("lang"), Tables.rnd4(col("quality")).as("quality"))
+      .transform(orderedRows(_, "doc_id"))
+
+  /** The streaming decontamination gate over a doubled delivery: `src0`
+    * plays the held-out eval set, the other sources the corpus stream. The
+    * verdict is a pure per-row function of (document, static index), so the
+    * doubled log's verdicts are byte-identical and the keyed merge
+    * collapses them to the single-run answer — what the oracle computes
+    * directly. */
+  private val streamDecontam: Q = (s, d) => {
+    val docs = Tables.documents(s, d)
+    val index = Decontam.evalIndex(docs.filter(col("source") === "src0"))
+    Decontam.batchAnswer(twoDeliveries(Decontam.gate(docs.filter(col("source") =!= "src0"), index)))
       .transform(orderedRows(_, "doc_id"))
   }
 
-  /** The streaming decontamination gate run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): `src0` plays the held-out eval set, the other
-    * sources the corpus stream. The verdict is a pure per-row function of
-    * (document, static index), so the doubled log's verdicts are
-    * byte-identical and the keyed merge collapses them to the single-run
-    * answer — what the oracle computes directly. The live path (file
-    * stream, checkpointed restart, redelivery) is in StreamingSpec. */
-  private val streamDecontam: Q = (s, d) => {
-    import graft.streaming.{CorpusIngest, Decontam}
-    val docs = Tables.documents(s, d)
-    val index = Decontam.evalIndex(docs.filter(col("source") === "src0"))
-    val once = Decontam.gate(docs.filter(col("source") =!= "src0"), index)
-    val twice = once.unionByName(once) // two deliveries
-    Decontam.mergeVerdicts(twice.limit(0), twice).transform(orderedRows(_, "doc_id"))
-  }
-
-  /** The ingest near-dup pipeline run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): the index merge is union-distinct and a
-    * pair is a pure function of the two docs' shingle sets, so the
-    * doubled log collapses to the single-run pair set — which equals the
-    * full-corpus exact-Jaccard similarity join the oracle computes
-    * directly (candidate generation is lossless: qualifying pairs share
-    * ≥ 1 shingle by J > 0). Live path (file stream, checkpointed restart,
-    * cross-batch pair completion) in StreamingSpec. */
   /** Session-shared completed pair state of the streaming near-dup
-    * machinery (the [[ExtQueries]] ngramPairsShared discipline): the
-    * scaladoc on stream_cross_source has always said it rides "the SAME
-    * pair state stream_neardup maintains" — the one-state-many-reports
-    * design — yet each query re-ran the identical shingle explode +
-    * self-probe + merge. One probe per fixture dir now fills the state
-    * both reports read (the checkpoint holds the completed PAIR set —
-    * duplicate-mass growth class, same as ngramPairsShared; corpus text
-    * never lands in it). Redelivery/duplicate-row tolerance is pinned in
-    * StateLayoutSpec (doubled index ≡ single) and exercised live in
-    * StreamingSpec — the benched form measures the clean-probe cost.
-    * Within the probe, no eager checkpoint on the shingle rows: the
-    * self-probe fast path hands them to the PPJoin machinery, whose
-    * tracked persists hold them lazily. parquet metadata makes the doc count
-    * ~free; df ≤ #docs, so the no-hot-shingle decision costs zero jobs. */
+    * machinery (the [[ExtQueries]] ngramPairsShared discipline): one probe
+    * per fixture dir fills the state both `stream_neardup` and
+    * `stream_cross_source` read — the one-state-many-reports design (the
+    * checkpoint holds the completed PAIR set — duplicate-mass growth
+    * class, same as ngramPairsShared; corpus text never lands in it). The
+    * pair set equals the full-corpus exact-Jaccard similarity join the
+    * oracle computes directly (candidate generation is lossless:
+    * qualifying pairs share ≥ 1 shingle by J > 0). Redelivery/duplicate-row
+    * tolerance is pinned in StateLayoutSpec (doubled index ≡ single) and
+    * exercised live in StreamingSpec — the benched form measures the
+    * clean-probe cost. Within the probe, no eager checkpoint on the
+    * shingle rows: the self-probe fast path hands them to the PPJoin
+    * machinery, whose tracked persists hold them lazily. parquet metadata
+    * makes the doc count ~free; df ≤ #docs, so the no-hot-shingle
+    * decision costs zero jobs. */
   private[graft] def neardupPairsShared(s: SparkSession, d: String): DataFrame =
     graft.SessionFrames.frame(s, d, "neardup_pairs") {
-      import graft.streaming.NeardupStream
       val docs = Tables.documents(s, d)
       val once = NeardupStream.shingleRows(docs)
-      val fresh = NeardupStream.newPairs(once, once, NeardupStream.sizeRows(once),
-        totalDocs = Some(docs.count()))
-      NeardupStream.mergePairs(fresh.limit(0), fresh)
+      NeardupStream.Pairs.batchAnswer(NeardupStream.newPairs(once, once,
+        NeardupStream.sizeRows(once), totalDocs = Some(docs.count())))
     }
 
   private val streamNeardup: Q = (s, d) =>
     neardupPairsShared(s, d).transform(orderedRows(_, "doc_a", "doc_b"))
 
-  /** The incremental per-source cap run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): min-k per source is commutative/associative/
-    * idempotent, so the doubled log collapses through [[graft.streaming
-    * .SourceCapsStream.capK]] to the one-shot batch answer — the oracle IS
-    * ext_source_caps' SQL. Live restart/redelivery in StreamingSpec. */
+  /** The incremental per-source cap over a doubled delivery: min-k per
+    * source is commutative/associative/idempotent, so the doubled log
+    * collapses to the one-shot batch answer, ranked by
+    * [[SourceCapsStream.capK]] as the live state read is — the oracle IS
+    * ext_source_caps' SQL. */
   private val streamSourceCaps: Q = (s, d) => {
-    import graft.streaming.SourceCapsStream
+    val k = ExtQueries.SourceCapK
     val docs = Tables.documents(s, d).select("doc_id", "source")
-    val twice = docs.unionByName(docs) // two deliveries
-    graft.Tables.orderedReport(
-      SourceCapsStream.capK(twice, ExtQueries.SourceCapK), "source", "rk")
+    orderedReport(
+      SourceCapsStream.capK(SourceCapsStream.kind(k).batchAnswer(twoDeliveries(docs)), k),
+      "source", "rk")
   }
 
-  /** The incremental prefix-template monitor run in BATCH mode over a
-    * DOUBLED delivery (at-least-once): the state is membership rows and
-    * every report aggregate is distinct-/min-based, so the doubled log
-    * collapses to the one-shot batch answer — the oracle IS
-    * ext_prefix_dup's SQL. Live checkpointed restart/redelivery in
-    * StreamingSpec. */
-  /** The incremental payload-shape monitor run in BATCH mode over a
-    * DOUBLED delivery (at-least-once): redelivered rows die in the SAME
-    * event-id dedup gate the live stream runs ([[CdcPipeline.dedupEvents]]
-    * — batch form, one hash-aggregate shuffle), then the batch collapses
-    * through the stream's own grid slice + additive merge + report to the
-    * one-shot batch answer — the oracle IS agg_schema_profile's SQL. Live
-    * checkpointed restart/redelivery (a NEW key arriving mid-stream) in
-    * StreamingSpec; grid-bounded state growth pinned in StateLayoutSpec. */
+  /** The incremental payload-shape monitor over a doubled delivery:
+    * redelivered rows die in the SAME event-id dedup gate the live stream
+    * runs, then the grid slice + additive merge + report give the one-shot
+    * batch answer — the oracle IS agg_schema_profile's SQL. Grid-bounded
+    * state growth pinned in StateLayoutSpec. */
   private val streamSchemaProfile: Q = (s, d) => {
-    import graft.streaming.SchemaProfileStream
-    val ev = Tables.events(s, d)
     // checkpoint the deduped frame (slice reads it twice: parse leg +
     // slim total leg) and the domain-bounded grid (report reads it
     // twice: key cells + per-type totals) — without them the union +
     // dedup shuffle and the from_json parse re-run once per leg
-    val once = CdcPipeline.dedupEvents(ev.unionByName(ev)) // two deliveries
-      .localCheckpoint(true)
-    val grid = SchemaProfileStream.slice(once).localCheckpoint(true)
-    SchemaProfileStream.report(SchemaProfileStream.mergeState(grid.limit(0), grid))
-      .transform(graft.Tables.orderedReport(_, "event_type", "key"))
+    val once = uniqueEvents(s, d).localCheckpoint(true)
+    val grid = SchemaProfileStream.batchAnswer(once).localCheckpoint(true)
+    SchemaProfileStream.report(grid).transform(orderedReport(_, "event_type", "key"))
   }
 
-  /** The incremental embedding-drift monitor run in BATCH mode over a
-    * DOUBLED delivery (at-least-once): redelivered vectors die in the
-    * SAME vec_id collapse the live stream's ledger anti-join applies
-    * (on a bounded frame, one dedup shuffle), then the batch collapses
-    * through the stream's own grid slice + additive merge + rank report
-    * to the one-shot batch answer — the oracle IS ext_embed_drift's SQL.
-    * Live restart/redelivery/replay in StreamingSpec. */
-  /** The continuously-maintained DSIR importance model run in BATCH mode
-    * over a DOUBLED delivery (at-least-once): redelivered documents die
-    * in the SAME doc_id dedup the live ledger anti-join applies, then the
-    * batch collapses through the stream's own grid slice + additive merge
-    * + model report to the one-shot batch answer — the oracle IS
-    * ext_dsir_model's SQL. Live checkpointed restart/redelivery/replay in
-    * StreamingSpec. */
+  /** The continuously-maintained DSIR importance model over a doubled
+    * delivery: redelivered documents die in the kind's doc_id dedup (the
+    * batch form of the live ledger anti-join), then the grid slice +
+    * additive merge + model report give the one-shot batch answer — the
+    * oracle IS ext_dsir_model's SQL. */
   private val streamDsirModel: Q = (s, d) => {
-    import graft.streaming.DsirModelStream
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val once = docs.unionByName(docs).dropDuplicates("doc_id") // two deliveries
-    val grid = DsirModelStream.gridSlice(once)
-    DsirModelStream.report(DsirModelStream.mergeGrid(grid.limit(0), grid))
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text"))
+    DsirModelStream.report(DsirModelStream.batchAnswer(twoDeliveries(docs)))
   }
 
-  /** The IVF index-health monitor run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): redelivered vectors die in the SAME vec_id
-    * dedup the live ledger anti-join applies, assignments run against the
-    * SAME frozen codebook, and the batch collapses through the stream's
-    * own slice + additive merge + balance report to the one-shot answer —
-    * the oracle IS ext_sim_ivf_occupancy's SQL (Lloyd replay + rollup).
-    * Live checkpointed restart/redelivery/replay in StreamingSpec. */
+  /** The IVF index-health monitor over a doubled delivery: redelivered
+    * vectors die in the kind's vec_id dedup, assignments run against the
+    * SAME frozen codebook, and the balance report gives the one-shot
+    * answer — the oracle IS ext_sim_ivf_occupancy's SQL (Lloyd replay +
+    * rollup). */
   private val streamIvfOccupancy: Q = (s, d) => {
-    import graft.streaming.IvfOccupancyStream
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val once = e.unionByName(e).dropDuplicates("vec_id") // two deliveries
-    val cells = ExtQueries.intIvfCellsShared(s, d)
-    val grid = IvfOccupancyStream.gridSlice(once, cells)
-    IvfOccupancyStream.report(IvfOccupancyStream.mergeGrid(grid.limit(0), grid))
+    IvfOccupancyStream.report(
+      IvfOccupancyStream.kind(ExtQueries.intIvfCellsShared(s, d)).batchAnswer(twoDeliveries(e)))
   }
 
+  /** The incremental embedding-drift monitor over a doubled delivery:
+    * redelivered vectors die in the kind's vec_id dedup, then the grid
+    * slice + additive merge + rank report give the one-shot batch answer
+    * — the oracle IS ext_embed_drift's SQL. */
   private val streamEmbedDrift: Q = (s, d) => {
-    import graft.streaming.EmbedDriftStream
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val once = e.unionByName(e).dropDuplicates("vec_id") // two deliveries
-    val grid = EmbedDriftStream.gridSlice(once)
-    EmbedDriftStream.report(EmbedDriftStream.mergeGrid(grid.limit(0), grid))
+    EmbedDriftStream.report(EmbedDriftStream.batchAnswer(twoDeliveries(e)))
   }
 
-  /** The incremental k-anonymity release gate run in BATCH mode over a
-    * DOUBLED delivery (at-least-once): redelivered rows die in the SAME
-    * event-id dedup gate the live stream runs, then the batch collapses
-    * through the stream's own class slice + additive merge + band report
-    * to the one-shot batch answer — the oracle IS agg_k_anonymity's SQL.
-    * Live checkpointed restart/redelivery in StreamingSpec. */
+  /** The incremental k-anonymity release gate over a doubled delivery:
+    * redelivered rows die in the SAME event-id dedup gate the live stream
+    * runs, then the class slice + additive merge + band report give the
+    * one-shot batch answer — the oracle IS agg_k_anonymity's SQL. */
   private val streamKAnonymity: Q = (s, d) => {
-    import graft.streaming.KAnonymityStream
-    val ev = Tables.events(s, d)
-    val once = CdcPipeline.dedupEvents(ev.unionByName(ev)) // two deliveries
     // the report reads the grid twice (band rollup + stats row):
     // checkpoint the domain-bounded frame so the union + dedup + class
     // aggregate run once, not per leg
-    val grid = KAnonymityStream.classSlice(once).localCheckpoint(true)
-    KAnonymityStream.report(KAnonymityStream.mergeCounts(grid.limit(0), grid))
+    val grid = KAnonymityStream.batchAnswer(uniqueEvents(s, d)).localCheckpoint(true)
+    KAnonymityStream.report(grid)
   }
 
   /** The cross-source duplication matrix read off the near-dup stream's
-    * maintained pair + metadata states, run in BATCH mode: the
-    * one-state-many-reports discipline again — the SAME pair state
-    * `stream_neardup` maintains serves the wholesale-drop grid with only
-    * the slim per-doc metadata ledger added. The self-probe completes
-    * all pairs in one batch; the doubled metadata delivery collapses by
-    * distinct; the report definition is [[graft.operators.Dedup
-    * .crossSourceMatrix]] shared verbatim with the batch form, so the
-    * oracle IS ext_dedup_cross_source's SQL. Live path (pair completion
-    * across batches + the meta ledger) in StreamingSpec. */
+    * pair + metadata states — the one-state-many-reports discipline: the
+    * SAME pair state `stream_neardup` maintains serves the wholesale-drop
+    * grid with only the slim per-doc metadata ledger added, its doubled
+    * delivery collapsed by the ledger's distinct merge. The report
+    * definition is [[Dedup.crossSourceMatrix]] shared verbatim with the
+    * batch form, so the oracle IS ext_dedup_cross_source's SQL. */
   private val streamCrossSource: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val meta = docs.select(col("doc_id"), col("source"), col("n_chars"))
-    graft.operators.Dedup.crossSourceMatrix(
-      neardupPairsShared(s, d), // the SAME pair state stream_neardup reads
-      meta.unionByName(meta).distinct()) // two deliveries collapse
+    val meta = Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
+    Dedup.crossSourceMatrix(neardupPairsShared(s, d),
+      NeardupStream.Meta.batchAnswer(twoDeliveries(meta)))
   }
 
-  /** The ingest IMAGE near-dup pipeline run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): a payload's 60-bit pHash is a pure
-    * function of its bytes, so the doubled hash membership collapses by
-    * distinct; the band probe ([[graft.streaming.MultimodalDedupStream
-    * .newPairs]] — the stream's own machinery, self-probing the one
-    * batch) emits byte-equal pairs that the distinct merge collapses; and
-    * the decision report is [[graft.operators.Multimodal.softDedup]]
-    * shared verbatim with the batch tier — the oracle IS
-    * ext_multimodal_dedup's SQL. The decode rides the session-shared
-    * hash checkpoint ([[ExtQueries.imageHashesShared]] — the
-    * intIvfCellsShared discipline: decode once, serve three surfaces).
-    * Live path (cross-batch pair completion, redelivery, restart) in
-    * StreamingSpec. */
-  private val streamMultimodalDedup: Q = (s, d) => {
-    import graft.streaming.MultimodalDedupStream
-    val docs = Tables.documents(s, d)
-    val once = ExtQueries.imageHashesShared(s, d)
-    val twice = once.unionByName(once).distinct() // two deliveries collapse
+  /** The Hamming pair state of the ingest IMAGE near-dup pipeline over a
+    * doubled delivery: a payload's 60-bit pHash is a pure function of its
+    * bytes, so the doubled hash membership collapses by distinct, and the
+    * band probe ([[MultimodalDedupStream.newPairs]] — the stream's own
+    * machinery, self-probing the one batch) emits byte-equal pairs that
+    * the pair state's distinct merge collapses. The decode rides the
+    * session-shared hash checkpoint ([[ExtQueries.imageHashesShared]] —
+    * decode once, serve three surfaces). */
+  private def imagePairs(s: SparkSession, d: String): DataFrame = {
+    val hashes = twoDeliveries(ExtQueries.imageHashesShared(s, d)).distinct()
       .localCheckpoint(true) // probe side AND index side read the bands
-    val bands = MultimodalDedupStream.bandRows(twice)
-    val fresh = MultimodalDedupStream.newPairs(bands, bands)
-    graft.operators.Multimodal.softDedup(
-        docs.select(col("doc_id")),
-        MultimodalDedupStream.mergePairs(fresh.limit(0), fresh))
-      .transform(orderedRows(_, "doc_id"))
+    val bands = MultimodalDedupStream.bandRows(hashes)
+    MultimodalDedupStream.Pairs.batchAnswer(MultimodalDedupStream.newPairs(bands, bands))
   }
+
+  /** The image near-dup decision report over [[imagePairs]]:
+    * [[Multimodal.softDedup]] shared verbatim with the batch tier — the
+    * oracle IS ext_multimodal_dedup's SQL. */
+  private val streamMultimodalDedup: Q = (s, d) =>
+    Multimodal.softDedup(Tables.documents(s, d).select(col("doc_id")), imagePairs(s, d))
+      .transform(orderedRows(_, "doc_id"))
 
   /** The SEMANTIC image-dedup grid off the multimodal dedup stream's
-    * states, run in BATCH mode over a DOUBLED delivery: the SAME band
-    * probe that serves the Hamming tier yields the candidates (no
-    * hamming cap), each candidate's two ends verify by cosine against
-    * the doc-keyed feature ledger ([[graft.streaming
-    * .MultimodalDedupStream.newSemPairs]] — features stored once per
+    * states over a doubled delivery: the SAME band probe that serves the
+    * Hamming tier yields the candidates (no hamming cap), each candidate's
+    * two ends verify by cosine against the doc-keyed feature ledger
+    * ([[MultimodalDedupStream.newSemPairs]] — features stored once per
     * doc, never fanned into the band rows), and the decision grid is
-    * [[graft.operators.Multimodal.softDedup]] shared verbatim with the
-    * batch `ext_multimodal_semdedup` — so the oracle IS that query's
-    * SQL. Redelivered fingerprints collapse by distinct (pure per
-    * payload); live cross-batch completion in StreamingSpec. */
+    * [[Multimodal.softDedup]] shared verbatim with the batch
+    * `ext_multimodal_semdedup` — so the oracle IS that query's SQL.
+    * Redelivered fingerprints collapse by distinct (pure per payload). */
   private val streamMultimodalSemdedup: Q = (s, d) => {
-    import graft.streaming.MultimodalDedupStream
-    val docs = Tables.documents(s, d)
-    val once = ExtQueries.imageFeaturesShared(s, d)
-    val twice = once.unionByName(once).distinct() // two deliveries collapse
+    val feats = twoDeliveries(ExtQueries.imageFeaturesShared(s, d)).distinct()
       .localCheckpoint(true) // probe side, index side AND ledger read it
-    val bands = MultimodalDedupStream.bandRows(
-      twice.select(col("doc_id"), col("phash")))
-    val feats = twice.filter(col("__n2") > 0)
-      .select(col("doc_id"), col("feat"), col("__n2"))
-    val fresh = MultimodalDedupStream.newSemPairs(bands, bands, feats)
-    graft.operators.Multimodal.softDedup(
-        docs.select(col("doc_id")),
-        MultimodalDedupStream.mergePairs(fresh.limit(0), fresh))
+    val bands = MultimodalDedupStream.bandRows(feats.select(col("doc_id"), col("phash")))
+    val ledger = feats.filter(col("__n2") > 0).select(col("doc_id"), col("feat"), col("__n2"))
+    Multimodal.softDedup(Tables.documents(s, d).select(col("doc_id")),
+        MultimodalDedupStream.SemPairs.batchAnswer(
+          MultimodalDedupStream.newSemPairs(bands, bands, ledger)))
       .transform(orderedRows(_, "doc_id"))
   }
 
-  /** The cross-source IMAGE-duplication matrix read off the multimodal
-    * dedup stream's maintained pair + metadata states, run in BATCH mode —
-    * the one-state-many-reports discipline: the SAME pair state
-    * `stream_multimodal_dedup` maintains serves the wholesale-drop grid
-    * with only the slim (doc_id, source, n_chars) metadata ledger added
-    * (appended FIRST in the apply order). The self-probe completes all
-    * pairs in one batch; the doubled metadata delivery collapses by
-    * distinct; the report definition is [[graft.operators.Dedup
-    * .crossSourceMatrix]] shared verbatim with the batch form, so the
-    * oracle IS ext_multimodal_cross_source's SQL. Live path in
-    * StreamingSpec. */
+  /** The cross-source IMAGE-duplication matrix off the SAME pair state as
+    * `stream_multimodal_dedup` plus the slim (doc_id, source, n_chars)
+    * metadata ledger, its doubled delivery collapsed by the ledger's
+    * distinct merge; the report definition is [[Dedup.crossSourceMatrix]]
+    * shared verbatim with the batch form, so the oracle IS
+    * ext_multimodal_cross_source's SQL. */
   private val streamMultimodalCrossSource: Q = (s, d) => {
-    import graft.streaming.MultimodalDedupStream
-    val docs = Tables.documents(s, d)
-    val once = ExtQueries.imageHashesShared(s, d)
-    val twice = once.unionByName(once).distinct().localCheckpoint(true)
-    val bands = MultimodalDedupStream.bandRows(twice)
-    val fresh = MultimodalDedupStream.newPairs(bands, bands)
-    val meta = docs.select(col("doc_id"), col("source"), col("n_chars"))
-    graft.operators.Dedup.crossSourceMatrix(
-      MultimodalDedupStream.mergePairs(fresh.limit(0), fresh),
-      meta.unionByName(meta).distinct()) // two deliveries collapse
+    val meta = Tables.documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
+    Dedup.crossSourceMatrix(imagePairs(s, d),
+      MultimodalDedupStream.Docs.batchAnswer(twoDeliveries(meta)))
   }
 
-  /** The t-closeness report read off the k-anonymity stream's maintained
-    * class grid, run in BATCH mode over a DOUBLED delivery — the
-    * one-state-many-reports discipline (the (day, type) count state
-    * serving nine trend reports): the SAME grid KAnonymityStream
-    * maintains serves the third privacy tier with zero extra state.
-    * Redelivered rows die in the same event-id dedup gate; the oracle IS
-    * agg_t_closeness's SQL. */
-  private val streamTCloseness: Q = (s, d) => {
-    import graft.streaming.KAnonymityStream
-    val ev = Tables.events(s, d)
-    val once = CdcPipeline.dedupEvents(ev.unionByName(ev)) // two deliveries
-    val grid = KAnonymityStream.classSlice(once)
-    KAnonymityStream.reportTCloseness(
-      KAnonymityStream.mergeCounts(grid.limit(0), grid))
-  }
+  /** The t-closeness report read off the k-anonymity stream's class grid
+    * over a doubled delivery — the one-state-many-reports discipline: the
+    * SAME grid KAnonymityStream maintains serves the third privacy tier
+    * with zero extra state. The oracle IS agg_t_closeness's SQL. */
+  private val streamTCloseness: Q = (s, d) =>
+    KAnonymityStream.reportTCloseness(KAnonymityStream.batchAnswer(uniqueEvents(s, d)))
 
-  /** The incremental l-diversity homogeneity gate run in BATCH mode over
-    * a DOUBLED delivery (at-least-once): the state is (class, user)
-    * MEMBERSHIP rows and the report's per-class counts are DISTINCT-user
-    * counts, so the doubled log is absorbed algebraically — no
-    * watermark/StateCommit gate needed (contrast stream_k_anonymity's
-    * additive counts) — and collapses to the one-shot batch answer: the
-    * oracle IS agg_l_diversity's SQL. Live checkpointed
-    * restart/redelivery/compaction in StreamingSpec. */
-  private val streamLDiversity: Q = (s, d) => {
-    import graft.streaming.LDiversityStream
-    val ev = Tables.events(s, d)
-    val once = ev.unionByName(ev) // two deliveries, NO dedup gate
-    // the report checkpoints the per-class grid internally; the slice
-    // feeds it once, so no extra checkpoint here
-    LDiversityStream.report(LDiversityStream.mergeMembers(
-      LDiversityStream.memberSlice(once).limit(0),
-      LDiversityStream.memberSlice(once)))
-  }
+  /** The incremental l-diversity homogeneity gate over a doubled
+    * delivery: the state is (class, user) MEMBERSHIP rows merged by set
+    * union, so the doubled log is absorbed algebraically — no dedup gate
+    * (contrast stream_k_anonymity's additive counts) — and collapses to
+    * the one-shot batch answer: the oracle IS agg_l_diversity's SQL. */
+  private val streamLDiversity: Q = (s, d) =>
+    // the report checkpoints the per-class grid internally; the batch
+    // answer feeds it once, so no extra checkpoint here
+    LDiversityStream.report(LDiversityStream.batchAnswer(twoDeliveries(Tables.eventsRaw(s, d))))
 
-  /** The incremental URL-canonicalization dedup run in BATCH mode over a
-    * DOUBLED delivery (at-least-once): the state is membership rows and
-    * every report column is distinct-/min-/grouped-sum-based, so the
-    * doubled log collapses to the one-shot batch answer — the oracle IS
-    * ext_dedup_url's SQL. Live checkpointed restart/redelivery in
-    * StreamingSpec. */
+  /** The incremental URL-canonicalization dedup over a doubled delivery:
+    * the state is membership rows and every report column is
+    * distinct-/min-/grouped-sum-based, so the doubled log collapses to the
+    * one-shot batch answer — the oracle IS ext_dedup_url's SQL. */
   private val streamUrlDedup: Q = (s, d) => {
-    import graft.streaming.UrlDedupStream
     val urls = Tables.documents(s, d)
       .select(col("doc_id"), ExtQueries.syntheticUrl.as("raw_url"))
-    val twice = UrlDedupStream.slice(urls.unionByName(urls))
-    UrlDedupStream.report(twice).transform(orderedRows(_, "canon_url"))
+    UrlDedupStream.report(UrlDedupStream.batchAnswer(twoDeliveries(urls)))
+      .transform(orderedRows(_, "canon_url"))
   }
 
-  private val streamPrefixDup: Q = (s, d) => {
-    import graft.streaming.PrefixDupStream
-    val docs = Tables.documents(s, d)
-    val twice = PrefixDupStream.slice(docs.unionByName(docs))
-    PrefixDupStream.report(twice)
-  }
+  /** The incremental prefix-template monitor over a doubled delivery: the
+    * state is membership rows and every report aggregate is distinct-/
+    * min-based, so the doubled log collapses to the one-shot batch answer
+    * — the oracle IS ext_prefix_dup's SQL. */
+  private val streamPrefixDup: Q = (s, d) =>
+    PrefixDupStream.report(PrefixDupStream.batchAnswer(twoDeliveries(Tables.documents(s, d))))
 
-  /** The incremental funnel run in BATCH mode over a DOUBLED delivery
-    * (at-least-once): per-user first-event state is an element-wise min, so
-    * the doubled log collapses through the keyed min-merge to the clean
-    * single-run state, and the report over it is the oracle's direct
-    * computation. First-event chain semantics by design — see
-    * [[graft.streaming.FunnelStream]] for why the strict chain is not
-    * incrementally computable with bounded state. The live path (file
-    * stream, checkpointed restart, redelivery) is in StreamingSpec. */
-  private val streamFunnel: Q = (s, d) => {
-    import graft.streaming.FunnelStream
-    val raw = Tables.eventsRaw(s, d)
-    val once = FunnelStream.userState(CdcPipeline.transform(raw))
-    val twice = once.unionByName(once) // two deliveries
-    FunnelStream.report(FunnelStream.mergeStates(twice.limit(0), twice))
-  }
+  /** The incremental funnel over a doubled delivery: per-user first-event
+    * state is an element-wise min, so the doubled log collapses through
+    * the keyed min-merge to the clean single-run state, and the report
+    * over it is the oracle's direct computation. First-event chain
+    * semantics by design — see [[FunnelStream]] for why the strict chain
+    * is not incrementally computable with bounded state. */
+  private val streamFunnel: Q = (s, d) =>
+    FunnelStream.report(FunnelStream.kind().batchAnswer(changes(s, d)))
 
-  /** The incremental funnel's conversion-lag report run in BATCH mode over
-    * a DOUBLED delivery: the same min-merged state table as
-    * [[streamFunnel]], rolled up to p50/p90/mean seconds over first-event
-    * chain completers via the shared domain-histogram quantiles. The
-    * oracle replays the first-event semantics with its own row_number
-    * ranking — rank-vs-histogram equivalence is part of what's pinned. */
-  private val streamConversionLag: Q = (s, d) => {
-    import graft.streaming.FunnelStream
-    val raw = Tables.eventsRaw(s, d)
-    val once = FunnelStream.userState(CdcPipeline.transform(raw))
-    val twice = once.unionByName(once) // two deliveries
-    FunnelStream.lagReport(FunnelStream.mergeStates(twice.limit(0), twice))
-  }
+  /** The incremental funnel's conversion-lag report: the same min-merged
+    * state table as [[streamFunnel]], rolled up to p50/p90/mean seconds
+    * over first-event chain completers via the shared domain-histogram
+    * quantiles. The oracle replays the first-event semantics with its own
+    * row_number ranking — rank-vs-histogram equivalence is part of what's
+    * pinned. */
+  private val streamConversionLag: Q = (s, d) =>
+    FunnelStream.lagReport(FunnelStream.kind().batchAnswer(changes(s, d)))
 
   /** The watermarked daily-bars aggregation run in BATCH mode — the same
     * [[CdcPipeline.windowedDailyBars]] the streaming query executes
@@ -451,243 +356,135 @@ object StreamQueries {
     CdcPipeline.windowedDailyBars(raw)
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("open"),
         col("high"), col("low"), col("close"), col("n_events"))
-      .transform(graft.Tables.orderedReport(_, "day"))
+      .transform(orderedReport(_, "day"))
   }
 
-  /** The incremental daily top-K leaderboard run in BATCH mode — the same
-    * [[graft.streaming.TopkStream.dailyTypeCounts]] + `report` the
-    * streaming query maintains (dedup is a plain per-id collapse on a
-    * bounded frame; the fixture's ids are already unique). The live path —
-    * watermarked event-id dedup for redelivered rows, batch-id marker for
-    * replayed batches, additive state merge, checkpointed restart — is
-    * exercised end-to-end by StreamingSpec. */
-  private val streamTopk: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.TopkStream.report(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** The (day, type) count state [[TopkStream]] maintains, over a doubled
+    * delivery whose redelivered rows die in the event-id dedup — ONE fact
+    * table behind nine reports (leaderboard, CUSUM, forecast, Sen's slope,
+    * Mann–Kendall, changepoint, binseg tree, anomaly days, LTTB). Deletes
+    * are dropped by the shared transform, so each report's oracle is its
+    * batch twin's SQL with the 'error' filter spliced in. */
+  private def dailyTypeCounts(s: SparkSession, d: String): DataFrame =
+    TopkStream.batchAnswer(uniqueChanges(s, d))
 
-  /** The continuously-maintained CUSUM monitor run in BATCH mode — the
-    * second report off the SAME (day, type) count state `stream_topk`
-    * maintains (one state table, two reports). Deletes dropped by the
-    * shared transform, so the oracle filters 'error' where the batch
-    * `window_cusum` does not. */
-  private val streamCusum: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.TopkStream.cusumReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** [[dailyTypeCounts]] collapsed to per-day totals at report time (state
+    * stays per-type so every sibling report shares it). */
+  private def dailyTotals(s: SparkSession, d: String): DataFrame =
+    dailyTypeCounts(s, d).groupBy(col("day")).agg(sum(col("n")).as("n"))
 
-  /** The ingest Benford monitor run in BATCH mode: the shared transform's
-    * slice counts through the shared report — the additive 9-row state's
-    * replay protection (watermarked row dedup + transactional batch-id
-    * guard) is [[graft.streaming.BenfordStream]]'s doc; the oracle is
-    * string-derived from agg_benford's SQL with the transform's delete
-    * filter spliced in. */
-  private val streamBenford: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.BenfordStream.report(
-      graft.streaming.BenfordStream.digitCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** The incremental daily top-K leaderboard. */
+  private val streamTopk: Q = (s, d) => TopkStream.report(dailyTypeCounts(s, d))
 
-  /** Holt forecast run in BATCH mode over the same (day, type) count
-    * state `stream_topk` maintains — the third report off ONE fact table
-    * (leaderboard, CUSUM, forecast). Deletes dropped by the shared
-    * transform, so the oracle adds the 'error' filter to window_holt's
-    * SQL — string-derived from it so the twins cannot drift. */
-  private val streamHolt: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.TopkStream.holtReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** The continuously-maintained CUSUM monitor. */
+  private val streamCusum: Q = (s, d) => TopkStream.cusumReport(dailyTypeCounts(s, d))
 
-  /** The robust-trend pair (Sen's slope estimator + Mann–Kendall test)
-    * over the SAME maintained (day, type) count state — the full
-    * monitoring suite (who leads / has the level shifted / where is it
-    * heading / is the trend real / how fast) from ONE fact table. Both
-    * oracles string-derived from their batch twins with the transform's
-    * delete filter spliced in. */
-  private val streamTheilsen: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    CdcQueries.theilsenReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** Holt forecast. */
+  private val streamHolt: Q = (s, d) => TopkStream.holtReport(dailyTypeCounts(s, d))
 
-  private val streamMannKendall: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    CdcQueries.mannKendallReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** The robust-trend pair (Sen's slope estimator + Mann–Kendall test). */
+  private val streamTheilsen: Q = (s, d) => CdcQueries.theilsenReport(dailyTypeCounts(s, d))
 
-  /** Changepoint detection over the SAME maintained (day, type) count
-    * state as topk/cusum/theilsen/mann_kendall — "WHEN did the level
-    * shift" answered live off the one fact table the suite already
-    * maintains (the per-day totals collapse the |types| dimension at
-    * report time; state stays per-type so every sibling report shares
-    * it). Oracle = the batch twin's SQL with the transform's delete
-    * filter spliced in — one definition per statistic. */
-  private val streamChangepoint: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    CdcQueries.changepointReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw)))
-        .groupBy(col("day")).agg(sum(col("n")).as("n")))
-  }
+  private val streamMannKendall: Q = (s, d) => CdcQueries.mannKendallReport(dailyTypeCounts(s, d))
 
-  /** LTTB chart downsampling over the SAME maintained (day, type) count
-    * state — the dashboard-serving decimation as the eighth report off
-    * the one fact table (a live chart fetches 12 points per type, not
-    * the span). Oracle = the batch twin's unrolled SQL with the
-    * transform's delete filter spliced. */
-  private val streamLttb: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.operators.TimeSeries.lttb(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))),
-      "event_type", "day", "n", buckets = 10)
-      .transform(graft.Tables.orderedReport(_, "event_type", "rank"))
-  }
+  /** Changepoint detection: "WHEN did the level shift", answered live. */
+  private val streamChangepoint: Q = (s, d) => CdcQueries.changepointReport(dailyTotals(s, d))
 
-  /** The depth-2 binseg tree over the SAME maintained (day, type) count
-    * state — the ninth report off the one fact table. Oracle = the batch
-    * twin's SQL with the transform's delete filter spliced. */
-  private val streamChangepointTree: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    CdcQueries.changepointTreeReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw)))
-        .groupBy(col("day")).agg(sum(col("n")).as("n")))
-  }
+  /** LTTB chart downsampling — a live chart fetches 12 points per type,
+    * not the span. */
+  private val streamLttb: Q = (s, d) =>
+    graft.operators.TimeSeries.lttb(dailyTypeCounts(s, d), "event_type", "day", "n", buckets = 10)
+      .transform(orderedReport(_, "event_type", "rank"))
 
-  /** The 2σ daily-anomaly alarm over the SAME maintained (day, type)
-    * count state — the seventh report off the one fact table. Oracle =
-    * the batch twin's SQL with the transform's delete filter spliced. */
-  private val streamAnomalyDays: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    CdcQueries.anomalyDaysReport(
-      graft.streaming.TopkStream.dailyTypeCounts(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw)))
-        .groupBy(col("day")).agg(sum(col("n")).as("n")))
-  }
+  /** The depth-2 binseg tree. */
+  private val streamChangepointTree: Q = (s, d) =>
+    CdcQueries.changepointTreeReport(dailyTotals(s, d))
 
-  /** The continuously-maintained per-type value quantiles run in BATCH
-    * mode — the same [[graft.streaming.QuantilesStream.histogram]] +
-    * `report` the streaming query maintains as (type, cents) count state
-    * (the domain-histogram IS the streaming state: additive, price-domain-
+  /** The 2σ daily-anomaly alarm. */
+  private val streamAnomalyDays: Q = (s, d) => CdcQueries.anomalyDaysReport(dailyTotals(s, d))
+
+  /** The ingest Benford monitor: the additive 9-row state's replay
+    * protection (row dedup + transactional batch-id guard) is
+    * [[BenfordStream]]'s doc; the oracle is string-derived from
+    * agg_benford's SQL with the transform's delete filter spliced in. */
+  private val streamBenford: Q = (s, d) =>
+    BenfordStream.report(BenfordStream.batchAnswer(uniqueChanges(s, d)))
+
+  /** The continuously-maintained per-type value quantiles: the
+    * domain-histogram IS the streaming state (additive, price-domain-
     * bounded). Deletes dropped by the shared transform, so the oracle
-    * filters 'error' where the batch `agg_value_quantiles` does not. The
-    * live path — watermarked dedup, transactional batch-id guard,
-    * checkpointed restart — is exercised end-to-end by StreamingSpec. */
-  private val streamValueQuantiles: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.QuantilesStream.report(
-      graft.streaming.QuantilesStream.histogram(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+    * filters 'error' where the batch `agg_value_quantiles` does not. */
+  private val streamValueQuantiles: Q = (s, d) =>
+    QuantilesStream.report(QuantilesStream.batchAnswer(uniqueChanges(s, d)))
 
-  /** The continuously-maintained heavy-hitters sketch run in BATCH mode —
-    * the same [[graft.streaming.HeavyHittersStream.sketch]] + `report` the
-    * streaming query maintains as ≤ K-counter Misra–Gries state. K = 256
-    * exceeds the oracle fixtures' distinct-user count, so no counter is
-    * evicted and the sketch is exact under the plain top-k oracle (the
-    * `agg_heavy_hitters` discipline); the merged-sketch error bound in
-    * eviction mode is pinned by SketchesSpec. Deletes dropped by the
-    * shared transform, so the oracle filters 'error'. The live path is
-    * exercised end-to-end by StreamingSpec. */
-  private val streamHeavyHitters: Q = (s, d) => {
-    val raw = Tables.eventsRaw(s, d)
-    graft.streaming.HeavyHittersStream.report(
-      graft.streaming.HeavyHittersStream.sketch(
-        CdcPipeline.dedupEvents(CdcPipeline.transform(raw))))
-  }
+  /** The continuously-maintained heavy-hitters sketch: ≤ K-counter
+    * Misra–Gries state. K = 256 exceeds the oracle fixtures'
+    * distinct-user count, so no counter is evicted and the sketch is exact
+    * under the plain top-k oracle (the `agg_heavy_hitters` discipline);
+    * the merged-sketch error bound in eviction mode is pinned by
+    * SketchesSpec. Deletes dropped by the shared transform, so the oracle
+    * filters 'error'. */
+  private val streamHeavyHitters: Q = (s, d) =>
+    HeavyHittersStream.report(HeavyHittersStream.batchAnswer(uniqueChanges(s, d)))
 
-  /** The incremental SCD2 build run in BATCH mode over a DOUBLED delivery
-    * (at-least-once): state is the event_id-keyed deduped change set, so
-    * the doubled log collapses through the set-union merge to the clean
-    * single-run change set, and the report derives version/validity from
-    * it — BYTE-identical to the batch `window_scd2` materialization (the
-    * oracle is the same SQL), because unlike the funnel this state carries
-    * the full fact set, not a lossy summary. Live path (file stream,
-    * checkpointed restart, redelivery) is in StreamingSpec. */
-  private val streamScd2: Q = (s, d) => {
-    import graft.streaming.Scd2Stream
-    val raw = Tables.eventsRaw(s, d)
-    // projection-only legs: mergeEvents' event_id collapse IS the dedup,
-    // so a per-leg dropDuplicates would be a redundant second shuffle
-    val once = Scd2Stream.project(CdcPipeline.transform(raw))
-    val twice = once.unionByName(once) // two deliveries
-    Scd2Stream.report(Scd2Stream.mergeEvents(twice.limit(0), twice))
+  /** The incremental SCD2 build over a doubled delivery: state is the
+    * event_id-keyed deduped change set, so the doubled log collapses
+    * through the keyed merge to the clean single-run change set, and the
+    * report derives version/validity from it — BYTE-identical to the batch
+    * `window_scd2` materialization (the oracle is the same SQL), because
+    * unlike the funnel this state carries the full fact set, not a lossy
+    * summary. */
+  private val streamScd2: Q = (s, d) =>
+    Scd2Stream.report(Scd2Stream.batchAnswer(changes(s, d)))
       .select(col("user_id"), col("version"), col("event_type"),
         fmtTs(col("valid_from")).as("valid_from"),
         fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
       .transform(orderedRows(_, "user_id", "version"))
-  }
 
-  /** Incremental retention cohorts run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): the state is distinct (user, kind, week)
-    * facts, so the doubled log collapses through the distinct-union merge
-    * to the clean single-run fact table, and the report over it is the
-    * oracle's direct computation. WEEK-granular anchors by design — see
-    * [[graft.streaming.RetentionStream]] for why second-anchored week_n is
-    * not incrementally computable with bounded state. Live path (file
-    * stream, checkpointed restart, redelivery) in StreamingSpec. */
-  private val streamRetention: Q = (s, d) => {
-    import graft.streaming.RetentionStream
-    val raw = Tables.eventsRaw(s, d)
-    val once = RetentionStream.userWeeks(CdcPipeline.transform(raw))
-    val twice = once.unionByName(once) // two deliveries
-    RetentionStream.report(RetentionStream.mergeFacts(twice.limit(0), twice))
-  }
+  /** Incremental retention cohorts over a doubled delivery: the state is
+    * distinct (user, kind, week) facts, so the doubled log collapses
+    * through the distinct-union merge to the clean single-run fact table,
+    * and the report over it is the oracle's direct computation.
+    * WEEK-granular anchors by design — see [[RetentionStream]] for why
+    * second-anchored week_n is not incrementally computable with bounded
+    * state. */
+  private val streamRetention: Q = (s, d) =>
+    RetentionStream.report(RetentionStream.kind().batchAnswer(changes(s, d)))
 
-  /** The incremental gap-fill resample run in BATCH mode over a DOUBLED
-    * delivery (at-least-once): state is the per-(user, day) argmax fact
-    * table, so the doubled log collapses through the max-merge to the
-    * clean single-run facts, and the LOCF re-grid over them is
-    * BYTE-identical to the batch `window_gap_fill` materialization (the
-    * oracle is the same SQL — [[graft.streaming.GapFillStream.report]]
-    * delegates to the same [[graft.operators.TimeSeries.gapFillDaily]]).
-    * Live path (file stream, checkpointed restart, redelivery) is in
-    * StreamingSpec. */
-  private val streamGapFill: Q = (s, d) => {
-    import graft.streaming.GapFillStream
-    val raw = Tables.eventsRaw(s, d)
-    val once = GapFillStream.slice(CdcPipeline.transform(raw))
-    val twice = once.unionByName(once) // two deliveries
-    GapFillStream.report(GapFillStream.mergeFacts(twice.limit(0), twice))
+  /** The incremental gap-fill resample over a doubled delivery: state is
+    * the per-(user, day) argmax fact table, so the doubled log collapses
+    * through the max-merge to the clean single-run facts, and the LOCF
+    * re-grid over them is BYTE-identical to the batch `window_gap_fill`
+    * materialization (the oracle is the same SQL — [[GapFillStream.report]]
+    * delegates to the same [[graft.operators.TimeSeries.gapFillDaily]]). */
+  private val streamGapFill: Q = (s, d) =>
+    GapFillStream.report(GapFillStream.batchAnswer(changes(s, d)))
       .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("value"), col("observed"))
       .transform(orderedRows(_, "user_id", "day"))
-  }
 
   /** Drift alarm threshold shared by the query entry and StreamingSpec —
     * 100‰ ≈ "a source's quality-pass rate moved 10 points vs baseline". */
   final val DriftPermille = 100
 
+  /** The drift monitors' split of the documents: the even BLOCKS
+    * (`blockParity` 0) are the reference snapshot, the odd ones the
+    * arrivals — block parity, because raw doc_id parity correlates
+    * perfectly with the fixture's round-robin source assignment and would
+    * leave every arrival source baseline-less. */
+  private val blockParity = expr("(doc_id div 20L) % 2")
+
   /** Batch-replay form of the quality-drift monitor: baseline profile from
-    * an even-BLOCK reference snapshot ((doc_id div 20) % 2 — block parity,
-    * because raw doc_id parity correlates perfectly with the fixture's
-    * round-robin source assignment and would leave every arrival source
-    * baseline-less), arrivals = the odd-block slice delivered TWICE
-    * (at-least-once). The verdict is pure per-row, so the doubled delivery
-    * collapses through the keyed merge to the single-run report — what the
-    * oracle computes directly. Live path (file stream, checkpointed
-    * restart, redelivery) is in StreamingSpec. */
+    * the reference blocks, arrivals = the odd blocks' verdicts delivered
+    * twice. The verdict is pure per-row, so the doubled delivery collapses
+    * through the keyed merge to the single-run report — what the oracle
+    * computes directly. */
   private val streamQualityDrift: Q = (s, d) => {
-    import graft.streaming.{CorpusIngest, QualityDrift}
     val docs = Tables.documents(s, d)
-    val blockPar = expr("(doc_id div 20L) % 2")
-    val base = QualityDrift.baseline(docs.filter(blockPar === 0))
-    val once = QualityDrift.gate(docs.filter(blockPar === 1))
-    val twice = once.unionByName(once) // two deliveries
-    QualityDrift.report(QualityDrift.mergeVerdicts(twice.limit(0), twice),
-      base, DriftPermille)
-      .transform(graft.Tables.orderedReport(_, "source"))
+    val base = QualityDrift.baseline(docs.filter(blockParity === 0))
+    val arrivals = QualityDrift.gate(docs.filter(blockParity === 1))
+    QualityDrift.report(QualityDrift.batchAnswer(twoDeliveries(arrivals)), base, DriftPermille)
+      .transform(orderedReport(_, "source"))
   }
 
   /** Vocab-drift contracts shared by the query entry and StreamingSpec:
@@ -695,60 +492,40 @@ object StreamQueries {
   final val VocabDriftK = 64
   final val OovDriftPermille = 50
 
-  /** Batch-replay form of the vocabulary-drift monitor ([[graft.streaming
-    * .VocabDrift]]): static top-k vocab + per-source baseline from the
-    * even-BLOCK reference slice (block parity, same rationale as
-    * [[streamQualityDrift]]), arrivals = the odd-block slice delivered
-    * TWICE. The verdict is pure per-row against the static vocab, so the
-    * doubled delivery collapses through the keyed merge — what the oracle
-    * computes directly. Live path (file stream, checkpointed restart,
-    * degraded wave) is in StreamingSpec. */
+  /** Batch-replay form of the vocabulary-drift monitor ([[VocabDrift]]):
+    * static top-k vocab + per-source baseline from the reference blocks,
+    * arrivals = the odd blocks' verdicts delivered twice. The verdict is
+    * pure per-row against the static vocab, so the doubled delivery
+    * collapses through the keyed merge — what the oracle computes
+    * directly. */
   private val streamVocabDrift: Q = (s, d) => {
-    import graft.streaming.{CorpusIngest, VocabDrift}
     val docs = Tables.documents(s, d)
-    val blockPar = expr("(doc_id div 20L) % 2")
-    val refDocs = docs.filter(blockPar === 0)
+    val refDocs = docs.filter(blockParity === 0)
     val vocab = VocabDrift.vocab(refDocs, VocabDriftK)
     val base = VocabDrift.baseline(refDocs, vocab)
-    val once = VocabDrift.gate(docs.filter(blockPar === 1), vocab)
-    val twice = once.unionByName(once) // two deliveries
-    VocabDrift.report(VocabDrift.mergeVerdicts(twice.limit(0), twice),
-      base, OovDriftPermille)
-      .transform(graft.Tables.orderedReport(_, "source"))
+    val arrivals = VocabDrift.gate(docs.filter(blockParity === 1), vocab)
+    VocabDrift.report(VocabDrift.batchAnswer(twoDeliveries(arrivals)), base, OovDriftPermille)
+      .transform(orderedReport(_, "source"))
   }
 
-  /** Batch-replay form of the KS drift monitor ([[graft.streaming
-    * .KsDriftStream]]): the projection delivered TWICE (at-least-once),
-    * folded through the doc_id-keyed IDEMPOTENT survivor merge — the
-    * doubled delivery collapses by algebra, so the report equals the clean
-    * one-shot computation, which is exactly the batch `ext_ks_drift`
-    * oracle (one shared report definition). Live path (file stream,
-    * checkpointed restart, redelivered wave, replayed batch) is in
-    * StreamingSpec. */
-  private val streamKsDrift: Q = (s, d) => {
-    import graft.streaming.KsDriftStream
-    val once = KsDriftStream.transform(Tables.documents(s, d))
-    val twice = once.unionByName(once)
-    KsDriftStream.report(KsDriftStream.histogram(
-      KsDriftStream.mergeDocs(twice.limit(0), twice)))
-      .transform(graft.Tables.orderedReport(_, "source"))
-  }
+  /** Batch-replay form of the KS drift monitor ([[KsDriftStream]]): the
+    * projection delivered twice, folded through the doc_id-keyed
+    * IDEMPOTENT survivor merge, so the report equals the clean one-shot
+    * computation, which is exactly the batch `ext_ks_drift` oracle (one
+    * shared report definition). */
+  private val streamKsDrift: Q = (s, d) =>
+    KsDriftStream.report(KsDriftStream.histogram(KsDriftStream.batchAnswer(
+        twoDeliveries(KsDriftStream.transform(Tables.documents(s, d))))))
+      .transform(orderedReport(_, "source"))
 
   /** Batch-replay form of the per-source length-profile monitor
-    * ([[graft.streaming.LengthProfileStream]]): the corpus delivered TWICE
-    * (at-least-once), collapsed through the idempotent doc-keyed
-    * membership merge, then the shared Robust median/MAD report — which is
-    * exactly `ext_length_outliers`, so the oracle is shared verbatim. The
-    * live path (file stream, checkpointed restart, redelivery,
-    * compaction) is exercised in StreamingSpec. */
-  private val streamLengthOutliers: Q = (s, d) => {
-    import graft.streaming.LengthProfileStream
-    val docs = Tables.documents(s, d)
-    val once = LengthProfileStream.transform(docs)
-    val twice = once.unionByName(once) // two deliveries
-    LengthProfileStream.report(
-      LengthProfileStream.mergeMembers(twice.limit(0), twice))
-  }
+    * ([[LengthProfileStream]]): the corpus delivered twice, collapsed
+    * through the idempotent doc-keyed membership merge, then the shared
+    * Robust median/MAD report — which is exactly `ext_length_outliers`, so
+    * the oracle is shared verbatim. */
+  private val streamLengthOutliers: Q = (s, d) =>
+    LengthProfileStream.report(LengthProfileStream.batchAnswer(
+      twoDeliveries(LengthProfileStream.transform(Tables.documents(s, d)))))
 
   val queries: Map[String, Q] = Map(
     "source_changestream" -> sourceChangestream,

@@ -23,16 +23,14 @@ import graft.operators.CdcOps
   * batch query — one definition, twins can't drift; batch-replay form
   * oracle-gated as `stream_benford`. */
 object BenfordStream extends Monitor.Additive {
-  protected def slice(batch: DataFrame): DataFrame = digitCounts(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** Per-digit counts of a slice — batch or micro-batch. */
-  def digitCounts(events: DataFrame): DataFrame =
+  def slice(events: DataFrame): DataFrame =
     events.select(CdcOps.benfordDigit(col("value")).as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
 
   /** Additive merge of a counted slice into the 9-row state. */
-  def mergeCounts(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.select(col("digit"), col("n_obs"))
       .unionByName(slice.select(col("digit"), col("n_obs")))
       .groupBy(col("digit")).agg(sum(col("n_obs")).as("n_obs"))

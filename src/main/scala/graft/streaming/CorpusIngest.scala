@@ -26,7 +26,6 @@ import graft.functions.TextFns
   * MERGE INTO keyed on digest with identical convergence).
   */
 object CorpusIngest extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeSurvivors(state, rows)
   protected def emptySchema = "digest STRING, doc_id BIGINT, lang STRING, quality DOUBLE"
 
   /** `documents.parquet` physical schema (the file-stream source needs it
@@ -124,7 +123,7 @@ object CorpusIngest extends Monitor.Union {
     * The struct min is ordered by doc_id first (ids are unique), so the
     * surviving row is exactly the min-id document's — the batch analog is
     * [[graft.operators.Dedup.exactSurvivors]]. */
-  def mergeSurvivors(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "digest", "doc_id", "lang", "quality")
 
   /** The quarantine LEDGER dir a live json ingest maintains next to its
@@ -138,7 +137,7 @@ object CorpusIngest extends Monitor.Union {
   /** The quarantine ledger's state kind. Rows are unique events, so the
     * merge is the plain union. */
   private object Quarantine extends Monitor.Union {
-    protected def merge(state: DataFrame, rows: DataFrame): DataFrame = state.unionByName(rows)
+    def merge(state: DataFrame, rows: DataFrame): DataFrame = state.unionByName(rows)
     protected def emptySchema = "raw_line STRING, src_file STRING, batch_id BIGINT"
   }
 

@@ -27,7 +27,6 @@ import graft.functions.TextFns
   * doc_id with map-side combine. Text never rides an exchange.
   */
 object Decontam extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeVerdicts(state, rows)
   protected def emptySchema = "doc_id BIGINT, source STRING, n_shared BIGINT, clean BOOLEAN"
 
   /** The eval-set inverted index: distinct 13-gram hashes over the eval
@@ -56,7 +55,7 @@ object Decontam extends Monitor.Union {
   /** One verdict row per doc_id across state ∪ batch. Verdicts for the
     * same doc are identical on every delivery (pure per-row decision), so
     * the struct-min is just a deterministic way to keep exactly one. */
-  def mergeVerdicts(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_shared", "clean")
 
   /** Start the gate over the documents in `sourceDir`: per-batch verdicts

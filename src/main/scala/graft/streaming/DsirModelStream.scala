@@ -39,15 +39,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Determinism: the `ext_dsir_weights` discipline — log-probs rounded to
   * integer micronats ON THE VOCAB-BOUNDED GRID only, every count exact.
   * Batch/stream unification: the batch `ext_dsir_model` IS
-  * [[report]]([[gridSlice]](documents)) and the two forms share ONE
+  * [[report]]([[slice]](documents)) and the two forms share ONE
   * oracle SQL; the batch-replay form is oracle-gated as
   * `stream_dsir_model` over a DOUBLED delivery collapsed by the same
   * doc_id dedup the ledger discipline applies; live
   * restart/redelivery/replay/compaction in StreamingSpec. */
 object DsirModelStream extends Monitor.Ledgered {
   protected def key = "doc_id"
-  protected def slice(batch: DataFrame): DataFrame = gridSlice(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
 
   /** The target slice every DSIR form in the repo scores toward (the
     * `en` documents — `ext_dsir_weights`' DsirTargetLang). */
@@ -60,7 +58,7 @@ object DsirModelStream extends Monitor.Ledgered {
     * count and the target-slice count — ONE explode + ONE map-side-
     * combined aggregate onto the vocab-bounded grid. Tokenization is
     * [[graft.functions.TextFns.tokens]], the corpus-wide convention. */
-  def gridSlice(docs: DataFrame): DataFrame =
+  def slice(docs: DataFrame): DataFrame =
     docs.select(isTarget.as("__tgt"),
       explode(graft.functions.TextFns.tokens(col("text"))).as("token"))
       .groupBy(col("token"))
@@ -68,7 +66,7 @@ object DsirModelStream extends Monitor.Ledgered {
         sum(when(col("__tgt"), lit(1L)).otherwise(lit(0L))).as("tgt_tf"))
 
   /** Additive merge of a grid delta into the grid state. */
-  def mergeGrid(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.unionByName(slice)
       .groupBy(col("token"))
       .agg(sum(col("raw_tf")).as("raw_tf"), sum(col("tgt_tf")).as("tgt_tf"))
@@ -94,8 +92,9 @@ object DsirModelStream extends Monitor.Ledgered {
         (micro(col("tgt_tf"), col("__tt")) -
           micro(col("raw_tf"), col("__rt"))).as("logratio_micro"))
       // token-level model grid — vocab grows with the corpus (Heaps' law),
-      // so the global range sort stays (the ext_nb_train posture)
-      .orderBy("token")
+      // so the global range sort stays for a multi-partition grid (the
+      // ext_nb_train posture)
+      .transform(graft.Tables.orderedRows(_, "token"))
   }
 
   /** Start the importance-model maintainer over the documents parquet

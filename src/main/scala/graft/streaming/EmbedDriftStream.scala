@@ -40,7 +40,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * read amplification.
   *
   * Batch/stream unification: the batch `ext_embed_drift` IS
-  * [[report]]([[gridSlice]](embeddings)) — exactly-once input makes the
+  * [[report]]([[slice]](embeddings)) — exactly-once input makes the
   * one-shot slice the fully-merged grid — and the two forms share ONE
   * oracle SQL. The batch-replay form is oracle-gated as
   * `stream_embed_drift` over a DOUBLED delivery collapsed by the same
@@ -48,15 +48,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * restart/redelivery/replay in StreamingSpec. */
 object EmbedDriftStream extends Monitor.Ledgered {
   protected def key = "vec_id"
-  protected def slice(batch: DataFrame): DataFrame = gridSlice(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
 
   /** One slice's per-dimension grid contribution — 1e-4-snapped sums and
     * counts per (pos, parity-slice): reference = even vec_id, current =
     * odd (the deterministic stand-in for reference-corpus vs
     * incoming-shard frames). Map-side combined onto the dim-bounded
     * grid; additive under exactly-once input. */
-  def gridSlice(vectors: DataFrame): DataFrame =
+  def slice(vectors: DataFrame): DataFrame =
     vectors.select(col("vec_id"),
       posexplode(transform(col("embedding"),
         v => floor(v.cast("double") * 10000.0 + 0.5).cast("long")))
@@ -76,7 +74,7 @@ object EmbedDriftStream extends Monitor.Ledgered {
 
   /** Additive merge of a grid delta into the grid state (sum ignores
     * nulls, so a slice whose batch had only one parity merges cleanly). */
-  def mergeGrid(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.unionByName(slice)
       .groupBy(col("pos"))
       .agg(sum(col("s_ref")).as("s_ref"), sum(col("n_ref")).as("n_ref"),

@@ -41,36 +41,6 @@ object FunnelStream {
     * instantiation. */
   val Stages: Seq[String] = Seq("signup", "click", "purchase")
 
-  /** Per-user first-event state of one (bounded or micro-batch) slice:
-    * element-wise min timestamp per stage type (`t_<stage>` columns, in
-    * stage order), null where the slice has none. Non-stage events are
-    * filtered BEFORE the exchange. */
-  def userState(events: DataFrame, stages: Seq[String] = Stages): DataFrame = {
-    require(stages.nonEmpty && stages.distinct == stages,
-      s"funnel stages must be non-empty and distinct: $stages")
-    require(stages.forall(_.matches("[A-Za-z0-9_-]+")),
-      s"stage names must be plain identifiers (they name columns and ride " +
-        s"a stack() literal): $stages")
-    val mins = stages.map(st =>
-      min(when(col("event_type") === st, col("ts"))).as(s"t_$st"))
-    events.filter(col("event_type").isin(stages: _*))
-      .groupBy(col("user_id"))
-      .agg(mins.head, mins.tail: _*)
-  }
-
-  /** Keyed element-wise-min merge of two state tables — commutative,
-    * associative, idempotent (min ignores nulls), hence convergent under
-    * at-least-once delivery and any batch split. Stage columns are
-    * inferred from the state schema, so any [[userState]] instantiation
-    * merges unchanged. */
-  def mergeStates(state: DataFrame, batch: DataFrame): DataFrame = {
-    val mins = state.columns.filterNot(_ == "user_id").toSeq
-      .map(c => min(col(c)).as(c))
-    state.unionByName(batch)
-      .groupBy(col("user_id"))
-      .agg(mins.head, mins.tail: _*)
-  }
-
   /** Roll the state table up to the funnel report: one row per stage with
     * reach and permille vs stage 1 (the batch funnel's output shape). A
     * user reaches stage k iff the first-event chain holds through k
@@ -116,11 +86,37 @@ object FunnelStream {
           unix_timestamp(col(s"t_${stages.head}"))).as("lag_sec")))
   }
 
-  /** The funnel state kind over `stages`: [[userState]] slices, merged
-    * by [[mergeStates]] under [[StateCommit]]. */
+  /** The funnel state kind over `stages`, under [[StateCommit]]. */
   def kind(stages: Seq[String] = Stages): Monitor.Kind = new Monitor.Additive {
-    protected def slice(batch: DataFrame): DataFrame = userState(batch, stages)
-    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeStates(state, slice)
+
+    /** Per-user first-event state of one (bounded or micro-batch) slice:
+      * element-wise min timestamp per stage type (`t_<stage>` columns, in
+      * stage order), null where the slice has none. Non-stage events are
+      * filtered BEFORE the exchange. */
+    def slice(events: DataFrame): DataFrame = {
+      require(stages.nonEmpty && stages.distinct == stages,
+        s"funnel stages must be non-empty and distinct: $stages")
+      require(stages.forall(_.matches("[A-Za-z0-9_-]+")),
+        s"stage names must be plain identifiers (they name columns and ride " +
+          s"a stack() literal): $stages")
+      val mins = stages.map(st =>
+        min(when(col("event_type") === st, col("ts"))).as(s"t_$st"))
+      events.filter(col("event_type").isin(stages: _*))
+        .groupBy(col("user_id"))
+        .agg(mins.head, mins.tail: _*)
+    }
+
+    /** Keyed element-wise-min merge of two state tables — commutative,
+      * associative, idempotent (min ignores nulls), hence convergent under
+      * at-least-once delivery and any batch split. Stage columns are
+      * inferred from the state schema. */
+    def merge(state: DataFrame, slice: DataFrame): DataFrame = {
+      val mins = state.columns.filterNot(_ == "user_id").toSeq
+        .map(c => min(col(c)).as(c))
+      state.unionByName(slice)
+        .groupBy(col("user_id"))
+        .agg(mins.head, mins.tail: _*)
+    }
   }
 
   /** The live per-user first-event state. */

@@ -27,7 +27,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * .gapFillDaily]]'s per-key window stack over the compacted facts.
   */
 object GapFillStream extends Monitor.Additive {
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeFacts(state, slice)
 
   /** One slice's state contribution: purchases only, rounded value, one
     * row per (user, day) via the same argmax the merge applies — so a
@@ -49,7 +48,7 @@ object GapFillStream extends Monitor.Additive {
   /** Keyed argmax merge of two state tables. Max-merge on the
     * (ts, event_id, v) struct is commutative, associative, idempotent ⇒
     * convergent under at-least-once delivery and any micro-batch split. */
-  def mergeFacts(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     latestPerDay(state.unionByName(batch))
 
   /** Derive the filled calendar grid from the state table —

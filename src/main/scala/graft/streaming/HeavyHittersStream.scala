@@ -30,8 +30,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the oracle-gated regime (`stream_heavy_hitters` at sf ≤ 0.01, the
   * `agg_heavy_hitters` discipline). */
 object HeavyHittersStream extends Monitor.Additive {
-  protected def slice(batch: DataFrame): DataFrame = sketch(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeSketch(state, slice)
 
   /** Counter budget — matches the batch `agg_heavy_hitters` sketch. */
   final val K = 256
@@ -46,7 +44,7 @@ object HeavyHittersStream extends Monitor.Additive {
   /** One micro-batch (or batch) reduced to its ≤ K-counter summary plus
     * the n row — a single aggregate, map-side combined, one output pass
     * (the n row rides the same exploded map via map_concat). */
-  def sketch(events: DataFrame): DataFrame = {
+  def slice(events: DataFrame): DataFrame = {
     val mg = udaf(new graft.functions.MisraGries(K))
     events.agg(mg(col("user_id").cast("string")).as("sk"),
         count(lit(1)).as("__n"))
@@ -54,13 +52,16 @@ object HeavyHittersStream extends Monitor.Additive {
         map(lit(NKey), col("__n")))).as(Seq("k", "est_n")))
   }
 
+  /** [[mergeSketch]] at the state's counter budget `K`. */
+  def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeSketch(state, slice, K)
+
   /** Mergeable-summaries merge of a slice sketch into the state sketch:
     * counter-wise sum, then if more than `k` counters survive, subtract
     * the (k+1)-th largest count from all and drop the non-positive — the
     * same rule as [[graft.functions.MisraGries.merge]], expressed over the
     * ≤ 2k+1-row sketch frames (every window here sorts a CONSTANT-bounded
     * frame). The n rows sum through the same groupBy. */
-  def mergeSketch(state: DataFrame, slice: DataFrame, k: Int = K): DataFrame = {
+  def mergeSketch(state: DataFrame, slice: DataFrame, k: Int): DataFrame = {
     val combined = state.select(col("k"), col("est_n"))
       .unionByName(slice.select(col("k"), col("est_n")))
       .groupBy(col("k")).agg(sum(col("est_n")).as("est_n"))

@@ -31,27 +31,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * combined cell aggregate.
   *
   * Batch/stream unification: the batch `ext_sim_ivf_occupancy` IS
-  * [[report]]([[gridSlice]](embeddings, cells)) — one shared oracle SQL
+  * [[report]](`kind(cells).slice(embeddings)`) — one shared oracle SQL
   * (the Lloyd replay + occupancy rollup); the batch-replay form is
   * oracle-gated as `stream_ivf_occupancy` over a DOUBLED delivery
   * collapsed by the same vec_id dedup; live
   * restart/redelivery/replay/compaction in StreamingSpec. */
 object IvfOccupancyStream {
-
-  /** One slice's per-cell count contribution under the frozen codebook —
-    * row-local assignment, ONE map-side-combined aggregate onto the
-    * nCells-bounded grid. */
-  def gridSlice(vectors: DataFrame, cells: Seq[(Int, Array[Long])]): DataFrame =
-    vectors.select(
-      graft.operators.Knn.intCellOf(col("embedding"), cells).as("cell"))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Additive merge of a count delta into the grid state. */
-  def mergeGrid(state: DataFrame, slice: DataFrame): DataFrame =
-    state.unionByName(slice)
-      .groupBy(col("cell"))
-      .agg(sum(col("n")).as("n"))
 
   /** The occupancy-balance report off the count grid — per cell its count
     * and corpus share in permille, plus the grid-wide max/min cell sizes
@@ -75,8 +60,21 @@ object IvfOccupancyStream {
   /** The ledger+grid state kind assigning against `cells`. */
   def kind(cells: Seq[(Int, Array[Long])]): Monitor.Ledgered = new Monitor.Ledgered {
     protected def key = "vec_id"
-    protected def slice(batch: DataFrame): DataFrame = gridSlice(batch, cells)
-    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeGrid(state, slice)
+
+    /** One slice's per-cell count contribution under the frozen codebook
+      * — row-local assignment, ONE map-side-combined aggregate onto the
+      * nCells-bounded grid. */
+    def slice(vectors: DataFrame): DataFrame =
+      vectors.select(
+        graft.operators.Knn.intCellOf(col("embedding"), cells).as("cell"))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n"))
+
+    /** Additive merge of a count delta into the grid state. */
+    def merge(state: DataFrame, slice: DataFrame): DataFrame =
+      state.unionByName(slice)
+        .groupBy(col("cell"))
+        .agg(sum(col("n")).as("n"))
   }
 
   /** The kind for what never assigns a vector: reading the grid, and

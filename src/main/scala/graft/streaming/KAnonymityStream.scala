@@ -27,28 +27,28 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * domain-bounded grid with a 1-row stats frame broadcast back.
   *
   * Batch/stream unification: the batch `agg_k_anonymity` IS
-  * [[report]]([[classSlice]](events)) — exactly-once input makes the
+  * [[report]]([[slice]](events)) — exactly-once input makes the
   * one-shot slice the fully-merged grid — and the two forms share ONE
   * oracle SQL verbatim. The batch-replay form is oracle-gated as
   * `stream_k_anonymity` over a DOUBLED delivery collapsed by the same
   * event-id dedup gate the live stream runs; live restart/redelivery in
   * StreamingSpec. */
 object KAnonymityStream extends Monitor.Additive {
-  protected def slice(batch: DataFrame): DataFrame = classSlice(graft.Tables.normalizeTs(batch))
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** One slice's quasi-identifier equivalence-class counts — batch or
     * micro-batch: (event_type, event-time day, width-10 value bucket) → n.
     * The bucket uses double floor(value/10) (one IEEE divide + floor,
     * identical in both engines; an integer `div` would truncate, not
-    * floor, on hypothetical negative values). */
-  def classSlice(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type"), to_date(col("ts")).as("day"),
-      floor(col("value") / 10.0).cast("long").as("vbucket"))
+    * floor, on hypothetical negative values). `ts` is normalized first,
+    * so a raw events frame slices like the live stream. */
+  def slice(events: DataFrame): DataFrame =
+    graft.Tables.normalizeTs(events)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"),
+        floor(col("value") / 10.0).cast("long").as("vbucket"))
       .agg(count(lit(1)).as("n"))
 
   /** Additive merge of a counted slice into the class grid. */
-  def mergeCounts(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.select(col("event_type"), col("day"), col("vbucket"), col("n"))
       .unionByName(slice.select(col("event_type"), col("day"),
         col("vbucket"), col("n")))

@@ -34,7 +34,6 @@ import graft.Tables.rnd4
   * the merged state (column-pruned scan) and collapses it map-side to the
   * (sources × lengths) histogram before any window. */
 object KsDriftStream extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeDocs(state, rows)
   protected def emptySchema = "doc_id BIGINT, source STRING, n_chars BIGINT"
 
   /** Shared batch/stream projection — the three columns the monitor keeps. */
@@ -44,7 +43,7 @@ object KsDriftStream extends Monitor.Union {
   /** First-wins survivor merge: one row per doc_id across state ∪ batch
     * (duplicates of a doc carry identical payloads; the struct min makes
     * the pick deterministic regardless). */
-  def mergeDocs(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_chars")
 
   /** (source, n_chars, hn) histogram of a doc set — state or batch slice. */

@@ -35,32 +35,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * broadcast back. [[compact]] bounds delta-read amplification.
   *
   * Batch/stream unification: the batch `agg_l_diversity` IS
-  * [[report]]([[memberSlice]](events)) — set union is homomorphic under
+  * [[report]]([[slice]](events)) — set union is homomorphic under
   * slicing, so the doubled-delivery batch-replay form (oracle-gated as
   * `stream_l_diversity` against the SAME SQL) collapses to the one-shot
   * answer; live restart/redelivery/compaction in StreamingSpec. */
 object LDiversityStream
     extends Monitor.Members("event_type STRING, day DATE, vbucket BIGINT, user_id BIGINT") {
-  override protected def slice(batch: DataFrame): DataFrame =
-    memberSlice(graft.Tables.normalizeTs(batch))
 
   /** One slice's (quasi-class, sensitive-value) membership rows —
     * batch or micro-batch: (event_type, event-time day, width-10 value
     * bucket, user_id), batch-locally distinct (cross-batch duplicates are
     * absorbed by the report's distinct counts). The bucket matches
-    * [[KAnonymityStream.classSlice]] exactly — the two audits must read
-    * the same grid. */
-  def memberSlice(events: DataFrame): DataFrame =
-    events.select(col("event_type"), to_date(col("ts")).as("day"),
-      floor(col("value") / 10.0).cast("long").as("vbucket"), col("user_id"))
+    * [[KAnonymityStream.slice]] exactly — the two audits must read the
+    * same grid. */
+  override def slice(events: DataFrame): DataFrame =
+    graft.Tables.normalizeTs(events)
+      .select(col("event_type"), to_date(col("ts")).as("day"),
+        floor(col("value") / 10.0).cast("long").as("vbucket"), col("user_id"))
       .distinct()
-
-  /** Raw membership union (duplicates possible — the report absorbs
-    * them). */
-  def mergeMembers(state: DataFrame, slice: DataFrame): DataFrame =
-    state.select(col("event_type"), col("day"), col("vbucket"), col("user_id"))
-      .unionByName(slice.select(col("event_type"), col("day"),
-        col("vbucket"), col("user_id")))
 
   /** The l-diversity band report off the membership state — per
     * distinct-user band (1 / 2–4 / 5–9 / 10+) the class count, the summed

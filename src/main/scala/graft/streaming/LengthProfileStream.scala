@@ -27,7 +27,6 @@ import graft.functions.TextFns
   * bounded histogram; every later frame is histogram-sized
   * ([[graft.operators.Robust]]'s discipline). */
 object LengthProfileStream extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeMembers(state, rows)
   protected def emptySchema = "doc_id BIGINT, source STRING, n_tok BIGINT"
 
   /** Shared batch/stream transform: the membership projection. */
@@ -38,7 +37,7 @@ object LengthProfileStream extends Monitor.Union {
   /** Idempotent doc-keyed merge: one row per doc_id across state ∪ batch
     * (ids are unique, so min-struct just collapses redelivered copies —
     * identical rows on every delivery). */
-  def mergeMembers(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tok")
 
   /** The outlier report off a membership frame — histogram once, then the

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   *  - [[fileStream]], the file source, its batches listed on the driver;
   *  - [[run]], the trigger loop and the only `writeStream`;
   *  - [[Additive]], [[Union]] and [[Ledgered]], the three state kinds,
-  *    each with one `applyBatch`, `state` and `compact`.
+  *    each with one `applyBatch`, `state`, `compact` and `batchAnswer`,
+  *    the last the batch form of the composition `applyBatch` commits.
   * A monitor object extends its kind, or builds one per call when its
   * slice takes a parameter, and writes only its slice, merge, reports and
   * a `start` that names its source. */
@@ -71,6 +72,12 @@ object Monitor {
   /** A monitor's state in `targetDir`, as one of the three kinds below. */
   sealed abstract class Kind {
 
+    /** One batch's contribution to the state. */
+    def slice(batch: DataFrame): DataFrame
+
+    /** Fold `rows` into `state`. */
+    def merge(state: DataFrame, rows: DataFrame): DataFrame
+
     /** Apply one micro-batch. A replayed `batchId` is a no-op; a negative
       * one is an out-of-band apply with no checkpoint identity, committed
       * under the next free id with no replay guard (sound only when the
@@ -85,6 +92,11 @@ object Monitor {
 
     /** Fold what the state keeps per batch, bounding read amplification. */
     def compact(spark: SparkSession, targetDir: String): Unit
+
+    /** The state `rows` leave when applied as one batch to an empty state,
+      * through the same seed and fold as [[applyBatch]]: the batch form a
+      * replay of the stream must equal (prefix consistency). */
+    def batchAnswer(rows: DataFrame): DataFrame
   }
 
   /** State rewritten whole per batch under [[StateCommit]]: the batch's
@@ -94,16 +106,18 @@ object Monitor {
     * exactly-once; for an idempotent one it only skips the replay's I/O.
     * Every version is the whole state, so there is nothing to compact. */
   abstract class Additive extends Kind {
-    /** One batch's contribution, itself a valid state. */
-    protected def slice(batch: DataFrame): DataFrame
-    protected def merge(state: DataFrame, slice: DataFrame): DataFrame
+    /** The batch's slice (itself a valid state) merged into `base`, or
+      * into nothing before the first batch. */
+    private def fold(base: Option[DataFrame], batch: DataFrame): DataFrame = {
+      val s = slice(batch)
+      merge(base.getOrElse(s.limit(0)), s)
+    }
 
     def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
                    batchId: Long, compactEvery: Int): Unit =
-      StateCommit.applyBatch(spark, targetDir, batchId) { base =>
-        val s = slice(batch)
-        merge(base.getOrElse(s.limit(0)), s)
-      }
+      StateCommit.applyBatch(spark, targetDir, batchId)(fold(_, batch))
+
+    def batchAnswer(rows: DataFrame): DataFrame = fold(None, rows)
 
     def state(spark: SparkSession, targetDir: String): DataFrame =
       StateCommit.state(spark, targetDir)
@@ -118,17 +132,18 @@ object Monitor {
     * a new base by the same merge. `merge` must be idempotent, which is
     * what absorbs a row redelivered in a later batch. */
   abstract class Union extends Kind {
-    protected def slice(batch: DataFrame): DataFrame = batch
-    protected def merge(state: DataFrame, rows: DataFrame): DataFrame
+    def slice(batch: DataFrame): DataFrame = batch
     /** The state's columns (DDL), typing it before the first batch. */
     protected def emptySchema: String
     private def reduce(rows: DataFrame) = merge(rows.limit(0), rows)
 
     def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
                    batchId: Long = -1L, compactEvery: Int): Unit = {
-      AppendState.append(reduce(slice(batch)), targetDir, batchId)
+      AppendState.append(batchAnswer(batch), targetDir, batchId)
       if (AppendState.compactionDue(targetDir, compactEvery)) compact(spark, targetDir)
     }
+
+    def batchAnswer(rows: DataFrame): DataFrame = reduce(slice(rows))
 
     def state(spark: SparkSession, targetDir: String): DataFrame =
       AppendState.raw(spark, targetDir).map(reduce).getOrElse(spark.createDataFrame(
@@ -140,7 +155,7 @@ object Monitor {
 
   /** A [[Union]] of distinct rows: membership state, merged by set union. */
   class Members(protected val emptySchema: String) extends Union {
-    protected def merge(state: DataFrame, rows: DataFrame): DataFrame =
+    def merge(state: DataFrame, rows: DataFrame): DataFrame =
       state.unionByName(rows).distinct()
   }
 
@@ -198,10 +213,13 @@ object Monitor {
     private lazy val ledger = new Members(s"$key BIGINT")
     private def gridDir(targetDir: String) = s"$targetDir/grid"
     private def seenDir(targetDir: String) = s"$targetDir/seen"
+    private def unique(rows: DataFrame) = rows.dropDuplicates(key)
+
+    override def batchAnswer(rows: DataFrame): DataFrame = super.batchAnswer(unique(rows))
 
     override def applyBatch(spark: SparkSession, batch: DataFrame, targetDir: String,
                             batchId: Long, compactEvery: Int): Unit = {
-      val fresh = batch.dropDuplicates(key)
+      val fresh = unique(batch)
       val newRows = AppendState.raw(spark, seenDir(targetDir))
         .fold(fresh)(seen => fresh.join(seen.select(key), Seq(key), "left_anti"))
         .localCheckpoint(true) // the grid fold and the ledger append read it once each

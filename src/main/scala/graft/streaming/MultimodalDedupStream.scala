@@ -107,13 +107,6 @@ object MultimodalDedupStream {
       .filter(col("hamming") <= maxHamming)
       .distinct()
 
-  /** Idempotent pair merge — rows are byte-equal on every delivery (the
-    * hash is a pure function of the payload), so distinct collapses any
-    * multiplicity and order. Serves BOTH pair states (hamming and
-    * semantic — each is a pure function of the two payloads). */
-  def mergePairs(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch).distinct()
-
   /** SEMANTIC pairs completed by this batch — the streaming twin of
     * [[Multimodal.semPairs]], split across the slim band index and the
     * doc-keyed feature ledger: the SAME band probe that serves the
@@ -157,11 +150,13 @@ object MultimodalDedupStream {
       .distinct()
   }
 
-  // the membership sub-states, one dir each under the target
-  private val Docs = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
-  private val Pairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, hamming BIGINT")
+  // the membership sub-states, one dir each under the target; both pair
+  // states merge by distinct, as their rows are byte-equal on every
+  // delivery (each is a pure function of the two payloads)
+  private[graft] val Docs = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
+  private[graft] val Pairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, hamming BIGINT")
   private val Feats = new Monitor.Members("doc_id BIGINT, feat ARRAY<BIGINT>, __n2 BIGINT")
-  private val SemPairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, cosine DOUBLE")
+  private[graft] val SemPairs = new Monitor.Members("doc_a BIGINT, doc_b BIGINT, cosine DOUBLE")
   private val Index = new Monitor.Postings("__key")
 
   /** The per-doc metadata ledger (doc_id, source, n_chars), distinct —

@@ -181,12 +181,16 @@ object NeardupStream {
       .select(col("doc_a"), col("doc_b"), Tables.rnd4(jac).as("jaccard"))
   }
 
-  /** Keyed idempotent merge — applied ON READ over the raw delta union
-    * (and by [[compact]]). Identical rows on every delivery ⇒ the
-    * reduction collapses them; insensitive to multiplicity and order. */
-  def mergePairs(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch)
-      .groupBy(col("doc_a"), col("doc_b")).agg(min(col("jaccard")).as("jaccard"))
+  /** The pair state: a [[Monitor.Union]] whose keyed idempotent merge is
+    * applied ON READ over the raw delta union (and by [[compact]]).
+    * Identical rows on every delivery ⇒ the reduction collapses them;
+    * insensitive to multiplicity and order. */
+  private[graft] val Pairs: Monitor.Kind = new Monitor.Union {
+    def merge(state: DataFrame, rows: DataFrame): DataFrame =
+      state.unionByName(rows)
+        .groupBy(col("doc_a"), col("doc_b")).agg(min(col("jaccard")).as("jaccard"))
+    protected def emptySchema = "doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE"
+  }
 
   /** The LIVE merged index / sizes / pair tables (distinct- /
     * keyed-merge-on-read over the append-only deltas). Empty frames before
@@ -202,10 +206,7 @@ object NeardupStream {
       .getOrElse(spark.range(0).select(col("id").as("doc_id"), lit(0L).as("__n")))
 
   def pairState(spark: SparkSession, targetDir: String): DataFrame =
-    AppendState.raw(spark, s"$targetDir/pairs")
-      .map(p => mergePairs(p.limit(0), p))
-      .getOrElse(spark.range(0).select(col("id").as("doc_a"),
-        col("id").as("doc_b"), lit(0.0).as("jaccard")))
+    Pairs.state(spark, s"$targetDir/pairs")
 
   /** The per-doc metadata ledger (doc_id, source, n_chars) — membership
     * rows, distinct-on-read: pair-state reports must label BOTH ends of a
@@ -216,7 +217,7 @@ object NeardupStream {
   def metaState(spark: SparkSession, targetDir: String): DataFrame =
     Meta.state(spark, s"$targetDir/meta")
 
-  private val Meta = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
+  private[graft] val Meta = new Monitor.Members("doc_id BIGINT, source STRING, n_chars BIGINT")
   private val Index = new Monitor.Postings("sh")
 
   /** Cross-source duplication matrix off the LIVE pair + metadata states
@@ -235,7 +236,7 @@ object NeardupStream {
     Index.compact(spark, s"$targetDir/index")
     AppendState.compact(spark, s"$targetDir/sizes",
       _.groupBy(col("doc_id")).agg(min(col("__n")).as("__n")))
-    AppendState.compact(spark, s"$targetDir/pairs", p => mergePairs(p.limit(0), p))
+    Pairs.compact(spark, s"$targetDir/pairs")
     Meta.compact(spark, s"$targetDir/meta")
   }
 

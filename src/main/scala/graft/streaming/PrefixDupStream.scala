@@ -56,7 +56,7 @@ object PrefixDupStream extends Monitor.Members("prefix STRING, source STRING, do
         countDistinct(col("source")).as("n_sources"),
         min(col("doc_id")).as("keep_id"))
       .filter(col("n_docs") >= 2)
-      .orderBy("prefix")
+      .transform(graft.Tables.orderedRows(_, "prefix"))
 
   /** Start the ingest template monitor over the documents in `sourceDir`,
     * merged into `targetDir`. */

@@ -33,7 +33,6 @@ import graft.functions.TextFns
   * ≤ |sources| frame.
   */
 object QualityDrift extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeVerdicts(state, rows)
   protected def emptySchema = "doc_id BIGINT, source STRING, n_tokens BIGINT, pass BIGINT"
 
   /** The corpus-report quality gate, reused verbatim ([[rnd4]]'d score
@@ -56,7 +55,7 @@ object QualityDrift extends Monitor.Union {
 
   /** One verdict row per doc_id across state ∪ batch (identical on every
     * delivery — the struct-min keeps exactly one). */
-  def mergeVerdicts(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tokens", "pass")
 
   /** Per-source monitor report over the verdict table vs the baseline:

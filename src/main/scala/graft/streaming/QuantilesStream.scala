@@ -27,17 +27,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * code path batch and stream — the oracle-gated `stream_value_quantiles`
   * replay runs [[histogram]] + [[report]] on the bounded frame. */
 object QuantilesStream extends Monitor.Additive {
-  protected def slice(batch: DataFrame): DataFrame = histogram(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeHist(state, slice)
 
   /** (type, cents, hn) histogram of a slice — batch or micro-batch. */
-  def histogram(events: DataFrame): DataFrame =
+  def slice(events: DataFrame): DataFrame =
     events.groupBy(col("event_type"),
         round(col("value") * 100).cast("long").as("cents"))
       .agg(count(lit(1)).as("hn"))
 
   /** Additive merge of a slice histogram into the state histogram. */
-  def mergeHist(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.select(col("event_type"), col("cents"), col("hn"))
       .unionByName(slice.select(col("event_type"), col("cents"), col("hn")))
       .groupBy(col("event_type"), col("cents")).agg(sum(col("hn")).as("hn"))

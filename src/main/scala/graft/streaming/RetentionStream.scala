@@ -34,23 +34,6 @@ object RetentionStream {
 
   private val SecondsPerWeek = 604800L
 
-  /** The distinct (user_id, kind, week) facts of one (bounded or
-    * micro-batch) slice. Every event contributes an `act` fact; events of
-    * `anchorType` (the cohort-defining event — signup by default)
-    * additionally contribute a `signup` fact. */
-  def userWeeks(events: DataFrame, anchorType: String = "signup"): DataFrame = {
-    // integer div (a double `/` would detour through FP)
-    val week = expr(s"unix_timestamp(ts) div $SecondsPerWeek").as("week")
-    val acts = events.select(col("user_id"), lit("act").as("kind"), week)
-    val signups = events.filter(col("event_type") === anchorType)
-      .select(col("user_id"), lit("signup").as("kind"), week)
-    acts.unionByName(signups).distinct()
-  }
-
-  /** Distinct-union merge of two fact tables — the whole state transition. */
-  def mergeFacts(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(batch).distinct()
-
   /** Roll the fact table up to weekly retention cohorts: users cohorted by
     * first-signup epoch week, per-(cohort, weeks-since) distinct-user
     * counts, permille vs the cohort's week 0 (the batch report's shape on
@@ -75,11 +58,27 @@ object RetentionStream {
       .transform(graft.Tables.orderedReport(_, "cohort_week", "week_n"))
   }
 
-  /** The fact-table state kind for cohorts anchored on `anchorType`:
-    * [[userWeeks]] slices, merged by [[mergeFacts]] under [[StateCommit]]. */
+  /** The fact-table state kind for cohorts anchored on `anchorType`,
+    * under [[StateCommit]]. */
   def kind(anchorType: String = "signup"): Monitor.Kind = new Monitor.Additive {
-    protected def slice(batch: DataFrame): DataFrame = userWeeks(batch, anchorType)
-    protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeFacts(state, slice)
+
+    /** The distinct (user_id, kind, week) facts of one (bounded or
+      * micro-batch) slice. Every event contributes an `act` fact; events
+      * of `anchorType` (the cohort-defining event — signup by default)
+      * additionally contribute a `signup` fact. */
+    def slice(events: DataFrame): DataFrame = {
+      // integer div (a double `/` would detour through FP)
+      val week = expr(s"unix_timestamp(ts) div $SecondsPerWeek").as("week")
+      val acts = events.select(col("user_id"), lit("act").as("kind"), week)
+      val signups = events.filter(col("event_type") === anchorType)
+        .select(col("user_id"), lit("signup").as("kind"), week)
+      acts.unionByName(signups).distinct()
+    }
+
+    /** Distinct-union merge of two fact tables — the whole state
+      * transition. */
+    def merge(state: DataFrame, slice: DataFrame): DataFrame =
+      state.unionByName(slice).distinct()
   }
 
   /** The live (user, kind, week) fact table. */

@@ -32,27 +32,20 @@ import graft.operators.CdcOps
   * report's window stack is per-key ([[CdcOps.scd2]]'s one-shuffle shape).
   */
 object Scd2Stream extends Monitor.Additive {
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeEvents(state, slice)
 
   /** The change columns one state row carries — the [[CdcOps.scd2]] inputs
     * (key, tracked attr, event time, tiebreak), fixture-instantiated. */
   val StateCols: Seq[String] = Seq("user_id", "event_type", "ts", "event_id")
 
-  /** The row-local half of [[slice]]: deletes dropped (the reference's
-    * server-side $match, js:221–223 — re-applied here so a slice built
-    * from a raw frame matches one built from [[CdcPipeline.transform]],
-    * which already drops them), projected to the change columns. Bounded
-    * replays feed this straight to [[mergeEvents]] — the merge's
-    * event_id collapse makes a per-leg dedup a redundant extra shuffle. */
-  def project(events: DataFrame): DataFrame =
-    CdcOps.dropDeletes(events).select(StateCols.map(col): _*)
-
-  /** One (bounded or micro-batch) slice's state contribution:
-    * [[project]]ed to the change columns, one row per event_id (the
-    * micro-batch path dedups BEFORE the state merge so redelivered rows
-    * within a batch never widen the merge input). */
+  /** One (bounded or micro-batch) slice's state contribution: deletes
+    * dropped (the reference's server-side $match, js:221–223 — re-applied
+    * here so a slice built from a raw frame matches one built from
+    * [[CdcPipeline.transform]], which already drops them), projected to
+    * the change columns, one row per event_id (dedup BEFORE the state
+    * merge, so redelivered rows within a batch never widen the merge
+    * input; the merge's event_id grouping then reuses its partitioning). */
   def slice(events: DataFrame): DataFrame =
-    project(events).dropDuplicates("event_id")
+    CdcOps.dropDeletes(events).select(StateCols.map(col): _*).dropDuplicates("event_id")
 
   /** Keyed set-union merge of two state tables: one row per event_id, all
     * payload columns min-folded (redelivered rows are byte-identical per
@@ -60,7 +53,7 @@ object Scd2Stream extends Monitor.Additive {
     * than `first` so the merge is deterministic by construction).
     * Commutative, associative, idempotent ⇒ convergent under at-least-once
     * delivery and any micro-batch split of the input. */
-  def mergeEvents(state: DataFrame, batch: DataFrame): DataFrame = {
+  def merge(state: DataFrame, batch: DataFrame): DataFrame = {
     val payload = StateCols.filterNot(_ == "event_id").map(c => min(col(c)).as(c))
     state.unionByName(batch)
       .groupBy(col("event_id"))

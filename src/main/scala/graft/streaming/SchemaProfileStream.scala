@@ -48,7 +48,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * event-id dedup gate the live stream runs; live restart/redelivery in
   * StreamingSpec, grid-growth class pinned in StateLayoutSpec. */
 object SchemaProfileStream extends Monitor.Additive {
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeState(state, slice)
 
   /** Row-local keyed payload fan-out off a ts-normalized events frame:
     * one (event_type, day, key, val) row per payload KEY (payload width,
@@ -89,7 +88,7 @@ object SchemaProfileStream extends Monitor.Additive {
   /** Additive merge of a grid delta into the state grid: sum the counts,
     * widen the day bounds. Null key/val (the total rows) group together,
     * so the state keeps exactly one row per grid cell. */
-  def mergeState(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.unionByName(slice)
       .groupBy(col("event_type"), col("key"), col("val"))
       .agg(sum(col("n")).as("n"),
@@ -99,7 +98,7 @@ object SchemaProfileStream extends Monitor.Additive {
     * batch `agg_schema_profile`: per (event_type, key) its event-presence
     * count and permille rate, distinct-value spread, and first/last day
     * seen. Presence = Σ n over the key's value cells; spread = the cell
-    * count (one state row per distinct value by [[mergeState]]);
+    * count (one state row per distinct value by [[merge]]);
     * denominator = the per-type total row. Every aggregate runs on the
     * domain-bounded grid — no corpus-sized frame anywhere. */
   def report(state: DataFrame): DataFrame = {

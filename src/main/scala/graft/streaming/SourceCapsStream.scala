@@ -44,7 +44,7 @@ object SourceCapsStream {
     * k-smallest as a delta, re-reduced by [[capK]] on read and on
     * compaction (state returns to O(sources · k) rows). */
   def kind(k: Int): Monitor.Kind = new Monitor.Union {
-    protected def merge(state: DataFrame, rows: DataFrame): DataFrame =
+    def merge(state: DataFrame, rows: DataFrame): DataFrame =
       capK(state.unionByName(rows), k).select(col("doc_id"), col("source"))
     protected def emptySchema = "doc_id BIGINT, source STRING"
   }

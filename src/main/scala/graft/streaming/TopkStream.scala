@@ -27,23 +27,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * 100 TB shape: per batch the only exchange is the slice's map-side-
   * combined (day, type) aggregate; the report ranks a frame of at most
-  * types-per-day rows per day. The same [[dailyTypeCounts]] + [[report]]
+  * types-per-day rows per day. The same [[slice]] + [[report]]
   * run on a bounded frame (batch/stream unification) — the oracle-gated
   * `stream_topk` replay. */
 object TopkStream extends Monitor.Additive {
-  protected def slice(batch: DataFrame): DataFrame = dailyTypeCounts(batch)
-  protected def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
 
   /** Leaderboard depth. */
   final val K = 3
 
   /** Per-(event-time day, type) counts of a slice — batch or micro-batch. */
-  def dailyTypeCounts(events: DataFrame): DataFrame =
+  def slice(events: DataFrame): DataFrame =
     events.groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
   /** Additive merge of a counted slice into the state table. */
-  def mergeCounts(state: DataFrame, slice: DataFrame): DataFrame =
+  def merge(state: DataFrame, slice: DataFrame): DataFrame =
     state.select(col("day"), col("event_type"), col("n"))
       .unionByName(slice.select(col("day"), col("event_type"), col("n")))
       .groupBy(col("day"), col("event_type")).agg(sum(col("n")).as("n"))

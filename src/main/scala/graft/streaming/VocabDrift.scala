@@ -35,7 +35,6 @@ import graft.operators.TrainPrep
   * the report is a map-side-combined aggregate onto a ≤ |sources| frame
   * against a broadcast baseline. */
 object VocabDrift extends Monitor.Union {
-  protected def merge(state: DataFrame, rows: DataFrame): DataFrame = mergeVerdicts(state, rows)
   protected def emptySchema = "doc_id BIGINT, source STRING, n_tokens BIGINT, n_oov BIGINT"
 
   /** Train the static top-k vocab on a reference snapshot — k strings on
@@ -64,7 +63,7 @@ object VocabDrift extends Monitor.Union {
 
   /** One verdict row per doc_id across state ∪ batch (byte-identical on
     * every delivery — the struct-min keeps exactly one). */
-  def mergeVerdicts(state: DataFrame, batch: DataFrame): DataFrame =
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tokens", "n_oov")
 
   /** Per-source monitor report vs the baseline: observed/baseline OOV

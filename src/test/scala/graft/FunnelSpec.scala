@@ -38,7 +38,7 @@ class FunnelSpec extends SparkSpec {
     val strict = Funnel.stageEntryTimes(e, "user_id", "event_type", "ts", FunnelStream.Stages)
       .collect().head
     assert(strict.getTimestamp(3) === ts(300)) // t_purchase = the later one
-    val relaxed = FunnelStream.report(FunnelStream.userState(e))
+    val relaxed = FunnelStream.report(FunnelStream.kind().slice(e))
       .select("stage_idx", "n_users").as[(Long, Long)].collect().toMap
     assert(relaxed(1L) === 1L && relaxed(2L) === 1L)
     assert(relaxed(3L) === 0L) // min purchase (150) < min click (200): no chain
@@ -57,8 +57,8 @@ class FunnelSpec extends SparkSpec {
     val stages = Seq("a", "b")
     val e1 = ev((1L, "a", 10), (2L, "a", 30))
     val e2 = ev((1L, "b", 20), (2L, "b", 25)) // u2's b precedes its a: no chain
-    val merged = FunnelStream.mergeStates(
-      FunnelStream.userState(e1, stages), FunnelStream.userState(e2, stages))
+    val kind = FunnelStream.kind(stages)
+    val merged = kind.merge(kind.slice(e1), kind.slice(e2))
     val rep = FunnelStream.report(merged, stages)
       .select("stage_idx", "n_users").as[(Long, Long)].collect().toMap
     assert(rep === Map(1L -> 2L, 2L -> 1L))
@@ -74,12 +74,12 @@ class FunnelSpec extends SparkSpec {
       (2L, "a", 1000), (2L, "b", 1200),
       (3L, "a", 1000), (3L, "b", 1300),
       (4L, "b", 900), (4L, "a", 1000))
-    val r = FunnelStream.lagReport(FunnelStream.userState(e, stages), stages)
+    val r = FunnelStream.lagReport(FunnelStream.kind(stages).slice(e), stages)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(r === Seq((3L, 200L, 300L, 200L)))
     // empty converter set → zero rows, like the batch form
     assert(FunnelStream.lagReport(
-      FunnelStream.userState(ev((4L, "b", 900), (4L, "a", 1000)), stages),
+      FunnelStream.kind(stages).slice(ev((4L, "b", 900), (4L, "a", 1000))),
       stages).collect().isEmpty)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Date-partitioned layout: a day predicate must prune to one partition at
@@ -11,7 +9,7 @@ import org.apache.spark.sql.functions._
 class PartitionSpec extends SparkSpec {
 
   test("day filter on a date-partitioned events layout prunes partitions") {
-    val dir = Files.createTempDirectory("events-bydate").toString
+    val dir = tmp("events-bydate").toString
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     ev.write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -28,7 +26,7 @@ class PartitionSpec extends SparkSpec {
 
   test("z-ordered layout: disjoint per-file z-ranges; interleave matches shift/mask reference") {
     import graft.operators.Bucketing
-    val dir = Files.createTempDirectory("events-zorder").toString
+    val dir = tmp("events-zorder").toString
     val dims = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("user_id"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))

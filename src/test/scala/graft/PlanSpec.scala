@@ -600,7 +600,7 @@ class PlanSpec extends SparkSpec {
 
   test("t-closeness: every rollup reads the checkpointed class grid; the lattice is a broadcast cross — no corpus rescan") {
     val p = plan("agg_t_closeness")
-    // classSlice's one corpus scan happens at the grid checkpoint; the
+    // the class slice's one corpus scan happens at the grid checkpoint; the
     // class/bucket/lattice/stats legs all read it back (C×B lattice via
     // BroadcastNestedLoopJoin over the B-row cumsum frame is the intended
     // cross — never a CartesianProduct over data-sized frames)

@@ -113,8 +113,8 @@ class PropertySpec extends SparkSpec {
     import graft.streaming.FunnelStream
     // THE property behind stream_funnel's at-least-once claim: for ANY
     // event multiset, ANY split into micro-batches (shuffled, plus one
-    // batch delivered twice), folding mergeStates over per-batch
-    // userState equals the one-shot state — min-merge is commutative,
+    // batch delivered twice), folding the kind's merge over per-batch
+    // slices equals the one-shot state — min-merge is commutative,
     // associative, idempotent.
     val rnd = new scala.util.Random(11)
     val types = Seq("signup", "click", "purchase", "view")
@@ -126,7 +126,7 @@ class PropertySpec extends SparkSpec {
       def frame(rs: Seq[(Long, String, java.sql.Timestamp)]) =
         rs.toDF("user_id", "event_type", "ts")
       def snap(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
-      val oneShot = FunnelStream.userState(frame(rows))
+      val oneShot = FunnelStream.kind().slice(frame(rows))
       val shuffled = rnd.shuffle(rows)
       val cuts = (Seq.fill(rnd.nextInt(3))(rnd.nextInt(n + 1)).sorted :+ n).distinct
       val batches = cuts.foldLeft((Seq.empty[Seq[(Long, String, java.sql.Timestamp)]], 0)) {
@@ -134,7 +134,7 @@ class PropertySpec extends SparkSpec {
       }._1
       val delivered = batches :+ batches(rnd.nextInt(batches.length)) // redelivery
       val folded = delivered.foldLeft(oneShot.limit(0)) { (state, b) =>
-        FunnelStream.mergeStates(state, FunnelStream.userState(frame(b)))
+        FunnelStream.kind().merge(state, FunnelStream.kind().slice(frame(b)))
       }
       assert(snap(folded) === snap(oneShot), s"split/order/redelivery sensitivity (n=$n)")
     }
@@ -244,7 +244,7 @@ class PropertySpec extends SparkSpec {
     val ingest = CorpusIngest.transform(docs, minQuality = 0.0)
     def run(batches: Seq[DataFrame]): Set[(String, Long)] =
       batches.foldLeft(ingest.limit(0)) { (state, b) =>
-        CorpusIngest.mergeSurvivors(state, b)
+        CorpusIngest.merge(state, b)
       }.select("digest", "doc_id").as[(String, Long)].collect().toSet
     val oneShot = run(Seq(ingest))
     val rnd = new scala.util.Random(7)
@@ -270,11 +270,11 @@ class PropertySpec extends SparkSpec {
         1L + rnd.nextInt(6), Seq("click", "view", "purchase")(rnd.nextInt(3)),
         rnd.nextDouble() * 50.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val k = KAnonymityStream.report(KAnonymityStream.classSlice(ev))
+    val k = KAnonymityStream.report(KAnonymityStream.slice(ev))
       .as[(String, Long, Long, Long, Long)].collect().toSeq
-    val l = LDiversityStream.report(LDiversityStream.memberSlice(ev))
+    val l = LDiversityStream.report(LDiversityStream.slice(ev))
       .as[(String, Long, Long, Long, Long)].collect().toSeq
-    val t = KAnonymityStream.reportTCloseness(KAnonymityStream.classSlice(ev))
+    val t = KAnonymityStream.reportTCloseness(KAnonymityStream.slice(ev))
       .as[(String, String, Long, Long, Long)].collect().toSeq
     // k bands account for every event; k and l read the SAME
     // (type, day, vbucket) grid so their class totals agree
@@ -299,7 +299,7 @@ class PropertySpec extends SparkSpec {
       (i, java.sql.Timestamp.valueOf("2024-02-01 09:00:00"), i % 7,
         "click", (i % 5) * 10.0 + 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val t = KAnonymityStream.reportTCloseness(KAnonymityStream.classSlice(ev))
+    val t = KAnonymityStream.reportTCloseness(KAnonymityStream.slice(ev))
       .as[(String, String, Long, Long, Long)].collect().toSeq
     assert(t === Seq(("click", "2024-02-01", 60L, 0L, 0L)))
   }
@@ -329,8 +329,7 @@ class PropertySpec extends SparkSpec {
         all.select(col("doc_id"), col("source"), col("n_chars")))
       .as[(String, String, Long, Long, Long)].collect().toSeq
     (0 until 2).foreach { trial =>
-      val dir = java.nio.file.Files.createTempDirectory(s"mmdp$trial")
-        .resolve("state").toString
+      val dir = tmp(s"mmdp$trial").resolve("state").toString
       val cut1 = rnd.nextInt(17)
       val cut2 = cut1 + rnd.nextInt(17 - cut1)
       val parts = Seq(
@@ -363,7 +362,9 @@ class PropertySpec extends SparkSpec {
     // input into micro-batches, a replayed batch id carrying rows the input
     // never had (a no-op, or the answer moves), the same rows redelivered
     // under a new id, and compactEvery 1 and 2, the state (union kinds) or
-    // the report (additive and ledgered kinds) equals one batch of it all.
+    // the report (additive and ledgered kinds) equals one batch of it all,
+    // and equals the kind's batchAnswer over it all, the batch form the
+    // stream_* queries replay through.
     // Additive COUNT merges absorb a redelivery upstream, in the stream's
     // event-id dedup, so they are exempt from the redelivery step only.
     val rnd = new scala.util.Random(43)
@@ -393,15 +394,16 @@ class PropertySpec extends SparkSpec {
     val index = Decontam.evalIndex(docs.filter(col("doc_id") <= 2L)).localCheckpoint(true)
 
     final case class Case(name: String, kind: Monitor.Kind, input: DataFrame, key: String,
-                          prep: DataFrame => DataFrame, answer: String => DataFrame,
-                          absorbsRedelivery: Boolean = true)
+                          prep: DataFrame => DataFrame, report: DataFrame => DataFrame,
+                          absorbsRedelivery: Boolean = true) {
+      def answer(dir: String): DataFrame = report(kind.state(spark, dir))
+    }
     def additive(name: String, kind: Monitor.Additive, input: DataFrame,
                  report: DataFrame => DataFrame, absorbsRedelivery: Boolean = true) =
-      Case(name, kind, input, "event_id", identity, d => report(kind.state(spark, d)),
-        absorbsRedelivery)
+      Case(name, kind, input, "event_id", identity, report, absorbsRedelivery)
     def union(name: String, kind: Monitor.Kind, input: DataFrame, key: String = "doc_id",
               prep: DataFrame => DataFrame = identity) =
-      Case(name, kind, input, key, prep, kind.state(spark, _))
+      Case(name, kind, input, key, prep, identity)
     val changes = CdcPipeline.transform(events)
     val cases = Seq(
       additive("topk", TopkStream, changes, TopkStream.report(_), absorbsRedelivery = false),
@@ -414,10 +416,9 @@ class PropertySpec extends SparkSpec {
         absorbsRedelivery = false),
       additive("k-anonymity", KAnonymityStream, events, KAnonymityStream.report,
         absorbsRedelivery = false),
-      Case("funnel", FunnelStream.kind(), changes, "event_id", identity,
-        d => FunnelStream.report(FunnelStream.state(spark, d))),
+      Case("funnel", FunnelStream.kind(), changes, "event_id", identity, FunnelStream.report(_)),
       Case("retention", RetentionStream.kind(), changes, "event_id", identity,
-        d => RetentionStream.report(RetentionStream.state(spark, d))),
+        RetentionStream.report),
       additive("gap fill", GapFillStream, changes, GapFillStream.report),
       additive("scd2", Scd2Stream, changes, Scd2Stream.report),
       union("length profile", LengthProfileStream, docs, prep = LengthProfileStream.transform),
@@ -430,12 +431,10 @@ class PropertySpec extends SparkSpec {
       union("url dedup", UrlDedupStream, urls),
       union("l-diversity", LDiversityStream, events, key = "event_id"),
       union("corpus ingest", CorpusIngest, docs, prep = CorpusIngest.transform(_, 0.0)),
-      Case("dsir model", DsirModelStream, docs, "doc_id", identity,
-        d => DsirModelStream.report(DsirModelStream.state(spark, d))),
-      Case("embed drift", EmbedDriftStream, vecs, "vec_id", identity,
-        d => EmbedDriftStream.report(EmbedDriftStream.state(spark, d))),
+      Case("dsir model", DsirModelStream, docs, "doc_id", identity, DsirModelStream.report),
+      Case("embed drift", EmbedDriftStream, vecs, "vec_id", identity, EmbedDriftStream.report),
       Case("ivf occupancy", IvfOccupancyStream.kind(cells), vecs, "vec_id", identity,
-        d => IvfOccupancyStream.report(IvfOccupancyStream.state(spark, d))))
+        IvfOccupancyStream.report))
 
     def snap(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     // compactEvery only moves the kinds that keep deltas
@@ -444,7 +443,7 @@ class PropertySpec extends SparkSpec {
       case _ => Seq(1)
     }
     for (c <- cases; compactEvery <- folds(c.kind)) {
-      def dir() = java.nio.file.Files.createTempDirectory("conv").resolve("state").toString
+      def dir() = tmp("conv").resolve("state").toString
       val rows = c.input.filter(col(c.key) <= 40L).collect().toSeq
       val foreign = c.prep(c.input.filter(col(c.key) > 40L))
       def frame(rs: Seq[org.apache.spark.sql.Row]) =
@@ -452,6 +451,7 @@ class PropertySpec extends SparkSpec {
       val oneShotDir = dir()
       c.kind.applyBatch(spark, frame(rows), oneShotDir, 0L, compactEvery)
       val oneShot = snap(c.answer(oneShotDir))
+      val batchForm = snap(c.report(c.kind.batchAnswer(frame(rows))))
 
       val shuffled = rnd.shuffle(rows)
       val cuts = (Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(rows.size + 1)) :+ rows.size)
@@ -475,6 +475,8 @@ class PropertySpec extends SparkSpec {
       }
       assert(snap(c.answer(d)) === oneShot,
         s"${c.name} (compactEvery=$compactEvery, ${batches.map(_.size)}) diverged from one batch")
+      assert(snap(c.answer(d)) === batchForm,
+        s"${c.name} (compactEvery=$compactEvery, ${batches.map(_.size)}) diverged from batchAnswer")
     }
   }
 

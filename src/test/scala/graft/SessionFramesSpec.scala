@@ -20,7 +20,7 @@ class SessionFramesSpec extends SparkSpec {
 
   /** A private copy of the fixture's documents table. */
   private def copyDocuments(): String = {
-    val dir = Files.createTempDirectory("graft-fixture-")
+    val dir = tmp("graft-fixture-")
     Files.copy(fixture.resolve("documents.parquet"), dir.resolve("documents.parquet"))
     dir.toString
   }
@@ -40,7 +40,7 @@ class SessionFramesSpec extends SparkSpec {
     val rows = orig.unionByName(copies).collect().toSeq.asJava
     val planted = copies.select("doc_id").collect().map(r => (r.getLong(0) - 100000L, r.getLong(0))).toSet
     Files.delete(Paths.get(docsPath))
-    val fresh = Files.createTempDirectory("graft-fixture-").toString
+    val fresh = tmp("graft-fixture-").toString
     for (p <- Seq(docsPath, s"$fresh/documents.parquet"))
       spark.createDataFrame(rows, orig.schema).coalesce(1).write.parquet(p)
     val after = ngramPairs(spark, d)
@@ -86,7 +86,7 @@ class SessionFramesSpec extends SparkSpec {
   test("a table opened before the first events read is not inferred again after it") {
     // a fixture of its own and a session with the nanos flag unarmed, so
     // nothing cached by an earlier test can answer the second open
-    val d = Files.createTempDirectory("graft-fixture-")
+    val d = tmp("graft-fixture-")
     for (t <- Seq("region", "events")) Files.copy(fixture.resolve(s"$t.parquet"), d.resolve(s"$t.parquet"))
     val s = spark.newSession()
     Tables.region(s, d.toString)
@@ -118,7 +118,7 @@ class SessionFramesSpec extends SparkSpec {
     // written without Spark's schema metadata, which inference would
     // otherwise prefer to the parquet types: a plain BINARY column is the
     // one binaryAsString decides
-    val d = Files.createTempDirectory("graft-fixture-").toString
+    val d = tmp("graft-fixture-").toString
     val schema = MessageTypeParser.parseMessageType(
       "message region { required int64 id; required binary payload; }")
     val groups = new SimpleGroupFactory(schema)

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -11,7 +16,21 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
-  override def afterAll(): Unit = () // shared session; never stopped per-suite
+  private val trees = mutable.Buffer.empty[Path]
+
+  /** A fresh directory `<prefix><random>` under the temp dir. It and
+    * everything written under it are deleted when the suite ends. */
+  def tmp(prefix: String): Path = trees.synchronized {
+    val p = Files.createTempDirectory(prefix)
+    trees += p
+    p
+  }
+
+  // the shared session is never stopped per suite; the suite's temp trees are
+  override def afterAll(): Unit = trees.synchronized {
+    trees.foreach(p => FileUtils.deleteQuietly(p.toFile))
+    trees.clear()
+  }
 
   /** The Spark jobs `body` runs, counted once the listener bus is drained.
     * `body` runs under a job group of its own, and a job counts if it
@@ -47,6 +66,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   private var live: SparkSession = _
 
+  /** The sessions' warehouse dir: it outlives every suite, so its tree
+    * goes when the test JVM exits. */
+  private lazy val warehouse: Path = {
+    val p = Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(FileUtils.deleteQuietly(p.toFile))
+    p
+  }
+
   /** The shared session; a suite that stops it (a session-restart test)
     * gets — and hands every later suite — a fresh one. */
   def session: SparkSession = synchronized {
@@ -58,8 +85,7 @@ object SparkSpec {
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         // managed tables (BucketingSpec) land in tmp, not the repo tree
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        .config("spark.sql.warehouse.dir", warehouse.toString)
         .getOrCreate()
     live
   }

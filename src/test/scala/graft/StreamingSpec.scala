@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,6 @@ import graft.streaming.CdcPipeline
   * last-write-wins answer — the reference's own ops verification loop
   * (`compareDocumentsInTimeWindow`), automated. */
 class StreamingSpec extends SparkSpec {
-
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   test("streamed upsert + checkpointed restart converges to the batch answer; replay is a no-op") {
     val sf = "/root/testdata/sf0.001"
@@ -413,8 +407,7 @@ class StreamingSpec extends SparkSpec {
     val all = (wave1 ++ wave2).distinct
       .map { case (id, text, lang) => (id, text, lang, "web", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val expect = CorpusIngest.mergeSurvivors(
-      CorpusIngest.transform(all).limit(0), CorpusIngest.transform(all))
+    val expect = CorpusIngest.batchAnswer(CorpusIngest.transform(all))
       .select("doc_id", "lang", "quality").as[(Long, String, Double)]
       .collect().sortBy(_._1)
     assert(got === expect)
@@ -1053,7 +1046,7 @@ class StreamingSpec extends SparkSpec {
     val liveT = KAnonymityStream.reportTCloseness(
       KAnonymityStream.state(spark, tgt)).collect().toSeq
     val batchT = KAnonymityStream.reportTCloseness(
-      KAnonymityStream.classSlice(spark.read.parquet(src.toString)
+      KAnonymityStream.slice(spark.read.parquet(src.toString)
         .transform(graft.Tables.normalizeTs)
         .dropDuplicates("event_id"))).collect().toSeq // redelivered wave collapses
     assert(liveT === batchT && liveT.nonEmpty)
@@ -1175,7 +1168,7 @@ class StreamingSpec extends SparkSpec {
     // the unification property: the maintained model must equal the clean
     // one-shot batch computation over the documents delivered so far
     def oneShot(rows: Seq[(Long, String, String)]) =
-      DsirModelStream.report(DsirModelStream.gridSlice(
+      DsirModelStream.report(DsirModelStream.slice(
         rows.toDF("doc_id", "lang", "text")))
         .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
     def got() = DsirModelStream.report(DsirModelStream.state(spark, tgt))
@@ -1339,12 +1332,12 @@ class StreamingSpec extends SparkSpec {
     // not an empty result
     val noEvents = Seq.empty[(Long, String, java.sql.Timestamp)]
       .toDF("user_id", "event_type", "ts")
-    val f = FunnelStream.report(FunnelStream.userState(noEvents))
+    val f = FunnelStream.report(FunnelStream.kind().slice(noEvents))
       .as[(Long, String, Long, Long)].collect().toSeq
     assert(f === Seq((1L, "signup", 0L, 0L), (2L, "click", 0L, 0L), (3L, "purchase", 0L, 0L)))
     // retention: no facts → no cohorts → zero rows (nothing to anchor)
     assert(RetentionStream.report(
-      RetentionStream.userWeeks(noEvents)).collect().isEmpty)
+      RetentionStream.kind().slice(noEvents)).collect().isEmpty)
   }
 
   test("incremental funnel: checkpointed restart + redelivery converge to the batch report") {
@@ -1376,7 +1369,7 @@ class StreamingSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Long, Long)] =
       df.as[(Long, String, Long, Long)].collect().toSeq
     val expected = rows(FunnelStream.report(
-      FunnelStream.userState(CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
+      FunnelStream.kind().slice(CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     val got = rows(FunnelStream.report(FunnelStream.state(spark, tgt)))
     assert(expected.head._3 > 0) // the fixture has signups — a real funnel
     assert(got === expected)
@@ -1500,7 +1493,7 @@ class StreamingSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
       df.as[(Long, Long, Long, Long)].collect().toSeq
     val expected = rows(RetentionStream.report(
-      RetentionStream.userWeeks(CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
+      RetentionStream.kind().slice(CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(expected.exists(_._2 > 0)) // some cohort retains past week 0
     assert(rows(RetentionStream.report(RetentionStream.state(spark, tgt))) === expected)
 
@@ -1540,7 +1533,7 @@ class StreamingSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.as[(Long, Long)].collect().toSeq
     val clean = CdcPipeline.transform(Tables.eventsRaw(spark, sf))
-    val expected = rows(HeavyHittersStream.report(HeavyHittersStream.sketch(clean)))
+    val expected = rows(HeavyHittersStream.report(HeavyHittersStream.slice(clean)))
     assert(expected.nonEmpty)
     assert(rows(HeavyHittersStream.report(
       HeavyHittersStream.state(spark, tgt))) === expected)
@@ -1587,7 +1580,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Double, Double, Double)] =
       df.as[(String, Long, Double, Double, Double)].collect().toSeq
-    val expected = rows(QuantilesStream.report(QuantilesStream.histogram(
+    val expected = rows(QuantilesStream.report(QuantilesStream.slice(
       CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(expected.nonEmpty && expected.forall(r => r._3 <= r._4 && r._4 <= r._5))
     assert(rows(QuantilesStream.report(QuantilesStream.state(spark, tgt))) === expected)
@@ -1633,7 +1626,7 @@ class StreamingSpec extends SparkSpec {
     BenfordStream.start(spark, src.toString, tgt, ckp).awaitTermination()
     arrive("w2", col("ts") >= cut)
     BenfordStream.start(spark, src.toString, tgt, ckp).awaitTermination()
-    val expected = rows(BenfordStream.report(BenfordStream.digitCounts(
+    val expected = rows(BenfordStream.report(BenfordStream.slice(
       CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(expected.map(_._2).sum > 0)
     assert(rows(BenfordStream.report(BenfordStream.state(spark, tgt))) === expected)
@@ -1676,7 +1669,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String, Long)] =
       df.as[(String, Long, String, Long)].collect().toSeq
-    val expected = rows(TopkStream.report(TopkStream.dailyTypeCounts(
+    val expected = rows(TopkStream.report(TopkStream.slice(
       CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(expected.nonEmpty && expected.forall(_._2 <= 3))
     assert(rows(TopkStream.report(TopkStream.state(spark, tgt))) === expected)
@@ -1698,14 +1691,14 @@ class StreamingSpec extends SparkSpec {
     // one continuously-maintained count table must match their batch forms
     def cusumRows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long, Long, Long, Boolean, Boolean)].collect().toSeq
-    val expectedCusum = cusumRows(TopkStream.cusumReport(TopkStream.dailyTypeCounts(
+    val expectedCusum = cusumRows(TopkStream.cusumReport(TopkStream.slice(
       CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(cusumRows(TopkStream.cusumReport(TopkStream.state(spark, tgt))) === expectedCusum)
 
     // ... and the Holt forecast — the THIRD report off the same state
     def holtRows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String, Long, Long, Long, Long)].collect().toSeq
-    val expectedHolt = holtRows(TopkStream.holtReport(TopkStream.dailyTypeCounts(
+    val expectedHolt = holtRows(TopkStream.holtReport(TopkStream.slice(
       CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
     assert(holtRows(TopkStream.holtReport(TopkStream.state(spark, tgt))) === expectedHolt)
 

@@ -12,11 +12,7 @@ import graft.SparkSpec
 class AlertSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def dir(): String = {
-    val p = Files.createTempDirectory("alerts")
-    p.toFile.deleteOnExit()
-    p.resolve("log").toString
-  }
+  private def dir(): String = tmp("alerts").resolve("log").toString
 
   private def outcomes(sink: AlertSink): Seq[(String, Long, String)] =
     sink.log.select("rule", "at_ms", "status")
@@ -185,7 +181,7 @@ class AlertSinkSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val delivered = scala.collection.mutable.ArrayBuffer.empty[AlertSink.Alert]
     val sink = new AlertSink(spark, dir(), cooldownMs = 1000L, deliver = delivered += _)
-    val stateDir = Files.createTempDirectory("vocabstate").resolve("st").toString
+    val stateDir = tmp("vocabstate").resolve("st").toString
     val vocab = Seq("the", "quick", "fox")
     val baseDocs = Seq((1L, "the quick fox", "web"), (2L, "the quick the", "web"))
       .toDF("doc_id", "text", "source")
@@ -215,7 +211,7 @@ class AlertSinkSpec extends SparkSpec {
   test("the schema-profile rule pages when a key goes missing from a type's payloads, off the grid the monitor wrote") {
     val delivered = scala.collection.mutable.ArrayBuffer.empty[AlertSink.Alert]
     val sink = new AlertSink(spark, dir(), cooldownMs = 1000L, deliver = delivered += _)
-    val stateDir = Files.createTempDirectory("schemastate").resolve("st").toString
+    val stateDir = tmp("schemastate").resolve("st").toString
     val ts = java.sql.Timestamp.valueOf("2024-01-02 10:00:00")
     def events(from: Long, n: Int, props: String) =
       (from until from + n).map(id => (id, "click", ts, props)).toDF("event_id", "event_type", "ts", "props")
@@ -235,7 +231,7 @@ class AlertSinkSpec extends SparkSpec {
   test("the source-caps rule pages when a source fills its cap, off the state the monitor wrote") {
     val delivered = scala.collection.mutable.ArrayBuffer.empty[AlertSink.Alert]
     val sink = new AlertSink(spark, dir(), cooldownMs = 1000L, deliver = delivered += _)
-    val stateDir = Files.createTempDirectory("capstate").resolve("st").toString
+    val stateDir = tmp("capstate").resolve("st").toString
     val k = 3
     val kind = SourceCapsStream.kind(k)
     val rule = DriftAlerts.sourceCaps(spark, stateDir, k)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import scala.collection.mutable
 
@@ -23,12 +23,6 @@ import graft.SparkSpec
   * live [[CdcPipeline.start]] loop: the batch's files are listed on the
   * driver, with no listing job, while the query stays the caller's. */
 class CdcCommitSpec extends SparkSpec {
-
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   /** Rows out of every parquet file scan (the scan nodes' own row metric,
     * found through each SQL execution's plan), every task's input records

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -11,12 +11,6 @@ import graft.SparkSpec
   * and parity with the parquet source through the live ingest stream. */
 class JsonlIngestSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   test("jsonlDocs: clean/quarantine split, absent-field backfill, wrong-type lines quarantined") {
     val dir = tmp("jsonl")

@@ -45,13 +45,17 @@ class MonitorSpec extends SparkSpec {
     ("a file delete", """\.delete\(\)""".r, Map("StateCommit.scala" -> 1)),
     ("a bucket pmod(", """pmod\(.*Buckets""".r, Map("Monitor.scala" -> 1)))
 
-  /** Every (file, step) whose count of code lines (comment lines and
-    * trailing `//` comments dropped) differs from the allowed one. */
+  /** `src`'s code lines: comment lines and trailing `//` comments dropped. */
+  private def codeLines(src: String): Seq[String] =
+    src.split("\n").toSeq.map(_.replaceAll("""\s//.*$""", ""))
+      .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith))
+
+  /** Every (file, step) whose count of code lines differs from the
+    * allowed one. */
   private def stepCopies(files: Seq[(String, String)]): Seq[String] =
     for {
       (name, src) <- files
-      code = src.split("\n").toSeq.map(_.replaceAll("""\s//.*$""", ""))
-        .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith))
+      code = codeLines(src)
       (what, re, allowed) <- sharedSteps
       n = code.count(l => re.findFirstIn(l).isDefined)
       if n != allowed.getOrElse(name, 0)
@@ -82,9 +86,76 @@ class MonitorSpec extends SparkSpec {
     assert(copies.isEmpty, copies.mkString("\n"))
   }
 
+  /** Twins a kind's slice or merge may still call: they take a parameter
+    * the kind fixes, and a test drives them with another value. */
+  private val keptTwins = Map("HeavyHittersStream.scala" -> Set("mergeSketch"))
+
+  /** Every place a monitor's batch form is rebuilt by hand instead of
+    * going through its kind's `batchAnswer`: a `limit(0)` seed or a
+    * doubling other than the one `twoDeliveries` helper in `queries`
+    * (StreamQueries.scala), a `limit(0)` in `streaming` outside the kinds
+    * (Monitor.scala) and the near-dup monitor's own commit, and a
+    * `slice`/`merge` whose one-line body calls another public def of
+    * `streaming`, a twin. */
+  private def handBuiltBatchForms(queries: String, streaming: Seq[(String, String)]): Seq[String] = {
+    val q = codeLines(queries)
+    val seeds = q.count(_.contains("limit(0)"))
+    val doublings = q.count(_.contains("unionByName"))
+    val publicDefs = streaming.flatMap { case (_, src) =>
+      """(?m)^\s*(?:override\s+)?(?:final\s+)?def\s+(\w+)""".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet -- Set("slice", "merge")
+    val forwarder = """\bdef (slice|merge)\(.*\)\s*:\s*DataFrame\s*=\s*(?:[A-Z]\w*\.)?(\w+)\(.*\)\s*$""".r
+    (if (seeds > 0) Seq(s"StreamQueries.scala: limit(0) on $seeds lines") else Nil) ++
+      (if (doublings > 1) Seq(s"StreamQueries.scala: unionByName on $doublings lines, allowed 1")
+       else Nil) ++
+      streaming.flatMap { case (name, src) =>
+        val code = codeLines(src)
+        val n = code.count(_.contains("limit(0)"))
+        (if (n > 0 && !Set("Monitor.scala", "NeardupStream.scala")(name))
+           Seq(s"$name: limit(0) on $n lines") else Nil) ++
+          code.flatMap(l => forwarder.findFirstMatchIn(l)).collect {
+            case m if publicDefs(m.group(2)) && !keptTwins.getOrElse(name, Set.empty[String])(m.group(2)) =>
+              s"$name: ${m.group(1)} forwards to ${m.group(2)}"
+          }
+      }
+  }
+
+  test("each monitor's batch form is its kind's batchAnswer, with no slice or merge twin") {
+    val plantedQueries =
+      """  private def twoDeliveries(rows: DataFrame) = rows.unionByName(rows)
+        |  private val streamTopk: Q = (s, d) => {
+        |    val once = TopkStream.mergeCounts(raw.limit(0), raw) // limit(0) in a comment is not code
+        |    once.unionByName(once)
+        |  }
+        |""".stripMargin
+    val plantedStreaming = Seq(
+      "TopkStream.scala" ->
+        """  def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeCounts(state, slice)
+          |  def mergeCounts(state: DataFrame, slice: DataFrame): DataFrame =
+          |    state.unionByName(slice).groupBy(col("day")).agg(sum(col("n")).as("n"))
+          |  def slice(events: DataFrame): DataFrame = events.limit(0)
+          |""".stripMargin,
+      "HeavyHittersStream.scala" ->
+        """  def merge(state: DataFrame, slice: DataFrame): DataFrame = mergeSketch(state, slice, K)
+          |  def mergeSketch(state: DataFrame, slice: DataFrame, k: Int): DataFrame = state
+          |""".stripMargin)
+    assert(handBuiltBatchForms(plantedQueries, plantedStreaming) === Seq(
+      "StreamQueries.scala: limit(0) on 1 lines",
+      "StreamQueries.scala: unionByName on 2 lines, allowed 1",
+      "TopkStream.scala: limit(0) on 1 lines",
+      "TopkStream.scala: merge forwards to mergeCounts"))
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    def read(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val streaming = Files.list(root.resolve("streaming")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(p => p.getFileName.toString -> read(p)).toSeq
+    assert(streaming.map(_._1).contains("Monitor.scala"))
+    val found = handBuiltBatchForms(read(root.resolve("queries/StreamQueries.scala")), streaming)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("a documents monitor lists a batch of more than 32 files on the driver, on start and on restart") {
-    val root = Files.createTempDirectory("monitor-listing")
-    root.toFile.deleteOnExit()
+    val root = tmp("monitor-listing")
     val src = Files.createDirectories(root.resolve("source"))
     val target = root.resolve("target").toString
     val checkpoint = root.resolve("checkpoint").toString

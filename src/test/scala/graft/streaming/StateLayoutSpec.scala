@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,6 @@ import graft.SparkSpec
   * streaming package to exercise the private[streaming] helpers directly;
   * the end-to-end stream paths are in StreamingSpec. */
 class StateLayoutSpec extends SparkSpec {
-
-  private def tmp(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
 
   import spark.implicits._
 
