@@ -102,7 +102,19 @@ class OrderedRowsSpec extends SparkSpec {
     }
   }
 
-  test("every query-final Dataset sort in queries/ and streaming/ goes through orderedRows") {
+  /** The raw final sorts of the sources under `src/main/scala/graft/<dir>`,
+    * as `file:line`. */
+  private def rawFinalSortsIn(dir: String): Seq[String] = {
+    val root = Paths.get(s"src/main/scala/graft/$dir")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val files = Files.list(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under $root")
+    files.flatMap { p =>
+      rawFinalSorts(new String(Files.readAllBytes(p), "UTF-8")).map(n => s"${p.getFileName}:$n")
+    }
+  }
+
+  test("every query-final Dataset sort in queries/ goes through orderedRows") {
     val planted =
       """val w = Window.partitionBy(col("a"))
         |  .orderBy(col("b"))
@@ -112,18 +124,14 @@ class OrderedRowsSpec extends SparkSpec {
         |  .orderBy(col("a"))
         |""".stripMargin
     assert(rawFinalSorts(planted) === Seq(6))
-    // every stream_* query ends in a monitor report, so the report tails
-    // in streaming/ are query-final sorts too
-    val files = Seq("queries", "streaming").flatMap { dir =>
-      val root = Paths.get(s"src/main/scala/graft/$dir")
-      assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-      val fs = Files.list(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      assert(fs.nonEmpty, s"no sources under $root")
-      fs
-    }
-    val raw = files.flatMap { p =>
-      rawFinalSorts(new String(Files.readAllBytes(p), "UTF-8")).map(n => s"${p.getFileName}:$n")
-    }
+    val raw = rawFinalSortsIn("queries")
+    assert(raw.isEmpty, s"final sorts not through Tables.orderedRows: ${raw.mkString(", ")}")
+  }
+
+  // every stream_* query ends in a monitor report, so the report tails in
+  // streaming/ are query-final sorts too
+  test("every monitor report sort in streaming/ goes through orderedRows") {
+    val raw = rawFinalSortsIn("streaming")
     assert(raw.isEmpty, s"final sorts not through Tables.orderedRows: ${raw.mkString(", ")}")
   }
 }
