@@ -33,9 +33,10 @@ object StreamQueries {
     CdcPipeline.transform(twoDeliveries(Tables.eventsRaw(s, d)))
 
   /** [[CdcPipeline.uniqueChanges]] in batch form: [[changes]] with the
-    * redelivered event ids collapsed (one hash-aggregate shuffle). */
+    * redelivered event ids collapsed (one hash-aggregate shuffle). Four
+    * monitors read this one source, so it is built once per fixture. */
   private def uniqueChanges(s: SparkSession, d: String): DataFrame =
-    CdcPipeline.dedupEvents(changes(s, d))
+    graft.SessionFrames.frame(s, d, "unique_changes")(CdcPipeline.dedupEvents(changes(s, d)))
 
   /** The deduped events, deletes kept, that the privacy and schema
     * monitors read ([[CdcPipeline.dedupEvents]] over the normalized
@@ -362,11 +363,12 @@ object StreamQueries {
   /** The (day, type) count state [[TopkStream]] maintains, over a doubled
     * delivery whose redelivered rows die in the event-id dedup — ONE fact
     * table behind nine reports (leaderboard, CUSUM, forecast, Sen's slope,
-    * Mann–Kendall, changepoint, binseg tree, anomaly days, LTTB). Deletes
-    * are dropped by the shared transform, so each report's oracle is its
-    * batch twin's SQL with the 'error' filter spliced in. */
+    * Mann–Kendall, changepoint, binseg tree, anomaly days, LTTB), so it is
+    * built once per fixture, as the live monitor keeps one state table.
+    * Deletes are dropped by the shared transform, so each report's oracle
+    * is its batch twin's SQL with the 'error' filter spliced in. */
   private def dailyTypeCounts(s: SparkSession, d: String): DataFrame =
-    TopkStream.batchAnswer(uniqueChanges(s, d))
+    graft.SessionFrames.frame(s, d, "daily_type_counts")(TopkStream.batchAnswer(uniqueChanges(s, d)))
 
   /** [[dailyTypeCounts]] collapsed to per-day totals at report time (state
     * stays per-type so every sibling report shares it). */

@@ -26,10 +26,11 @@ import graft.operators.CdcOps
   * SCD2 history is O(changes) by definition, so state carries no overhead
   * over the result it serves.
   *
-  * 100 TB shape: per batch the only exchange is the event_id dedup of the
-  * batch SLICE against redelivered rows (in production the state rewrite is
-  * a transactional MERGE INTO keyed on event_id — insert-if-absent); the
-  * report's window stack is per-key ([[CdcOps.scd2]]'s one-shuffle shape).
+  * 100 TB shape: per batch the only exchange is the merge's event_id
+  * grouping of state ∪ slice, which is also the dedup of redelivered rows
+  * (in production the state rewrite is a transactional MERGE INTO keyed on
+  * event_id — insert-if-absent); the report's window stack is per-key
+  * ([[CdcOps.scd2]]'s one-shuffle shape).
   */
 object Scd2Stream extends Monitor.Additive {
 
@@ -41,11 +42,11 @@ object Scd2Stream extends Monitor.Additive {
     * dropped (the reference's server-side $match, js:221–223 — re-applied
     * here so a slice built from a raw frame matches one built from
     * [[CdcPipeline.transform]], which already drops them), projected to
-    * the change columns, one row per event_id (dedup BEFORE the state
-    * merge, so redelivered rows within a batch never widen the merge
-    * input; the merge's event_id grouping then reuses its partitioning). */
+    * the change columns. Redelivered rows stay in: [[merge]]'s event_id
+    * collapse is their dedup, so a dedup here would be a second shuffle
+    * on the same key. */
   def slice(events: DataFrame): DataFrame =
-    CdcOps.dropDeletes(events).select(StateCols.map(col): _*).dropDuplicates("event_id")
+    CdcOps.dropDeletes(events).select(StateCols.map(col): _*)
 
   /** Keyed set-union merge of two state tables: one row per event_id, all
     * payload columns min-folded (redelivered rows are byte-identical per

@@ -236,6 +236,12 @@ class PlanSpec extends SparkSpec {
     assert(shuffles == 1, s"expected one dedup exchange:\n${p.take(2000)}")
   }
 
+  test("SCD2 replay collapses the doubled delivery in the merge's one event-id exchange") {
+    val p = plan("stream_scd2")
+    val onEventId = p.split("Exchange hashpartitioning\\(event_id").length - 1
+    assert(onEventId == 1, s"expected the merge's one event_id exchange:\n${p.take(2500)}")
+  }
+
   test("dedup keep anti-joins the corpus against a broadcast drop list") {
     val p = plan("ext_dedup_keep")
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
