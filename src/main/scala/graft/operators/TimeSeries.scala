@@ -12,43 +12,40 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
-  /** Per-key per-day last observation, re-gridded onto each key's full
-    * [first-day, last-day] calendar span with missing days carried forward
-    * (LOCF). Output: (key, day, value, observed) — `observed` marks real
-    * vs filled days; the first day of every key's span is observed by
-    * construction, so no value is ever null.
+  /** Per-(key, day) last observation: the argmax by (`ts`, `tiebreak`) as
+    * ONE struct-max aggregate — constant-size mergeable partials (the
+    * `agg_daily_bars` shape), no ranking window over raw rows. Output:
+    * (key, day, ts, tiebreak, value). The pick is commutative, associative
+    * and idempotent, so it is also the merge of two winner frames
+    * ([[graft.streaming.GapFillStream]]'s state): `tiebreak` makes it
+    * deterministic when two observations share `ts`. */
+  def dailyWinners(obs: DataFrame, key: String, ts: String,
+                   value: String, tiebreak: String): DataFrame =
+    obs.groupBy(col(key), to_date(col(ts)).as("day"))
+      .agg(max(struct(col(ts), col(tiebreak), col(value))).as("__m"))
+      .select(col(key), col("day"), col(s"__m.$ts").as(ts),
+        col(s"__m.$tiebreak").as(tiebreak), col(s"__m.$value").as(value))
+
+  /** [[dailyWinners]]' (key, day, `value`) rows re-gridded onto each key's
+    * full [first-day, last-day] calendar span with missing days carried
+    * forward (LOCF). Output: (key, day, value, observed) — `observed` marks
+    * real vs filled days; the first day of every key's span is observed by
+    * construction, so no value is ever null. `value` should be pre-rounded
+    * by the caller if an oracle will compare it.
     *
-    * `tiebreak` makes the per-day winner deterministic when two
-    * observations share `ts`. `value` should be pre-rounded by the caller
-    * if an oracle will compare it.
-    *
-    * Scale shape: per-(key, day) last value is one ranking window; the
-    * span is a per-key 2-row aggregate exploded through `sequence()`
-    * (array-of-days, calendar-bounded, never data-sized); the fill is a
-    * running last-non-null over a PER-KEY window. Everything partitions by
-    * key — the output is keys × span-days, the materialization the
-    * operator exists to produce, and no global sort or driver loop appears
-    * anywhere. */
-  def gapFillDaily(obs: DataFrame, key: String, ts: String,
-                   value: String, tiebreak: String): DataFrame = {
-    val daily = dailyWinners(obs, key, ts, value, tiebreak)
+    * Scale shape: the span is a per-key 2-row aggregate exploded through
+    * `sequence()` (array-of-days, calendar-bounded, never data-sized); the
+    * fill is a running last-non-null over a PER-KEY window. Everything
+    * partitions by key — the output is keys × span-days, the
+    * materialization the operator exists to produce, and no global sort or
+    * driver loop appears anywhere. */
+  def gapFillDaily(winners: DataFrame, key: String, value: String): DataFrame = {
+    val daily = winners.select(col(key), col("day"), col(value).as("__v"))
     val wFill = Window.partitionBy(col(key)).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     calendarSpan(daily, key).join(daily, Seq(key, "day"), "left")
       .withColumn("value", last(col("__v"), ignoreNulls = true).over(wFill))
       .select(col(key), col("day"), col("value"), col("__v").isNotNull.as("observed"))
-  }
-
-  /** Per-(key, day) last observation — the shared re-grid input of
-    * [[gapFillDaily]] and [[interpolateDaily]]. */
-  private def dailyWinners(obs: DataFrame, key: String, ts: String,
-                           value: String, tiebreak: String): DataFrame = {
-    val p = obs.select(col(key), to_date(col(ts)).as("day"), col(ts),
-      col(tiebreak), col(value).as("__v"))
-    val wDay = Window.partitionBy(col(key), col("day"))
-      .orderBy(col(ts).desc, col(tiebreak).desc)
-    p.withColumn("__rn", row_number().over(wDay))
-      .filter(col("__rn") === 1).select(col(key), col("day"), col("__v"))
   }
 
   /** Each key's full [first-day, last-day] calendar span (one row per
@@ -73,9 +70,8 @@ object TimeSeries {
     * Scale shape: identical to [[gapFillDaily]] — everything partitions by
     * key; the neighbour lookups are two per-key running windows
     * (last/first ignoreNulls), not joins. */
-  def interpolateDaily(obs: DataFrame, key: String, ts: String,
-                       value: String, tiebreak: String): DataFrame = {
-    val daily = dailyWinners(obs, key, ts, value, tiebreak)
+  def interpolateDaily(winners: DataFrame, key: String, value: String): DataFrame = {
+    val daily = winners.select(col(key), col("day"), col(value).as("__v"))
     val wPrev = Window.partitionBy(col(key)).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(col(key)).orderBy(col("day"))
@@ -170,4 +166,23 @@ object TimeSeries {
       }
       .toDF(keyCol, "rank", dayCol, nCol)
   }
+
+  /** `c` widened to decimal(38,0), where the multiplied-out σ rules and
+    * moment products of counts evaluate (the oracle's HUGEINT matches
+    * exactly; int64 overflows around 10¹² events per window). */
+  def dec(c: Column): Column = c.cast("decimal(38,0)")
+
+  /** The integer moments of a (…, n) daily count frame per `groups` (none:
+    * one row) — `__D` days, `__S` = Σn, `__SS` = Σn² — broadcast for the
+    * join back to the days. The stats of every multiplied-out σ rule over
+    * a daily series: the 2σ anomaly days (whole series and per weekday)
+    * and the CUSUM alarm, which compare against [[varNum]]. */
+  def countMoments(daily: DataFrame, groups: Column*): DataFrame =
+    broadcast(daily.groupBy(groups: _*).agg(
+      count(lit(1)).as("__D"), sum(col("n")).as("__S"),
+      sum(col("n") * col("n")).as("__SS")))
+
+  /** D·SS − S² over [[countMoments]]' columns: D² times the variance of
+    * n, exact in decimal(38,0) — |n − S/D| > kσ ⇔ (n·D − S)² > k²·varNum. */
+  val varNum: Column = dec(col("__D")) * dec(col("__SS")) - dec(col("__S")) * dec(col("__S"))
 }

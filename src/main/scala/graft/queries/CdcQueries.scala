@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.{SessionFrames, Tables}
 import graft.Tables.{changeLog, events, eventsInRange, fmtTs, orderedRows, tsLit}
-import graft.operators.CdcOps
+import graft.operators.{CdcOps, TimeSeries}
+import graft.operators.TimeSeries.{countMoments, dec, varNum}
+import graft.streaming.{BenfordStream, GapFillStream, HeavyHittersStream, QuantilesStream,
+  Scd2Stream, TopkStream}
 
 /** Event-log (CDC) queries over the `events` fixture, each paired with ANSI
   * SQL for the DuckDB oracle. Every query ends in an ORDER BY on a unique
@@ -439,15 +442,11 @@ object CdcQueries {
     * same `(user_id)×(ts, event_id)` partitioning, so the whole
     * materialization is ONE shuffle of the change log and every window is
     * per-key (no global sort anywhere). At 100 TB this is the incremental
-    * dimension-build that runs per key-partition; the streaming twin
-    * (`stream_scd2`) folds the same semantics per micro-batch. */
+    * dimension-build that runs per key-partition: the exactly-once log is
+    * [[Scd2Stream]]'s slice, and the materialization is its report, shared
+    * by the batch query and the stream form (`stream_scd2`). */
   private val windowScd2: Q = (s, d) =>
-    CdcOps.scd2(CdcOps.dropDeletes(changeLog(s, d)),
-      "user_id", "event_type", "ts", "event_id")
-      .select(col("user_id"), col("version"), col("event_type"),
-        fmtTs(col("valid_from")).as("valid_from"),
-        fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
-      .transform(orderedRows(_, "user_id", "version"))
+    Scd2Stream.report(Scd2Stream.slice(changeLog(s, d)))
 
   /** orderBy + limit — TakeOrderedAndProject (top-k, SURVEY §2.5). */
   private val sortTopk: Q = (s, d) =>
@@ -498,27 +497,23 @@ object CdcQueries {
     * regularization every downstream daily model/report needs over an
     * irregular event log. `observed` marks real vs filled days.
     *
-    * Shape: [[graft.operators.TimeSeries.gapFillDaily]] (see its scaladoc
-    * for the per-key partitioning argument; edge semantics — single-day
-    * spans, multi-day gaps, same-day ties — are spec-pinned there). */
+    * Shape: [[GapFillStream]]'s report over its slice — the per-day winner
+    * and the LOCF grid shared by the batch query and the stream form
+    * ([[TimeSeries.gapFillDaily]]'s scaladoc has the per-key partitioning
+    * argument; edge semantics — single-day spans, multi-day gaps, same-day
+    * ties — are spec-pinned there). */
   private val windowGapFill: Q = (s, d) =>
-    graft.operators.TimeSeries.gapFillDaily(
-      events(s, d).filter(col("event_type") === "purchase")
-        .withColumn("v", round(col("value"), 4)),
-      "user_id", "ts", "v", "event_id")
-      .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-        col("value"), col("observed"))
-      .transform(orderedRows(_, "user_id", "day"))
+    GapFillStream.report(GapFillStream.slice(events(s, d)))
 
   /** [[windowGapFill]]'s straight-line sibling (§2.5): missing days take
     * the linear interpolation between surrounding observations instead of
     * the last value flat ([[graft.operators.TimeSeries.interpolateDaily]]
     * — determinism and per-key-window shape documented there). */
   private val windowInterpolate: Q = (s, d) =>
-    graft.operators.TimeSeries.interpolateDaily(
+    TimeSeries.interpolateDaily(TimeSeries.dailyWinners(
       events(s, d).filter(col("event_type") === "purchase")
         .withColumn("v", round(col("value"), 4)),
-      "user_id", "ts", "v", "event_id")
+      "user_id", "ts", "v", "event_id"), "user_id", "v")
       .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("value"), col("observed"))
       .transform(orderedRows(_, "user_id", "day"))
@@ -599,6 +594,13 @@ object CdcQueries {
       .transform(graft.Tables.orderedReport(_, "day"))
   }
 
+  /** The per-day event count (day, n): ONE map-side-combined day
+    * aggregate, the daily-total series every per-day report here reads
+    * (EWMA, anomaly days and weekdays, changepoint, binseg tree, CUSUM).
+    * The per-(day, type) counts are [[TopkStream]]'s slice. */
+  private def dayCounts(s: SparkSession, d: String): DataFrame =
+    events(s, d).groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
+
   /** 7-day exponentially-decayed smoothing of daily event volume (§2.5) —
     * the trend line an ops dashboard draws over the raw daily counts:
     * ewma(d) = Σ_{j=0..6} n(d−j)/2ʲ / Σ_{j} 1/2ʲ over OBSERVED days
@@ -616,8 +618,7 @@ object CdcQueries {
     * day-keyed), then a bounded ×7 fan-out of DAY-sized rows and one
     * day-keyed sum; no window sort, no per-key state, no day×day join. */
   private val windowEwma: Q = (s, d) => {
-    val daily = events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
+    val daily = dayCounts(s, d)
     val w2 = expr("shiftleft(1, __j)").cast("double")
     val sm = daily
       .select(col("day").as("__sday"), col("n").as("__sn"),
@@ -635,25 +636,18 @@ object CdcQueries {
   /** Holt level + trend smoothing of per-type daily volume (§2.5) —
     * [[graft.operators.CdcOps.holt]]: the forecast line the flat EWMA
     * can't draw. Integer-micro recurrence with explicit floor-halves ⇒
-    * engine-exact; per-key fold over calendar-bounded day frames. */
-  private val windowHolt: Q = (s, d) =>
-    graft.operators.CdcOps.holt(
-      events(s, d).groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n")),
-      "event_type", "day", "n")
-      .transform(graft.Tables.orderedReport(_, "event_type", "day"))
+    * engine-exact; per-key fold over calendar-bounded day frames. The
+    * (day, type) counts are [[TopkStream]]'s slice and the report its
+    * `holtReport`, shared by the batch query and the stream form. */
+  private val windowHolt: Q = (s, d) => TopkStream.holtReport(TopkStream.slice(events(s, d)))
 
   /** LTTB chart downsampling ([[graft.operators.TimeSeries.lttb]], §2.5):
     * each type's daily series reduced to 12 shape-preserving points —
     * what a dashboard fetches instead of the full span. Integer-exact
     * greedy, so the whole selection hash-gates against the unrolled
-    * per-bucket SQL replay. */
-  private val windowLttb: Q = (s, d) =>
-    graft.operators.TimeSeries.lttb(
-      events(s, d).groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n")),
-      "event_type", "day", "n", buckets = 10)
-      .transform(graft.Tables.orderedReport(_, "event_type", "rank"))
+    * per-bucket SQL replay. [[TopkStream]]'s `lttbReport` over its slice,
+    * shared by the batch query and the stream form. */
+  private val windowLttb: Q = (s, d) => TopkStream.lttbReport(TopkStream.slice(events(s, d)))
 
   /** Theil–Sen robust trend (§2.5): per event type the MEDIAN of all
     * pairwise day-slopes of the daily-volume series — the outlier-immune
@@ -670,10 +664,7 @@ object CdcQueries {
     * Scale shape: the pair frame is per-type D²/2 with D CALENDAR-bounded
     * (the domain-histogram discipline — day-pair rows, never event rows),
     * so the per-type ranking window is bounded at any corpus size. */
-  private val windowTheilsen: Q = (s, d) =>
-    theilsenReport(events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n")))
+  private val windowTheilsen: Q = (s, d) => theilsenReport(TopkStream.slice(events(s, d)))
 
   /** The Theil–Sen report over any (event_type, day, n) daily frame —
     * shared by the batch query and the maintained-count-state stream
@@ -710,12 +701,9 @@ object CdcQueries {
     * (log10(1+1/d) precomputed — embedding the same literal on both sides
     * beats calling each engine's libm log10); each row's expected count
     * and χ² term are one fixed IEEE op sequence. The digit domain is a
-    * literal 1..9 frame, so zero-count digits still audit. */
-  private val aggBenford: Q = (s, d) =>
-    graft.operators.CdcOps.benfordReport(
-      events(s, d)
-        .select(graft.operators.CdcOps.benfordDigit(col("value")).as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n_obs")))
+    * literal 1..9 frame, so zero-count digits still audit. [[BenfordStream]]'s
+    * report over its slice, shared by the batch query and the stream form. */
+  private val aggBenford: Q = (s, d) => BenfordStream.report(BenfordStream.slice(events(s, d)))
 
   /** Mann–Kendall trend TEST (§2.4) — the significance companion to the
     * `window_theilsen` estimator (the standard monitoring pairing: Sen's
@@ -730,10 +718,7 @@ object CdcQueries {
     * (divide, sqrt, divide) — deterministic cross-engine. Pair frame
     * per-type D²/2, D calendar-bounded; tie groups from one (type, n)
     * aggregate. */
-  private val aggMannKendall: Q = (s, d) =>
-    mannKendallReport(events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n")))
+  private val aggMannKendall: Q = (s, d) => mannKendallReport(TopkStream.slice(events(s, d)))
 
   /** The Mann–Kendall report over any (event_type, day, n) daily frame —
     * shared by the batch query and the maintained-count-state stream
@@ -772,22 +757,15 @@ object CdcQueries {
     *
     * Shape: one map-side-combined day aggregate; the (D, S, SS) stats ride
     * a broadcast 1-row cross join; the flag is row-local. */
-  private val aggAnomalyDays: Q = (s, d) =>
-    anomalyDaysReport(events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n")))
+  private val aggAnomalyDays: Q = (s, d) => anomalyDaysReport(dayCounts(s, d))
 
   /** The 2σ daily-anomaly report over any (day, n) frame — shared by the
     * batch query and the maintained-count-state stream form. */
   private[queries] def anomalyDaysReport(daily: DataFrame): DataFrame = {
-    val stats = broadcast(daily.agg(
-      count(lit(1)).as("__D"), sum(col("n")).as("__S"),
-      sum(col("n") * col("n")).as("__SS")))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val dev = dec(col("n") * col("__D") - col("__S"))
-    daily.crossJoin(stats)
+    daily.crossJoin(countMoments(daily))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
-        (dev * dev > lit(4) * (dec(col("__D")) * dec(col("__SS"))
-          - dec(col("__S")) * dec(col("__S")))).as("is_outlier"))
+        (dev * dev > lit(4) * varNum).as("is_outlier"))
       .transform(Tables.orderedReport(_, "day"))
   }
 
@@ -801,21 +779,14 @@ object CdcQueries {
     * — no locale-dependent day names, identical in any engine. Shape:
     * one day aggregate, 7-row broadcast stats, row-local flags. */
   private val aggAnomalyDow: Q = (s, d) => {
-    val daily = events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
+    val daily = dayCounts(s, d)
       .withColumn("dow",
         pmod(datediff(col("day"), lit("1970-01-01").cast("date")) + 3, lit(7))
           .cast("long"))
-    val stats = broadcast(daily.groupBy(col("dow")).agg(
-      count(lit(1)).as("__D"), sum(col("n")).as("__S"),
-      sum(col("n") * col("n")).as("__SS")))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val dev = dec(col("n") * col("__D") - col("__S"))
-    daily.join(stats, "dow")
+    daily.join(countMoments(daily, col("dow")), "dow")
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("dow"),
-        col("n"),
-        (dev * dev > lit(4) * (dec(col("__D")) * dec(col("__SS"))
-          - dec(col("__S")) * dec(col("__S")))).as("is_outlier"))
+        col("n"), (dev * dev > lit(4) * varNum).as("is_outlier"))
       .transform(Tables.orderedReport(_, "day"))
   }
 
@@ -848,9 +819,7 @@ object CdcQueries {
     * row per day at any corpus size); the exact rank is a ≤D² pair
     * comparison on that same bounded frame (the Mann–Kendall pair
     * discipline). Nothing here is ever corpus-sized. */
-  private val aggChangepoint: Q = (s, d) =>
-    changepointReport(events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n")))
+  private val aggChangepoint: Q = (s, d) => changepointReport(dayCounts(s, d))
 
   /** The changepoint report over any (day, n) daily frame — shared by the
     * batch query and the maintained-count-state stream form (the
@@ -881,7 +850,6 @@ object CdcQueries {
     val s = daily.sparkSession
     val stats = broadcast(s.range(1)
       .select(lit(g.getLong(0)).as("__D"), lit(g.getLong(1)).as("__S")))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val cum = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cand = daily
@@ -925,9 +893,7 @@ object CdcQueries {
     * runs as one pass over the CALENDAR-bounded daily frame inside a
     * single flatMapGroups task (the Holt/LTTB recurrence discipline) —
     * never corpus-sized, never driver-side. */
-  private val aggChangepointTree: Q = (s, d) =>
-    changepointTreeReport(events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n")))
+  private val aggChangepointTree: Q = (s, d) => changepointTreeReport(dayCounts(s, d))
 
   /** The depth-2 tree over any (day, n) daily frame — shared by the batch
     * query and the maintained-count-state stream form. */
@@ -1045,16 +1011,10 @@ object CdcQueries {
     * EXACT under the plain count/top-k oracle; at bench scale (sf0.1,
     * 1500 users) and beyond it runs in genuine eviction mode, where
     * SketchesSpec pins the n/(k+1) one-sided bound and heavy-key
-    * retention the oracle can't express. */
-  private val aggHeavyHitters: Q = (s, d) => {
-    val mg = udaf(new graft.functions.MisraGries(256))
-    events(s, d)
-      .agg(mg(col("user_id").cast("string")).as("sketch"))
-      .select(explode(col("sketch")).as(Seq("k", "est_n")))
-      .select(col("k").cast("long").as("user_id"), col("est_n"))
-      .orderBy(col("est_n").desc, col("user_id"))
-      .limit(20)
-  }
+    * retention the oracle can't express. [[HeavyHittersStream]]'s report
+    * over its slice, shared by the batch query and the stream form. */
+  private val aggHeavyHitters: Q = (s, d) =>
+    HeavyHittersStream.report(HeavyHittersStream.slice(events(s, d)))
 
   /** Grouped top-k (top-3 spenders per event_type, §2.5 sort family) as a
     * HIERARCHICAL two-phase ranking: a per-(group, salt) partial top-3 over
@@ -1092,9 +1052,7 @@ object CdcQueries {
     * the standard front-loaded ntile split (first buckets get the
     * remainder rows). */
   private val windowNtile: Q = (s, d) => {
-    val daily = events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
+    val daily = TopkStream.slice(events(s, d))
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("n").desc, col("day"))
     daily.withColumn("quartile", ntile(4).over(w).cast("long"))
@@ -1135,30 +1093,10 @@ object CdcQueries {
     * (y_t = D·n_t − S, the anomaly-days discipline), the 4σ alarm
     * compares C_t² > 16·(D·SS − S²) in widened decimals — bit-exact on
     * any engine, no float accumulation anywhere. Both drift directions
-    * surface (up = regression burst, down = source stall). */
-  private val windowCusum: Q = (s, d) => {
-    val daily = events(s, d)
-      .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
-    val stats = broadcast(daily.agg(
-      count(lit(1)).as("__D"), sum(col("n")).as("__S"),
-      sum(col("n") * col("n")).as("__SS")))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val cum = Window.orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val varY = dec(col("__D")) * dec(col("__SS")) - dec(col("__S")) * dec(col("__S"))
-    daily.crossJoin(stats)
-      .withColumn("y", col("n") * col("__D") - col("__S"))
-      .withColumn("cy", sum(col("y")).over(cum))
-      // the running extremum must include the EMPTY prefix (Y₀ = 0), or a
-      // series that only rises would under-report its own first days
-      .withColumn("cusum_up", col("cy") - least(min(col("cy")).over(cum), lit(0L)))
-      .withColumn("cusum_down", greatest(max(col("cy")).over(cum), lit(0L)) - col("cy"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
-        col("cusum_up"), col("cusum_down"),
-        (dec(col("cusum_up")) * dec(col("cusum_up")) > lit(16) * varY).as("shift_up"),
-        (dec(col("cusum_down")) * dec(col("cusum_down")) > lit(16) * varY).as("shift_down"))
-      .transform(graft.Tables.orderedReport(_, "day"))
-  }
+    * surface (up = regression burst, down = source stall). The report is
+    * [[TopkStream]]'s `cusumReport`, shared by the batch query and the
+    * stream form. */
+  private val windowCusum: Q = (s, d) => TopkStream.cusumReport(dayCounts(s, d))
 
   /** Exact per-type value quantiles (p50/p90/p99) by the domain-histogram
     * discipline ([[graft.operators.Funnel.lagQuantiles]] / the curriculum
@@ -1168,24 +1106,11 @@ object CdcQueries {
     * `min{cents : cum ≥ ⌈p·n/1000⌉}` by cumulative sum per type. The only
     * window sorts domain-sized frames; an `approx_percentile` sketch would
     * trade the exactness for nothing here. Integer ranks ⇒ any engine
-    * picks the same element; cents/100.0 is one exact division. */
-  private val aggValueQuantiles: Q = (s, d) => {
-    val hist = events(s, d)
-      .groupBy(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-      .agg(count(lit(1)).as("hn"))
-    val tot = hist.groupBy(col("event_type")).agg(sum(col("hn")).as("__n"))
-    val cum = Window.partitionBy(col("event_type")).orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def q(p: Int) =
-      min(when(col("cum") >= expr(s"($p * __n + 999) div 1000"), col("cents"))) / 100.0
-    hist.withColumn("cum", sum(col("hn")).over(cum))
-      .join(tot, "event_type")
-      .groupBy(col("event_type"), col("__n"))
-      .agg(q(500).as("p50"), q(900).as("p90"), q(990).as("p99"))
-      .select(col("event_type"), col("__n").as("n_events"),
-        col("p50"), col("p90"), col("p99"))
-      .transform(graft.Tables.orderedReport(_, "event_type"))
-  }
+    * picks the same element; cents/100.0 is one exact division.
+    * [[QuantilesStream]]'s report over its slice (the histogram), shared
+    * by the batch query and the stream form. */
+  private val aggValueQuantiles: Q = (s, d) =>
+    QuantilesStream.report(QuantilesStream.slice(events(s, d)))
 
   /** Day-over-day leaderboard movement: each day's event types ranked by
     * volume (ties broken by name ⇒ the rank is total and engine-
@@ -1196,9 +1121,7 @@ object CdcQueries {
     * equi-join of the day×type aggregate with itself. First-appearance
     * days carry null prev_rnk/delta. */
   private val windowRankChange: Q = (s, d) => {
-    val daily = events(s, d)
-      .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
+    val daily = TopkStream.slice(events(s, d))
     val w = Window.partitionBy(col("day")).orderBy(col("n").desc, col("event_type"))
     val ranked = daily.withColumn("rnk", row_number().over(w).cast("long"))
     val prev = ranked.select(col("event_type"),
@@ -1234,15 +1157,12 @@ object CdcQueries {
     * series (zero variance) yield null r. */
   private val windowAutocorr: Q = (s, d) => {
     import s.implicits._
-    val daily = events(s, d)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
+    val daily = TopkStream.slice(events(s, d))
     val lagged = daily.crossJoin(broadcast(Seq(1, 7).toDF("lag")))
       .withColumn("prev_day", date_sub(col("day"), col("lag")))
     val pairs = lagged.alias("a").join(
       daily.select(col("event_type"), col("day").as("prev_day"), col("n").as("pn")).alias("b"),
       Seq("event_type", "prev_day"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val m = pairs.groupBy(col("event_type"), col("lag"))
       .agg(count(lit(1)).as("np"), sum(col("n")).as("sx"), sum(col("pn")).as("sy"),
         sum(dec(col("n")) * dec(col("pn"))).as("sxy"),
@@ -2288,7 +2208,9 @@ object CdcQueries {
     },
 
     // digit from the cents string head; probabilities are the SAME
-    // 15-digit literals the engine embeds (no libm log10 on either side)
+    // 15-digit literals the engine embeds (no libm log10 on either side);
+    // N sums the audited digits 1–9 only, as the engine's report does: a
+    // value whose cents round to 0 has digit 0, which neither side audits
     "agg_benford" -> {
       val caseP = graft.operators.CdcOps.BenfordP
         .map { case (dg, ps) => s"WHEN $dg THEN $ps" }.mkString(" ")
@@ -2298,7 +2220,8 @@ object CdcQueries {
          |o AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs FROM c GROUP BY 1),
          |dom AS (SELECT CAST(unnest(generate_series(1, 9)) AS BIGINT) AS digit),
          |f AS (SELECT dom.digit, coalesce(o.n_obs, 0) AS n_obs,
-         |             (SELECT CAST(sum(n_obs) AS BIGINT) FROM o) AS N,
+         |             (SELECT CAST(sum(n_obs) AS BIGINT) FROM o
+         |              WHERE digit BETWEEN 1 AND 9) AS N,
          |             CASE dom.digit $caseP END AS p
          |      FROM dom LEFT JOIN o ON dom.digit = o.digit)
          |SELECT digit, n_obs,

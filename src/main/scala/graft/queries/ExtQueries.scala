@@ -8,6 +8,7 @@ import graft.SessionFrames
 import graft.Tables.{documents, embeddings, orderedRows, rnd4, rnd4Sql}
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Knn, Multimodal, NaiveBayes, Pca, TrainPrep}
+import graft.streaming.{LengthProfileStream, PrefixDupStream}
 
 /** [EXT] LLM-data-pipeline queries (SURVEY §2.8) over the `documents` /
   * `embeddings` fixtures: text analysis, dedup (exact / n-gram Jaccard /
@@ -775,15 +776,10 @@ object ExtQueries {
     * map-side-combined aggregate keyed on the row-local prefix string;
     * per group the copy count, how many distinct sources emit it (a
     * template crossing sources is scraper boilerplate, not an author), and
-    * the min-id representative. */
+    * the min-id representative. [[PrefixDupStream]]'s report over its
+    * slice, shared by the batch query and the stream form. */
   private val extPrefixDup: Q = (s, d) =>
-    documents(s, d)
-      .groupBy(concat_ws(" ", slice(TextFns.tokens(col("text")), 1, 8)).as("prefix"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("source")).as("n_sources"),
-        min(col("doc_id")).as("keep_id"))
-      .filter(col("n_docs") >= 2)
-      .transform(orderedRows(_, "prefix"))
+    PrefixDupStream.report(PrefixDupStream.slice(documents(s, d)))
 
   /** URL-canonicalization dedup ([[Dedup.urlCanon]]) — the tier every
     * web-corpus pipeline runs BEFORE text dedup (C4/RefinedWeb drop by
@@ -2130,18 +2126,11 @@ object ExtQueries {
     * [[graft.operators.Robust.madOutliers]] machinery: token counts ARE
     * small integers, so median and MAD both come off ONE per-(source,
     * n_tokens) histogram re-grouped by |n − med| — corpus touched once,
-    * every later frame histogram-sized; no float quantiles anywhere. */
-  private val extLengthOutliers: Q = (s, d) => {
-    val hist = SessionFrames.track(
-      documents(s, d)
-        .groupBy(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-        .agg(count(lit(1)).as("hn")))
-    graft.operators.Robust.madOutliers(hist, "source", "n_tok")
-      .select(col("source"), col("__n").as("n_docs"),
-        col("med").as("median_tokens"), col("mad").as("mad_tokens"),
-        col("n_outliers"), expr("n_outliers * 1000 div __n").as("outlier_permille"))
-      .transform(graft.Tables.orderedReport(_, "source"))
-  }
+    * every later frame histogram-sized; no float quantiles anywhere.
+    * [[LengthProfileStream]]'s report over its membership projection,
+    * shared by the batch query and the stream form. */
+  private val extLengthOutliers: Q = (s, d) =>
+    LengthProfileStream.report(LengthProfileStream.transform(documents(s, d)))
 
   /** Population Stability Index of the token-count distribution between
     * the train split and the held-out (test + val) splits — the standard

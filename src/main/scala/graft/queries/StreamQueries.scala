@@ -14,8 +14,11 @@ import graft.streaming._
   * parts: the monitor's source in batch form (what its `start` reads),
   * the kind's `batchAnswer` over that input delivered twice (the SAME seed
   * and fold the live `applyBatch` commits, so the oracle checks the live
-  * composition), and the monitor's report. The live
-  * readStream/watermark/foreachBatch/checkpoint path is exercised
+  * composition), and the monitor's report. A monitor's batch twin in
+  * `CdcQueries`/`ExtQueries` is that report over the monitor's `slice` of
+  * the exactly-once input, so where the two share an oracle they share
+  * the report too (StreamingSpec runs each such pair and compares rows).
+  * The live readStream/watermark/foreachBatch/checkpoint path is exercised
   * end-to-end by `StreamingSpec`.
   */
 object StreamQueries {
@@ -325,7 +328,8 @@ object StreamQueries {
   /** The incremental prefix-template monitor over a doubled delivery: the
     * state is membership rows and every report aggregate is distinct-/
     * min-based, so the doubled log collapses to the one-shot batch answer
-    * — the oracle IS ext_prefix_dup's SQL. */
+    * — ext_prefix_dup is the same report over the slice, and the oracle
+    * IS its SQL. */
   private val streamPrefixDup: Q = (s, d) =>
     PrefixDupStream.report(PrefixDupStream.batchAnswer(twoDeliveries(Tables.documents(s, d))))
 
@@ -373,13 +377,13 @@ object StreamQueries {
   /** [[dailyTypeCounts]] collapsed to per-day totals at report time (state
     * stays per-type so every sibling report shares it). */
   private def dailyTotals(s: SparkSession, d: String): DataFrame =
-    dailyTypeCounts(s, d).groupBy(col("day")).agg(sum(col("n")).as("n"))
+    TopkStream.dayTotals(dailyTypeCounts(s, d))
 
   /** The incremental daily top-K leaderboard. */
   private val streamTopk: Q = (s, d) => TopkStream.report(dailyTypeCounts(s, d))
 
   /** The continuously-maintained CUSUM monitor. */
-  private val streamCusum: Q = (s, d) => TopkStream.cusumReport(dailyTypeCounts(s, d))
+  private val streamCusum: Q = (s, d) => TopkStream.cusumReport(dailyTotals(s, d))
 
   /** Holt forecast. */
   private val streamHolt: Q = (s, d) => TopkStream.holtReport(dailyTypeCounts(s, d))
@@ -394,9 +398,7 @@ object StreamQueries {
 
   /** LTTB chart downsampling — a live chart fetches 12 points per type,
     * not the span. */
-  private val streamLttb: Q = (s, d) =>
-    graft.operators.TimeSeries.lttb(dailyTypeCounts(s, d), "event_type", "day", "n", buckets = 10)
-      .transform(orderedReport(_, "event_type", "rank"))
+  private val streamLttb: Q = (s, d) => TopkStream.lttbReport(dailyTypeCounts(s, d))
 
   /** The depth-2 binseg tree. */
   private val streamChangepointTree: Q = (s, d) =>
@@ -432,16 +434,12 @@ object StreamQueries {
   /** The incremental SCD2 build over a doubled delivery: state is the
     * event_id-keyed deduped change set, so the doubled log collapses
     * through the keyed merge to the clean single-run change set, and the
-    * report derives version/validity from it — BYTE-identical to the batch
-    * `window_scd2` materialization (the oracle is the same SQL), because
-    * unlike the funnel this state carries the full fact set, not a lossy
-    * summary. */
+    * report derives version/validity from it — the batch `window_scd2` is
+    * the same report over the exactly-once slice (the oracle is the same
+    * SQL), because unlike the funnel this state carries the full fact set,
+    * not a lossy summary. */
   private val streamScd2: Q = (s, d) =>
     Scd2Stream.report(Scd2Stream.batchAnswer(changes(s, d)))
-      .select(col("user_id"), col("version"), col("event_type"),
-        fmtTs(col("valid_from")).as("valid_from"),
-        fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
-      .transform(orderedRows(_, "user_id", "version"))
 
   /** Incremental retention cohorts over a doubled delivery: the state is
     * distinct (user, kind, week) facts, so the doubled log collapses
@@ -456,14 +454,11 @@ object StreamQueries {
   /** The incremental gap-fill resample over a doubled delivery: state is
     * the per-(user, day) argmax fact table, so the doubled log collapses
     * through the max-merge to the clean single-run facts, and the LOCF
-    * re-grid over them is BYTE-identical to the batch `window_gap_fill`
-    * materialization (the oracle is the same SQL — [[GapFillStream.report]]
-    * delegates to the same [[graft.operators.TimeSeries.gapFillDaily]]). */
+    * re-grid over them is the batch `window_gap_fill`, which is
+    * [[GapFillStream.report]] over the exactly-once slice (the oracle is
+    * the same SQL). */
   private val streamGapFill: Q = (s, d) =>
     GapFillStream.report(GapFillStream.batchAnswer(changes(s, d)))
-      .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-        col("value"), col("observed"))
-      .transform(orderedRows(_, "user_id", "day"))
 
   /** Drift alarm threshold shared by the query entry and StreamingSpec —
     * 100‰ ≈ "a source's quality-pass rate moved 10 points vs baseline". */
@@ -522,9 +517,9 @@ object StreamQueries {
 
   /** Batch-replay form of the per-source length-profile monitor
     * ([[LengthProfileStream]]): the corpus delivered twice, collapsed
-    * through the idempotent doc-keyed membership merge, then the shared
-    * Robust median/MAD report — which is exactly `ext_length_outliers`, so
-    * the oracle is shared verbatim. */
+    * through the idempotent doc-keyed membership merge, then the monitor's
+    * report — which `ext_length_outliers` runs over the exactly-once
+    * projection, so the oracle is shared verbatim. */
   private val streamLengthOutliers: Q = (s, d) =>
     LengthProfileStream.report(LengthProfileStream.batchAnswer(
       twoDeliveries(LengthProfileStream.transform(Tables.documents(s, d)))))
@@ -576,40 +571,34 @@ object StreamQueries {
     "stream_ks_drift" -> streamKsDrift)
 
   val oracle: Map[String, String] = Map(
-    // stream and batch share ONE report definition, so they share the
-    // oracle too — the doubled delivery collapses through the idempotent
-    // doc-keyed merge before any histogramming
+    // the batch twin is the monitor's report over its slice of the
+    // exactly-once input (ks drift: the same report over the same
+    // histogram; source caps: the same TrainPrep.groupCap), and the doubled
+    // delivery collapses in the kind's merge, so the pair shares the oracle
     "stream_ks_drift" -> ExtQueries.oracle("ext_ks_drift"),
-    // doubled delivery collapses to the clean run — the oracle IS the
-    // batch gap-fill's (one definition, twins can't drift)
     "stream_gap_fill" -> CdcQueries.oracle("window_gap_fill"),
-
-    // doubled ingest replay collapses to the single-run pair set — the
-    // oracle IS the batch exact-Jaccard join's (one definition)
-    "stream_neardup" -> ExtQueries.oracle("ext_dedup_ngram"),
-
-    // doubled delivery collapses through the min-k reduction — the oracle
-    // IS the batch RefinedWeb cap's (one definition, twins can't drift)
     "stream_source_caps" -> ExtQueries.oracle("ext_source_caps"),
     "stream_prefix_dup" -> ExtQueries.oracle("ext_prefix_dup"),
     "stream_url_dedup" -> ExtQueries.oracle("ext_dedup_url"),
-    "stream_schema_profile" -> CdcQueries.oracle("agg_schema_profile"),
     "stream_k_anonymity" -> CdcQueries.oracle("agg_k_anonymity"),
     "stream_l_diversity" -> CdcQueries.oracle("agg_l_diversity"),
     "stream_t_closeness" -> CdcQueries.oracle("agg_t_closeness"),
-    "stream_cross_source" -> ExtQueries.oracle("ext_dedup_cross_source"),
-    // the decision report is Multimodal.softDedup shared verbatim with
-    // the batch tier — one definition, one oracle
-    "stream_multimodal_dedup" -> ExtQueries.oracle("ext_multimodal_dedup"),
-    "stream_multimodal_semdedup" -> ExtQueries.oracle("ext_multimodal_semdedup"),
-    "stream_multimodal_cross_source" -> ExtQueries.oracle("ext_multimodal_cross_source"),
     "stream_embed_drift" -> ExtQueries.oracle("ext_embed_drift"),
     "stream_dsir_model" -> ExtQueries.oracle("ext_dsir_model"),
     "stream_ivf_occupancy" -> ExtQueries.oracle("ext_sim_ivf_occupancy"),
-    // doubled delivery collapses through the doc-keyed membership merge
-    // BEFORE any histogramming — the oracle IS the batch length-outlier
-    // gate's (one Robust definition, twins can't drift)
     "stream_length_outliers" -> ExtQueries.oracle("ext_length_outliers"),
+    // the same answer from different aggregates: the batch twin counts its
+    // exactly-once input directly, the monitor folds a dedup-safe grid
+    "stream_schema_profile" -> CdcQueries.oracle("agg_schema_profile"),
+    // one report (Dedup.crossSourceMatrix, Multimodal.softDedup, or the
+    // pair set itself) over pairs found two ways: the batch twin joins the
+    // corpus at once, the stream form probes the monitor's own index; both
+    // are the lossless full join, so the pair shares the batch oracle
+    "stream_neardup" -> ExtQueries.oracle("ext_dedup_ngram"),
+    "stream_cross_source" -> ExtQueries.oracle("ext_dedup_cross_source"),
+    "stream_multimodal_dedup" -> ExtQueries.oracle("ext_multimodal_dedup"),
+    "stream_multimodal_semdedup" -> ExtQueries.oracle("ext_multimodal_semdedup"),
+    "stream_multimodal_cross_source" -> ExtQueries.oracle("ext_multimodal_cross_source"),
 
     "source_changestream" ->
       s"""SELECT event_id, ${fmtTsSql("ts")} AS ts_s, user_id, $OP AS op_type, props
@@ -680,7 +669,8 @@ object StreamQueries {
       "FROM events WHERE event_type IS DISTINCT FROM 'error')"),
 
     // the batch twins' SQL with the transform's delete filter spliced
-    // into the daily CTE — one definition per statistic
+    // into the daily CTE: each twin runs the same report over its own
+    // exactly-once daily counts (TopkStream.slice, or the per-day count)
     "stream_theilsen" -> CdcQueries.oracle("window_theilsen").replace(
       "FROM events GROUP BY 1, 2",
       "FROM events WHERE event_type IS DISTINCT FROM 'error' GROUP BY 1, 2"),
@@ -702,6 +692,7 @@ object StreamQueries {
 
     // the closed-form CUSUM over daily totals of the deduped, delete-
     // filtered stream — window_cusum's SQL with the transform's filter
+    // (both run TopkStream.cusumReport over a (day, n) frame)
     "stream_cusum" ->
       """WITH daily AS (SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS n
         |               FROM events WHERE event_type IS DISTINCT FROM 'error'
@@ -748,10 +739,6 @@ object StreamQueries {
         |FROM c JOIN t USING (event_type)
         |GROUP BY c.event_type, t.n ORDER BY c.event_type""".stripMargin,
 
-    // first-event chain over per-user min timestamps per stage type; the
-    // doubled delivery collapses through the min-merge, so the oracle is
-    // the clean single-run computation (deletes dropped by the shared
-    // transform — irrelevant here, 'error' is not a stage type)
     // identical to the batch agg_daily_bars oracle: on bounded input the
     // watermark drops nothing and UTC day windows == calendar days
     "stream_daily_bars" ->
@@ -773,7 +760,8 @@ object StreamQueries {
         |ORDER BY day""".stripMargin,
 
     // set-union state makes the incremental build byte-identical to the
-    // batch window_scd2 materialization — same oracle SQL
+    // batch window_scd2, the same report over the exactly-once slice —
+    // same oracle SQL
     "stream_scd2" ->
       s"""WITH f AS (SELECT * FROM events WHERE event_type IS DISTINCT FROM 'error'),
          |ch AS (SELECT user_id, event_type, ts, event_id,
@@ -791,6 +779,10 @@ object StreamQueries {
          |       to_ts IS NULL AS is_current
          |FROM v ORDER BY user_id, version""".stripMargin,
 
+    // first-event chain over per-user min timestamps per stage type; the
+    // doubled delivery collapses through the min-merge, so the oracle is
+    // the clean single-run computation (deletes dropped by the shared
+    // transform — irrelevant here, 'error' is not a stage type)
     "stream_funnel" ->
       """WITH m AS (
         |  SELECT user_id,

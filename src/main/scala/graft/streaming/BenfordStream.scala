@@ -19,8 +19,8 @@ import graft.operators.CdcOps
   * die on [[StateCommit]]'s transactional batch-id guard (versioned dir +
   * atomic marker flip). The state is NINE rows — the most bounded state in
   * the repo; per batch the only exchange is the slice's map-side-combined
-  * digit aggregate. [[report]] shares [[CdcOps.benfordReport]] with the
-  * batch query — one definition, twins can't drift; batch-replay form
+  * digit aggregate. The batch query `agg_benford` is [[report]] over
+  * [[slice]] — one definition, twins can't drift; batch-replay form
   * oracle-gated as `stream_benford`. */
 object BenfordStream extends Monitor.Additive {
 
@@ -35,8 +35,9 @@ object BenfordStream extends Monitor.Additive {
       .unionByName(slice.select(col("digit"), col("n_obs")))
       .groupBy(col("digit")).agg(sum(col("n_obs")).as("n_obs"))
 
-  /** The live audit report — the SAME definition the batch `agg_benford`
-    * emits ([[CdcOps.benfordReport]]). */
+  /** The audit report ([[CdcOps.benfordReport]]) — shared by the batch
+    * query `agg_benford` (over its exactly-once slice) and the stream
+    * form. */
   def report(state: DataFrame): DataFrame = CdcOps.benfordReport(state)
 
   /** Start the ingest Benford monitor over the events in `sourceDir`:

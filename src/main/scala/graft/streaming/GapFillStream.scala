@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.TimeSeries
+
 /** Streaming gap-fill — the incremental form of the batch
   * `window_gap_fill` resample (SURVEY §2.5 × §2.7): observations arrive
   * at-least-once and out of order; each micro-batch folds into a compacted
@@ -23,42 +25,36 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * 100 TB shape: per batch the only exchange is the (key, day) argmax of
   * the batch slice against state (a transactional MERGE INTO keyed on
-  * (key, day) in production); the report is [[graft.operators.TimeSeries
-  * .gapFillDaily]]'s per-key window stack over the compacted facts.
+  * (key, day) in production); the report is [[TimeSeries.gapFillDaily]]'s
+  * per-key window stack over the compacted facts.
   */
 object GapFillStream extends Monitor.Additive {
 
   /** One slice's state contribution: purchases only, rounded value, one
-    * row per (user, day) via the same argmax the merge applies — so a
-    * slice is itself a valid state table. */
+    * row per (user, day) — [[TimeSeries.dailyWinners]], the same argmax
+    * the merge applies, so a slice is itself a valid state table. */
   def slice(events: DataFrame): DataFrame =
-    latestPerDay(events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"),
-        col("event_id"), round(col("value"), 4).as("v")))
-
-  /** Per-(user, day) argmax-by-(ts, event_id) as ONE struct-max aggregate
-    * — constant-size mergeable partials (the `agg_daily_bars` shape), no
-    * ranking window over raw rows. */
-  private def latestPerDay(rows: DataFrame): DataFrame =
-    rows.groupBy(col("user_id"), col("day"))
-      .agg(max(struct(col("ts"), col("event_id"), col("v"))).as("__m"))
-      .select(col("user_id"), col("day"), col("__m.ts").as("ts"),
-        col("__m.event_id").as("event_id"), col("__m.v").as("v"))
-
-  /** Keyed argmax merge of two state tables. Max-merge on the
-    * (ts, event_id, v) struct is commutative, associative, idempotent ⇒
-    * convergent under at-least-once delivery and any micro-batch split. */
-  def merge(state: DataFrame, batch: DataFrame): DataFrame =
-    latestPerDay(state.unionByName(batch))
-
-  /** Derive the filled calendar grid from the state table —
-    * [[graft.operators.TimeSeries.gapFillDaily]] over the compacted facts
-    * (its own per-day argmax is the identity on state rows, so batch and
-    * streaming forms share one fill definition). */
-  def report(state: DataFrame): DataFrame =
-    graft.operators.TimeSeries.gapFillDaily(
-      state.select(col("user_id"), col("ts"), col("event_id"), col("v")),
+    TimeSeries.dailyWinners(events.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("event_id"), round(col("value"), 4).as("v")),
       "user_id", "ts", "v", "event_id")
+
+  /** Keyed argmax merge of two state tables ([[TimeSeries.dailyWinners]]
+    * over their union). Max-merge on the (ts, event_id, v) struct is
+    * commutative, associative, idempotent ⇒ convergent under at-least-once
+    * delivery and any micro-batch split. */
+  def merge(state: DataFrame, batch: DataFrame): DataFrame =
+    TimeSeries.dailyWinners(state.unionByName(batch), "user_id", "ts", "v", "event_id")
+
+  /** Derive the filled calendar grid from the state table — the LOCF grid
+    * [[TimeSeries.gapFillDaily]] over the compacted facts, which are the
+    * per-day winners already, days as ISO strings. Shared by the batch
+    * query `window_gap_fill` (over its exactly-once slice) and the stream
+    * form. */
+  def report(state: DataFrame): DataFrame =
+    TimeSeries.gapFillDaily(state, "user_id", "v")
+      .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
+        col("value"), col("observed"))
+      .transform(graft.Tables.orderedRows(_, "user_id", "day"))
 
   /** Start the gap-fill state build over the events in `sourceDir`:
     * [[CdcPipeline.changes]] merged into `targetDir`. */

@@ -31,7 +31,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `agg_heavy_hitters` discipline). */
 object HeavyHittersStream extends Monitor.Additive {
 
-  /** Counter budget — matches the batch `agg_heavy_hitters` sketch. */
+  /** Counter budget — of the stream state and the batch `agg_heavy_hitters`,
+    * which is [[report]] over [[slice]]. */
   final val K = 256
 
   /** Report depth. */
@@ -76,8 +77,9 @@ object HeavyHittersStream extends Monitor.Additive {
       .unionByName(combined.filter(col("k") === NKey))
   }
 
-  /** Top-`topN` estimates from the sketch state — the batch
-    * `agg_heavy_hitters` output shape (user_id, est_n). */
+  /** Top-`topN` estimates (user_id, est_n) from the sketch state — shared
+    * by the batch query `agg_heavy_hitters` (over its exactly-once slice)
+    * and the stream form. */
   def report(state: DataFrame, topN: Int = TopN): DataFrame =
     state.filter(col("k") =!= NKey)
       .select(col("k").cast("long").as("user_id"), col("est_n"))

@@ -13,8 +13,8 @@ import graft.functions.TextFns
   * additive counts double under producer-redelivered rows, membership
   * collapses them through the idempotent doc-keyed merge (the
   * `stream_prefix_dup` lesson). The report re-derives the histogram from
-  * the state and runs the SAME shared [[graft.operators.Robust.madOutliers]]
-  * gate as the batch tier, so the two disciplines cannot drift: per source
+  * the state and runs the [[graft.operators.Robust.madOutliers]] gate; the
+  * batch `ext_length_outliers` IS that report, so the two cannot drift: per source
   * the median token count, the MAD, and how many documents sit beyond
   * 3·MAD — the "did a feed's scraper change" alarm, whatever each feed's
   * normal length profile is.
@@ -41,8 +41,9 @@ object LengthProfileStream extends Monitor.Union {
     Monitor.minByKey(state.unionByName(batch), "doc_id", "source", "n_tok")
 
   /** The outlier report off a membership frame — histogram once, then the
-    * shared median/MAD machinery; identical output shape (and oracle) to
-    * the batch `ext_length_outliers`. */
+    * shared median/MAD machinery. Shared by the batch query
+    * `ext_length_outliers` (over its exactly-once [[transform]]) and the
+    * stream form, so the two share an oracle too. */
   def report(members: DataFrame): DataFrame = {
     val hist = members.groupBy(col("source"), col("n_tok"))
       .agg(count(lit(1)).as("hn"))

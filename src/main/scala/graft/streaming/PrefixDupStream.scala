@@ -17,9 +17,9 @@ import graft.functions.TextFns
   * redelivered doc row would double it, and the document stream has no
   * event-time watermark to dedup rows against); membership is a UNION —
   * idempotent under both batch replays and producer-duplicated rows, the
-  * [[AppendState]] monotone-union contract. Every report aggregate is
-  * then duplicate-tolerant by construction: countDistinct over doc_id /
-  * source, min over doc_id. Rows are one per doc — the same order as the
+  * [[AppendState]] monotone-union contract. The merge is a distinct
+  * union, so the state holds each doc's row once and the report's count
+  * is the doc count. Rows are one per doc — the same order as the
   * prefix key space itself, so nothing is lost to the granularity.
   *
   * 100 TB shape: per-batch I/O is O(batch) — the slice is a row-local
@@ -46,13 +46,15 @@ object PrefixDupStream extends Monitor.Members("prefix STRING, source STRING, do
         TextFns.tokens(col("text")), 1, PrefixTokens)).as("prefix"),
       col("source"), col("doc_id"))
 
-  /** The live template report: groups with ≥ 2 docs, their copy count,
-    * distinct-source spread, and min-id representative — identical shape
-    * to the batch `ext_prefix_dup`. Every aggregate is distinct-/min-based,
-    * so duplicate membership rows (redelivery) cannot move it. */
+  /** The template report: groups with ≥ 2 docs, their copy count,
+    * distinct-source spread, and min-id representative — shared by the
+    * batch `ext_prefix_dup` (over its exactly-once slice) and the stream
+    * form. The state is distinct rows (the membership merge collapses a
+    * redelivered doc, and a doc's row is a pure function of it), so
+    * `count(1)` counts each doc once. */
   def report(state: DataFrame): DataFrame =
     state.groupBy(col("prefix"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
+      .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("source")).as("n_sources"),
         min(col("doc_id")).as("keep_id"))
       .filter(col("n_docs") >= 2)

@@ -24,8 +24,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * 100 TB shape: per batch the only exchange is the slice's (type, cents)
   * aggregate; the report's windows sort domain-sized frames. Same
-  * code path batch and stream — the oracle-gated `stream_value_quantiles`
-  * replay runs [[histogram]] + [[report]] on the bounded frame. */
+  * code path batch and stream: `agg_value_quantiles` is [[report]] over
+  * [[slice]], and the oracle-gated `stream_value_quantiles` replay is
+  * [[report]] over the kind's batch answer. */
 object QuantilesStream extends Monitor.Additive {
 
   /** (type, cents, hn) histogram of a slice — batch or micro-batch. */
@@ -40,9 +41,10 @@ object QuantilesStream extends Monitor.Additive {
       .unionByName(slice.select(col("event_type"), col("cents"), col("hn")))
       .groupBy(col("event_type"), col("cents")).agg(sum(col("hn")).as("hn"))
 
-  /** p50/p90/p99 per type from the histogram state — the exact arithmetic
-    * of the batch `agg_value_quantiles`: type-1 quantile at permille p is
-    * `min{cents : cum ≥ ⌈p·n/1000⌉}`, cents/100.0 one exact division. */
+  /** p50/p90/p99 per type from the histogram state: type-1 quantile at
+    * permille p is `min{cents : cum ≥ ⌈p·n/1000⌉}`, cents/100.0 one exact
+    * division. Shared by the batch query `agg_value_quantiles` (over its
+    * exactly-once slice) and the stream form. */
   def report(state: DataFrame): DataFrame = {
     val tot = state.groupBy(col("event_type")).agg(sum(col("hn")).as("__n"))
     val cum = Window.partitionBy(col("event_type")).orderBy(col("cents"))

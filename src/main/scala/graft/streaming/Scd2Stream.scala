@@ -63,9 +63,15 @@ object Scd2Stream extends Monitor.Additive {
 
   /** Derive the SCD2 dimension history from the state table —
     * [[CdcOps.scd2]] over the compacted change set (per-key windows only;
-    * nothing data-sized single-partition-sorts at report time). */
+    * nothing data-sized single-partition-sorts at report time), interval
+    * bounds as second-precision strings. Shared by the batch query
+    * `window_scd2` (over its exactly-once slice) and the stream form. */
   def report(state: DataFrame): DataFrame =
     CdcOps.scd2(state, "user_id", "event_type", "ts", "event_id")
+      .select(col("user_id"), col("version"), col("event_type"),
+        graft.Tables.fmtTs(col("valid_from")).as("valid_from"),
+        graft.Tables.fmtTs(col("valid_to")).as("valid_to"), col("is_current"))
+      .transform(graft.Tables.orderedRows(_, "user_id", "version"))
 
   /** Start the SCD2 build over the events in `sourceDir`:
     * [[CdcPipeline.changes]] merged into `targetDir`. */

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.operators.TrainPrep
 
 /** Per-source document cap maintained at INGEST (SURVEY §2.7 × §2.8) — the
   * incremental form of the batch `ext_source_caps` RefinedWeb
@@ -19,26 +20,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * would depend on scheduling and could never replay cleanly).
   *
   * State rides [[AppendState]]: each batch appends only its OWN per-source
-  * k-smallest (a bounded delta — ≤ k rows per source per batch, pre-reduced
-  * with the same salted-window discipline as the batch
-  * [[graft.operators.TrainPrep.groupCap]] at scale); the live view
-  * re-reduces base + deltas on read, and periodic [[compact]] keeps total
-  * state at O(sources · k). Per-batch I/O is O(batch ∧ sources·k).
+  * k-smallest (a bounded delta — ≤ k rows per source per batch, reduced by
+  * the batch query's own salted cap, [[TrainPrep.groupCap]], so a hot
+  * source never funnels through one task); the live view re-reduces
+  * base + deltas on read, and periodic [[compact]] keeps total state at
+  * O(sources · k). Per-batch I/O is O(batch ∧ sources·k).
   *
   * Batch-replay form oracle-gated as `stream_source_caps` against the
   * ext_source_caps SQL; live restart/redelivery paths in StreamingSpec. */
 object SourceCapsStream {
 
   /** Per-source k-smallest of any (doc_id, source) frame, ranked 1..k —
-    * the ONE reduction used for the batch delta, the merge-on-read, and
-    * the report (duplicates collapse through the distinct first, so the
-    * rule is insensitive to multiplicity). */
-  def capK(docs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
-    docs.select(col("doc_id"), col("source")).distinct()
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
+    * [[TrainPrep.groupCap]], the salted two-phase cap the batch
+    * `ext_source_caps` runs, over the distinct rows (so the rule is
+    * insensitive to multiplicity): the ONE reduction used for the batch
+    * delta, the merge-on-read, and the report. */
+  def capK(docs: DataFrame, k: Int): DataFrame =
+    TrainPrep.groupCap(docs.select(col("doc_id"), col("source")).distinct(),
+      "source", "doc_id", k)
 
   /** The capped-table state kind for `k`: each batch's own per-source
     * k-smallest as a delta, re-reduced by [[capK]] on read and on

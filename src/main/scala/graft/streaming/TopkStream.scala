@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.TimeSeries
+import graft.operators.TimeSeries.{dec, varNum}
+
 /** Streaming top-k leaderboard — the incremental form of the batch
   * `window_rank_change` / `sort_topk_group` ranking family: per event-time
   * day, the K most frequent event types, continuously maintained
@@ -58,42 +61,57 @@ object TopkStream extends Monitor.Additive {
       .transform(graft.Tables.orderedReport(_, "day", "rnk"))
   }
 
-  /** CUSUM level-shift report over the SAME (day, type) count state the
-    * leaderboard maintains — the streaming form of the batch
-    * `window_cusum` monitor: collapse state to daily totals, then the
-    * closed-form running-sum-minus-running-extremum over the calendar-
-    * bounded day frame (one continuously-maintained state table serving
-    * two reports is the point: counts are the reusable fact). */
-  def cusumReport(state: DataFrame): DataFrame = {
-    val daily = state.groupBy(col("day")).agg(sum(col("n")).as("n"))
-    val stats = broadcast(daily.agg(
-      count(lit(1)).as("__D"), sum(col("n")).as("__S"),
-      sum(col("n") * col("n")).as("__SS")))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+  /** The state collapsed to per-day totals, (day, n): the series the
+    * daily-total reports ([[cusumReport]], changepoint, anomaly days) read
+    * off the SAME (day, type) count state the leaderboard maintains. */
+  def dayTotals(state: DataFrame): DataFrame =
+    state.groupBy(col("day")).agg(sum(col("n")).as("n"))
+
+  /** CUSUM level-shift detection over a (day, n) daily-total frame (Page
+    * 1954 — the change-point monitor that catches a sustained drift the 2σ
+    * single-day rule cannot), shared by the batch query `window_cusum` and
+    * the stream form over [[dayTotals]]: the one-sided recursion
+    * C_t = max(0, C_{t−1} + y_t) is re-expressed CLOSED-FORM as a running
+    * sum minus its running minimum (C_t = Y_t − min_{≤t} Y_t), so two
+    * windows over the calendar-bounded day domain replace the sequential
+    * recursion. Deviations are multiplied out to integers (y_t = D·n_t − S,
+    * the anomaly-days discipline), the 4σ alarm compares
+    * C_t² > 16·(D·SS − S²) in widened decimals — bit-exact on any engine,
+    * no float accumulation anywhere. Both drift directions surface
+    * (up = regression burst, down = source stall). */
+  def cusumReport(daily: DataFrame): DataFrame = {
     val cum = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val varY = dec(col("__D")) * dec(col("__SS")) - dec(col("__S")) * dec(col("__S"))
-    daily.crossJoin(stats)
+    daily.crossJoin(TimeSeries.countMoments(daily))
       .withColumn("y", col("n") * col("__D") - col("__S"))
       .withColumn("cy", sum(col("y")).over(cum))
+      // the running extremum must include the EMPTY prefix (Y₀ = 0), or a
+      // series that only rises would under-report its own first days
       .withColumn("cusum_up", col("cy") - least(min(col("cy")).over(cum), lit(0L)))
       .withColumn("cusum_down", greatest(max(col("cy")).over(cum), lit(0L)) - col("cy"))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
         col("cusum_up"), col("cusum_down"),
-        (dec(col("cusum_up")) * dec(col("cusum_up")) > lit(16) * varY).as("shift_up"),
-        (dec(col("cusum_down")) * dec(col("cusum_down")) > lit(16) * varY).as("shift_down"))
+        (dec(col("cusum_up")) * dec(col("cusum_up")) > lit(16) * varNum).as("shift_up"),
+        (dec(col("cusum_down")) * dec(col("cusum_down")) > lit(16) * varNum).as("shift_down"))
       .transform(graft.Tables.orderedReport(_, "day"))
   }
 
-  /** Holt level + trend forecast over the SAME (day, type) count state the
-    * leaderboard maintains — the THIRD report off one continuously-
-    * maintained fact table (with [[report]] and [[cusumReport]]): counts
-    * are the reusable fact; level/trend/forecast are derived views.
+  /** Holt level + trend forecast over a (day, type) count frame — shared
+    * by the batch query `window_holt` and the stream form over the state:
+    * counts are the reusable fact; level/trend/forecast are derived views.
     * Delegates to [[graft.operators.CdcOps.holt]] (integer-micro,
     * engine-exact); day frames calendar-bounded per type. */
   def holtReport(state: DataFrame): DataFrame =
     graft.operators.CdcOps.holt(state, "event_type", "day", "n")
       .transform(graft.Tables.orderedReport(_, "event_type", "day"))
+
+  /** LTTB chart downsampling ([[TimeSeries.lttb]]) of a (day, type) count
+    * frame: each type's daily series reduced to 12 shape-preserving points
+    * — what a dashboard fetches instead of the full span. Shared by the
+    * batch query `window_lttb` and the stream form over the state. */
+  def lttbReport(state: DataFrame): DataFrame =
+    TimeSeries.lttb(state, "event_type", "day", "n", buckets = 10)
+      .transform(graft.Tables.orderedReport(_, "event_type", "rank"))
 
   /** Start the incremental leaderboard over the events in `sourceDir`:
     * [[CdcPipeline.uniqueChanges]] folded into `targetDir`. */

@@ -1691,9 +1691,10 @@ class StreamingSpec extends SparkSpec {
     // one continuously-maintained count table must match their batch forms
     def cusumRows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long, Long, Long, Boolean, Boolean)].collect().toSeq
-    val expectedCusum = cusumRows(TopkStream.cusumReport(TopkStream.slice(
-      CdcPipeline.transform(Tables.eventsRaw(spark, sf)))))
-    assert(cusumRows(TopkStream.cusumReport(TopkStream.state(spark, tgt))) === expectedCusum)
+    val expectedCusum = cusumRows(TopkStream.cusumReport(TopkStream.dayTotals(TopkStream.slice(
+      CdcPipeline.transform(Tables.eventsRaw(spark, sf))))))
+    assert(cusumRows(TopkStream.cusumReport(
+      TopkStream.dayTotals(TopkStream.state(spark, tgt)))) === expectedCusum)
 
     // ... and the Holt forecast — the THIRD report off the same state
     def holtRows(df: org.apache.spark.sql.DataFrame) =
@@ -1924,6 +1925,30 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String, Long, Long)].collect().sortBy(_._1) ===
       verdicts.select("doc_id", "source", "n_tokens", "n_oov")
         .as[(Long, String, Long, Long)].collect().sortBy(_._1))
+  }
+
+  test("each stream_* query that shares a batch query's oracle returns that query's rows") {
+    // prefix consistency made a tier-1 check: the pairs come from the
+    // oracle maps, so a newly shared oracle is covered without an edit here
+    val sf = "/root/testdata/sf0.001"
+    val stream = graft.queries.StreamQueries.oracle
+    val batch = SparkEntry.oracleSql.filter { case (k, _) => !stream.contains(k) }
+    val pairs = (for {
+      (s, sql) <- stream.toSeq
+      (b, bSql) <- batch.toSeq if bSql == sql
+    } yield (s, b)).sorted
+    assert(pairs.size >= 19, pairs)
+    info(pairs.map { case (s, b) => s"$s = $b" }.mkString(", "))
+    def result(q: String) = {
+      val df = SparkEntry.queries(q)(spark, sf)
+      (df.schema.map(f => f.name -> f.dataType), df.collect().toSeq)
+    }
+    try pairs.foreach { case (s, b) =>
+      val (sSchema, sRows) = result(s)
+      val (bSchema, bRows) = result(b)
+      assert(sSchema === bSchema, s"$s vs $b")
+      assert(sRows.nonEmpty && sRows === bRows, s"$s vs $b")
+    } finally SessionFrames.release(spark)
   }
 
   private implicit class Map2[A, B, C](rows: Array[(A, B, C)]) {

@@ -16,7 +16,7 @@ class TimeSeriesSpec extends SparkSpec {
       .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
 
   private def grid(df: DataFrame): Seq[(Long, String, Double, Boolean)] =
-    TimeSeries.gapFillDaily(df, "k", "ts", "v", "eid")
+    TimeSeries.gapFillDaily(TimeSeries.dailyWinners(df, "k", "ts", "v", "eid"), "k", "v")
       .select(col("k"), col("day").cast("string"), col("value"), col("observed"))
       .as[(Long, String, Double, Boolean)].collect().toSeq.sorted
 

@@ -162,6 +162,84 @@ class MonitorSpec extends SparkSpec {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  /** A per-day or per-(day, type) event count: a groupBy on the event
+    * day, alone or with the type, whose aggregate (on that line or the
+    * next) is a count. A grid with more keys is another fact. */
+  private val dailyCount =
+    """groupBy\((?:col\("event_type"\),\s*)?to_date\(col\("ts"\)\)\.as\("day"\)(?:,\s*col\("event_type"\))?\)""".r
+
+  private def linesWith(re: scala.util.matching.Regex)(code: Seq[String]): Int =
+    code.count(l => re.findFirstIn(l).isDefined)
+
+  /** Facts with one definition that batch queries and monitors share, each
+    * with the files (under `graft/`) allowed to hold its code lines, how
+    * many, and where a copy is looked for: the (day, type) count is
+    * `TopkStream.slice` and the per-day count one `CdcQueries` helper; the
+    * σ-rule moments are one `TimeSeries` helper; and two monitor reports
+    * that batch twins used to copy may not reappear in `queries/`. */
+  private val oneDefinition: Seq[(String, Seq[String] => Int, String => Boolean, Map[String, Int])] =
+    Seq(
+      ("a daily event count", code => code.indices.count(i =>
+        dailyCount.findFirstIn(code(i)).isDefined &&
+          """\bcount\(""".r.findFirstIn(code(i) + code.lift(i + 1).getOrElse("")).isDefined),
+        _ => true, Map("streaming/TopkStream.scala" -> 1, "queries/CdcQueries.scala" -> 1)),
+      ("__SS", linesWith("""__SS""".r), _ => true, Map("operators/TimeSeries.scala" -> 2)),
+      ("QuantilesStream's report body", linesWith("""\$p \* __n \+ 999\) div 1000""".r),
+        _.startsWith("queries/"), Map.empty),
+      ("LengthProfileStream's report body", linesWith("""madOutliers\(.*"n_tok"""".r),
+        _.startsWith("queries/"), Map.empty))
+
+  /** Every (file, fact) whose count of code lines differs from the allowed
+    * one, over the files in scope. */
+  private def forkedDefinitions(files: Seq[(String, String)]): Seq[String] =
+    for {
+      (name, src) <- files
+      code = codeLines(src)
+      (what, lines, inScope, allowed) <- oneDefinition
+      if inScope(name)
+      n = lines(code)
+      if n != allowed.getOrElse(name, 0)
+    } yield s"$name: $what on $n lines, allowed ${allowed.getOrElse(name, 0)}"
+
+  test("each daily count, σ-rule moment and copied monitor report has one definition") {
+    val planted = Seq(
+      "queries/CdcQueries.scala" ->
+        """  private def dayCounts(s: SparkSession, d: String): DataFrame =
+          |    events(s, d).groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
+          |  private val windowHolt: Q = (s, d) => holt(events(s, d)
+          |    .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+          |    .agg(count(lit(1)).as("n")))
+          |  // a comment is not code: .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)))
+          |  private val grid = events.groupBy(col("event_type"), to_date(col("ts")).as("day"),
+          |    col("vbucket")).agg(count(lit(1)).as("n"))
+          |  private val stats = daily.agg(sum(col("n") * col("n")).as("__SS"))
+          |  def q(p: Int) = min(when(col("cum") >= expr(s"($p * __n + 999) div 1000"), col("c")))
+          |""".stripMargin,
+      "queries/ExtQueries.scala" ->
+        """    graft.operators.Robust.madOutliers(hist, "source", "n_tok")
+          |""".stripMargin,
+      "streaming/LengthProfileStream.scala" ->
+        """    graft.operators.Robust.madOutliers(hist, "source", "n_tok")
+          |""".stripMargin,
+      "operators/TimeSeries.scala" ->
+        """      sum(col("n") * col("n")).as("__SS")))
+          |  val varNum: Column = dec(col("__D")) * dec(col("__SS")) - dec(col("__S")) * dec(col("__S"))
+          |""".stripMargin)
+    assert(forkedDefinitions(planted) === Seq(
+      "queries/CdcQueries.scala: a daily event count on 2 lines, allowed 1",
+      "queries/CdcQueries.scala: __SS on 1 lines, allowed 0",
+      "queries/CdcQueries.scala: QuantilesStream's report body on 1 lines, allowed 0",
+      "queries/ExtQueries.scala: LengthProfileStream's report body on 1 lines, allowed 0"))
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString.replace('\\', '/') ->
+        new String(Files.readAllBytes(p), "UTF-8")).toSeq
+    assert(files.map(_._1).contains("queries/CdcQueries.scala"))
+    val found = forkedDefinitions(files)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("a documents monitor lists a batch of more than 32 files on the driver, on start and on restart") {
     val root = tmp("monitor-listing")
     val src = Files.createDirectories(root.resolve("source"))

@@ -7,11 +7,15 @@ oracle SQL from oracle_sql.json in DuckDB over the fixture tables, sort
 columns by name, and compare row-by-row (exact on strings/ints, tolerant to
 1e-9 on floats to mimic a hash on rounded values being checked beforehand).
 """
-import json, sys, math
+import atexit, json, math, shutil, sys, tempfile
 import duckdb
 
 sf, out = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
+# DuckDB spills to `.tmp` under the working directory by default; a fresh
+# temp dir keeps a large fixture's spill off the checkout, and goes at exit
+spill = tempfile.mkdtemp(prefix="check_oracle-")
+atexit.register(shutil.rmtree, spill, ignore_errors=True)
+con = duckdb.connect(config={"temp_directory": spill})
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
